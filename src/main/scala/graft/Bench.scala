@@ -455,8 +455,8 @@ object Bench {
                   // before timing queries that sit at the dispatch floor
       // r13 (VERDICT #7): the suite's queries are single-stage TakeOrdered
       // scans over the cache — NO exchange, so AQE has nothing to re-plan
-      // and its per-execution stage coordination is pure floor: FloorProbe
-      // measured +5.6 ms on the hoisted point lookup (16.1 → 21.7 ms min)
+      // and its per-execution stage coordination is pure floor: a floor probe
+      // (PLANS.md r13) measured +5.6 ms on the hoisted point lookup (16.1 → 21.7 ms min)
       // and +4.4 ms on the cosine scan (37.4 → 41.8). Off for the timed
       // window only; joins/shuffles elsewhere keep the default.
       val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
@@ -931,7 +931,7 @@ object Bench {
         // r13 (VERDICT #1): the prepared (plan-once) route beside the
         // plan-per-call row. The r12 driver's 2.48 s probed reading vs the
         // 0.163 s band decomposed to COLD PRUNED I/O, not a software fixed
-        // cost (MultiIvfServeProbe: build+analyze+optimize+plan ≈ 25 ms
+        // cost (a plan-phase probe: build+analyze+optimize+plan ≈ 25 ms
         // p50, exec1 ≈ exec2, no session-age growth — PLANS.md r13): each
         // rep's fresh random query probes DIFFERENT cells (~300 MB of
         // never-read files at 10M), while the full arm's min-of-2 gets one
@@ -1033,8 +1033,8 @@ object Bench {
               Seq.fill(ts.size)(0L))
             val struck = new java.util.HashSet[AnyRef]()
             (0 until 10000).foreach(i => struck.add(Long.box(i.toLong)))
-            val puts = (0 until 10000).map(i => graft.ann.LocalBinIndex.Put(
-              Long.box(200000000L + i), Array.fill(16)((i % 251).toByte), Nil))
+            val puts = (0 until 10000).map(i => graft.ann.LocalRung.Put(
+              Long.box(200000000L + i), -1L, Seq(Array.fill(16)((i % 251).toByte)), Nil))
             val tRefresh = timed("local_bin_refresh_10k_100m", runs = 2) {
               idx.applyChanges(struck, puts): Unit
             }
@@ -1269,10 +1269,10 @@ object Bench {
         val tDelta = timed("catalog_flush_delta_10k", runs = 1)(cat.flushDelta("bd"))
         // 3 reps, min (the other rows' convention): a single cold
         // release→load→count run spans 1.2-3.6 s on an idle machine
-        // (FoldProbe, r11) — the r9 1.83 s vs r10 2.62 s "regression" was
+        // (PLANS.md r11) — the r9 1.83 s vs r10 2.62 s "regression" was
         // runs=1 sampling noise, not a code change. The release happens
         // BETWEEN reps, OUTSIDE the timed window, so the number measures
-        // exactly what r9/r10 and FoldProbe measure: load + count.
+        // exactly what r9/r10 measured: load + count.
         val tFold = try {
           // r14: through measured() so the row carries row_stats (it had
           // reps=3 but no dispersion record — r13 verdict #5)
@@ -1675,7 +1675,7 @@ object Bench {
                 reverse(col("embedding")).as("v0"), col("embedding").as("v1")))
             cat.flushDelta("mvb")
             Seq("local_refresh_10k_1m" -> timed("local_refresh_10k_1m", runs = 1) {
-              localIdx = cat.refreshLocalMultiIndex("mvb", localIdx, 1)._1
+              localIdx = cat.refreshLocal("mvb", localIdx, 1)._1
             })
           }
         } catch { case ex: Throwable =>

@@ -21,21 +21,21 @@ import org.apache.spark.sql.functions._
   * resolve purely on id).
   */
 final class LocalBinIndex private (
-    ids: Array[AnyRef],
-    words: Array[Long], // n·w packed code words, vector i at [i·w, i·w+w)
-    meta: LocalMeta,
+    /** One cell ([[CellStore.NoCell]]) of packed code words: n·w longs,
+      * vector i at [i·w, i·w+w). */
+    store: CellStore,
     val dim: Int,
     thresholds: Array[Double],
-    stripes: Int) extends Serializable {
+    stripes: Int) extends LocalRung with Serializable {
 
   private val w = LocalBinIndex.wordsPerVec(dim)
 
-  def size: Long = ids.length.toLong
+  def size: Long = store.size
   /** Resident bytes of the code payload (the density-scale claim). */
-  def codeBytes: Long = words.length.toLong * 8
+  def codeBytes: Long = store.payloadBytes
   /** Columns available to [[search]]'s EQ filter (empty unless the index
     * was built with `metaCols`). */
-  def filterableColumns: Set[String] = meta.columns
+  def filterableColumns: Set[String] = store.filterableColumns
 
   /** Hamming top-k over all vectors (no cells — the whole scan is cheaper
     * than one ADC cell probe). Returns (id, hammingDistance) best-first:
@@ -52,13 +52,16 @@ final class LocalBinIndex private (
              eqFilter: Seq[(String, Any)] = Nil): Seq[(AnyRef, Double)] = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(q.length == dim, s"vector dimension mismatch: expected $dim, got ${q.length}")
-    val qw = LocalBinIndex.toWords(
+    val qw = CellStore.toWords(
       org.apache.spark.sql.graft.BinEncode.pack(q, thresholds))
+    // the filter validates (an unknown column REFUSES) even when the store
+    // is empty — never a silently-unfiltered answer
+    store.checkFilter(eqFilter)
+    val ids = store.ids(CellStore.NoCell)
+    if (ids == null) return Seq.empty
+    val words = store.data(CellStore.NoCell)(0).asInstanceOf[Array[Long]]
+    val pred = store.predicate(CellStore.NoCell, eqFilter)
     val n = ids.length
-    // the predicate compiles (and an unknown column REFUSES) even when the
-    // store is empty — never a silently-unfiltered answer
-    val pred: Int => Boolean = if (eqFilter.isEmpty) null else meta.predicate(eqFilter)
-    if (n == 0) return Seq.empty
     val per = math.max(1, (n + stripes - 1) / stripes)
     def scanStripe(s: Long): Array[(AnyRef, Double)] = {
       val start = s.toInt * per
@@ -94,82 +97,19 @@ final class LocalBinIndex private (
     LocalTopK.scanAndMerge((0 until nStripes).map(_.toLong), scanStripe, topK)
   }
 
-  /** O(changes) refresh — [[LocalIvfIndex.applyChanges]]'s contract on the
-    * flat Hamming rung (no cells: one filter-append compaction of the id /
-    * packed-word / meta arrays). `struck` = every winner pk; `puts` carry
-    * the segment-encoded packed byte code (ceil(dim/8) B, the chain base's
-    * thresholds — the sidecar this index already holds). Cost is one
-    * O(corpus) pass with no Spark read or re-encode, vs the full reload's
-    * snapshot stream. */
-  def applyChanges(struck: java.util.Set[AnyRef],
-                   puts: Seq[LocalBinIndex.Put]): LocalBinIndex = {
-    val specs = meta.specs
-    val nb = (dim + 7) >> 3
-    puts.foreach { p =>
-      require(p.code != null && p.code.length == nb,
-        s"put ${p.id}: code is ${if (p.code == null) "null" else s"${p.code.length} B"}, " +
-          s"layout needs ceil($dim/8)=$nb")
-      require(p.metaValues.length == specs.length,
-        s"put ${p.id}: expected ${specs.length} meta values, got ${p.metaValues.length}")
-    }
-    if (struck.isEmpty && puts.isEmpty) return this
-    val keep = Array.newBuilder[Int]
-    var i = 0
-    while (i < ids.length) {
-      if (!struck.contains(ids(i))) keep += i
-      i += 1
-    }
-    val kept = keep.result()
-    if (kept.length == ids.length && puts.isEmpty) return this
-    val n = kept.length + puts.length
-    val ids2 = new Array[AnyRef](n)
-    val words2 = new Array[Long](n * w)
-    var r = 0
-    while (r < kept.length) {
-      ids2(r) = ids(kept(r))
-      System.arraycopy(words, kept(r) * w, words2, r * w, w)
-      r += 1
-    }
-    puts.zipWithIndex.foreach { case (p, k) =>
-      ids2(kept.length + k) = p.id
-      System.arraycopy(LocalBinIndex.toWords(p.code), 0,
-        words2, (kept.length + k) * w, w)
-    }
-    val meta2 =
-      if (specs.isEmpty) meta
-      else {
-        val mb = new LocalMeta.Builder(specs)
-        kept.foreach(r2 => mb.add(meta.valuesAt(r2)))
-        puts.foreach(p => mb.add(p.metaValues))
-        mb.result()
-      }
-    new LocalBinIndex(ids2, words2, meta2, dim, thresholds, stripes)
-  }
+  /** [[LocalRung.applyChanges]] on the one-cell store: puts carry the
+    * segment-encoded packed byte code (ceil(dim/8) B, the chain base's
+    * thresholds — the sidecar this index already holds); the cell is
+    * ignored. Cost is one O(corpus) pass with no Spark read or re-encode,
+    * vs the full reload's snapshot stream. */
+  def applyChanges(struck: java.util.Set[AnyRef], puts: Seq[LocalRung.Put]): LocalBinIndex =
+    new LocalBinIndex(store.applyChanges(struck, puts.map(_.copy(cell = CellStore.NoCell))),
+      dim, thresholds, stripes)
 }
 
 object LocalBinIndex {
 
-  /** One put winner for [[LocalBinIndex.applyChanges]]: pk, the packed
-    * ceil(dim/8)-byte sign code in THIS layout's thresholds, and
-    * filter-column values aligned with the index's name-sorted
-    * [[LocalMeta.specs]]. */
-  case class Put(id: AnyRef, code: Array[Byte], metaValues: Seq[Any])
-
   private[ann] def wordsPerVec(dim: Int): Int = (((dim + 7) >> 3) + 7) >> 3
-
-  /** Byte codes (MSB-first, BinEncode layout) → big-endian long words,
-    * zero-padded — identical padding both sides, so tail bits never
-    * contribute to the XOR. */
-  private[ann] def toWords(code: Array[Byte]): Array[Long] = {
-    val w = (code.length + 7) >> 3
-    val out = new Array[Long](w)
-    var i = 0
-    while (i < code.length) {
-      out(i >> 3) |= (code(i) & 0xFFL) << ((7 - (i & 7)) << 3)
-      i += 1
-    }
-    out
-  }
 
   /** Build from a flushed binary snapshot's (id, packedCode) columns + the
     * threshold sidecar — via [[LocalLoad.boundedIterator]] (small inputs
@@ -186,23 +126,9 @@ object LocalBinIndex {
       s"thresholds dimension mismatch: ${thresholds.length} vs $dim")
     require(stripes >= 1, "stripes must be >= 1")
     val nb = (dim + 7) >> 3
-    val w = wordsPerVec(dim)
-    val idsB = scala.collection.mutable.ArrayBuilder.make[AnyRef]
-    val wordsB = scala.collection.mutable.ArrayBuilder.make[Long]
-    val metaB = new LocalMeta.Builder(metaCols)
-    val it = LocalLoad.boundedIterator(snapshot.select(col(idCol) +: col(codeCol) +:
-      metaCols.map { case (n, _) => col(n) }: _*))
-    while (it.hasNext) {
-      val r = it.next()
-      val code = r.getAs[Array[Byte]](1)
-      require(code.length == nb, s"code length ${code.length} != ceil($dim/8)=$nb")
-      idsB += r.get(0).asInstanceOf[AnyRef]
-      val cw = toWords(code)
-      var j = 0
-      while (j < w) { wordsB += cw(j); j += 1 }
-      if (metaCols.nonEmpty) metaB.add(metaCols.indices.map(j2 => r.get(2 + j2)))
-    }
-    new LocalBinIndex(idsB.result(), wordsB.result(), metaB.result(), dim,
-      thresholds, stripes)
+    val store = CellStore.load(snapshot, idCol, lit(CellStore.NoCell), Seq(col(codeCol)),
+      Seq(CellStore.Field("code", CellStore.Words, nb, " B", s"layout needs ceil($dim/8)=$nb")),
+      metaCols, "bin")
+    new LocalBinIndex(store, dim, thresholds, stripes)
   }
 }

@@ -30,27 +30,17 @@ import org.apache.spark.sql.functions._
   */
 final class LocalIvfIndex private (
     centroids: Array[(Long, Array[Float])],
-    cellIds: java.util.HashMap[Long, Array[AnyRef]],
-    /** Per cell: one stored-form flat array (float[] | short[] | byte[],
-      * by `quant`). */
-    cellVecs: java.util.HashMap[Long, AnyRef],
-    cellMeta: java.util.HashMap[Long, LocalMeta],
-    /** Zero-row store carrying the BUILT column spec — the validation
-      * authority, so an unknown filter column refuses even when every cell
-      * is empty (a delta chain can delete the whole collection; the typo
-      * must not hide until data returns). */
-    specMeta: LocalMeta,
+    /** One stored-form field per cell: float[] | short[] | byte[] by `quant`. */
+    store: CellStore,
     val dim: Int,
     metric: String,
-    quant: String) extends Serializable {
+    quant: String) extends LocalRung with Serializable {
 
-  def cellCount: Int = cellIds.size()
-  def size: Long = {
-    var n = 0L; cellIds.values.forEach(a => n += a.length); n
-  }
+  def cellCount: Int = store.cellCount
+  def size: Long = store.size
   /** Columns available to [[search]]'s EQ filter (empty unless the index
     * was built with `metaCols`). */
-  def filterableColumns: Set[String] = specMeta.columns
+  def filterableColumns: Set[String] = store.filterableColumns
 
   /** Probe the `nprobe` nearest cells, exact top-k inside — all in-process.
     * Probed cells scan in parallel on the common pool (one task per cell,
@@ -72,25 +62,18 @@ final class LocalIvfIndex private (
              eqFilter: Seq[(String, Any)] = Nil): Seq[(AnyRef, Double)] = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(q.length == dim, s"vector dimension mismatch: expected $dim, got ${q.length}")
-    // validate ONCE, synchronously, against the BUILT spec — refuses
-    // unknown columns/bad value types even on a fully-empty store (a
-    // refusal raised inside the pool fan-out would surface wrapped in
-    // CompletionException)
-    if (eqFilter.nonEmpty) specMeta.predicate(eqFilter)
+    store.checkFilter(eqFilter)
     val probed = LocalIvfIndex.selectCells(centroids, q, nprobe, metric)
-    // 0 = float-resident, 1 = f16 shorts, 2 = bf16 shorts, 3 = f8 bytes
-    val qmode = quant match {
-      case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-    }
+    val qmode = CellStore.decodeMode(quant)
     def scanCell(cid: Long): Array[(AnyRef, Double)] = {
-      val ids = cellIds.get(cid)
+      val ids = store.ids(cid)
       if (ids == null) return Array.empty
       // typed view + scratch resolved ONCE per cell: the unquantized hot
       // path indexes a plain float array with no per-row dispatch or cast;
       // quantized rows decode into the scratch before the shared float
       // kernel (loop fission — decode-to-float is exact, so the result is
       // bit-identical to the decoded-resident form)
-      val raw = cellVecs.get(cid)
+      val raw = store.data(cid)(0)
       val fvecs: Array[Float] = if (qmode == 0) raw.asInstanceOf[Array[Float]] else null
       val svecs: Array[Short] =
         if (qmode == 1 || qmode == 2) raw.asInstanceOf[Array[Short]] else null
@@ -112,14 +95,7 @@ final class LocalIvfIndex private (
           }
           LocalIvfIndex.dist(scratch, 0, q, metric)
         }
-      // compiled once per probed cell; null = unfiltered (zero per-row cost
-      // beyond one perfectly-predicted branch)
-      val pred: Int => Boolean =
-        if (eqFilter.isEmpty) null
-        else {
-          val m = cellMeta.get(cid)
-          (if (m == null) LocalMeta.Empty else m).predicate(eqFilter)
-        }
+      val pred = store.predicate(cid, eqFilter)
       val heap = LocalTopK.newHeap(topK)
       // Admission gate: once the heap is full, a vector can only displace
       // the head if d <= head + 2e-6 (beyond that, cmp resolves on the raw
@@ -148,119 +124,13 @@ final class LocalIvfIndex private (
     LocalTopK.scanAndMerge(probed, scanCell, topK)
   }
 
-  /** O(changes) refresh (r13, r12 VERDICT #2): fold one delta window's LWW
-    * winners into the resident index instead of re-streaming the corpus —
-    * the in-process analog of the reference HNSW's online inserts
-    * (core/vectorindex/hnsw.go:104-167), rebuilt-index-identical
-    * (LocalRefreshSpec pins parity per storage mode).
-    *
-    * `struck` = EVERY winner pk of the window (dels AND puts — a put
-    * strikes its stale copy wherever it lives, including another cell when
-    * the row moved); `puts` = the put winners with their segment-decorated
-    * cell and STORED-form vector, meta values aligned with the name-sorted
-    * [[LocalMeta.specs]] of the built filter columns. Only cells holding a
-    * struck pk or receiving a put rebuild (copy-filter-append of flat
-    * arrays); untouched cells SHARE their arrays with the old index, so
-    * cost is O(corpus) hash probes + O(touched cells) copy — no Spark
-    * read, no decode. The centroids are the chain base's, which is exactly
-    * why the caller must only fold windows within one chain
-    * ([[graft.collection.GraftCatalog]]'s refresh seam enforces it). */
-  def applyChanges(struck: java.util.Set[AnyRef],
-                   puts: Seq[LocalIvfIndex.Put]): LocalIvfIndex = {
-    val specs = specMeta.specs
-    val qm = quant match {
-      case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-    }
-    puts.foreach { p =>
-      val len = p.vec match {
-        case a: Array[Float] if qm == 0            => a.length
-        case a: Array[Short] if qm == 1 || qm == 2 => a.length
-        case a: Array[Byte] if qm == 3             => a.length
-        case other => throw new IllegalArgumentException(
-          s"put ${p.id}: stored form ${if (other == null) "null" else other.getClass.getSimpleName} " +
-            s"does not match index quantization '$quant'")
-      }
-      require(len == dim, s"put ${p.id}: vector is $len-dim, index dim is $dim")
-      require(p.metaValues.length == specs.length,
-        s"put ${p.id}: expected ${specs.length} meta values (${specs.map(_._1).mkString(", ")}), " +
-          s"got ${p.metaValues.length}")
-    }
-    val putsByCell = puts.groupBy(_.cell)
-    val touched = scala.collection.mutable.LinkedHashSet.empty[Long]
-    if (!struck.isEmpty) cellIds.forEach { (cid, ids) =>
-      if (ids.exists(struck.contains)) touched += cid: Unit
-    }
-    touched ++= putsByCell.keys
-    if (touched.isEmpty) return this
-    val newIds = new java.util.HashMap[Long, Array[AnyRef]](cellIds)
-    val newVecs = new java.util.HashMap[Long, AnyRef](cellVecs)
-    val newMeta = new java.util.HashMap[Long, LocalMeta](cellMeta)
-    touched.foreach { cid =>
-      val oldIds = Option(cellIds.get(cid)).getOrElse(Array.empty[AnyRef])
-      val oldVecs = cellVecs.get(cid)
-      val oldMeta = cellMeta.get(cid)
-      val keep = Array.newBuilder[Int]
-      var i = 0
-      while (i < oldIds.length) {
-        if (!struck.contains(oldIds(i))) keep += i
-        i += 1
-      }
-      val kept = keep.result()
-      val cellPuts = putsByCell.getOrElse(cid, Seq.empty)
-      val n = kept.length + cellPuts.length
-      if (n == 0) { newIds.remove(cid); newVecs.remove(cid); newMeta.remove(cid) }
-      else {
-        val ids2 = new Array[AnyRef](n)
-        var j = 0
-        while (j < kept.length) { ids2(j) = oldIds(kept(j)); j += 1 }
-        cellPuts.zipWithIndex.foreach { case (p, k) => ids2(kept.length + k) = p.id }
-        // generic is erasure-safe here: rows move only via System.arraycopy
-        // (no element reads), so no boxing on the primitive arrays
-        def copyRows[T](
-            old: Array[T], out: Array[T], putVec: Int => Array[T]): AnyRef = {
-          var r = 0
-          while (r < kept.length) {
-            System.arraycopy(old, kept(r) * dim, out, r * dim, dim); r += 1
-          }
-          var k = 0
-          while (k < cellPuts.length) {
-            System.arraycopy(putVec(k), 0, out, (kept.length + k) * dim, dim); k += 1
-          }
-          out.asInstanceOf[AnyRef]
-        }
-        val vecs2: AnyRef = qm match {
-          case 0 => copyRows(
-            if (oldVecs == null) Array.empty[Float] else oldVecs.asInstanceOf[Array[Float]],
-            new Array[Float](n * dim), k => cellPuts(k).vec.asInstanceOf[Array[Float]])
-          case 1 | 2 => copyRows(
-            if (oldVecs == null) Array.empty[Short] else oldVecs.asInstanceOf[Array[Short]],
-            new Array[Short](n * dim), k => cellPuts(k).vec.asInstanceOf[Array[Short]])
-          case _ => copyRows(
-            if (oldVecs == null) Array.empty[Byte] else oldVecs.asInstanceOf[Array[Byte]],
-            new Array[Byte](n * dim), k => cellPuts(k).vec.asInstanceOf[Array[Byte]])
-        }
-        newIds.put(cid, ids2)
-        newVecs.put(cid, vecs2)
-        if (specs.nonEmpty) {
-          val mb = new LocalMeta.Builder(specs)
-          val src = if (oldMeta == null) LocalMeta.Empty else oldMeta
-          kept.foreach(r => mb.add(src.valuesAt(r)))
-          cellPuts.foreach(p => mb.add(p.metaValues))
-          newMeta.put(cid, mb.result())
-        }
-      }
-    }
-    new LocalIvfIndex(centroids, newIds, newVecs, newMeta, specMeta, dim, metric, quant)
-  }
+  /** [[LocalRung.applyChanges]]: puts carry their segment-decorated cell
+    * and ONE stored-form vector matching the index quantization. */
+  def applyChanges(struck: java.util.Set[AnyRef], puts: Seq[LocalRung.Put]): LocalIvfIndex =
+    new LocalIvfIndex(centroids, store.applyChanges(struck, puts), dim, metric, quant)
 }
 
 object LocalIvfIndex {
-
-  /** One put winner for [[LocalIvfIndex.applyChanges]]: pk, its
-    * segment-assigned cell, the STORED-form vector (float[]/short[]/byte[]
-    * matching the index quantization), and filter-column values aligned
-    * with the index's name-sorted [[LocalMeta.specs]]. */
-  case class Put(id: AnyRef, cell: Long, vec: AnyRef, metaValues: Seq[Any])
 
   /** The `nprobe` nearest cell ids by insertion into primitive parallel
     * arrays — no tuple boxing, no full sort of k cells; the
@@ -317,81 +187,18 @@ object LocalIvfIndex {
                    centroids: Seq[(Long, Array[Float])], metric: String,
                    metaCols: Seq[(String, String)] = Nil,
                    quant: String = "none"): LocalIvfIndex = {
-    require(Set("none", "f16", "bf16", "f8").contains(quant), s"unknown quantization: $quant")
-    val storedCol = quant match {
-      case "none"         => col(vecCol).cast("array<float>")
-      case "f16" | "bf16" => col(vecCol).cast("array<short>")
-      case "f8"           => col(vecCol) // binary
-    }
-    // `cell` comes back as Int when read from a partitionBy directory —
-    // normalize to long
-    val rows = assigned.select(col(idCol) +: storedCol +:
-      col("cell").cast("long") +: metaCols.map { case (n, _) => col(n) }: _*)
+    val kind = CellStore.vectorKind(quant)
     // dim comes from the trained centroids, not the first data row — an
     // empty (or fully-filtered) assigned set must build a searchable empty
     // index, not one whose every probe fails with "expected -1".
     require(centroids.nonEmpty, "fromAssigned requires at least one centroid")
     val dim = centroids.head._2.length
-    // 0 = floats, 1/2 = shorts, 3 = bytes — hoisted above the row loop
-    val qm = quant match {
-      case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-    }
-    val idsB = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuilder[AnyRef]]()
-    val vecsB = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuilder[_]]()
-    def newVecBuilder(): scala.collection.mutable.ArrayBuilder[_] = qm match {
-      case 0     => new scala.collection.mutable.ArrayBuilder.ofFloat
-      case 1 | 2 => new scala.collection.mutable.ArrayBuilder.ofShort
-      case _     => new scala.collection.mutable.ArrayBuilder.ofByte
-    }
-    val metaB = new java.util.HashMap[Long, LocalMeta.Builder]()
-    val it = LocalLoad.boundedIterator(rows)
-    while (it.hasNext) {
-      val r = it.next()
-      val cell = r.getLong(2)
-      var ib = idsB.get(cell)
-      if (ib == null) {
-        ib = scala.collection.mutable.ArrayBuilder.make[AnyRef]
-        idsB.put(cell, ib)
-        vecsB.put(cell, newVecBuilder())
-        if (metaCols.nonEmpty) metaB.put(cell, new LocalMeta.Builder(metaCols))
-      }
-      def badDim(len: Any): Nothing = throw new IllegalArgumentException(
-        s"row ${r.get(0)}: vector is $len, index dim is $dim")
-      qm match {
-        case 3 =>
-          val v = r.getAs[Array[Byte]](1)
-          if (v == null || v.length != dim)
-            badDim(if (v == null) "null" else s"${v.length}-dim")
-          val b = vecsB.get(cell).asInstanceOf[scala.collection.mutable.ArrayBuilder.ofByte]
-          b.addAll(v, 0, v.length)
-        case 1 | 2 =>
-          val v = r.getSeq[Short](1)
-          if (v == null || v.length != dim)
-            badDim(if (v == null) "null" else s"${v.length}-dim")
-          val b = vecsB.get(cell).asInstanceOf[scala.collection.mutable.ArrayBuilder.ofShort]
-          RowArrays.appendShorts(v, b)
-        case _ =>
-          val v = r.getSeq[Float](1)
-          if (v == null || v.length != dim)
-            badDim(if (v == null) "null" else s"${v.length}-dim")
-          val b = vecsB.get(cell).asInstanceOf[scala.collection.mutable.ArrayBuilder.ofFloat]
-          RowArrays.appendFloats(v, b)
-      }
-      ib += r.get(0).asInstanceOf[AnyRef]
-      if (metaCols.nonEmpty)
-        metaB.get(cell).add(metaCols.indices.map(j => r.get(3 + j)))
-    }
-    val ids = new java.util.HashMap[Long, Array[AnyRef]]()
-    val vecs = new java.util.HashMap[Long, AnyRef]()
-    val metas = new java.util.HashMap[Long, LocalMeta]()
-    idsB.forEach((k, b) => ids.put(k, b.result()))
-    vecsB.forEach((k, b) => vecs.put(k, b.result().asInstanceOf[AnyRef]))
-    metaB.forEach((k, b) => metas.put(k, b.result()))
-    val sorted = centroids.sortBy(_._1).toArray
-    val specMeta =
-      if (metaCols.nonEmpty) new LocalMeta.Builder(metaCols).result()
-      else LocalMeta.Empty
-    new LocalIvfIndex(sorted, ids, vecs, metas, specMeta, dim, metric, quant)
+    // `cell` comes back as Int when read from a partitionBy directory —
+    // normalize to long
+    val store = CellStore.load(assigned, idCol, col("cell").cast("long"),
+      Seq(LocalRung.storedCol(vecCol, quant)),
+      Seq(CellStore.Field("vector", kind, dim, "-dim", s"index dim is $dim")), metaCols, quant)
+    new LocalIvfIndex(centroids.sortBy(_._1).toArray, store, dim, metric, quant)
   }
 
   /** Exact scalar distance over a flat array slice — double accumulation in

@@ -18,40 +18,37 @@ import org.apache.spark.sql.{DataFrame, Row}
   *
   * Iteration order is identical on both paths (partition order, then row
   * order within each partition), so the built rungs are bit-identical.
-  * Threshold parameterised via `graft.localLoad.collectBytes` — a DECODED
-  * driver-heap budget, default 1 GiB. Heap sizing (r15, ADVICE): planned
-  * bytes are compressed/encoded parquet or columnar-cache sizes, while
-  * collect() materializes boxed GenericRow objects whose footprint is a
-  * small multiple of that — so the check compares
-  * `planned × DecodedExpansionFactor ≤ budget`: a collect() fires only when
-  * ~4× the plan estimate still fits the budget (held transiently while the
-  * rung is built; size the budget to driver heap ÷ ~8 or lower). The
-  * default budget ÷ factor keeps the same 256 MiB planned-bytes boundary
-  * the r14 version used — no measured path changes, the config's meaning
-  * is just honest about decoded heap now. */
+  * Heap sizing (r15, ADVICE): planned bytes are compressed/encoded parquet
+  * or columnar-cache sizes, while collect() materializes boxed GenericRow
+  * objects whose footprint is a small multiple of that — so a collect()
+  * fires only when `planned × DecodedExpansionFactor` fits the fixed
+  * decoded-heap budget (held transiently while the rung is built), the
+  * same 256 MiB planned-bytes boundary the r14 version used.
+  *
+  * The budget is a constant. The `graft.localLoad.collectBytes` key that
+  * once tuned it is retired: r15 changed its meaning from planned to
+  * decoded bytes without a trace, so a session that still sets it refuses
+  * at the first local load instead of having a pinned value silently
+  * reinterpreted or ignored. */
 private[graft] object LocalLoad {
-  val CollectBytesConf = "graft.localLoad.collectBytes"
-  val DefaultCollectBytes: Long = 1024L << 20
+  val RetiredCollectBytesConf = "graft.localLoad.collectBytes"
+  val CollectBudgetBytes: Long = 1024L << 20
 
   /** Decoded-Row heap bytes assumed per PLANNED input byte (boxed Object[]
     * rows vs compressed columnar input) — deliberately conservative. */
   val DecodedExpansionFactor: Int = 4
 
   def boundedIterator(rows: DataFrame): java.util.Iterator[Row] = {
-    val limit = rows.sparkSession.conf.getOption(CollectBytesConf).map { v =>
-      // a malformed value must name the config key, not fail the rung load
-      // with a bare NumberFormatException (r15, ADVICE)
-      try v.toLong
-      catch { case e: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$CollectBytesConf must be a byte count, got '$v'", e)
-      }
-    }.getOrElse(DefaultCollectBytes)
+    rows.sparkSession.conf.getOption(RetiredCollectBytesConf).foreach { v =>
+      throw new IllegalArgumentException(
+        s"$RetiredCollectBytesConf is retired (set to '$v'): the local-load collect " +
+          s"budget is fixed at $CollectBudgetBytes decoded bytes — unset the key")
+    }
     // unknown stats default to spark.sql.defaultSizeInBytes = Long.Max —
     // i.e. the fallback direction is the streamed iterator, never an
     // unbounded collect
     val planned = rows.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (planned * DecodedExpansionFactor <= BigInt(limit))
+    if (planned * DecodedExpansionFactor <= BigInt(CollectBudgetBytes))
       java.util.Arrays.asList(rows.collect(): _*).iterator()
     else rows.toLocalIterator()
   }

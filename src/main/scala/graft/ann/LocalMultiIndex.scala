@@ -1,6 +1,6 @@
 package graft.ann
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Driver-local multi-vector (CFLAT) serving index — the point-latency rung
@@ -37,17 +37,16 @@ final class LocalMultiIndex private (
     fieldNames: Array[String],
     fieldDims: Array[Int],
     routingIdx: Int,
-    cellIds: java.util.HashMap[Long, Array[AnyRef]],
-    /** Per cell: one stored-form flat array per field
-      * (float[] | short[] | byte[], by `quant`). */
-    cellVecs: java.util.HashMap[Long, Array[AnyRef]],
+    /** Per cell: one stored-form flat array per field (float[] | short[] |
+      * byte[], by `quant`). */
+    store: CellStore,
     quant: String,
-    metric: String) extends Serializable {
+    metric: String) extends LocalRung with Serializable {
 
-  def cellCount: Int = cellIds.size()
-  def size: Long = {
-    var n = 0L; cellIds.values.forEach(a => n += a.length); n
-  }
+  def cellCount: Int = store.cellCount
+  def size: Long = store.size
+  /** The CFLAT rung loads no EQ store. */
+  def filterableColumns: Set[String] = Set.empty
   def routingField: String = fieldNames(routingIdx)
 
   /** Probe the `nprobe` cells nearest the ROUTING field's query, exact
@@ -87,14 +86,11 @@ final class LocalMultiIndex private (
     val weights = included.map(_.ratio / 100.0).toArray
     val scoreMetric = if (metric == "cosine") "cosine" else "euclidean"
     val probed = LocalIvfIndex.selectCells(centroids, routingQ, nprobe, metric)
-    // 0 = float-resident, 1 = f16 shorts, 2 = bf16 shorts, 3 = f8 bytes
-    val qmode = quant match {
-      case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-    }
+    val qmode = CellStore.decodeMode(quant)
     def scanCell(cid: Long): Array[(AnyRef, Double)] = {
-      val ids = cellIds.get(cid)
+      val ids = store.ids(cid)
       if (ids == null) return Array.empty
-      val vecs = cellVecs.get(cid)
+      val vecs = store.data(cid)
       // typed views + scratch resolved ONCE per cell: the unquantized hot
       // path indexes plain float arrays with no per-row dispatch or cast;
       // quantized rows decode into the scratch before the shared float
@@ -166,105 +162,15 @@ final class LocalMultiIndex private (
       .map { case (id, neg) => (id, LocalMultiIndex.round4(-neg)) }
   }
 
-  /** O(changes) refresh — [[LocalIvfIndex.applyChanges]]'s contract on the
-    * CFLAT rung: `struck` = every winner pk; `puts` carry the ROUTING
-    * field's segment-assigned cell plus one stored-form vector per
-    * declared field (aligned with this index's field order). Touched cells
-    * copy-filter-append each field's flat array; untouched cells share. */
-  def applyChanges(struck: java.util.Set[AnyRef],
-                   puts: Seq[LocalMultiIndex.Put]): LocalMultiIndex = {
-    val qm = quant match {
-      case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-    }
-    puts.foreach { p =>
-      require(p.vecs.length == fieldNames.length,
-        s"put ${p.id}: expected ${fieldNames.length} field vectors " +
-          s"(${fieldNames.mkString(", ")}), got ${p.vecs.length}")
-      p.vecs.zipWithIndex.foreach { case (v, fi) =>
-        val len = v match {
-          case a: Array[Float] if qm == 0            => a.length
-          case a: Array[Short] if qm == 1 || qm == 2 => a.length
-          case a: Array[Byte] if qm == 3             => a.length
-          case other => throw new IllegalArgumentException(
-            s"put ${p.id}: field ${fieldNames(fi)} stored form " +
-              s"${if (other == null) "null" else other.getClass.getSimpleName} " +
-              s"does not match index quantization '$quant'")
-        }
-        require(len == fieldDims(fi),
-          s"put ${p.id}: field ${fieldNames(fi)} is $len-dim, declared ${fieldDims(fi)}")
-      }
-    }
-    val putsByCell = puts.groupBy(_.cell)
-    val touched = scala.collection.mutable.LinkedHashSet.empty[Long]
-    if (!struck.isEmpty) cellIds.forEach { (cid, ids) =>
-      if (ids.exists(struck.contains)) touched += cid: Unit
-    }
-    touched ++= putsByCell.keys
-    if (touched.isEmpty) return this
-    val newIds = new java.util.HashMap[Long, Array[AnyRef]](cellIds)
-    val newVecs = new java.util.HashMap[Long, Array[AnyRef]](cellVecs)
-    touched.foreach { cid =>
-      val oldIds = Option(cellIds.get(cid)).getOrElse(Array.empty[AnyRef])
-      val oldVecs = cellVecs.get(cid)
-      val keep = Array.newBuilder[Int]
-      var i = 0
-      while (i < oldIds.length) {
-        if (!struck.contains(oldIds(i))) keep += i
-        i += 1
-      }
-      val kept = keep.result()
-      val cellPuts = putsByCell.getOrElse(cid, Seq.empty)
-      val n = kept.length + cellPuts.length
-      if (n == 0) { newIds.remove(cid); newVecs.remove(cid) }
-      else {
-        val ids2 = new Array[AnyRef](n)
-        var j = 0
-        while (j < kept.length) { ids2(j) = oldIds(kept(j)); j += 1 }
-        cellPuts.zipWithIndex.foreach { case (p, k) => ids2(kept.length + k) = p.id }
-        // rows move only via System.arraycopy — no element reads, no boxing
-        def copyField[T](fi: Int, old: Array[T], out: Array[T]): AnyRef = {
-          val dimF = fieldDims(fi)
-          var r = 0
-          while (r < kept.length) {
-            System.arraycopy(old, kept(r) * dimF, out, r * dimF, dimF); r += 1
-          }
-          var k = 0
-          while (k < cellPuts.length) {
-            System.arraycopy(cellPuts(k).vecs(fi), 0,
-              out, (kept.length + k) * dimF, dimF)
-            k += 1
-          }
-          out.asInstanceOf[AnyRef]
-        }
-        val vecs2 = Array.tabulate[AnyRef](fieldNames.length) { fi =>
-          val dimF = fieldDims(fi)
-          qm match {
-            case 0 => copyField(fi,
-              if (oldVecs == null) Array.empty[Float]
-              else oldVecs(fi).asInstanceOf[Array[Float]], new Array[Float](n * dimF))
-            case 1 | 2 => copyField(fi,
-              if (oldVecs == null) Array.empty[Short]
-              else oldVecs(fi).asInstanceOf[Array[Short]], new Array[Short](n * dimF))
-            case _ => copyField(fi,
-              if (oldVecs == null) Array.empty[Byte]
-              else oldVecs(fi).asInstanceOf[Array[Byte]], new Array[Byte](n * dimF))
-          }
-        }
-        newIds.put(cid, ids2)
-        newVecs.put(cid, vecs2)
-      }
-    }
+  /** [[LocalRung.applyChanges]]: puts carry the ROUTING field's
+    * segment-assigned cell plus one stored-form vector per declared field
+    * (aligned with this index's field order). */
+  def applyChanges(struck: java.util.Set[AnyRef], puts: Seq[LocalRung.Put]): LocalMultiIndex =
     new LocalMultiIndex(centroids, fieldNames, fieldDims, routingIdx,
-      newIds, newVecs, quant, metric)
-  }
+      store.applyChanges(struck, puts), quant, metric)
 }
 
 object LocalMultiIndex {
-
-  /** One put winner for [[LocalMultiIndex.applyChanges]]: pk, the ROUTING
-    * field's segment-assigned cell, and one stored-form vector per declared
-    * field in index field order (float[]/short[]/byte[] per quantization). */
-  case class Put(id: AnyRef, cell: Long, vecs: Seq[AnyRef])
 
   /** One queried field: name, PRE-PREPARED query vector, weight ratio —
     * the [[graft.operators.MultiVectorSearch.FieldQuery]] shape without a
@@ -297,7 +203,6 @@ object LocalMultiIndex {
                    routingName: String, quant: String = "none"): LocalMultiIndex = {
     require(centroids.nonEmpty, "fromAssigned requires at least one centroid")
     require(fields.nonEmpty, "fromAssigned requires at least one vector field")
-    require(Set("none", "f16", "bf16", "f8").contains(quant), s"unknown quantization: $quant")
     val routingIdx = fields.indexWhere(_._1 == routingName)
     require(routingIdx >= 0, s"routing field $routingName is not among ${fields.map(_._1)}")
     val names = fields.map(_._1).toArray
@@ -309,72 +214,12 @@ object LocalMultiIndex {
     require(centroids.head._2.length == dims(routingIdx),
       s"centroid dim ${centroids.head._2.length} does not match routing field " +
         s"$routingName's declared dim ${dims(routingIdx)}")
-    val vecCol: String => Column = quant match {
-      case "none"         => n => col(n).cast("array<float>")
-      case "f16" | "bf16" => n => col(n).cast("array<short>")
-      case "f8"           => n => col(n) // binary
-    }
-    val rows = assigned.select(col(idCol) +: col("cell").cast("long") +:
-      names.toSeq.map(vecCol): _*)
-    // 0 = floats, 1 = f16 shorts, 2 = bf16 shorts, 3 = f8 bytes
-    val qm = quant match {
-      case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-    }
-    val idsB = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuilder[AnyRef]]()
-    // per cell: one stored-form builder per field (ofFloat / ofShort / ofByte)
-    val vecsB = new java.util.HashMap[Long, Array[scala.collection.mutable.ArrayBuilder[_]]]()
-    def newBuilders(): Array[scala.collection.mutable.ArrayBuilder[_]] =
-      Array.fill[scala.collection.mutable.ArrayBuilder[_]](names.length)(quant match {
-        case "none"         => new scala.collection.mutable.ArrayBuilder.ofFloat
-        case "f16" | "bf16" => new scala.collection.mutable.ArrayBuilder.ofShort
-        case "f8"           => new scala.collection.mutable.ArrayBuilder.ofByte
-      })
-    val it = LocalLoad.boundedIterator(rows)
-    while (it.hasNext) {
-      val r = it.next()
-      val cell = r.getLong(1)
-      var ib = idsB.get(cell)
-      if (ib == null) {
-        ib = scala.collection.mutable.ArrayBuilder.make[AnyRef]
-        idsB.put(cell, ib)
-        vecsB.put(cell, newBuilders())
-      }
-      ib += r.get(0).asInstanceOf[AnyRef]
-      val vb = vecsB.get(cell)
-      var fi = 0
-      while (fi < names.length) {
-        def badDim(len: Any): Nothing = throw new IllegalArgumentException(
-          s"row ${r.get(0)}: ${names(fi)} is $len, declared dim is ${dims(fi)}")
-        // qm hoisted above the row loop — no per-(row, field) string match
-        // in a load the bench times (multi_local_load)
-        qm match {
-          case 3 =>
-            val v = r.getAs[Array[Byte]](2 + fi)
-            if (v == null || v.length != dims(fi))
-              badDim(if (v == null) "null" else s"${v.length}-dim")
-            val b = vb(fi).asInstanceOf[scala.collection.mutable.ArrayBuilder.ofByte]
-            b.addAll(v, 0, v.length)
-          case 1 | 2 =>
-            val v = r.getSeq[Short](2 + fi)
-            if (v == null || v.length != dims(fi))
-              badDim(if (v == null) "null" else s"${v.length}-dim")
-            val b = vb(fi).asInstanceOf[scala.collection.mutable.ArrayBuilder.ofShort]
-            RowArrays.appendShorts(v, b)
-          case _ =>
-            val v = r.getSeq[Float](2 + fi)
-            if (v == null || v.length != dims(fi))
-              badDim(if (v == null) "null" else s"${v.length}-dim")
-            val b = vb(fi).asInstanceOf[scala.collection.mutable.ArrayBuilder.ofFloat]
-            RowArrays.appendFloats(v, b)
-        }
-        fi += 1
-      }
-    }
-    val ids = new java.util.HashMap[Long, Array[AnyRef]]()
-    val vecs = new java.util.HashMap[Long, Array[AnyRef]]()
-    idsB.forEach((k, b) => ids.put(k, b.result()))
-    vecsB.forEach((k, bs) => vecs.put(k, bs.map(_.result().asInstanceOf[AnyRef])))
+    val kind = CellStore.vectorKind(quant)
+    val store = CellStore.load(assigned, idCol, col("cell").cast("long"),
+      names.toSeq.map(LocalRung.storedCol(_, quant)),
+      fields.map { case (n, d) => CellStore.Field(s"field $n", kind, d, "-dim", s"declared $d") },
+      Nil, quant)
     new LocalMultiIndex(centroids.sortBy(_._1).toArray, names, dims, routingIdx,
-      ids, vecs, quant, metric)
+      store, quant, metric)
   }
 }

@@ -25,29 +25,20 @@ import org.apache.spark.sql.functions._
   */
 final class LocalPqIndex private (
     centroids: Array[(Long, Array[Float])], // empty for a cells-less layout
-    cellIds: java.util.HashMap[Long, Array[AnyRef]],
-    cellCodes: java.util.HashMap[Long, Array[Byte]],
-    cellMeta: java.util.HashMap[Long, LocalMeta],
-    /** Zero-row store carrying the BUILT column spec — the validation
-      * authority, so an unknown filter column refuses even when every cell
-      * is empty ([[LocalIvfIndex]]'s discipline). */
-    specMeta: LocalMeta,
+    /** One m-byte code field per cell ([[CellStore.NoCell]] when cells-less). */
+    store: CellStore,
     cb: PqCodebook,
     val dim: Int,
     metric: String,
-    residual: Boolean) extends Serializable {
+    residual: Boolean) extends LocalRung with Serializable {
 
-  def cellCount: Int = cellIds.size()
-  def size: Long = {
-    var n = 0L; cellIds.values.forEach(a => n += a.length); n
-  }
+  def cellCount: Int = store.cellCount
+  def size: Long = store.size
   /** Resident bytes of the code payload (the memory-scale claim). */
-  def codeBytes: Long = {
-    var n = 0L; cellCodes.values.forEach(a => n += a.length); n
-  }
+  def codeBytes: Long = store.payloadBytes
   /** Columns available to [[search]]'s EQ filter (empty unless the index
     * was built with `metaCols`). */
-  def filterableColumns: Set[String] = specMeta.columns
+  def filterableColumns: Set[String] = store.filterableColumns
 
   /** O(1) centroid lookup for per-cell residual tables (the linear
     * `centroids.find` was O(k) per probed cell). */
@@ -80,26 +71,18 @@ final class LocalPqIndex private (
              eqFilter: Seq[(String, Any)] = Nil): Seq[(AnyRef, Double)] = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(q.length == dim, s"vector dimension mismatch: expected $dim, got ${q.length}")
-    // validate ONCE, synchronously, against the BUILT spec (refusals must
-    // not surface wrapped in CompletionException from the pool fan-out)
-    if (eqFilter.nonEmpty) specMeta.predicate(eqFilter)
+    store.checkFilter(eqFilter)
     val m = cb.m
     val ksub = cb.ksub
     val probed: Seq[Long] =
-      if (centroids.isEmpty) Seq(LocalPqIndex.NoCell)
+      if (centroids.isEmpty) Seq(CellStore.NoCell)
       else LocalIvfIndex.selectCells(centroids, q, nprobe, metric)
     def scanCell(cid: Long): Array[(AnyRef, Double)] = {
-      val ids = cellIds.get(cid)
+      val ids = store.ids(cid)
       if (ids == null) return Array.empty
-      val codes = cellCodes.get(cid)
+      val codes = store.data(cid)(0).asInstanceOf[Array[Byte]]
       val lut = lutFor(cid, q)
-      // compiled once per probed cell; null = unfiltered
-      val pred: Int => Boolean =
-        if (eqFilter.isEmpty) null
-        else {
-          val mm = cellMeta.get(cid)
-          (if (mm == null) LocalMeta.Empty else mm).predicate(eqFilter)
-        }
+      val pred = store.predicate(cid, eqFilter)
       val heap = LocalTopK.newHeap(topK)
       // Admission bound in the SQUARED domain: an element can only displace
       // the heap head if dist <= head + 2e-6 (beyond that, cmp resolves on
@@ -138,89 +121,17 @@ final class LocalPqIndex private (
       cb.adcLut(Array.tabulate(q.length)(i => q(i) - cv(i)))
     }
 
-  /** O(changes) refresh — [[LocalIvfIndex.applyChanges]]'s contract on the
-    * code rung: `struck` = every winner pk, `puts` = put winners with their
-    * segment-encoded m-byte code (already raw/residual per THIS layout —
-    * decorateSegment encodes against the chain base's codebook, the same
-    * sidecar this index holds) and cell (ignored on a cells-less layout).
-    * Touched cells copy-filter-append; untouched cells share arrays. */
-  def applyChanges(struck: java.util.Set[AnyRef],
-                   puts: Seq[LocalPqIndex.Put]): LocalPqIndex = {
-    val specs = specMeta.specs
-    val m = cb.m
-    puts.foreach { p =>
-      require(p.code != null && p.code.length == m,
-        s"put ${p.id}: code is ${if (p.code == null) "null" else s"${p.code.length} B"}, layout m=$m")
-      require(p.metaValues.length == specs.length,
-        s"put ${p.id}: expected ${specs.length} meta values, got ${p.metaValues.length}")
-    }
-    val putsByCell = puts.groupBy(p =>
-      if (centroids.isEmpty) LocalPqIndex.NoCell else p.cell)
-    val touched = scala.collection.mutable.LinkedHashSet.empty[Long]
-    if (!struck.isEmpty) cellIds.forEach { (cid, ids) =>
-      if (ids.exists(struck.contains)) touched += cid: Unit
-    }
-    touched ++= putsByCell.keys
-    if (touched.isEmpty) return this
-    val newIds = new java.util.HashMap[Long, Array[AnyRef]](cellIds)
-    val newCodes = new java.util.HashMap[Long, Array[Byte]](cellCodes)
-    val newMeta = new java.util.HashMap[Long, LocalMeta](cellMeta)
-    touched.foreach { cid =>
-      val oldIds = Option(cellIds.get(cid)).getOrElse(Array.empty[AnyRef])
-      val oldCodes = Option(cellCodes.get(cid)).getOrElse(Array.empty[Byte])
-      val oldMeta = cellMeta.get(cid)
-      val keep = Array.newBuilder[Int]
-      var i = 0
-      while (i < oldIds.length) {
-        if (!struck.contains(oldIds(i))) keep += i
-        i += 1
-      }
-      val kept = keep.result()
-      val cellPuts = putsByCell.getOrElse(cid, Seq.empty)
-      val n = kept.length + cellPuts.length
-      if (n == 0) { newIds.remove(cid); newCodes.remove(cid); newMeta.remove(cid) }
-      else {
-        val ids2 = new Array[AnyRef](n)
-        val codes2 = new Array[Byte](n * m)
-        var r = 0
-        while (r < kept.length) {
-          ids2(r) = oldIds(kept(r))
-          System.arraycopy(oldCodes, kept(r) * m, codes2, r * m, m)
-          r += 1
-        }
-        cellPuts.zipWithIndex.foreach { case (p, k) =>
-          ids2(kept.length + k) = p.id
-          System.arraycopy(p.code, 0, codes2, (kept.length + k) * m, m)
-        }
-        newIds.put(cid, ids2)
-        newCodes.put(cid, codes2)
-        if (specs.nonEmpty) {
-          val mb = new LocalMeta.Builder(specs)
-          val src = if (oldMeta == null) LocalMeta.Empty else oldMeta
-          kept.foreach(r2 => mb.add(src.valuesAt(r2)))
-          cellPuts.foreach(p => mb.add(p.metaValues))
-          newMeta.put(cid, mb.result())
-        }
-      }
-    }
-    new LocalPqIndex(centroids, newIds, newCodes, newMeta, specMeta,
+  /** [[LocalRung.applyChanges]]: puts carry their segment-encoded m-byte
+    * code, already raw/residual per THIS layout (decorateSegment encodes
+    * against the chain base's codebook, the sidecar this index holds); the
+    * cell is ignored on a cells-less layout. */
+  def applyChanges(struck: java.util.Set[AnyRef], puts: Seq[LocalRung.Put]): LocalPqIndex =
+    new LocalPqIndex(centroids, store.applyChanges(struck,
+      if (centroids.isEmpty) puts.map(_.copy(cell = CellStore.NoCell)) else puts),
       cb, dim, metric, residual)
-  }
 }
 
 object LocalPqIndex {
-
-  /** Cell key used when the layout has no IVF cells. */
-  private val NoCell = -1L
-
-  /** One put winner for [[LocalPqIndex.applyChanges]]: pk, segment cell
-    * (any value on a cells-less layout), the m-byte code in THIS layout's
-    * encoding, and filter-column values aligned with the index's
-    * name-sorted [[LocalMeta.specs]]. */
-  case class Put(id: AnyRef, cell: Long, code: Array[Byte], metaValues: Seq[Any])
-
-  // ordering + heap + fan-out live in [[LocalTopK]], shared with
-  // LocalIvfIndex so the two serving rungs cannot drift apart
 
   /** Build from a flushed PQ snapshot's (id, code[, cell]) columns + the
     * codebook sidecar — via [[LocalLoad.boundedIterator]] (small inputs
@@ -243,45 +154,11 @@ object LocalPqIndex {
                 residual: Boolean = true,
                 metaCols: Seq[(String, String)] = Nil): LocalPqIndex = {
     val m = cb.m
-    val baseCols = cellCol match {
-      case Some(cc) => Seq(col(idCol), col(codeCol), col(cc).cast("long"))
-      case None     => Seq(col(idCol), col(codeCol), lit(NoCell))
-    }
-    val rows = snapshot.select(baseCols ++ metaCols.map { case (n, _) => col(n) }: _*)
-    val idsB = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuilder[AnyRef]]()
-    val codesB = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuilder.ofByte]()
-    val metaB = new java.util.HashMap[Long, LocalMeta.Builder]()
-    val it = LocalLoad.boundedIterator(rows)
-    while (it.hasNext) {
-      val r = it.next()
-      val code = r.getAs[Array[Byte]](1)
-      require(code.length == m, s"code length ${code.length} != m=$m")
-      val cell = r.getLong(2)
-      var ib = idsB.get(cell)
-      if (ib == null) {
-        ib = scala.collection.mutable.ArrayBuilder.make[AnyRef]
-        idsB.put(cell, ib)
-        codesB.put(cell, new scala.collection.mutable.ArrayBuilder.ofByte)
-        if (metaCols.nonEmpty) metaB.put(cell, new LocalMeta.Builder(metaCols))
-      }
-      ib += r.get(0).asInstanceOf[AnyRef]
-      val vb = codesB.get(cell)
-      vb.addAll(code, 0, code.length)
-      if (metaCols.nonEmpty)
-        metaB.get(cell).add(metaCols.indices.map(j => r.get(3 + j)))
-    }
-    val ids = new java.util.HashMap[Long, Array[AnyRef]]()
-    val codes = new java.util.HashMap[Long, Array[Byte]]()
-    val metas = new java.util.HashMap[Long, LocalMeta]()
-    idsB.forEach((k, b) => ids.put(k, b.result()))
-    codesB.forEach((k, b) => codes.put(k, b.result()))
-    metaB.forEach((k, b) => metas.put(k, b.result()))
-    val dim = cb.dim
-    val specMeta =
-      if (metaCols.nonEmpty) new LocalMeta.Builder(metaCols).result()
-      else LocalMeta.Empty
+    val store = CellStore.load(snapshot, idCol,
+      cellCol.fold(lit(CellStore.NoCell))(col(_).cast("long")), Seq(col(codeCol)),
+      Seq(CellStore.Field("code", CellStore.Bytes, m, " B", s"layout m=$m")), metaCols, "pq")
     // residual tables need centroids; a cells-less layout is always raw
-    new LocalPqIndex(centroids.sortBy(_._1).toArray, ids, codes, metas, specMeta,
-      cb, dim, metric, residual = residual && centroids.nonEmpty)
+    new LocalPqIndex(centroids.sortBy(_._1).toArray, store, cb, cb.dim, metric,
+      residual = residual && centroids.nonEmpty)
   }
 }

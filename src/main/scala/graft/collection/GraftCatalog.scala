@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, ShortType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.FilterExpr
@@ -3118,23 +3119,15 @@ class GraftCatalog(spark: SparkSession, root: String,
     n
   }
 
-  /** The stored-form read of a vector column, mirroring the local loaders'
-    * cast discipline (floats / f16|bf16 shorts / f8 bytes). */
-  private def storedVecCol(meta: CollectionMeta, name: String): Column =
-    meta.quantization match {
-      case "none"         => col(name).cast("array<float>")
-      case "f16" | "bf16" => col(name).cast("array<short>")
-      case _              => col(name)
-    }
-
-  private def storedVecOf(meta: CollectionMeta, r: org.apache.spark.sql.Row,
-                          i: Int): AnyRef = {
+  /** A put winner's stored-form payload at column `i`, read by the
+    * column's type — float[] / short[] vectors, byte[] f8 vectors and codes. */
+  private def storedOf(r: org.apache.spark.sql.Row, i: Int): AnyRef = {
     require(!r.isNullAt(i),
-      s"put winner ${r.get(0)} carries a null vector — segment corrupt")
-    meta.quantization match {
-      case "none"         => r.getSeq[Float](i).toArray
-      case "f16" | "bf16" => r.getSeq[Short](i).toArray
-      case _              => r.getAs[Array[Byte]](i)
+      s"put winner ${r.get(0)} carries a null payload — segment corrupt")
+    r.schema(i).dataType match {
+      case ArrayType(FloatType, _) => r.getSeq[Float](i).toArray
+      case ArrayType(ShortType, _) => r.getSeq[Short](i).toArray
+      case _                       => r.getAs[Array[Byte]](i)
     }
   }
 
@@ -3177,142 +3170,76 @@ class GraftCatalog(spark: SparkSession, root: String,
     specs
   }
 
-  /** Fold the delta window since `prevVersion` into a resident
-    * [[graft.ann.LocalIvfIndex]] — O(changes) collect + touched-cell
-    * rebuild — or fall back to a full [[localIvfIndex]] when the chain
-    * base moved (flush / compaction). Returns (index, version it now
-    * serves); `prev` itself when nothing changed. A window holding more
-    * than `maxChanges` LWW winners also rebuilds (bounded driver collect —
-    * see [[GraftCatalog.DefaultLocalRefreshMaxChanges]]) — unless
+  /** Fold the delta window since `prevVersion` into a resident local rung
+    * — O(changes) collect + touched-cell rebuild through the rung's shared
+    * [[graft.ann.CellStore]] fold — or fall back to a full reload of the
+    * same rung when the chain base moved (flush / compaction). Returns
+    * (rung, version it now serves); `prev` itself when nothing changed. A
+    * window holding more than `maxChanges` LWW winners also rebuilds
+    * (bounded driver collect — see
+    * [[GraftCatalog.DefaultLocalRefreshMaxChanges]]) — unless
     * `oversizeRebuilds` is false, in which case it throws
     * [[GraftCatalog.RefreshTooLargeException]] so an EAGER caller on the
     * write path (the flushDelta fold) can degrade to drop-and-lazy-rebuild
-    * instead of stalling the publish on an O(corpus) rebuild. */
+    * instead of stalling the publish on an O(corpus) rebuild. The put
+    * winners carry each rung's stored form: the segment-assigned cell (the
+    * ROUTING field's on multi-vector), then the vector(s) or the
+    * segment-encoded PQ / sign code (encoded against the chain base's
+    * sidecars — the ones the rung holds), then the filter columns. */
+  def refreshLocal[R <: graft.ann.LocalRung](name: String, prev: R, prevVersion: Int,
+      filterColumns: Seq[String] = Nil,
+      maxChanges: Int = GraftCatalog.DefaultLocalRefreshMaxChanges,
+      oversizeRebuilds: Boolean = true): (R, Int) = {
+    val meta = getMeta(name)
+    val head = meta.currentVersion
+    if (head == prevVersion) return (prev, head)
+    val cell = col(GraftCatalog.CellCol).cast("long")
+    val noCell = lit(-1L)
+    // (full reload of this rung, its cell + payload columns in a segment —
+    // resolved only when a window exists, after the chain-base check)
+    val (reload, layout) = prev match {
+      case _: graft.ann.LocalIvfIndex => (() => localIvfIndex(name, filterColumns),
+        () => Seq(cell, graft.ann.LocalRung.storedCol(VectorCol, meta.quantization)))
+      case _: graft.ann.LocalPqIndex => (() => localPqIndex(name, filterColumns), () => {
+        val hasCells = meta.ivfCells.isDefined &&
+          fs.exists(centroidDir(name, chainBase(name, head)))
+        Seq(if (hasCells) cell else noCell, col(GraftCatalog.PqCodeCol))
+      })
+      case _: graft.ann.LocalBinIndex => (() => localBinIndex(name, filterColumns),
+        () => Seq(noCell, col(GraftCatalog.BinCol)))
+      case _: graft.ann.LocalMultiIndex => (() => localMultiIndex(name),
+        () => cell +: meta.vectorFields.map(f =>
+          graft.ann.LocalRung.storedCol(f.name, meta.quantization)))
+    }
+    def rebuild(): (R, Int) = (reload().asInstanceOf[R], head)
+    refreshWindow(name, prevVersion, head) match {
+      case None if !oversizeRebuilds => throw rebaseRefusal(name, prevVersion, head)
+      case None => rebuild()
+      case Some(w) =>
+        val specs = refreshSpecs(meta, filterColumns, prev.filterableColumns)
+        val payload = layout()
+        refreshWinners(name, meta, w, payload ++ specs.map { case (n, _) => col(n) },
+            maxChanges) match {
+          case None if !oversizeRebuilds => throw oversizeRefusal(name, w, maxChanges)
+          case None => rebuild()
+          case Some((struck, putRows)) =>
+            val nf = payload.length - 1
+            val puts = putRows.map { r =>
+              graft.ann.LocalRung.Put(r.get(0).asInstanceOf[AnyRef], segCellOf(r, 2),
+                (3 until 3 + nf).map(storedOf(r, _)), specs.indices.map(j => r.get(3 + nf + j)))
+            }
+            (prev.applyChanges(struck, puts).asInstanceOf[R], head)
+        }
+    }
+  }
+
+  /** [[refreshLocal]] typed for the IVF rung. */
   def refreshLocalIvfIndex(name: String, prev: graft.ann.LocalIvfIndex,
                            prevVersion: Int, filterColumns: Seq[String] = Nil,
                            maxChanges: Int = GraftCatalog.DefaultLocalRefreshMaxChanges,
                            oversizeRebuilds: Boolean = true)
-      : (graft.ann.LocalIvfIndex, Int) = {
-    val meta = getMeta(name)
-    val head = meta.currentVersion
-    if (head == prevVersion) return (prev, head)
-    refreshWindow(name, prevVersion, head) match {
-      case None if !oversizeRebuilds => throw rebaseRefusal(name, prevVersion, head)
-      case None => (localIvfIndex(name, filterColumns), head)
-      case Some(w) =>
-        val specs = refreshSpecs(meta, filterColumns, prev.filterableColumns)
-        val payload = Seq(col(GraftCatalog.CellCol).cast("long"),
-          storedVecCol(meta, VectorCol)) ++ specs.map { case (n, _) => col(n) }
-        refreshWinners(name, meta, w, payload, maxChanges) match {
-          case None if !oversizeRebuilds => throw oversizeRefusal(name, w, maxChanges)
-          case None => (localIvfIndex(name, filterColumns), head)
-          case Some((struck, putRows)) =>
-            val puts = putRows.map { r =>
-              graft.ann.LocalIvfIndex.Put(r.get(0).asInstanceOf[AnyRef],
-                segCellOf(r, 2), storedVecOf(meta, r, 3),
-                specs.indices.map(j => r.get(4 + j)))
-            }
-            (prev.applyChanges(struck, puts), head)
-        }
-    }
-  }
-
-  /** [[refreshLocalIvfIndex]]'s contract on the ADC rung: put winners fold
-    * with their segment-encoded codes (raw/residual per THIS chain base's
-    * layout — the same codebook the index holds). */
-  def refreshLocalPqIndex(name: String, prev: graft.ann.LocalPqIndex,
-                          prevVersion: Int, filterColumns: Seq[String] = Nil,
-                          maxChanges: Int = GraftCatalog.DefaultLocalRefreshMaxChanges,
-                          oversizeRebuilds: Boolean = true)
-      : (graft.ann.LocalPqIndex, Int) = {
-    val meta = getMeta(name)
-    val head = meta.currentVersion
-    if (head == prevVersion) return (prev, head)
-    refreshWindow(name, prevVersion, head) match {
-      case None if !oversizeRebuilds => throw rebaseRefusal(name, prevVersion, head)
-      case None => (localPqIndex(name, filterColumns), head)
-      case Some(w) =>
-        val specs = refreshSpecs(meta, filterColumns, prev.filterableColumns)
-        val hasCells = meta.ivfCells.isDefined &&
-          fs.exists(centroidDir(name, chainBase(name, head)))
-        val cellCol =
-          if (hasCells) col(GraftCatalog.CellCol).cast("long") else lit(-1L)
-        val payload = Seq(cellCol, col(GraftCatalog.PqCodeCol)) ++
-          specs.map { case (n, _) => col(n) }
-        refreshWinners(name, meta, w, payload, maxChanges) match {
-          case None if !oversizeRebuilds => throw oversizeRefusal(name, w, maxChanges)
-          case None => (localPqIndex(name, filterColumns), head)
-          case Some((struck, putRows)) =>
-            val puts = putRows.map { r =>
-              graft.ann.LocalPqIndex.Put(r.get(0).asInstanceOf[AnyRef],
-                if (hasCells) segCellOf(r, 2) else -1L,
-                r.getAs[Array[Byte]](3), specs.indices.map(j => r.get(4 + j)))
-            }
-            (prev.applyChanges(struck, puts), head)
-        }
-    }
-  }
-
-  /** [[refreshLocalIvfIndex]]'s contract on the Hamming rung (flat — one
-    * compaction pass, no cells). */
-  def refreshLocalBinIndex(name: String, prev: graft.ann.LocalBinIndex,
-                           prevVersion: Int, filterColumns: Seq[String] = Nil,
-                           maxChanges: Int = GraftCatalog.DefaultLocalRefreshMaxChanges,
-                           oversizeRebuilds: Boolean = true)
-      : (graft.ann.LocalBinIndex, Int) = {
-    val meta = getMeta(name)
-    val head = meta.currentVersion
-    if (head == prevVersion) return (prev, head)
-    refreshWindow(name, prevVersion, head) match {
-      case None if !oversizeRebuilds => throw rebaseRefusal(name, prevVersion, head)
-      case None => (localBinIndex(name, filterColumns), head)
-      case Some(w) =>
-        val specs = refreshSpecs(meta, filterColumns, prev.filterableColumns)
-        val payload = col(GraftCatalog.BinCol) +: specs.map { case (n, _) => col(n) }
-        refreshWinners(name, meta, w, payload, maxChanges) match {
-          case None if !oversizeRebuilds => throw oversizeRefusal(name, w, maxChanges)
-          case None => (localBinIndex(name, filterColumns), head)
-          case Some((struck, putRows)) =>
-            val puts = putRows.map { r =>
-              graft.ann.LocalBinIndex.Put(r.get(0).asInstanceOf[AnyRef],
-                r.getAs[Array[Byte]](2), specs.indices.map(j => r.get(3 + j)))
-            }
-            (prev.applyChanges(struck, puts), head)
-        }
-    }
-  }
-
-  /** [[refreshLocalIvfIndex]]'s contract on the CFLAT rung: put winners
-    * fold with their ROUTING-field cell and every declared field's
-    * stored-form vector. */
-  def refreshLocalMultiIndex(name: String, prev: graft.ann.LocalMultiIndex,
-                             prevVersion: Int,
-                             maxChanges: Int = GraftCatalog.DefaultLocalRefreshMaxChanges,
-                             oversizeRebuilds: Boolean = true)
-      : (graft.ann.LocalMultiIndex, Int) = {
-    val meta = getMeta(name)
-    val head = meta.currentVersion
-    if (head == prevVersion) return (prev, head)
-    refreshWindow(name, prevVersion, head) match {
-      case None if !oversizeRebuilds => throw rebaseRefusal(name, prevVersion, head)
-      case None => (localMultiIndex(name), head)
-      case Some(w) =>
-        val fields = meta.vectorFields
-        val payload = col(GraftCatalog.CellCol).cast("long") +:
-          fields.map(f => storedVecCol(meta, f.name))
-        refreshWinners(name, meta, w, payload, maxChanges) match {
-          case None if !oversizeRebuilds => throw oversizeRefusal(name, w, maxChanges)
-          case None => (localMultiIndex(name), head)
-          case Some((struck, putRows)) =>
-            val puts = putRows.map { r =>
-              graft.ann.LocalMultiIndex.Put(r.get(0).asInstanceOf[AnyRef],
-                segCellOf(r, 2),
-                fields.indices.map(j => storedVecOf(meta, r, 3 + j)))
-            }
-            (prev.applyChanges(struck, puts), head)
-        }
-    }
-  }
+      : (graft.ann.LocalIvfIndex, Int) =
+    refreshLocal(name, prev, prevVersion, filterColumns, maxChanges, oversizeRebuilds)
 
   /** Files the probed cells actually read, from the PHYSICAL scan's
     * selected partitions — `inputFiles` would list the whole relation; only

@@ -566,7 +566,7 @@ object PersistenceQueries {
         reverse(col("embedding")).as("vector")))
       cat.delete("lrb", graft.FilterExpr.Single("label", graft.FilterExpr.Gte, 107))
       cat.flushDelta("lrb") // v2: delta codes from v1's thresholds
-      val (idx, v) = cat.refreshLocalBinIndex("lrb", prev, 1, oversizeRebuilds = false)
+      val (idx, v) = cat.refreshLocal("lrb", prev, 1, oversizeRebuilds = false)
       require(v == 2, s"fold should land on v2, got v$v")
       val qv = em0(0L)
       idx.search(qv, topK = 10)
@@ -623,7 +623,7 @@ object PersistenceQueries {
         reverse(col("embedding")).as("vector")))
       cat.delete("lrp", graft.FilterExpr.Single("label", graft.FilterExpr.Gte, 107))
       cat.flushDelta("lrp") // v2: delta codes from v1's codebook
-      val (idx, v) = cat.refreshLocalPqIndex("lrp", prev, 1, oversizeRebuilds = false)
+      val (idx, v) = cat.refreshLocal("lrp", prev, 1, oversizeRebuilds = false)
       require(v == 2, s"fold should land on v2, got v$v")
       val qv = em0(0L)
       idx.search(qv, topK = 10, nprobe = 1)
@@ -663,7 +663,7 @@ object PersistenceQueries {
         reverse(col("v0")).as("v0"), reverse(col("v1")).as("v1")))
       cat.delete("lrm", graft.FilterExpr.Single("label", graft.FilterExpr.Gte, 107))
       cat.flushDelta("lrm") // v2: routing cells from v1's sidecar
-      val (idx, v) = cat.refreshLocalMultiIndex("lrm", prev, 1, oversizeRebuilds = false)
+      val (idx, v) = cat.refreshLocal("lrm", prev, 1, oversizeRebuilds = false)
       require(v == 2, s"fold should land on v2, got v$v")
       def qv(id: Long) = emQ(id)
       idx.search(Seq(

@@ -103,31 +103,22 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       case _ => false
     }
 
-  /** Lazily-built driver-local serving indexes, keyed by collection —
-    * serve the FLUSHED snapshot at the PUBLISHED HEAD: every request
-    * version-compares the cached entry against the meta it already read
-    * and folds a lagging rung forward O(changes) ([[localIndexFor]]), so a
-    * flushDelta from another driver on the same root is visible at the
-    * next request. Flush/drop still invalidate eagerly (chain-base moves
-    * rebuild anyway; drop releases the memory). Resident-state mutations
-    * stay invisible until a flush publishes them — by contract. */
-  private val localIndexes =
-    scala.collection.mutable.Map.empty[String, (Int, graft.ann.LocalIvfIndex)]
+  /** Lazily-built driver-local serving rungs, keyed by (collection, rung)
+    * — "ivf", "pq" (ADC codes, m bytes/vector), "bin" (sign codes,
+    * ceil(dim/8) bytes/vector) and "multi" (routed CFLAT) — serving the
+    * FLUSHED snapshot at the PUBLISHED HEAD: every request version-compares
+    * the cached entry against the meta it already read and folds a lagging
+    * rung forward O(changes) ([[localIndexFor]]), so a flushDelta from
+    * another driver on the same root is visible at the next request.
+    * Flush/drop still invalidate eagerly (chain-base moves rebuild anyway;
+    * drop releases the memory). Resident-state mutations stay invisible
+    * until a flush publishes them — by contract. */
+  private val localRungs =
+    scala.collection.mutable.Map.empty[(String, String), (Int, graft.ann.LocalRung)]
 
-  /** Driver-local ADC (PQ code) indexes — the memory-scale serving rung:
-    * m bytes/vector instead of 4·dim. Same flush/drop invalidation. */
-  private val localPqIndexes =
-    scala.collection.mutable.Map.empty[String, (Int, graft.ann.LocalPqIndex)]
-
-  /** Driver-local Hamming (sign-code) indexes — the density-scale serving
-    * rung: ceil(dim/8) bytes/vector. Same flush/drop invalidation. */
-  private val localBinIndexes =
-    scala.collection.mutable.Map.empty[String, (Int, graft.ann.LocalBinIndex)]
-
-  /** Driver-local multi-vector (CFLAT) indexes — the point-latency rung for
-    * routed multi-vector IVF layouts. Same flush/drop invalidation. */
-  private val localMultiIndexes =
-    scala.collection.mutable.Map.empty[String, (Int, graft.ann.LocalMultiIndex)]
+  /** Evict every cached rung of `name`. */
+  private def dropLocalRungs(name: String): Unit =
+    localRungs.synchronized(localRungs.filterInPlace { case ((n, _), _) => n != name })
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -256,9 +247,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         ok(JObject("created" -> JString(meta.name)))
       case ("GET", "collections" :: name :: Nil) => ok(infoJson(name))
       case ("DELETE", "collections" :: name :: Nil) =>
-        requireExists(name); catalog.dropCollection(name)
-        localIndexes.remove(name); localPqIndexes.remove(name); localBinIndexes.remove(name)
-        localMultiIndexes.remove(name)
+        requireExists(name); catalog.dropCollection(name); dropLocalRungs(name)
         ok(JObject("dropped" -> JString(name)))
       case ("POST", "collections" :: name :: "load" :: Nil) =>
         catalog.loadCollection(name); ok(infoJson(name))
@@ -268,8 +257,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       case ("POST", "collections" :: name :: "flush" :: Nil) =>
         val v = catalog.flush(name)
         // a new snapshot version supersedes the cached serving indexes
-        localIndexes.remove(name); localPqIndexes.remove(name); localBinIndexes.remove(name)
-        localMultiIndexes.remove(name)
+        dropLocalRungs(name)
         ok(JObject("version" -> JInt(v)))
       // pre-touch the serving layout's pages (README "Cold-probe
       // envelope"): optional {"cells":[...]} warms only those cells —
@@ -283,7 +271,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       case ("POST", "collections" :: name :: "flushDelta" :: Nil) =>
         val v = catalog.flushDelta(name)
         // r13: a delta segment is O(changes), so resident local rungs FOLD
-        // it (GraftCatalog.refreshLocal*Index) instead of being dropped
+        // it (GraftCatalog.refreshLocal) instead of being dropped
         // into a full O(corpus) reload on the next probe — the reference
         // HNSW's online-insert property on the batch-first split. A failed
         // fold degrades to the old behavior (drop, lazy rebuild).
@@ -501,9 +489,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         // ONE meta read serves both the freshness compare and the query
         // prep (the read this route always paid)
         val cmeta = catalog.getMeta(name)
-        val idx = localIndexFor(localIndexes, name, eq, cmeta.currentVersion)(
-          _.filterableColumns)(catalog.localIvfIndex(name, _))((i, v) =>
-          catalog.refreshLocalIvfIndex(name, i, v, i.filterableColumns.toSeq.sorted))
+        val idx = localIndexFor("ivf", name, eq, cmeta.currentVersion)(
+          catalog.localIvfIndex(name, _))
         // The SAME query prep as the distributed probes (normalize when
         // cosine, quantize round-trip when quantized) — the local index
         // serves decoded vectors, so an unprepared query would rank
@@ -520,9 +507,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         val eq = localEqFilter(req, "searchLocalPq")
         val (vector, topK, nprobe) = parseProbe(req, "searchLocalPq")
         val cmeta = catalog.getMeta(name)
-        val idx = localIndexFor(localPqIndexes, name, eq, cmeta.currentVersion)(
-          _.filterableColumns)(catalog.localPqIndex(name, _))((i, v) =>
-          catalog.refreshLocalPqIndex(name, i, v, i.filterableColumns.toSeq.sorted))
+        val idx = localIndexFor("pq", name, eq, cmeta.currentVersion)(
+          catalog.localPqIndex(name, _))
         val qv = GraftCatalog.prepareQueryVector(vector, cmeta)
         200 -> hitsJson(idx.search(qv, topK, nprobe, eq))
       // driver-local Hamming probe over the packed sign-code layout (the
@@ -534,9 +520,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         val vector = parseVector(req, "searchLocalBin")
         val topK = intOr(req, "topK", 10)
         val cmeta = catalog.getMeta(name)
-        val idx = localIndexFor(localBinIndexes, name, eq, cmeta.currentVersion)(
-          _.filterableColumns)(catalog.localBinIndex(name, _))((i, v) =>
-          catalog.refreshLocalBinIndex(name, i, v, i.filterableColumns.toSeq.sorted))
+        val idx = localIndexFor("bin", name, eq, cmeta.currentVersion)(
+          catalog.localBinIndex(name, _))
         val qv = GraftCatalog.prepareQueryVector(vector, cmeta)
         200 -> hitsJson(idx.search(qv, topK, eq))
       // experimental CFLAT weighted multi-vector search
@@ -616,9 +601,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         val cmeta = catalog.getMeta(name)
         // same head-freshness discipline as the single-vector local rungs
         // (no EQ store on the CFLAT rung, so the shape check is vacuous)
-        val idx = localIndexFor(localMultiIndexes, name, Nil, cmeta.currentVersion)(
-          _ => Set.empty)(_ => catalog.localMultiIndex(name))((i, v) =>
-          catalog.refreshLocalMultiIndex(name, i, v))
+        val idx = localIndexFor("multi", name, Nil, cmeta.currentVersion)(
+          _ => catalog.localMultiIndex(name))
         // same query prep as the distributed probes (normalize when cosine,
         // quantize round-trip when quantized) — the local index serves
         // decoded vectors
@@ -901,7 +885,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     * store, which serves unfiltered probes identically from then on. A
     * collection with NO filterable columns never upgrades — the filter
     * refuses inside search, so doomed requests don't loop rebuilds. */
-  /** One build lock per collection, shared by the four rung caches: a
+  /** One build lock per collection, shared by every cached rung of it: a
     * local-index (re)build is a multi-GB driver job, so two requests
     * upgrading the SAME collection must not both run it (one build wasted
     * + doubled peak memory), and serializing two DIFFERENT rungs of one
@@ -934,47 +918,33 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     * a full O(corpus) reload on the next probe. Refresh errors degrade to
     * the pre-r13 behavior (drop the entry; the next request rebuilds) with
     * a stderr note, never fail the flushDelta that already published. */
-  private def refreshLocalEntries(name: String): Unit = {
-    // under the same per-collection lock as localIndexFor: a concurrent
-    // request must not rebuild/refresh the same collection while this
-    // eager fold runs (double peak memory), and a failed fold here must
-    // not cache.remove an entry a racing request just replaced
-    val lock = buildLockFor(name)
-    def upd[A](cache: scala.collection.mutable.Map[String, (Int, A)],
-               refresh: (A, Int) => (A, Int)): Unit = {
-      lock.lock()
-      try {
-        cache.synchronized(cache.get(name)).foreach { case (v, idx) =>
-          try {
-            localBuildHook()
-            val (ni, nv) = refresh(idx, v)
-            cache.synchronized { cache(name) = (nv, ni) }
-          } catch {
-            case e: Exception =>
-              System.err.println(
-                s"graft: local-rung refresh of '$name' failed (${e.getMessage}); " +
-                  "dropping the resident index — next probe rebuilds")
-              cache.synchronized { cache.remove(name) }
-          }
-        }
-      } finally lock.unlock()
-    }
+  private def refreshLocalEntries(name: String): Unit =
+    // under the same per-collection lock as localIndexFor (per rung): a
+    // concurrent request must not rebuild/refresh the same collection while
+    // this eager fold runs (double peak memory), and a failed fold here
+    // must not remove an entry a racing request just replaced.
     // oversizeRebuilds=false: this fold runs INSIDE the flushDelta route,
     // so a window past the collect cap must not stall the publish on an
     // O(corpus) rebuild — RefreshTooLargeException lands in the generic
-    // degrade above (drop the entry; the next probe rebuilds lazily)
-    upd(localIndexes, (i: graft.ann.LocalIvfIndex, v: Int) =>
-      catalog.refreshLocalIvfIndex(name, i, v, i.filterableColumns.toSeq.sorted,
-        oversizeRebuilds = false))
-    upd(localPqIndexes, (i: graft.ann.LocalPqIndex, v: Int) =>
-      catalog.refreshLocalPqIndex(name, i, v, i.filterableColumns.toSeq.sorted,
-        oversizeRebuilds = false))
-    upd(localBinIndexes, (i: graft.ann.LocalBinIndex, v: Int) =>
-      catalog.refreshLocalBinIndex(name, i, v, i.filterableColumns.toSeq.sorted,
-        oversizeRebuilds = false))
-    upd(localMultiIndexes, (i: graft.ann.LocalMultiIndex, v: Int) =>
-      catalog.refreshLocalMultiIndex(name, i, v, oversizeRebuilds = false))
-  }
+    // degrade (drop the entry; the next probe rebuilds lazily)
+    localRungs.synchronized(localRungs.keys.filter(_._1 == name).toList).foreach { key =>
+      val lock = buildLockFor(name)
+      lock.lock()
+      try localRungs.synchronized(localRungs.get(key)).foreach { case (v, idx) =>
+        try {
+          localBuildHook()
+          val (ni, nv) = catalog.refreshLocal(name, idx, v,
+            idx.filterableColumns.toSeq.sorted, oversizeRebuilds = false)
+          localRungs.synchronized { localRungs(key) = (nv, ni) }
+        } catch {
+          case e: Exception =>
+            System.err.println(
+              s"graft: local-rung refresh of '$name' failed (${e.getMessage}); " +
+                "dropping the resident index — next probe rebuilds")
+            localRungs.synchronized { localRungs.remove(key) }
+        }
+      } finally lock.unlock()
+    }
 
   /** Resolve a driver-local serving rung that answers the PUBLISHED HEAD
     * (r13): the route already read the collection meta for query prep, so
@@ -982,23 +952,23 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     * rung whose version lags `head` (a flushDelta from THIS server that
     * raced the eager fold, or from ANOTHER DRIVER on the same root) folds
     * the missed delta window forward in place, O(changes)
-    * (GraftCatalog.refreshLocal*Index; internal fallback: full rebuild
+    * (GraftCatalog.refreshLocal; internal fallback: full rebuild
     * when the chain base moved). Before this, local rungs were the one row
     * of the consistency table that kept answering their built version
     * until this server's own flush routes fired — a cross-driver
     * flushDelta was never seen. A failed fold degrades exactly like
     * refreshLocalEntries: drop the resident entry and rebuild fresh. */
-  private def localIndexFor[A](cache: scala.collection.mutable.Map[String, (Int, A)],
-                               name: String, eq: Seq[(String, Any)], head: Int)(
-                               filterable: A => Set[String])(
-                               build: Seq[String] => A)(
-                               refresh: (A, Int) => (A, Int)): A = {
+  private def localIndexFor[A <: graft.ann.LocalRung](rung: String, name: String,
+      eq: Seq[(String, Any)], head: Int)(build: Seq[String] => A): A = {
+    val key = (name, rung)
+    def cached: Option[(Int, A)] =
+      localRungs.synchronized(localRungs.get(key)).map { case (v, i) => (v, i.asInstanceOf[A]) }
     // an entry is the right SHAPE when the request needs no EQ columns, or
     // the index carries its typed filter store, or the collection has no
     // filterable columns to carry
     def usable(i: A): Boolean =
-      eq.isEmpty || filterable(i).nonEmpty || localFilterableCols(name).isEmpty
-    val resident = cache.synchronized(cache.get(name))
+      eq.isEmpty || i.filterableColumns.nonEmpty || localFilterableCols(name).isEmpty
+    val resident = cached
     resident match {
       case Some((v, i)) if v == head && usable(i) => return i // fresh, lock-free
       case _ => ()
@@ -1028,23 +998,23 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         val version = catalog.getMeta(name).currentVersion
         localBuildHook()
         val built = build(if (eq.isEmpty) Nil else localFilterableCols(name))
-        cache.synchronized { cache(name) = (version, built) }
+        localRungs.synchronized { localRungs(key) = (version, built) }
         built
       }
-      cache.synchronized(cache.get(name)) match {
+      cached match {
         case Some((v, i)) if v == head && usable(i) => i
         case Some((v, i)) if usable(i) =>
           try {
             localBuildHook()
-            val (ni, nv) = refresh(i, v)
-            cache.synchronized { cache(name) = (nv, ni) }
+            val (ni, nv) = catalog.refreshLocal(name, i, v, i.filterableColumns.toSeq.sorted)
+            localRungs.synchronized { localRungs(key) = (nv, ni) }
             ni
           } catch {
             case e: Exception =>
               System.err.println(
                 s"graft: local-rung refresh of '$name' failed (${e.getMessage}); " +
                   "rebuilding fresh")
-              cache.synchronized { cache.remove(name) }
+              localRungs.synchronized { localRungs.remove(key) }
               buildAndCache()
           }
         case _ => buildAndCache()

@@ -264,4 +264,19 @@ class LocalIvfIndexSpec extends SparkSpec {
     info(f"local IVF probe: $perQueryMs%.3f ms/query at n=${idx.size} (sf fixture)")
     assert(perQueryMs < 10.0, f"$perQueryMs%.3f ms/query — local probe must not be job-shaped")
   }
+
+  test("a session that still sets the retired graft.localLoad.collectBytes key " +
+    "refuses at the first local load, naming the key") {
+    val cents = Seq((0L, Array(0f, 0f, 0f, 0f)), (1L, Array(1f, 1f, 1f, 1f)))
+    val rows = Seq((1L, Seq(0f, 0f, 0f, 1f), 0L)).toDF("vec_id", "embedding", "cell")
+    spark.conf.set("graft.localLoad.collectBytes", "268435456")
+    try {
+      val ex = intercept[IllegalArgumentException](
+        LocalIvfIndex.fromAssigned(rows, "vec_id", "embedding", cents, "euclidean"))
+      assert(ex.getMessage.contains("graft.localLoad.collectBytes"))
+    } finally spark.conf.unset("graft.localLoad.collectBytes")
+    // unset, the same load serves
+    assert(LocalIvfIndex.fromAssigned(rows, "vec_id", "embedding", cents, "euclidean")
+      .size === 1L)
+  }
 }

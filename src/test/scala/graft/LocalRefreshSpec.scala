@@ -207,7 +207,7 @@ class LocalRefreshSpec extends SparkSpec {
     mutate(binCat, "rzb", dim = 4)
     binCat.flush("rzb")
     intercept[GraftCatalog.RefreshTooLargeException] {
-      binCat.refreshLocalBinIndex("rzb", prevBin, 1, oversizeRebuilds = false)
+      binCat.refreshLocal("rzb", prevBin, 1, oversizeRebuilds = false)
     }
     // the lazy read-path caller (oversizeRebuilds=true) still rebuilds to parity
     val (refreshed, v) = cat.refreshLocalIvfIndex("rz", prev, 1)
@@ -291,7 +291,7 @@ class LocalRefreshSpec extends SparkSpec {
     val cols = Seq("grp")
     val prev = cat.localPqIndex("rp", cols)
     mutate(cat, "rp", dim = 16)
-    val (refreshed, v) = cat.refreshLocalPqIndex("rp", prev, 1, cols)
+    val (refreshed, v) = cat.refreshLocal("rp", prev, 1, cols)
     assert(v === 3)
     val rebuilt = cat.localPqIndex("rp", cols)
     assert(refreshed.size === rebuilt.size)
@@ -309,7 +309,7 @@ class LocalRefreshSpec extends SparkSpec {
     val cols = Seq("tag")
     val prev = cat.localBinIndex("rb", cols)
     mutate(cat, "rb", dim = 4)
-    val (refreshed, _) = cat.refreshLocalBinIndex("rb", prev, 1, cols)
+    val (refreshed, _) = cat.refreshLocal("rb", prev, 1, cols)
     val rebuilt = cat.localBinIndex("rb", cols)
     assert(refreshed.size === rebuilt.size)
     assert(refreshed.codeBytes === rebuilt.codeBytes)
@@ -343,7 +343,7 @@ class LocalRefreshSpec extends SparkSpec {
     cat.insert("rm", Seq(("C9", Seq(0f, 99f, 1f, 0f), Seq(1f, 0f, 0f, 9f)))
       .toDF("id", "v0", "v1"))
     cat.flushDelta("rm") // v3
-    val (refreshed, v) = cat.refreshLocalMultiIndex("rm", prev, 1)
+    val (refreshed, v) = cat.refreshLocal("rm", prev, 1)
     assert(v === 3)
     val rebuilt = cat.localMultiIndex("rm")
     assert(refreshed.size === rebuilt.size)
@@ -358,32 +358,71 @@ class LocalRefreshSpec extends SparkSpec {
     }
   }
 
+  /** One rung under the randomized parity test: its collection layout,
+    * the row shape it ingests, its loader and its search. */
+  private case class RungCase(label: String, meta: CollectionMeta,
+      shape: DataFrame => DataFrame,
+      load: (GraftCatalog, Seq[String]) => graft.ann.LocalRung,
+      search: (graft.ann.LocalRung, Array[Float], Int, Seq[(String, Any)]) => Seq[(AnyRef, Double)])
+
+  private def rungCases: Seq[RungCase] = {
+    import graft.ann._
+    def ivf(label: String, quant: String) = RungCase(label,
+      CollectionMeta("rr", dim = 4, distance = "euclidean", quantization = quant,
+        fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0)),
+      identity, (c, cols) => c.localIvfIndex("rr", cols),
+      (r, q, np, f) => r.asInstanceOf[LocalIvfIndex].search(q, 10, np, eqFilter = f))
+    Seq(ivf("ivf f32", "none"), ivf("ivf f16", "f16"),
+      RungCase("residual pq", CollectionMeta("rr", dim = 8, distance = "euclidean",
+        fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0),
+        pqSubspaces = Some(4), pqCodewords = Some(8), pqTrainIterations = Some(1)),
+        identity, (c, cols) => c.localPqIndex("rr", cols),
+        (r, q, np, f) => r.asInstanceOf[LocalPqIndex].search(q, 10, np, eqFilter = f)),
+      RungCase("bin", CollectionMeta("rr", dim = 4, distance = "euclidean",
+        fields = fields, binaryIndex = Some(true)),
+        identity, (c, cols) => c.localBinIndex("rr", cols),
+        (r, q, _, f) => r.asInstanceOf[LocalBinIndex].search(q, 10, eqFilter = f)),
+      RungCase("multi", CollectionMeta("rr", dim = 4, distance = "cosine",
+        fields = Seq(IndexField("id", "string", primaryKey = true),
+          IndexField("v0", "vector"), IndexField("v1", "vector")),
+        ivfCells = Some(4), ivfTrainIterations = Some(0)),
+        df => df.select(col("id"), col("vector").as("v0"), reverse(col("vector")).as("v1")),
+        (c, _) => c.localMultiIndex("rr"),
+        (r, q, np, _) => r.asInstanceOf[LocalMultiIndex].search(Seq(
+          LocalMultiIndex.FieldQ("v0", q, 60), LocalMultiIndex.FieldQ("v1", q.reverse, 40)),
+          10, np)))
+  }
+
   test("randomized fold parity: random put/del segments, stepped and jumped") {
     // The deterministic fixtures above choose their mutations; this drives
     // the fold seam with SEEDED random segments — updates that move cells,
     // deletes of random survivors, re-inserts of deleted pks, fresh rows —
     // and pins fold == rebuild at EVERY window, both one-jump from v1 and
-    // stepped segment-by-segment, on the ivf rung with filter columns.
+    // stepped segment-by-segment, on every rung (ivf f32 and f16, residual
+    // pq, bin, multi) through the one refresh path, with filter columns
+    // where the rung carries them.
     val rnd = new scala.util.Random(20260816L)
-    val dim = 4
+    for (rc <- rungCases) withClue(s"[${rc.label}] ") {
+    val dim = rc.meta.dim
     def rvec() = Seq.tabulate(dim) { j =>
       // cluster-ish: one dominant axis + noise, so cells stay meaningful
       val axis = rnd.nextInt(4)
       (if (j % 4 == axis) 90f else 0f) + rnd.nextFloat() * 8f - 4f
     }
     def rrow(id: String) = (id, rnd.nextInt(7).toLong, s"t${rnd.nextInt(3)}", rvec())
+    def rows(ids: Seq[String]) = rc.shape(ids.map(rrow).toDF("id", "grp", "tag", "vector"))
     val cat = new GraftCatalog(spark,
       Files.createTempDirectory("graft-lrefresh").toString)
-    cat.createCollection(CollectionMeta("rr", dim = dim, distance = "euclidean",
-      fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0)))
+    cat.createCollection(rc.meta)
     cat.loadCollection("rr")
+    val meta = cat.getMeta("rr")
     val live = scala.collection.mutable.Set.empty[String]
     val dead = scala.collection.mutable.Set.empty[String]
-    cat.insert("rr", (0 until 80).map(i => rrow(s"R$i")).toDF("id", "grp", "tag", "vector"))
+    cat.insert("rr", rows((0 until 80).map(i => s"R$i")))
     live ++= (0 until 80).map(i => s"R$i")
     cat.flush("rr") // v1
-    val cols = Seq("grp", "tag")
-    val base = cat.localIvfIndex("rr", cols)
+    val cols = if (rc.meta.isMultiVector) Nil else Seq("grp", "tag")
+    val base = rc.load(cat, cols)
     var stepped = base
     var fresh = 80
     for (seg <- 1 to 4) {
@@ -395,8 +434,7 @@ class LocalRefreshSpec extends SparkSpec {
       // fresh pks
       val news = (0 until 5).map { _ => fresh += 1; s"R$fresh" }
       live ++= news
-      cat.insert("rr", (upd ++ backs ++ news).map(rrow)
-        .toDF("id", "grp", "tag", "vector"))
+      cat.insert("rr", rows(upd ++ backs ++ news))
       // random DELETES (after the insert, so same-segment LWW is exercised:
       // a pk both put and deleted in one window resolves by sequence)
       val dels = rnd.shuffle(live.toSeq).take(6)
@@ -405,22 +443,70 @@ class LocalRefreshSpec extends SparkSpec {
         Single("id", FilterExpr.Eq, d)).toList))
       cat.flushDelta("rr") // v(1+seg)
       val head = 1 + seg
-      val rebuilt = cat.localIvfIndex("rr", cols)
-      val (jumped, vj) = cat.refreshLocalIvfIndex("rr", base, 1, cols)
-      val (s2, vs) = cat.refreshLocalIvfIndex("rr", stepped, head - 1, cols)
+      val rebuilt = rc.load(cat, cols)
+      val (jumped, vj) = cat.refreshLocal("rr", base, 1, cols)
+      val (s2, vs) = cat.refreshLocal("rr", stepped, head - 1, cols)
       stepped = s2
       assert(vj === head); assert(vs === head)
       assert(jumped.size === rebuilt.size)
       assert(stepped.size === rebuilt.size)
       assert(rebuilt.size === live.size.toLong)
       for (_ <- 0 until 3; np <- Seq(1, 2, 4)) {
-        val q = rvec().toArray
-        sameHits(jumped.search(q, 10, np), rebuilt.search(q, 10, np))
-        sameHits(stepped.search(q, 10, np), rebuilt.search(q, 10, np))
+        val q = GraftCatalog.prepareQueryVector(rvec().toArray, meta)
+        sameHits(rc.search(jumped, q, np, Nil), rc.search(rebuilt, q, np, Nil))
+        sameHits(rc.search(stepped, q, np, Nil), rc.search(rebuilt, q, np, Nil))
         val f = Seq("grp" -> rnd.nextInt(7).toLong)
-        sameHits(jumped.search(q, 10, np, eqFilter = f),
-          rebuilt.search(q, 10, np, eqFilter = f))
+        if (cols.nonEmpty)
+          sameHits(rc.search(jumped, q, np, f), rc.search(rebuilt, q, np, f))
       }
+    }
+    }
+  }
+
+  test("the shared fold refuses a malformed put on every rung: stored-form " +
+    "type, width, field count, meta-value count") {
+    import graft.ann._
+    val ivfCat = mkCat(CollectionMeta("mi", dim = 4, distance = "euclidean",
+      fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0)), dim = 4)
+    val pqCat = mkCat(CollectionMeta("mp", dim = 16, distance = "euclidean",
+      fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0),
+      pqSubspaces = Some(4), pqCodewords = Some(8), pqTrainIterations = Some(1)), dim = 16)
+    val binCat = mkCat(CollectionMeta("mb", dim = 12, distance = "euclidean",
+      fields = fields, binaryIndex = Some(true)), dim = 12)
+    val multiCat = new GraftCatalog(spark,
+      Files.createTempDirectory("graft-lrefresh").toString)
+    multiCat.createCollection(CollectionMeta("mm", dim = 4, distance = "cosine",
+      fields = Seq(IndexField("id", "string", primaryKey = true),
+        IndexField("v0", "vector"), IndexField("v1", "vector")),
+      ivfCells = Some(4), ivfTrainIterations = Some(0)))
+    multiCat.loadCollection("mm")
+    multiCat.insert("mm", clustered(4).select(col("id"), col("vector").as("v0"),
+      reverse(col("vector")).as("v1")))
+    multiCat.flush("mm")
+    // (rung, a well-formed payload, its meta values, the wrong-type payload,
+    // the wrong-width payload, the width rule the refusal names)
+    val cases: Seq[(LocalRung, Seq[AnyRef], Seq[Any], Seq[AnyRef], Seq[AnyRef], String)] = Seq(
+      (ivfCat.localIvfIndex("mi", Seq("grp", "tag")), Seq(new Array[Float](4)), Seq(1L, "x"),
+        Seq(new Array[Short](4)), Seq(new Array[Float](5)), "index dim is 4"),
+      (pqCat.localPqIndex("mp", Seq("grp")), Seq(new Array[Byte](4)), Seq(1L),
+        Seq(new Array[Float](4)), Seq(new Array[Byte](3)), "layout m=4"),
+      (binCat.localBinIndex("mb", Seq("tag")), Seq(new Array[Byte](2)), Seq("x"),
+        Seq(new Array[Short](2)), Seq(new Array[Byte](1)), "ceil(12/8)=2"),
+      (multiCat.localMultiIndex("mm"), Seq(new Array[Float](4), new Array[Float](4)), Nil,
+        Seq(new Array[Float](4), new Array[Byte](4)),
+        Seq(new Array[Float](4), new Array[Float](3)), "declared 4"))
+    val none = new java.util.HashSet[AnyRef]()
+    for ((rung, good, mv, wrongType, wrongWidth, rule) <- cases) withClue(s"$rung ") {
+      def refusal(payload: Seq[AnyRef], metaValues: Seq[Any]): String =
+        intercept[IllegalArgumentException](rung.applyChanges(none,
+          Seq(LocalRung.Put("P1", 0L, payload, metaValues)))).getMessage
+      // the well-formed put folds, so each refusal below is its defect alone
+      assert(rung.applyChanges(none, Seq(LocalRung.Put("P1", 0L, good, mv))).size ===
+        rung.size + 1)
+      assert(refusal(wrongType, mv).contains("does not match index quantization"))
+      assert(refusal(wrongWidth, mv).contains(rule))
+      assert(refusal(good :+ good.head, mv).contains(s"expected ${good.length} stored fields"))
+      assert(refusal(good, mv :+ 7L).contains(s"expected ${mv.length} meta values"))
     }
   }
 
