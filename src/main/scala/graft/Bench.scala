@@ -240,7 +240,11 @@ object Bench {
     def emitSnapshotImpl(): Unit = {
       val results = rows("results")
       val big1m = rows("big1m"); val big10m = rows("big10m")
+      // the driver-local 100M rows (load, per-probe latency, fold) are not
+      // flat scans: they report raw seconds under their own key, never as
+      // ratios against the flat-scan baseline
       val bin100m = rows("bin100m")
+      val (localBin100m, scanBin100m) = bin100m.partition(_._1.contains("local_bin"))
       // Baseline rows: 1M parallel flat scan 0.02-0.03 s (UPDATE-LOG.md:107);
       // 10M is the linear extrapolation of the same number.
       val vsBaseline =
@@ -250,7 +254,7 @@ object Bench {
         big10m.collect { case (n, t)
             if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") =>
           n -> math.round(t / (Baseline1mFlatScanSec * 10) * 100.0) / 100.0 } ++
-        bin100m.collect { case (n, t)
+        scanBin100m.collect { case (n, t)
             if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") =>
           n -> math.round(t / (Baseline1mFlatScanSec * 100) * 100.0) / 100.0 }
       // Supplementary decomposition: each measured time = per-job dispatch
@@ -270,7 +274,7 @@ object Bench {
             n -> math.round(math.max(0.0, t - floor.get) / base * 100.0) / 100.0 }
         }
         adj(big1m, Baseline1mFlatScanSec) ++ adj(big10m, Baseline1mFlatScanSec * 10) ++
-          adj(bin100m, Baseline1mFlatScanSec * 100)
+          adj(scanBin100m, Baseline1mFlatScanSec * 100)
       }
 
       val total = results.map(_._2).filter(_ > 0).sum
@@ -305,6 +309,7 @@ object Bench {
         ",\"baseline_1m_flat_scan_sec\":" + Baseline1mFlatScanSec +
         ",\"vs_baseline\":" + jmap(vsBaseline) +
         ",\"vs_baseline_scan_only\":" + jmap(vsBaselineScanOnly) +
+        ",\"local_bin_100m_sec\":" + jmap(localBin100m) +
         ",\"errors\":" + jmap(errorsSnap) +
         ",\"skipped\":" + jmap(skippedSnap) +
         ",\"sf\":\"" + sfDir + "\"}"

@@ -3,9 +3,10 @@ package graft.collection
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, ShortType}
+import org.apache.spark.sql.graft.PreparedPlan
+import org.apache.spark.sql.types.{ArrayType, FloatType, ShortType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.FilterExpr
@@ -68,136 +69,83 @@ class GraftCatalog(spark: SparkSession, root: String,
   private val pendingCount = mutable.Map.empty[String, Int]
   private val pendingSeq = mutable.Map.empty[String, Long]
 
-  /** Prepared (plan-once/execute-many) search plans for the serving path,
-    * keyed by query SHAPE — everything that changes the plan except the
-    * query vector itself. Each entry is valid ONLY for the exact resident
-    * DataFrame it was compiled from: every mutation ([[rebind]]), load and
-    * release swaps that object, so staleness is a reference comparison, not
-    * an epoch protocol — a cached plan over replaced state is unreachable
-    * by construction (PreparedSearchSpec pins this). Bounded LRU: a serving
-    * workload has few live shapes; filters with distinct VALUES are
-    * distinct shapes and age out. */
-  private case class PreparedKey(name: String, topK: Int, filter: Option[FilterExpr],
-                                 offset: Int, minScore: Option[Double])
-  /** `prepared = None` is a NEGATIVE entry: the shape's placeholder folded
+  /** Prepared (plan-once/execute-many) plans of every distributed search
+    * route, keyed by (collection, SHAPE): the route's tag plus everything
+    * that changes its plan except the per-request values (query vectors,
+    * probed cell set, query code). An entry is valid ONLY for the exact
+    * anchor object it was compiled against, so staleness is a reference
+    * comparison, not an epoch protocol — a plan over replaced state is
+    * unreachable by construction (PreparedSearchSpec pins this). Two
+    * anchors exist: the flat, hybrid and multi routes anchor on the
+    * RESIDENT DataFrame (every mutation ([[rebind]]), load and release
+    * swaps it); the IVF, PQ, binary and multi-IVF routes anchor on the
+    * memoized [[indexedState]] snapshot (a new version is a new object).
+    * `prepared = None` is a NEGATIVE entry: the shape's placeholder folded
     * away during planning, so it can never be parameterized — cached so a
-    * request of that shape pays the plan-per-call fallback once per
-    * resident object, not a full failed compile PLUS the fallback on every
-    * call. */
-  private case class PreparedEntry(
-      df: DataFrame,
-      prepared: Option[org.apache.spark.sql.graft.PreparedPlan.Prepared])
-  // access-ordered LinkedHashMap mutates its links even on get(), so every
-  // touch synchronizes on the map — the catalog is public API and must not
-  // corrupt under a multi-threaded caller even though the bundled HTTP
-  // server serializes requests
-  private val preparedSearches =
-    new java.util.LinkedHashMap[PreparedKey, PreparedEntry](16, 0.75f, true) {
+    * request of that shape pays one failed compile per anchor, not one per
+    * call. Bounded LRU ([[GraftCatalog.PreparedCacheMax]]): a serving
+    * workload has few live shapes; filters with distinct VALUES are
+    * distinct shapes and age out. The access-ordered map mutates its links
+    * even on get(), so every touch synchronizes on it — the catalog is
+    * public API and must not corrupt under a multi-threaded caller. */
+  private case class PreparedEntry(anchor: AnyRef, prepared: Option[PreparedPlan.Prepared])
+  private val preparedPlans =
+    new java.util.LinkedHashMap[(String, Any), PreparedEntry](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[PreparedKey, PreparedEntry]): Boolean =
+          e: java.util.Map.Entry[(String, Any), PreparedEntry]): Boolean =
         size() > GraftCatalog.PreparedCacheMax
     }
 
-  /** Multi-vector prepared shapes: the (field, ratio, include) list plus
-    * topK — everything that changes the plan except the query vectors. */
-  private case class MultiPreparedKey(name: String,
-                                      shape: Seq[(String, Double, Boolean)], topK: Int)
-  private val preparedMultiSearches =
-    new java.util.LinkedHashMap[MultiPreparedKey, PreparedEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[MultiPreparedKey, PreparedEntry]): Boolean =
-        size() > GraftCatalog.PreparedCacheMax
+  /** The prepared plan of (`name`, `shape`) over `anchor`: a cached entry
+    * compiled against this exact anchor, else `compile` — run OUTSIDE the
+    * lock (a duplicate compile under a rare race is benign, holding the
+    * lock through Catalyst planning is not). `None` is the negative entry. */
+  private[graft] def preparedFor(name: String, shape: Any, anchor: AnyRef)(
+      compile: => PreparedPlan.Prepared): Option[PreparedPlan.Prepared] = {
+    val key = (name, shape)
+    val cached = preparedPlans.synchronized {
+      Option(preparedPlans.get(key)).filter(_.anchor eq anchor)
+    }
+    cached.getOrElse {
+      val e =
+        try PreparedEntry(anchor, Some(compile))
+        catch {
+          // ONLY the typed signal is cacheable: an unrelated ISE (stopped
+          // session, codegen fault) must surface, never be cached as
+          // "unparameterizable" against the anchor (r9 advice)
+          case _: PreparedPlan.PlaceholderFoldedException => PreparedEntry(anchor, None)
+        }
+      preparedPlans.synchronized { preparedPlans.put(key, e) }
+      e
+    }.prepared
+  }
+
+  /** Compile a route's plan builder over one placeholder per value of
+    * `like` (same kinds, positionally). */
+  private def compilePlan(like: Seq[Any])(plan: Seq[Column] => DataFrame): PreparedPlan.Prepared = {
+    val phs = like.map(PreparedPlan.placeholder)
+    PreparedPlan.compile(plan(phs.map(_._1)), phs.map(_._2))
+  }
+
+  /** One request of a prepared route: `plan` is the route's ONE builder
+    * over the per-request values as Columns. A hit swaps `values` into the
+    * compiled plan; a negative entry runs the same builder over `lit`
+    * values — the plan-per-call form, without re-resolving the route. */
+  private[graft] def runPrepared(name: String, shape: Any, anchor: AnyRef, values: Seq[Any])(
+      plan: Seq[Column] => DataFrame): (StructType, Seq[Row]) =
+    preparedFor(name, shape, anchor)(compilePlan(values)(plan)) match {
+      case Some(p) => (p.schema, p.run(values))
+      case None    => collected(plan(values.map(v => lit(v))))
     }
 
-  /** Hybrid prepared shapes: the filter tree and the over-fetch factor are
-    * part of the plan; only the query vector swaps per request. */
-  private case class HybridPreparedKey(name: String, topK: Int,
-                                       filter: FilterExpr, overFetch: Int)
-  private val preparedHybrids =
-    new java.util.LinkedHashMap[HybridPreparedKey, PreparedEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[HybridPreparedKey, PreparedEntry]): Boolean =
-        size() > GraftCatalog.PreparedCacheMax
-    }
-
-  /** Probed-IVF prepared shapes (r12): topK and the filter tree are part of
-    * the plan; the query VECTOR and the probed CELL SET both swap per
-    * request (the cell set is one array literal inside the scan's partition
-    * filter, so every swapped copy re-prunes the snapshot's partitions
-    * under the new set — nprobe is NOT part of the shape, any probe width
-    * serves from one compiled plan). Entries are valid only for the exact
-    * snapshot object they compiled against ([[indexedState]]'s memoized
-    * artifact — a new version is a new object, same staleness-by-
-    * construction as [[preparedSearches]]). */
-  private case class IvfPreparedKey(name: String, topK: Int, filter: Option[FilterExpr])
-  private val preparedIvfSearches =
-    new java.util.LinkedHashMap[IvfPreparedKey, PreparedEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[IvfPreparedKey, PreparedEntry]): Boolean =
-        size() > GraftCatalog.PreparedCacheMax
-    }
-
-  /** Binary pass-1 prepared shapes (r12): topK·overFetch and the filter
-    * tree fix the Hamming-scan plan; the query CODE (one binary literal)
-    * swaps per request. Anchored on the snapshot artifact like
-    * [[preparedIvfSearches]]. */
-  private case class BinPreparedKey(name: String, topK: Int, overFetch: Int,
-                                    filter: Option[FilterExpr])
-  private val preparedBinSearches =
-    new java.util.LinkedHashMap[BinPreparedKey, PreparedEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[BinPreparedKey, PreparedEntry]): Boolean =
-        size() > GraftCatalog.PreparedCacheMax
-    }
-
-  /** PQ pass-1 prepared shapes (r12, residual layouts only): topK, rerank,
-    * overFetch, whether the scan is probed, and the filter tree fix the ADC
-    * plan; the query vector and (when probed) the cell set swap per
-    * request. Anchored on the snapshot artifact. */
-  private case class PqPreparedKey(name: String, topK: Int, rerank: Boolean,
-                                   overFetch: Int, probed: Boolean,
-                                   filter: Option[FilterExpr])
-  private val preparedPqSearches =
-    new java.util.LinkedHashMap[PqPreparedKey, PreparedEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[PqPreparedKey, PreparedEntry]): Boolean =
-        size() > GraftCatalog.PreparedCacheMax
-    }
-
-  /** Probed MULTI-vector prepared shapes (r12): the (field, ratio, include)
-    * list + topK compile once; every included field's query vector and the
-    * probed cell set swap per request — [[preparedIvfSearches]]' contract
-    * on the CFLAT rung, anchored on the same snapshot artifact. */
-  private case class MultiIvfPreparedKey(name: String,
-                                         shape: Seq[(String, Double, Boolean)], topK: Int)
-  private val preparedMultiIvfSearches =
-    new java.util.LinkedHashMap[MultiIvfPreparedKey, PreparedEntry](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[MultiIvfPreparedKey, PreparedEntry]): Boolean =
-        size() > GraftCatalog.PreparedCacheMax
-    }
+  private def collected(df: DataFrame): (StructType, Seq[Row]) =
+    (df.schema, df.collect().toIndexedSeq)
 
   /** Drop every prepared plan of `name` — called where the resident object
     * is swapped or retired so retired plan trees (and the unpersisted cache
     * relations they reference) don't linger until LRU eviction. */
   private def invalidatePrepared(name: String): Unit = {
-    preparedSearches.synchronized { preparedSearches.keySet().removeIf(_.name == name) }
-    preparedMultiSearches.synchronized {
-      preparedMultiSearches.keySet().removeIf(_.name == name)
-    }
-    preparedHybrids.synchronized { preparedHybrids.keySet().removeIf(_.name == name) }
-    preparedIvfSearches.synchronized {
-      preparedIvfSearches.keySet().removeIf(_.name == name)
-    }
-    preparedMultiIvfSearches.synchronized {
-      preparedMultiIvfSearches.keySet().removeIf(_.name == name)
-    }
-    preparedBinSearches.synchronized {
-      preparedBinSearches.keySet().removeIf(_.name == name)
-    }
-    preparedPqSearches.synchronized {
-      preparedPqSearches.keySet().removeIf(_.name == name)
-    }
+    preparedPlans.synchronized { preparedPlans.keySet().removeIf(_._1 == name) }
     versionArtifacts.synchronized {
       val it = versionArtifacts.entrySet().iterator()
       while (it.hasNext) {
@@ -223,7 +171,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * the resident cache: reads against the deleted files fail LOUDLY (the
     * vacuum reader contract), never silently serve the old bytes. Entries
     * are driver-sized (the snapshot entry is the unevaluated plan, not
-    * data); LRU-bounded like [[preparedSearches]]. */
+    * data); LRU-bounded like [[preparedPlans]]. */
   private val versionArtifacts =
     new java.util.LinkedHashMap[(String, Int, String), AnyRef](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -244,7 +192,7 @@ class GraftCatalog(spark: SparkSession, root: String,
   private def versionArtifact[A <: AnyRef](name: String, v: Int, kind: String)(
       build: => A): A = {
     val key = (name, v, kind)
-    // read under the lock, BUILD OUTSIDE it (the preparedSearches pattern):
+    // read under the lock, BUILD OUTSIDE it (the [[preparedFor]] pattern):
     // a sidecar build is a full collect() Spark job, and holding the global
     // lock through it would serialize every searchIvf/searchPq/searchBinary
     // across all collections (r9 advice). A duplicate build under a rare
@@ -1430,7 +1378,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * another cell strikes its stale base row even when that cell isn't
     * probed), put winners unioned back WITH the layout columns
     * [[decorateSegment]] encoded at segment-write time. Filter pushdown
-    * SURVIVES the fold: a `__cell isin …` or pk `isin` predicate on the
+    * SURVIVES the fold: a probed-cell or pk `isin` predicate on the
     * result pushes through the union into both sides and through the
     * anti-join into the base child, so the base scan keeps its
     * partition-directory pruning (pinned by CatalogDeltaIndexedSpec) and
@@ -1772,31 +1720,8 @@ class GraftCatalog(spark: SparkSession, root: String,
       filter: Option[FilterExpr] = None,
       offset: Int = 0,
       minScore: Option[Double] = None): DataFrame = {
-    val meta = getMeta(name)
-    require(!meta.isMultiVector,
-      s"collection $name is multi-vector; use searchMulti")
-    val df = loadedOrThrow(name)
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    // Quantized collections score through the FUSED kernel: decode happens
-    // inside the distance loop, no per-row intermediate array.
-    val fused: Option[Column] = meta.quantization match {
-      case "none" => None
-      case q      => Some(graft.functions.distance_quant(
-        col(VectorCol), lit(qv), q, meta.distance))
-    }
-    // Schema-less collections evaluate the SAME filter AST through the
-    // string-coerced map (CoreMeta parse-compare semantics,
-    // [[applyFilter]]) — applied before scoring, like the typed path's
-    // pushed predicate.
-    val (base, pushFilter) =
-      if (meta.isSchemaless) (applyFilter(df, meta, filter), None)
-      else (df, filter)
-    VectorSearch.search(base,
-        SearchRequest(qv, topK, metric = meta.distance, filter = pushFilter, offset = offset,
-          minScore = minScore, idCol = meta.idColumn,
-          vectorCol = VectorCol, customDistance = fused))
+    val (df, meta, qv) = resolveFlat(name, queryVector)
+    flatPlan(df, meta, topK, filter, offset, minScore)(lit(qv))
   }
 
   /** [[search]] through a prepared (plan-once/execute-many) physical plan —
@@ -1808,71 +1733,55 @@ class GraftCatalog(spark: SparkSession, root: String,
     * the compiled PHYSICAL tree and execute — no Catalyst phase re-runs,
     * same results as [[search]] bit-for-bit (PreparedSearchSpec proves
     * equality on randomized vectors/filters and that mutations/re-loads are
-    * never served stale). Falls back to the plan-per-call path if this
-    * shape can't be parameterized. Returns driver-side rows — the serving
-    * layer's shape; result size is bounded by topK like every search. */
+    * never served stale). A shape that can't be parameterized runs the
+    * same plan over a literal vector ([[runPrepared]]). Returns driver-side
+    * rows — the serving layer's shape; result size is bounded by topK like
+    * every search. */
   def searchPrepared(name: String, queryVector: Array[Float], topK: Int,
                      filter: Option[FilterExpr] = None, offset: Int = 0,
-                     minScore: Option[Double] = None)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
+                     minScore: Option[Double] = None): (StructType, Seq[Row]) = {
+    val (df, meta, qv) = resolveFlat(name, queryVector)
+    runPrepared(name, ("flat", topK, filter, offset, minScore), df, Seq(qv))(q =>
+      flatPlan(df, meta, topK, filter, offset, minScore)(q.head))
+  }
+
+  /** The flat and hybrid routes' shared resolve: guards, the resident
+    * frame (the prepared anchor) and the prepared query vector. */
+  private def resolveFlat(name: String, queryVector: Array[Float])
+      : (DataFrame, CollectionMeta, Array[Float]) = {
     val meta = getMeta(name)
-    require(!meta.isMultiVector,
-      s"collection $name is multi-vector; use searchMulti")
+    require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMulti")
     val df = loadedOrThrow(name)
     require(queryVector.length == meta.dim,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val key = PreparedKey(name, topK, filter, offset, minScore)
-    val cached = preparedSearches.synchronized {
-      Option(preparedSearches.get(key)).filter(_.df eq df)
-    }
-    val entry = cached.getOrElse {
-      // compile OUTSIDE the lock — a duplicate compile under a rare race is
-      // benign, holding the lock through Catalyst planning is not
-      val e =
-        try PreparedEntry(df,
-          Some(compileSearch(df, meta, topK, filter, offset, minScore)))
-        catch {
-          // placeholder folded away during planning — shape not
-          // parameterizable; cache the negative so the shape doesn't pay a
-          // full failed compile on every request. ONLY the typed signal:
-          // an unrelated ISE (stopped session, codegen fault) must surface,
-          // never be cached as "unparameterizable" (r9 advice)
-          case _: org.apache.spark.sql.graft.PreparedPlan.PlaceholderFoldedException =>
-            PreparedEntry(df, None)
-        }
-      preparedSearches.synchronized { preparedSearches.put(key, e) }
-      e
-    }
-    entry.prepared match {
-      case Some(p) => (p.schema, p.run(qv))
-      case None =>
-        val out = search(name, queryVector, topK, filter, offset, minScore)
-        (out.schema, out.collect().toIndexedSeq)
-    }
+    (df, meta, GraftCatalog.prepareQueryVector(queryVector, meta))
   }
 
-  /** Build the EXACT [[search]] plan with a placeholder query-vector Column
-    * and compile it ([[org.apache.spark.sql.graft.PreparedPlan]]). The
-    * unquantized path routes its distance through `customDistance` — same
-    * expression [[search]]'s default builds, just over the placeholder. */
-  private def compileSearch(df: DataFrame, meta: CollectionMeta, topK: Int,
-                            filter: Option[FilterExpr], offset: Int, minScore: Option[Double])
-      : org.apache.spark.sql.graft.PreparedPlan.Prepared = {
-    import org.apache.spark.sql.graft.PreparedPlan
-    val (phCol, ph) = PreparedPlan.placeholder(meta.dim)
-    val raw = meta.quantization match {
-      case "none" => graft.functions.distance(col(VectorCol), phCol, meta.distance)
-      case q      => graft.functions.distance_quant(col(VectorCol), phCol, q, meta.distance)
+  /** Raw distance of stored vector column `vec` to query `q`. Quantized
+    * collections score through the FUSED kernel: decode happens inside the
+    * distance loop, no per-row intermediate array (`distance_quant` ≡
+    * `distance(dequantize(...))` bit-for-bit — QuantizationSpec). */
+  private def queryDistance(meta: CollectionMeta, vec: String, q: Column): Column =
+    meta.quantization match {
+      case "none" => graft.functions.distance(col(vec), q, meta.distance)
+      case quant  => graft.functions.distance_quant(col(vec), q, quant, meta.distance)
     }
+
+  /** The [[search]] plan over query Column `q`. Schema-less collections
+    * evaluate the SAME filter AST through the string-coerced map (CoreMeta
+    * parse-compare semantics, [[applyFilter]]) — applied before scoring,
+    * like the typed path's pushed predicate. */
+  private def flatPlan(df: DataFrame, meta: CollectionMeta, topK: Int,
+                       filter: Option[FilterExpr], offset: Int,
+                       minScore: Option[Double])(q: Column): DataFrame = {
     val (base, pushFilter) =
       if (meta.isSchemaless) (applyFilter(df, meta, filter), None)
       else (df, filter)
-    val searchDf = VectorSearch.search(base,
-      SearchRequest(new Array[Float](meta.dim), topK, metric = meta.distance,
+    VectorSearch.search(base,
+      SearchRequest(Array.emptyFloatArray, topK, metric = meta.distance,
         filter = pushFilter, offset = offset, minScore = minScore,
-        idCol = meta.idColumn, vectorCol = VectorCol, customDistance = Some(raw)))
-    PreparedPlan.compile(searchDf, ph)
+        idCol = meta.idColumn, vectorCol = VectorCol,
+        customDistance = Some(queryDistance(meta, VectorCol, q))))
   }
 
   /** Hybrid search (v3 HybridSearch RPC, core/core.go:760-839): over-fetch
@@ -1884,83 +1793,32 @@ class GraftCatalog(spark: SparkSession, root: String,
     * semantics. */
   def searchHybrid(name: String, queryVector: Array[Float], topK: Int,
                    filter: FilterExpr, overFetch: Int = 3): DataFrame = {
-    val meta = getMeta(name)
-    require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMulti")
-    val df = loadedOrThrow(name)
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val fused: Option[Column] = meta.quantization match {
-      case "none" => None
-      case q      => Some(graft.functions.distance_quant(
-        col(VectorCol), lit(qv), q, meta.distance))
-    }
-    val pred = metaFilterColumn(meta, filter)
-    VectorSearch.hybridSearchWith(df,
-      SearchRequest(qv, topK, metric = meta.distance, idCol = meta.idColumn,
-        vectorCol = VectorCol, customDistance = fused),
-      pred, overFetch)
+    val (df, meta, qv) = resolveFlat(name, queryVector)
+    hybridPlan(df, meta, topK, filter, overFetch)(lit(qv))
   }
 
-  /** [[searchHybrid]] through a prepared plan — the last request route that
-    * still paid plan-per-call Catalyst re-analysis (the [[searchPrepared]]
-    * model; shape key = topK + filter tree + overFetch, only the query
-    * vector swaps per request). Since the r11 one-scan hybrid shape
+  /** [[searchHybrid]] through a prepared plan (the [[searchPrepared]]
+    * model; shape = topK + filter tree + overFetch, only the query vector
+    * swaps per request). Since the r11 one-scan hybrid shape
     * (VectorSearch.hybridSearchWith: predicate carried in-scan, no join)
     * the compiled plan is ONE bounded TakeOrderedAndProject job plus a
-    * result-sized dedup — the same literal-swap discipline as
-    * [[searchPrepared]], with no broadcast exchange left to worry about
+    * result-sized dedup, with no broadcast exchange left to worry about
     * (PreparedSearchSpec pins prepared == plan-per-call on fresh vectors
-    * back to back). Same staleness/negative-cache contract as
-    * [[searchPrepared]]. */
+    * back to back). */
   def searchHybridPrepared(name: String, queryVector: Array[Float], topK: Int,
-                           filter: FilterExpr, overFetch: Int = 3)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
-    val meta = getMeta(name)
-    require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMulti")
-    val df = loadedOrThrow(name)
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val key = HybridPreparedKey(name, topK, filter, overFetch)
-    val cached = preparedHybrids.synchronized {
-      Option(preparedHybrids.get(key)).filter(_.df eq df)
-    }
-    val entry = cached.getOrElse {
-      val e =
-        try PreparedEntry(df, Some(compileHybrid(df, meta, topK, filter, overFetch)))
-        catch {
-          case _: org.apache.spark.sql.graft.PreparedPlan.PlaceholderFoldedException =>
-            PreparedEntry(df, None)
-        }
-      preparedHybrids.synchronized { preparedHybrids.put(key, e) }
-      e
-    }
-    entry.prepared match {
-      case Some(p) => (p.schema, p.run(qv))
-      case None =>
-        val out = searchHybrid(name, queryVector, topK, filter, overFetch)
-        (out.schema, out.collect().toIndexedSeq)
-    }
+                           filter: FilterExpr, overFetch: Int = 3): (StructType, Seq[Row]) = {
+    val (df, meta, qv) = resolveFlat(name, queryVector)
+    runPrepared(name, ("hybrid", topK, filter, overFetch), df, Seq(qv))(q =>
+      hybridPlan(df, meta, topK, filter, overFetch)(q.head))
   }
 
-  /** Build the EXACT [[searchHybrid]] plan with a placeholder vector and
-    * compile it — the [[compileSearch]] discipline for the hybrid shape. */
-  private def compileHybrid(df: DataFrame, meta: CollectionMeta, topK: Int,
-                            filter: FilterExpr, overFetch: Int)
-      : org.apache.spark.sql.graft.PreparedPlan.Prepared = {
-    import org.apache.spark.sql.graft.PreparedPlan
-    val (phCol, ph) = PreparedPlan.placeholder(meta.dim)
-    val raw = meta.quantization match {
-      case "none" => graft.functions.distance(col(VectorCol), phCol, meta.distance)
-      case q      => graft.functions.distance_quant(col(VectorCol), phCol, q, meta.distance)
-    }
-    val hybridDf = VectorSearch.hybridSearchWith(df,
-      SearchRequest(new Array[Float](meta.dim), topK, metric = meta.distance,
-        idCol = meta.idColumn, vectorCol = VectorCol, customDistance = Some(raw)),
+  private def hybridPlan(df: DataFrame, meta: CollectionMeta, topK: Int,
+                         filter: FilterExpr, overFetch: Int)(q: Column): DataFrame =
+    VectorSearch.hybridSearchWith(df,
+      SearchRequest(Array.emptyFloatArray, topK, metric = meta.distance,
+        idCol = meta.idColumn, vectorCol = VectorCol,
+        customDistance = Some(queryDistance(meta, VectorCol, q))),
       metaFilterColumn(meta, filter), overFetch)
-    PreparedPlan.compile(hybridDf, ph)
-  }
 
   def count(name: String): Long = loadedOrThrow(name).count()
 
@@ -2002,143 +1860,84 @@ class GraftCatalog(spark: SparkSession, root: String,
     * outside the probed cells are not recovered; raise `nprobe` for
     * selective filters. */
   def searchIvf(name: String, queryVector: Array[Float], topK: Int, nprobe: Int,
-                filter: Option[FilterExpr] = None): DataFrame = {
-    val meta = getMeta(name)
-    require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMultiIvf")
-    require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) {
-      // collection was flushed empty → unpartitioned fallback, no sidecar
-      // (an empty base also can't have delta segments — flushDelta refuses)
-      import spark.implicits._
-      return Seq.empty[(String, Long, Double)].toDF(meta.idColumn, "cell", "dist")
-    }
-    val centroids = readCentroids(name, sv)
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val snap0 = indexedState(name, meta)
-      .withColumnRenamed(GraftCatalog.CellCol, "cell")
-    val snap = applyFilter(snap0, meta, filter)
-    val decoded = meta.quantization match {
-      case "none" => snap
-      case q      => snap.withColumn(GraftCatalog.SearchVecCol, dequantize(col(VectorCol), q))
-    }
-    val vecCol = if (meta.quantization == "none") VectorCol else GraftCatalog.SearchVecCol
-    graft.ann.Ann.ivfSearch(decoded, meta.idColumn, vecCol,
-      centroids, qv, nprobe, topK, meta.distance)
-  }
+                filter: Option[FilterExpr] = None): DataFrame =
+    resolveIvf(name, queryVector, nprobe).fold(identity,
+      r => ivfPlan(r, topK, filter)(lit(r.qv), lit(r.probed)))
 
   /** [[searchIvf]] through a prepared (plan-once/execute-many) physical
-    * plan — the r12 answer to the point route's ~50 ms dispatch floor: the
-    * probed cell set was a per-query `isin` literal, so every request paid
-    * full Catalyst re-analysis (PLANS.md r11 recorded the route as
-    * unprepared BY DESIGN). The fix keeps the set a literal but makes it
-    * ONE swappable array inside the scan's partition filter
-    * (`array_contains(cells, cell)`): the compiled physical tree is reused
-    * and each request's swap produces a fresh scan node whose partition
-    * pruning re-evaluates under the new cell set — the pruning guarantee is
-    * unchanged (IvfCatalogSpec pins records-read shrinking with nprobe on
-    * THIS path). Same results as [[searchIvf]] bit-for-bit
-    * (PreparedSearchSpec: randomized queries × nprobe × quantization ×
-    * filter × delta chains). Falls back to the plan-per-call path when the
-    * shape cannot be parameterized. */
+    * plan — the r12 answer to the point route's ~50 ms dispatch floor. The
+    * probed cell set is ONE swappable array inside the scan's partition
+    * filter (`array_contains(cells, cell)`): the compiled physical tree is
+    * reused and each request's swap produces a fresh scan node whose
+    * partition pruning re-evaluates under the new cell set — the pruning
+    * guarantee is unchanged (IvfCatalogSpec pins records-read shrinking
+    * with nprobe on THIS path). nprobe is NOT part of the shape: any probe
+    * width serves from one compiled plan. Same results as [[searchIvf]]
+    * bit-for-bit (PreparedSearchSpec: randomized queries × nprobe ×
+    * quantization × filter × delta chains). */
   def searchIvfPrepared(name: String, queryVector: Array[Float], topK: Int, nprobe: Int,
-                        filter: Option[FilterExpr] = None)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
-    val meta = getMeta(name)
-    require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMultiIvf")
-    require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) {
-      // flushed-empty fallback — same empty frame as searchIvf
-      val out = searchIvf(name, queryVector, topK, nprobe, filter)
-      return (out.schema, out.collect().toIndexedSeq)
+                        filter: Option[FilterExpr] = None): (StructType, Seq[Row]) =
+    resolveIvf(name, queryVector, nprobe) match {
+      case Left(empty) => collected(empty)
+      case Right(r) =>
+        runPrepared(name, ("ivf", topK, filter), r.snap, Seq(r.qv, r.probed))(v =>
+          ivfPlan(r, topK, filter)(v(0), v(1)))
     }
-    val centroids = readCentroids(name, sv)
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val probed = graft.ann.Ann.probeCells(centroids, qv, nprobe, meta.distance).toArray
-    val entry = ivfPreparedEntry(name, meta, topK, filter)
-    entry.prepared match {
-      case Some(p) => (p.schema, p.runValues(Seq(qv, probed)))
-      case None =>
-        val out = searchIvf(name, queryVector, topK, nprobe, filter)
-        (out.schema, out.collect().toIndexedSeq)
-    }
-  }
-
-  /** The cached-or-compiled prepared entry for the probed-IVF shape —
-    * shared by [[searchIvfPrepared]] and the [[ivfPreparedProbedFiles]]
-    * diagnostic so they cannot diverge on compile/staleness rules. */
-  private def ivfPreparedEntry(name: String, meta: CollectionMeta, topK: Int,
-                               filter: Option[FilterExpr]): PreparedEntry = {
-    val snap = indexedState(name, meta)
-    val key = IvfPreparedKey(name, topK, filter)
-    val cached = preparedIvfSearches.synchronized {
-      Option(preparedIvfSearches.get(key)).filter(_.df eq snap)
-    }
-    cached.getOrElse {
-      // compile OUTSIDE the lock (the preparedSearches discipline)
-      val e =
-        try PreparedEntry(snap, Some(compileSearchIvf(snap, meta, topK, filter)))
-        catch {
-          case _: org.apache.spark.sql.graft.PreparedPlan.PlaceholderFoldedException =>
-            PreparedEntry(snap, None)
-        }
-      preparedIvfSearches.synchronized { preparedIvfSearches.put(key, e) }
-      e
-    }
-  }
 
   /** [[ivfProbedFiles]] for the PREPARED probe: the files the swapped
     * plan's scan selects for this query — pins that partition pruning
     * re-evaluates per request on the compiled path (IvfCatalogSpec).
-    * Empty when the shape fell back to plan-per-call. */
+    * Empty when the shape is not parameterizable or the collection was
+    * flushed empty. */
   def ivfPreparedProbedFiles(name: String, queryVector: Array[Float], topK: Int,
-                             nprobe: Int): Array[String] = {
+                             nprobe: Int): Array[String] =
+    resolveIvf(name, queryVector, nprobe) match {
+      case Left(_) => Array.empty
+      case Right(r) =>
+        val values = Seq(r.qv, r.probed)
+        preparedFor(name, ("ivf", topK, None), r.snap)(
+          compilePlan(values)(v => ivfPlan(r, topK, None)(v(0), v(1))))
+          .map(_.swappedSelectedFiles(values)).getOrElse(Array.empty)
+    }
+
+  /** A resolved IVF request: `snap` is the memoized [[indexedState]] (the
+    * prepared anchor), `probed` the `nprobe` cells nearest the query. */
+  private case class IvfRoute(meta: CollectionMeta, snap: DataFrame, qv: Array[Float],
+                              probed: Array[Long])
+
+  /** The IVF routes' shared resolve: guards, query prep and the centroid
+    * probe — or the empty answer of a collection flushed empty (no
+    * centroid sidecar; an empty base also can't have delta segments —
+    * flushDelta refuses). */
+  private def resolveIvf(name: String, queryVector: Array[Float],
+                         nprobe: Int): Either[DataFrame, IvfRoute] = {
     val meta = getMeta(name)
-    // the sibling searchIvfPrepared's guards — a diagnostic must refuse
-    // as loudly as the route it diagnoses, not throw a raw FS error
     require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMultiIvf")
     require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
+    require(queryVector.length == meta.dim,
+      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
     val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) return Array.empty // flushed empty
-    val centroids = readCentroids(name, sv)
+    if (!fs.exists(centroidDir(name, sv))) {
+      import spark.implicits._
+      return Left(Seq.empty[(String, Long, Double)].toDF(meta.idColumn, "cell", "dist"))
+    }
     val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val probed = graft.ann.Ann.probeCells(centroids, qv, nprobe, meta.distance).toArray
-    ivfPreparedEntry(name, meta, topK, None).prepared
-      .map(_.swappedSelectedFiles(Seq(qv, probed)))
-      .getOrElse(Array.empty)
+    val probed = graft.ann.Ann.probeCells(readCentroids(name, sv), qv, nprobe, meta.distance)
+    Right(IvfRoute(meta, indexedState(name, meta), qv, probed.toArray))
   }
 
-  /** Build the EXACT [[searchIvf]] plan with TWO placeholders — the query
-    * vector (distance expression) and the probed cell array (partition
-    * filter) — and compile it. The quantized path routes through the FUSED
-    * kernel (`distance_quant` ≡ `distance(dequantize(...))` bit-for-bit —
-    * the engine's pinned contract), same as [[compileSearch]]. */
-  private def compileSearchIvf(snap: DataFrame, meta: CollectionMeta, topK: Int,
-                               filter: Option[FilterExpr])
-      : org.apache.spark.sql.graft.PreparedPlan.Prepared = {
-    import org.apache.spark.sql.graft.PreparedPlan
-    val (phV, hV) = PreparedPlan.placeholder(meta.dim)
-    val (phC, hC) = PreparedPlan.placeholderLongArray()
-    val snap1 = snap.withColumnRenamed(GraftCatalog.CellCol, "cell")
-    val filtered = applyFilter(snap1, meta, filter)
-    val dist = meta.quantization match {
-      case "none" => graft.functions.distance(col(VectorCol), phV, meta.distance)
-      case q      => graft.functions.distance_quant(col(VectorCol), phV, q, meta.distance)
-    }
-    val planDf = filtered
-      .where(array_contains(phC, col("cell").cast("long")))
-      .select(col(meta.idColumn), col("cell"), round(dist, 6).as("dist"))
-      .orderBy(col("dist").asc, col(meta.idColumn).asc)
+  /** The IVF plan over query Column `q` and probed-cell array Column
+    * `cells`: the cell predicate prunes partition directories, the filter
+    * conjoins on the same scan, the fused kernel scores. */
+  private def ivfPlan(r: IvfRoute, topK: Int, filter: Option[FilterExpr])(
+      q: Column, cells: Column): DataFrame = {
+    val pk = r.meta.idColumn
+    applyFilter(r.snap.withColumnRenamed(GraftCatalog.CellCol, "cell"), r.meta, filter)
+      .where(array_contains(cells, col("cell").cast("long")))
+      .select(col(pk), col("cell"), round(queryDistance(r.meta, VectorCol, q), 6).as("dist"))
+      .orderBy(col("dist").asc, col(pk).asc)
       .limit(topK)
-    PreparedPlan.compileMulti(planDf, Seq(hV, hC))
   }
 
   /** Batch retrieval over the IVF layout: the k nearest rows for EVERY
@@ -2476,18 +2275,74 @@ class GraftCatalog(spark: SparkSession, root: String,
   def searchPq(name: String, queryVector: Array[Float], topK: Int,
                rerank: Boolean = true, overFetch: Int = 4,
                nprobe: Option[Int] = None,
-               filter: Option[FilterExpr] = None): DataFrame = {
+               filter: Option[FilterExpr] = None): DataFrame =
+    resolvePq(name, queryVector, overFetch, nprobe).fold(identity,
+      pqPerCall(_, topK, rerank, overFetch, filter))
+
+  private def pqPerCall(r: PqRoute, topK: Int, rerank: Boolean, overFetch: Int,
+                        filter: Option[FilterExpr]): DataFrame = {
+    val pass1 = pqPass1(r, topK, rerank, overFetch, filter)(lit(r.qv), r.probed.map(c => lit(c)))
+    if (rerank) exactRerank(r.meta, r.full, r.hasCells, r.qv, pass1.collect().toIndexedSeq, topK)
+    else pass1
+  }
+
+  /** [[searchPq]] with PASS 1 through a prepared plan (r12): on a RESIDUAL
+    * IVF-PQ layout the broadcast-LUT kernel makes the ADC scan's only
+    * per-request constants the query vector and (with `nprobe`) the probed
+    * cell set — both swappable, so the (topK, rerank, overFetch, probed?,
+    * filter) shape compiles once and re-prunes per request like
+    * [[searchIvfPrepared]]. Raw-code layouts stay plan-per-call: their
+    * single query LUT is a codegen constant by design (32 KB — nothing to
+    * save). Pass 2 rides [[exactRerank]] unchanged. */
+  def searchPqPrepared(name: String, queryVector: Array[Float], topK: Int,
+                       rerank: Boolean = true, overFetch: Int = 4,
+                       nprobe: Option[Int] = None,
+                       filter: Option[FilterExpr] = None): (StructType, Seq[Row]) =
+    resolvePq(name, queryVector, overFetch, nprobe) match {
+      case Left(empty) => collected(empty)
+      case Right(r) if r.bc.isEmpty => collected(pqPerCall(r, topK, rerank, overFetch, filter))
+      case Right(r) =>
+        val (schema, rows) = runPrepared(name,
+            ("pq", topK, rerank, overFetch, nprobe.isDefined, filter), r.full,
+            r.qv +: r.probed.toSeq)(v =>
+          pqPass1(r, topK, rerank, overFetch, filter)(v.head, v.lift(1)))
+        if (rerank) collected(exactRerank(r.meta, r.full, r.hasCells, r.qv, rows, topK))
+        else (schema, rows)
+    }
+
+  /** A resolved PQ request. `full` is the memoized [[indexedState]] (the
+    * prepared anchor); `bc` is the executor-side sidecar of a RESIDUAL
+    * layout (None on raw-code layouts); `probed` the cells of `nprobe`. */
+  private case class PqRoute(meta: CollectionMeta, full: DataFrame, qv: Array[Float],
+                             cb: graft.ann.PqCodebook, hasCells: Boolean,
+                             bc: Option[org.apache.spark.broadcast.Broadcast[
+                               org.apache.spark.sql.graft.PqBcSidecar]],
+                             probed: Option[Array[Long]])
+
+  /** The PQ routes' shared resolve: guards, sidecar reads, layout and the
+    * probe — or the empty answer of a collection flushed empty (no code
+    * layout, nothing to rank).
+    *
+    * IVF collections store RESIDUAL codes (vec − cellCentroid — see flush),
+    * so the ADC pass scores each row against its cell's own lookup table
+    * (query residual vs sub-codewords); with nprobe the scan is also
+    * restricted to the nearest cells — partition-directory pruning cuts
+    * the I/O to nprobe/k of the (already code-only) read. Which layout the
+    * snapshot actually stores is read from the sidecar's recorded flag
+    * ([[resolveResidualLayout]]). */
+  private def resolvePq(name: String, queryVector: Array[Float], overFetch: Int,
+                        nprobe: Option[Int]): Either[DataFrame, PqRoute] = {
     val meta = getMeta(name)
     require(meta.pqConfig.isDefined, s"collection $name has no PQ layout")
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
     require(queryVector.length == meta.dim,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
     require(overFetch >= 1, "overFetch must be >= 1")
-    import spark.implicits._
     val sv = sidecarVersion(name, meta)
-    if (!fs.exists(pqDir(name, sv)))
-      // collection was flushed empty → no code layout, nothing to rank
-      return Seq.empty[(String, Double)].toDF(meta.idColumn, "dist")
+    if (!fs.exists(pqDir(name, sv))) {
+      import spark.implicits._
+      return Left(Seq.empty[(String, Double)].toDF(meta.idColumn, "dist"))
+    }
     val (cb, residFlag) = readPqCodebook(name, sv, meta.pqSubspaces.get)
     val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
     val full = indexedState(name, meta)
@@ -2497,193 +2352,47 @@ class GraftCatalog(spark: SparkSession, root: String,
       require(fs.exists(centroidDir(name, sv)),
         s"collection $name has no centroid sidecar")
     }
-    // IVF collections store RESIDUAL codes (vec − cellCentroid — see flush),
-    // so the ADC pass scores each row against its cell's own lookup table
-    // (query residual vs sub-codewords); with nprobe the scan is also
-    // restricted to the nearest cells — partition-directory pruning cuts
-    // the I/O to nprobe/k of the (already code-only) read. Which layout the
-    // snapshot actually stores is read from the sidecar's recorded flag.
-    // Legacy (flagless) sidecars: without an IVF layout the codes are
-    // unambiguously RAW (residual encoding only ever applied to
-    // ivfCells+pqSubspaces flushes). WITH an IVF layout the cohort is
-    // genuinely ambiguous — flushes before residual encoding landed hold
-    // raw codes, flushes after it but before the flag hold residual
-    // codes — and guessing either way silently mis-scores the other, so
-    // that case demands a re-flush instead of an inference.
-    val hasCells = meta.ivfCells.isDefined &&
-      fs.exists(centroidDir(name, sv))
-    val residualLayout = resolveResidualLayout(name, residFlag, hasCells)
-    val (snap, adcExpr) =
-      if (residualLayout) {
-        val centroids = readCentroids(name, sv)
-        // r12: the per-cell tables are EXECUTOR-BUILT from the per-version
-        // broadcast sidecar — the request ships dim floats, not
-        // cells·m·ksub doubles (8 MB/request at the 256/16/256 serving
-        // config, 128 MB at 4096 cells — measured as ~60% of
-        // serve_pq_1m). Bit-identical tables (PqSpec pins the kernel;
-        // the pq oracle rows gate it end-to-end).
-        val bcSide = pqBroadcast(name, sv, cb, centroids)
-        val restricted = nprobe match {
-          case Some(np) =>
-            val probed = graft.ann.Ann.probeCells(centroids, qv, np, meta.distance)
-            full.where(col(GraftCatalog.CellCol).isin(probed: _*))
-          case None => full
-        }
-        (restricted, graft.functions.pq_adc_distance_cells_bc(
-          col(GraftCatalog.PqCodeCol), col(GraftCatalog.CellCol).cast("long"),
-          lit(qv), bcSide))
-      } else {
-        // raw-code layout: one plain query LUT; nprobe (when the snapshot
-        // is cell-partitioned) still prunes partition directories
-        val restricted = nprobe match {
-          case Some(np) =>
-            val centroids = readCentroids(name, sv)
-            val probed = graft.ann.Ann.probeCells(centroids, qv, np, meta.distance)
-            full.where(col(GraftCatalog.CellCol).isin(probed: _*))
-          case None => full
-        }
-        (restricted, graft.ann.Pq.adcDist(col(GraftCatalog.PqCodeCol), cb, qv))
-      }
-    // carry the cell through the ADC ranking (when the layout has one) so
-    // the rerank scan can be restricted to the CANDIDATES' OWN partition
-    // directories — without it the id-isin pushdown still opens every cell
-    // dir's footers (measured as the bulk of serve_pq_1m's 0.43 s; the ADC
-    // pass itself is ~0.04 s)
-    val adcCols =
-      if (hasCells) Seq(col(meta.idColumn), col(GraftCatalog.CellCol), adcExpr.as("__adc"))
-      else Seq(col(meta.idColumn), adcExpr.as("__adc"))
-    // pre-filter semantics (S3, as in searchIvf): the predicate restricts
-    // the PASS-1 code scan — one conjunct on the same pruned read — so
-    // every ADC candidate is a filter survivor; the rerank pass needs no
-    // re-check (candidate ids are pk-unique survivors by construction)
-    val adcSnap = applyFilter(snap, meta, filter)
-    val adc = adcSnap.select(adcCols: _*)
-    if (!rerank)
-      adc.select(col(meta.idColumn), round(col("__adc"), 6).as("dist"))
-        .orderBy(col("dist").asc, col(meta.idColumn).asc).limit(topK)
-    else {
-      // candidates are O(topK·overFetch) — driver-size, like centroid
-      // sidecars; id + cell both push into the rerank scan (the cell as
-      // partition-directory pruning, the id as a parquet filter)
-      val cand = adc.orderBy(col("__adc").asc, col(meta.idColumn).asc)
-        .limit(topK * overFetch)
-        .select(adcCols.init.map(c => c): _*).collect().toIndexedSeq
-      pqRerank(snap, meta, cand, hasCells, qv, topK)
-    }
-  }
-
-  /** [[searchPq]]'s exact-rerank pass over the pass-1 ADC candidates — ONE
-    * implementation shared with [[searchPqPrepared]] ([[binaryRerank]]'s
-    * discipline, and the same reason it stays plan-per-call: candidate
-    * ids/cells are per-request literals whose parquet pushdown + partition
-    * pruning beat the analysis a prepared pass-2 would save). */
-  private def pqRerank(frame: DataFrame, meta: CollectionMeta,
-                       cand: Seq[org.apache.spark.sql.Row], hasCells: Boolean,
-                       qv: Array[Float], topK: Int): DataFrame = {
-    val candIds = cand.map(_.get(0))
-    val vec = meta.quantization match {
-      case "none" => col(VectorCol)
-      case q      => dequantize(col(VectorCol), q)
-    }
-    val pruned =
-      if (hasCells) {
-        val candCells = cand.map(_.get(1)).distinct
-        frame.where(col(GraftCatalog.CellCol).isin(candCells: _*) &&
-          col(meta.idColumn).isin(candIds: _*))
-      } else frame.where(col(meta.idColumn).isin(candIds: _*))
-    pruned
-      .select(col(meta.idColumn),
-        round(graft.functions.distance(vec, lit(qv), meta.distance), 6).as("dist"))
-      .orderBy(col("dist").asc, col(meta.idColumn).asc).limit(topK)
-  }
-
-  /** [[searchPq]] with PASS 1 through a prepared plan (r12): on a RESIDUAL
-    * IVF-PQ layout the broadcast-LUT kernel makes the ADC scan's only
-    * per-request constants the query vector and (with `nprobe`) the probed
-    * cell set — both swappable, so the (topK, rerank, overFetch, probed?,
-    * filter) shape compiles once and re-prunes per request like
-    * [[searchIvfPrepared]]. Raw-code layouts fall back to the plan-per-call
-    * path: their single query LUT is a codegen constant by design (32 KB —
-    * nothing to save). Pass 2 rides [[pqRerank]] unchanged. */
-  def searchPqPrepared(name: String, queryVector: Array[Float], topK: Int,
-                       rerank: Boolean = true, overFetch: Int = 4,
-                       nprobe: Option[Int] = None,
-                       filter: Option[FilterExpr] = None)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
-    val meta = getMeta(name)
-    require(meta.pqConfig.isDefined, s"collection $name has no PQ layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    require(overFetch >= 1, "overFetch must be >= 1")
-    def fallback(): (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
-      val out = searchPq(name, queryVector, topK, rerank, overFetch, nprobe, filter)
-      (out.schema, out.collect().toIndexedSeq)
-    }
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(pqDir(name, sv))) return fallback() // flushed empty
-    val (cb, residFlag) = readPqCodebook(name, sv, meta.pqSubspaces.get)
-    nprobe.foreach { _ =>
-      require(meta.ivfCells.isDefined,
-        s"collection $name has no IVF layout — nprobe needs ivfCells + pqSubspaces")
-      require(fs.exists(centroidDir(name, sv)),
-        s"collection $name has no centroid sidecar")
-    }
     val hasCells = meta.ivfCells.isDefined && fs.exists(centroidDir(name, sv))
-    if (!resolveResidualLayout(name, residFlag, hasCells)) return fallback()
-    val full = indexedState(name, meta) // memoized — the staleness anchor
-    val centroids = readCentroids(name, sv)
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val probed: Option[Array[Long]] =
-      nprobe.map(np => graft.ann.Ann.probeCells(centroids, qv, np, meta.distance).toArray)
-    val key = PqPreparedKey(name, topK, rerank, overFetch, nprobe.isDefined, filter)
-    val cached = preparedPqSearches.synchronized {
-      Option(preparedPqSearches.get(key)).filter(_.df eq full)
+    val residual = resolveResidualLayout(name, residFlag, hasCells)
+    // r12: the per-cell tables are EXECUTOR-BUILT from the per-version
+    // broadcast sidecar — the request ships dim floats, not cells·m·ksub
+    // doubles (8 MB/request at the 256/16/256 serving config, 128 MB at
+    // 4096 cells — measured as ~60% of serve_pq_1m). Bit-identical tables
+    // (PqSpec pins the kernel; the pq oracle rows gate it end-to-end).
+    val bc = if (residual) Some(pqBroadcast(name, sv, cb, readCentroids(name, sv))) else None
+    val probed = nprobe.map(np =>
+      graft.ann.Ann.probeCells(readCentroids(name, sv), qv, np, meta.distance).toArray)
+    Right(PqRoute(meta, full, qv, cb, hasCells, bc, probed))
+  }
+
+  /** PASS 1 of the PQ routes over query Column `q` and probed-cell array
+    * Column `cells`: the ADC scan, pre-filtered ([[searchIvf]]'s S3
+    * semantics — one conjunct on the same pruned read, so every candidate
+    * is a filter survivor and the rerank needs no re-check). Without
+    * rerank it is the answer; with it, the top `topK·overFetch` candidates'
+    * pk (and cell, when the layout has one — it restricts the rerank scan
+    * to the CANDIDATES' OWN partition directories; without it the id-isin
+    * pushdown still opens every cell dir's footers, measured as the bulk of
+    * serve_pq_1m's 0.43 s). A raw-code layout scores one plan-constant
+    * query LUT and ignores `q`. */
+  private def pqPass1(r: PqRoute, topK: Int, rerank: Boolean, overFetch: Int,
+                      filter: Option[FilterExpr])(q: Column, cells: Option[Column]): DataFrame = {
+    val pk = col(r.meta.idColumn)
+    val code = col(GraftCatalog.PqCodeCol)
+    val adc = r.bc match {
+      case Some(bc) => graft.functions.pq_adc_distance_cells_bc(
+        code, col(GraftCatalog.CellCol).cast("long"), q, bc)
+      case None => graft.ann.Pq.adcDist(code, r.cb, r.qv)
     }
-    val entry = cached.getOrElse {
-      import org.apache.spark.sql.graft.PreparedPlan
-      val e =
-        try {
-          val (phV, hV) = PreparedPlan.placeholder(meta.dim)
-          val cellsPh = if (nprobe.isDefined) Some(PreparedPlan.placeholderLongArray()) else None
-          val bcSide = pqBroadcast(name, sv, cb, centroids)
-          val restricted = cellsPh match {
-            case Some((phC, _)) =>
-              full.where(array_contains(phC, col(GraftCatalog.CellCol).cast("long")))
-            case None => full
-          }
-          val adcExpr = graft.functions.pq_adc_distance_cells_bc(
-            col(GraftCatalog.PqCodeCol), col(GraftCatalog.CellCol).cast("long"),
-            phV, bcSide)
-          val adcSnap = applyFilter(restricted, meta, filter)
-          val df =
-            if (!rerank)
-              adcSnap.select(col(meta.idColumn), round(adcExpr, 6).as("dist"))
-                .orderBy(col("dist").asc, col(meta.idColumn).asc).limit(topK)
-            else
-              adcSnap.select(col(meta.idColumn), col(GraftCatalog.CellCol),
-                  adcExpr.as("__adc"))
-                .orderBy(col("__adc").asc, col(meta.idColumn).asc)
-                .limit(topK * overFetch)
-                .select(col(meta.idColumn), col(GraftCatalog.CellCol))
-          PreparedEntry(full,
-            Some(PreparedPlan.compileMulti(df, Seq(hV) ++ cellsPh.map(_._2))))
-        } catch {
-          case _: org.apache.spark.sql.graft.PreparedPlan.PlaceholderFoldedException =>
-            PreparedEntry(full, None)
-        }
-      preparedPqSearches.synchronized { preparedPqSearches.put(key, e) }
-      e
-    }
-    entry.prepared match {
-      case Some(p) =>
-        val values = Seq[Any](qv) ++ probed
-        if (!rerank) (p.schema, p.runValues(values))
-        else {
-          val out = pqRerank(full, meta, p.runValues(values), hasCells = true, qv, topK)
-          (out.schema, out.collect().toIndexedSeq)
-        }
-      case None => fallback()
+    val restricted = cells.fold(r.full)(c =>
+      r.full.where(array_contains(c, col(GraftCatalog.CellCol).cast("long"))))
+    val scan = applyFilter(restricted, r.meta, filter)
+    if (!rerank)
+      scan.select(pk, round(adc, 6).as("dist")).orderBy(col("dist").asc, pk.asc).limit(topK)
+    else {
+      val keep = if (r.hasCells) Seq(pk, col(GraftCatalog.CellCol)) else Seq(pk)
+      scan.select(keep :+ adc.as("__adc"): _*)
+        .orderBy(col("__adc").asc, pk.asc).limit(topK * overFetch).select(keep: _*)
     }
   }
 
@@ -2702,7 +2411,40 @@ class GraftCatalog(spark: SparkSession, root: String,
     * survivor; the rerank pass is unchanged. */
   def searchBinary(name: String, queryVector: Array[Float], topK: Int,
                    overFetch: Int = 3,
-                   filter: Option[FilterExpr] = None): DataFrame = {
+                   filter: Option[FilterExpr] = None): DataFrame =
+    resolveBin(name, queryVector, topK, overFetch).fold(identity, r =>
+      exactRerank(r.meta, r.full, r.withCell, r.qv,
+        binPass1(r, topK, overFetch, filter)(lit(r.qc)).collect().toIndexedSeq, topK))
+
+  /** [[searchBinary]] with PASS 1 through a prepared plan (r12): the
+    * corpus-sized Hamming scan compiles once per (topK, overFetch, filter)
+    * shape; each request swaps the QUERY CODE — one binary literal, scored
+    * by the two-operand kernel on both forms. Pass 2 rides
+    * [[exactRerank]] unchanged (see its note on why it stays
+    * plan-per-call). */
+  def searchBinaryPrepared(name: String, queryVector: Array[Float], topK: Int,
+                           overFetch: Int = 3,
+                           filter: Option[FilterExpr] = None): (StructType, Seq[Row]) =
+    resolveBin(name, queryVector, topK, overFetch) match {
+      case Left(empty) => collected(empty)
+      case Right(r) =>
+        val (_, cand) = runPrepared(name, ("bin", topK, overFetch, filter), r.full, Seq(r.qc))(v =>
+          binPass1(r, topK, overFetch, filter)(v.head))
+        collected(exactRerank(r.meta, r.full, r.withCell, r.qv, cand, topK))
+    }
+
+  /** A resolved binary request: `full` is the memoized [[indexedState]]
+    * (the prepared anchor), `qc` the packed query code; `withCell` when
+    * the layout composes with ivfCells. */
+  private case class BinRoute(meta: CollectionMeta, full: DataFrame, qv: Array[Float],
+                              qc: Array[Byte], withCell: Boolean)
+
+  /** The binary routes' shared resolve: guards, threshold sidecar and the
+    * query code — or the empty answer of an empty flush. Only an EMPTY
+    * flush legitimately lacks the sidecar: a populated snapshot without
+    * one is a layout mismatch, not a no-result query. */
+  private def resolveBin(name: String, queryVector: Array[Float], topK: Int,
+                         overFetch: Int): Either[DataFrame, BinRoute] = {
     val meta = getMeta(name)
     require(meta.hasBinaryIndex, s"collection $name has no binary index layout")
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
@@ -2710,126 +2452,63 @@ class GraftCatalog(spark: SparkSession, root: String,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
     require(topK >= 1, "topK must be >= 1")
     require(overFetch >= 1, "overFetch must be >= 1")
-    import spark.implicits._
     val sv = sidecarVersion(name, meta)
     val full = indexedState(name, meta)
     if (!fs.exists(binDir(name, sv))) {
-      // only an EMPTY flush legitimately lacks the sidecar — a populated
-      // snapshot without one is a layout mismatch, not a no-result query
       require(full.isEmpty,
         s"collection $name: binary sidecar missing for version $sv — " +
           "the snapshot predates the binary layout; re-flush to build it")
-      return Seq.empty[(String, Double)].toDF(meta.idColumn, "dist")
+      import spark.implicits._
+      return Left(Seq.empty[(String, Double)].toDF(meta.idColumn, "dist"))
     }
     val th = readBinThresholds(name, sv)
     require(th.length == meta.dim,
       s"binary sidecar dimension mismatch: ${th.length} vs ${meta.dim}")
     val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val qc = graft.ann.Bin.encodeOne(qv, th)
-    // candidates are O(topK·overFetch) — driver-sized; on a
-    // cell-partitioned layout (binary composed with ivfCells) the
-    // candidates' own cells restrict the rerank to THEIR partition
-    // directories, the searchPq discipline — an id-only isin still opens
-    // every cell dir's footers
-    val withCell = full.columns.contains(GraftCatalog.CellCol)
-    val p1 =
-      if (withCell) Seq(col(meta.idColumn), col(GraftCatalog.CellCol))
-      else Seq(col(meta.idColumn))
-    // pre-filter the Hamming pass (S3 semantics, as in searchIvf): the
-    // candidates the rerank re-scores are filter survivors by construction
-    val p1snap = applyFilter(full, meta, filter)
-    val cand = p1snap.select(p1 :+
-        graft.ann.Bin.hamming(col(GraftCatalog.BinCol), qc).as("__h"): _*)
-      .orderBy(col("__h").asc, col(meta.idColumn).asc)
-      .limit(topK * overFetch).select(p1: _*).collect().toIndexedSeq
-    binaryRerank(full, meta, cand, withCell, qv, topK)
+    Right(BinRoute(meta, full, qv, graft.ann.Bin.encodeOne(qv, th),
+      full.columns.contains(GraftCatalog.CellCol)))
   }
 
-  /** [[searchBinary]]'s PASS 2 — the exact rerank over the pass-1
-    * candidates, ONE implementation shared with [[searchBinaryPrepared]] so
-    * the two routes cannot drift. Stays plan-per-call ON PURPOSE: the
-    * candidate ids/cells are per-request literals whose parquet row-group
-    * pushdown (`In` on the pk) and partition pruning matter more at scale
-    * than the analysis a prepared pass-2 would save — an array-literal
-    * filter does not push into parquet. */
-  private def binaryRerank(full: DataFrame, meta: CollectionMeta,
-                           cand: Seq[org.apache.spark.sql.Row], withCell: Boolean,
-                           qv: Array[Float], topK: Int): DataFrame = {
+  /** PASS 1 of the binary routes over query-code Column `code`: scans ONLY
+    * (pk, `__bin_code`) (+ the cell on a cell-partitioned layout — the
+    * candidates' own cells restrict the rerank to THEIR partition
+    * directories, the searchPq discipline), pre-filtered (S3 semantics, as
+    * in searchIvf: the candidates the rerank re-scores are filter
+    * survivors by construction), and keeps the Hamming top
+    * `topK·overFetch` — O(topK·overFetch) rows, driver-sized. */
+  private def binPass1(r: BinRoute, topK: Int, overFetch: Int,
+                       filter: Option[FilterExpr])(code: Column): DataFrame = {
+    val pk = col(r.meta.idColumn)
+    val keep = if (r.withCell) Seq(pk, col(GraftCatalog.CellCol)) else Seq(pk)
+    applyFilter(r.full, r.meta, filter)
+      .select(keep :+ graft.ann.Bin.hammingCols(col(GraftCatalog.BinCol), code).as("__h"): _*)
+      .orderBy(col("__h").asc, pk.asc)
+      .limit(topK * overFetch).select(keep: _*)
+  }
+
+  /** PASS 2 of the PQ and binary routes — the exact rerank over the
+    * pass-1 candidates (pk, plus the cell when `withCell`), ONE
+    * implementation so the routes cannot drift. Stays plan-per-call ON
+    * PURPOSE: the candidate ids/cells are per-request literals whose
+    * parquet row-group pushdown (`In` on the pk) and partition pruning
+    * matter more at scale than the analysis a prepared pass-2 would save —
+    * an array-literal filter does not push into parquet. */
+  private def exactRerank(meta: CollectionMeta, full: DataFrame, withCell: Boolean,
+                          qv: Array[Float], cand: Seq[Row], topK: Int): DataFrame = {
     val candIds = cand.map(_.get(0))
     val vec = meta.quantization match {
       case "none" => col(VectorCol)
       case q      => dequantize(col(VectorCol), q)
     }
+    val pk = meta.idColumn
     val pruned =
       if (withCell) {
         val candCells = cand.map(_.get(1)).distinct
-        full.where(col(GraftCatalog.CellCol).isin(candCells: _*) &&
-          col(meta.idColumn).isin(candIds: _*))
-      } else full.where(col(meta.idColumn).isin(candIds: _*))
+        full.where(col(GraftCatalog.CellCol).isin(candCells: _*) && col(pk).isin(candIds: _*))
+      } else full.where(col(pk).isin(candIds: _*))
     pruned
-      .select(col(meta.idColumn),
-        round(graft.functions.distance(vec, lit(qv), meta.distance), 6).as("dist"))
-      .orderBy(col("dist").asc, col(meta.idColumn).asc).limit(topK)
-  }
-
-  /** [[searchBinary]] with PASS 1 through a prepared plan (r12): the
-    * corpus-sized Hamming scan compiles once per (topK, overFetch, filter)
-    * shape; each request swaps the QUERY CODE — one binary literal, scored
-    * by the generic two-operand kernel, which generates the same
-    * XOR+POPCNT loop as the plan-constant form, so candidates are
-    * bit-identical. Pass 2 rides [[binaryRerank]] unchanged (see its note
-    * on why it stays plan-per-call). */
-  def searchBinaryPrepared(name: String, queryVector: Array[Float], topK: Int,
-                           overFetch: Int = 3, filter: Option[FilterExpr] = None)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
-    val meta = getMeta(name)
-    require(meta.hasBinaryIndex, s"collection $name has no binary index layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(queryVector.length == meta.dim,
-      s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    require(topK >= 1, "topK must be >= 1")
-    require(overFetch >= 1, "overFetch must be >= 1")
-    val sv = sidecarVersion(name, meta)
-    val full = indexedState(name, meta) // memoized — the staleness anchor
-    if (!fs.exists(binDir(name, sv))) {
-      val out = searchBinary(name, queryVector, topK, overFetch, filter)
-      return (out.schema, out.collect().toIndexedSeq)
-    }
-    val th = readBinThresholds(name, sv)
-    require(th.length == meta.dim,
-      s"binary sidecar dimension mismatch: ${th.length} vs ${meta.dim}")
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val qc = graft.ann.Bin.encodeOne(qv, th)
-    val withCell = full.columns.contains(GraftCatalog.CellCol)
-    val key = BinPreparedKey(name, topK, overFetch, filter)
-    val cached = preparedBinSearches.synchronized {
-      Option(preparedBinSearches.get(key)).filter(_.df eq full)
-    }
-    val entry = cached.getOrElse {
-      import org.apache.spark.sql.graft.PreparedPlan
-      val e =
-        try {
-          val (phB, hB) = PreparedPlan.placeholderBinary()
-          val p1 =
-            if (withCell) Seq(col(meta.idColumn), col(GraftCatalog.CellCol))
-            else Seq(col(meta.idColumn))
-          val df = applyFilter(full, meta, filter).select(p1 :+
-              graft.ann.Bin.hammingCols(col(GraftCatalog.BinCol), phB).as("__h"): _*)
-            .orderBy(col("__h").asc, col(meta.idColumn).asc)
-            .limit(topK * overFetch).select(p1: _*)
-          PreparedEntry(full, Some(PreparedPlan.compile(df, hB)))
-        } catch {
-          case _: org.apache.spark.sql.graft.PreparedPlan.PlaceholderFoldedException =>
-            PreparedEntry(full, None)
-        }
-      preparedBinSearches.synchronized { preparedBinSearches.put(key, e) }
-      e
-    }
-    val out = entry.prepared match {
-      case Some(p) => binaryRerank(full, meta, p.runValues(Seq(qc)), withCell, qv, topK)
-      case None    => searchBinary(name, queryVector, topK, overFetch, filter)
-    }
-    (out.schema, out.collect().toIndexedSeq)
+      .select(col(pk), round(graft.functions.distance(vec, lit(qv), meta.distance), 6).as("dist"))
+      .orderBy(col("dist").asc, col(pk).asc).limit(topK)
   }
 
   /** The centroid sidecar of version `v` — O(cells) rows, driver-sized.
@@ -3300,9 +2979,8 @@ class GraftCatalog(spark: SparkSession, root: String,
       name: String,
       fields: Seq[MultiVectorSearch.FieldQuery],
       topK: Int): DataFrame = {
-    val (searchable, routed, meta, fused) = multiSearchParts(name, fields)
-    MultiVectorSearch.search(searchable, routed, topK,
-      metric = meta.distance, idCol = meta.idColumn, distanceOf = fused)
+    val (df, meta, routed) = resolveMulti(name, fields)
+    multiPlan(df, meta, routed, topK)(routed.filter(_.include).map(f => lit(f.queryVector)))
   }
 
   /** Probed (IVF) multi-vector search — the PRUNED layout for the CFLAT
@@ -3312,7 +2990,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * cell-partitioned on its ROUTING field ([[CollectionMeta.routingVector]]
     * — declared `routingField`, default the first vector field): the
     * `nprobe` centroids nearest the routing QUERY select cells, the
-    * `__cell isin` predicate prunes whole partition directories, and the
+    * probed-cell predicate prunes whole partition directories, and the
     * weighted multi-field score runs only inside probed cells. Recall
     * follows the routing field's IVF recall (the standard single-probe
     * trade — fields weighted heavily but uncorrelated with the routing
@@ -3323,44 +3001,39 @@ class GraftCatalog(spark: SparkSession, root: String,
     * field at write time ([[decorateSegment]]). Requires a query for the
     * routing field (probing needs it); output (pk, cell, score). */
   def searchMultiIvf(name: String, fields: Seq[MultiVectorSearch.FieldQuery],
-                     topK: Int, nprobe: Int): DataFrame = {
-    val meta = getMeta(name)
-    require(meta.isMultiVector, s"collection $name is single-vector; use searchIvf")
-    require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) {
-      // flushed empty → unpartitioned fallback, no sidecar (and no segments:
-      // flushDelta refuses on an indexed base flushed empty)
-      import spark.implicits._
-      return Seq.empty[(String, Int, Double)].toDF(meta.idColumn, "cell", "score")
-    }
-    val snap = indexedState(name, meta).withColumnRenamed(GraftCatalog.CellCol, "cell")
-    val (searchable, routed, _, fused) = multiSearchParts(name, fields, Some(snap))
-    val routing = meta.routingVector.get
-    val rq = routed.find(_.vectorCol == routing.name).getOrElse(
-      throw new IllegalArgumentException(
-        s"probed multi-vector search needs a query for the routing field ${routing.name}"))
-    val centroids = readCentroids(name, sv)
-    val probed = graft.ann.Ann.probeCells(centroids, rq.queryVector, nprobe, meta.distance)
-    MultiVectorSearch.search(searchable.where(col("cell").isin(probed: _*)), routed, topK,
-      metric = meta.distance, idCol = meta.idColumn, distanceOf = fused,
-      keepCols = Seq("cell"))
-  }
+                     topK: Int, nprobe: Int): DataFrame =
+    resolveMultiIvf(name, fields, nprobe).fold(identity, r =>
+      multiIvfPlan(r, topK)(r.routed.filter(_.include).map(f => lit(f.queryVector)) :+ lit(r.probed)))
 
   /** [[searchMultiIvf]] through a prepared (plan-once/execute-many) plan —
     * r12, closing the "unprepared BY DESIGN" note of PLANS.md r11: the
-    * probed cell set is no longer a per-query `isin` literal but ONE
-    * swappable array inside the scan's partition filter, so the (field,
-    * ratio, include)+topK shape compiles once and each request swaps every
-    * included field's query vector plus the cell set — partition pruning
-    * re-evaluates per swapped copy, exactly like [[searchIvfPrepared]].
-    * Results equal [[searchMultiIvf]] bit-for-bit (MultiIvfSpec pins it);
-    * falls back to plan-per-call when the shape cannot be parameterized. */
+    * probed cell set is ONE swappable array inside the scan's partition
+    * filter, so the (field, ratio, include)+topK shape compiles once and
+    * each request swaps every included field's query vector plus the cell
+    * set — partition pruning re-evaluates per swapped copy, exactly like
+    * [[searchIvfPrepared]]. Results equal [[searchMultiIvf]] bit-for-bit
+    * (MultiIvfSpec pins it). */
   def searchMultiIvfPrepared(name: String, fields: Seq[MultiVectorSearch.FieldQuery],
-                             topK: Int, nprobe: Int)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
+                             topK: Int, nprobe: Int): (StructType, Seq[Row]) =
+    resolveMultiIvf(name, fields, nprobe) match {
+      case Left(empty) => collected(empty)
+      case Right(r) =>
+        runPrepared(name, ("multiIvf", multiShape(r.routed), topK), r.anchor,
+          r.routed.filter(_.include).map(_.queryVector) :+ r.probed)(multiIvfPlan(r, topK))
+    }
+
+  /** A resolved probed multi-vector request: `anchor` is the memoized
+    * [[indexedState]] (the prepared anchor), `probed` the routing query's
+    * `nprobe` cells. */
+  private case class MultiIvfRoute(meta: CollectionMeta, anchor: DataFrame,
+                                   routed: Seq[MultiVectorSearch.FieldQuery],
+                                   probed: Array[Long])
+
+  /** The probed multi-vector routes' shared resolve — or the empty answer
+    * of a collection flushed empty (no sidecar, and no segments: flushDelta
+    * refuses on an indexed base flushed empty). */
+  private def resolveMultiIvf(name: String, fields: Seq[MultiVectorSearch.FieldQuery],
+                              nprobe: Int): Either[DataFrame, MultiIvfRoute] = {
     val meta = getMeta(name)
     require(meta.isMultiVector, s"collection $name is single-vector; use searchIvf")
     require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
@@ -3368,50 +3041,26 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(nprobe >= 1, "nprobe must be >= 1")
     val sv = sidecarVersion(name, meta)
     if (!fs.exists(centroidDir(name, sv))) {
-      val out = searchMultiIvf(name, fields, topK, nprobe)
-      return (out.schema, out.collect().toIndexedSeq)
+      import spark.implicits._
+      return Left(Seq.empty[(String, Int, Double)].toDF(meta.idColumn, "cell", "score"))
     }
-    val anchor = indexedState(name, meta) // memoized per version — the staleness key
-    val snap = anchor.withColumnRenamed(GraftCatalog.CellCol, "cell")
-    val (searchable, routed, _, fused) = multiSearchParts(name, fields, Some(snap))
+    val anchor = indexedState(name, meta)
+    val routed = prepareMultiFields(meta, fields)
     val routing = meta.routingVector.get
     val rq = routed.find(_.vectorCol == routing.name).getOrElse(
       throw new IllegalArgumentException(
         s"probed multi-vector search needs a query for the routing field ${routing.name}"))
-    val included = routed.filter(_.include)
-    require(included.nonEmpty, "at least one field must be included")
-    val centroids = readCentroids(name, sv)
-    val probed = graft.ann.Ann.probeCells(centroids, rq.queryVector, nprobe, meta.distance).toArray
-    val key = MultiIvfPreparedKey(name, routed.map(f => (f.vectorCol, f.ratio, f.include)), topK)
-    val cached = preparedMultiIvfSearches.synchronized {
-      Option(preparedMultiIvfSearches.get(key)).filter(_.df eq anchor)
-    }
-    val entry = cached.getOrElse {
-      import org.apache.spark.sql.graft.PreparedPlan
-      val e =
-        try {
-          val phs = included.map(f => PreparedPlan.placeholder(f.queryVector.length))
-          val (phC, hC) = PreparedPlan.placeholderLongArray()
-          val planDf = MultiVectorSearch.searchWith(
-            searchable.where(array_contains(phC, col("cell").cast("long"))),
-            routed, phs.map(_._1), topK, meta.distance, meta.idColumn, fused,
-            keepCols = Seq("cell"))
-          PreparedEntry(anchor,
-            Some(PreparedPlan.compileMulti(planDf, phs.map(_._2) :+ hC)))
-        } catch {
-          case _: PreparedPlan.PlaceholderFoldedException => PreparedEntry(anchor, None)
-        }
-      preparedMultiIvfSearches.synchronized { preparedMultiIvfSearches.put(key, e) }
-      e
-    }
-    entry.prepared match {
-      case Some(p) =>
-        (p.schema, p.runValues(included.map(_.queryVector) :+ probed))
-      case None =>
-        val out = searchMultiIvf(name, fields, topK, nprobe)
-        (out.schema, out.collect().toIndexedSeq)
-    }
+    val probed = graft.ann.Ann.probeCells(readCentroids(name, sv), rq.queryVector, nprobe,
+      meta.distance)
+    Right(MultiIvfRoute(meta, anchor, routed, probed.toArray))
   }
+
+  /** The probed multi-vector plan over the included fields' query Columns
+    * followed by the probed-cell array Column. */
+  private def multiIvfPlan(r: MultiIvfRoute, topK: Int)(v: Seq[Column]): DataFrame =
+    multiPlan(r.anchor.withColumnRenamed(GraftCatalog.CellCol, "cell")
+        .where(array_contains(v.last, col("cell").cast("long"))),
+      r.meta, r.routed, topK, keepCols = Seq("cell"))(v.init)
 
   /** Recall audit of the multi-vector IVF probe ([[auditRecall]]'s
     * discipline on the [[searchMultiIvf]] rung): per sampled query row,
@@ -3589,77 +3238,56 @@ class GraftCatalog(spark: SparkSession, root: String,
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Shared prep for the multi-vector paths: validates the queried fields
-    * against the declared schema, prepares each query vector, and — when
-    * storage is quantized — returns the FUSED per-field distance kernel
-    * (`distance_quant`, decode-in-loop) instead of materializing a
-    * dequantized array column per field per row (one pass over the stored
-    * shorts/bytes, same as the single-vector hot path; bit-equal to
-    * `distance(dequantize(field), query)` per QuantizationSpec). */
-  private def multiSearchParts(name: String, fields: Seq[MultiVectorSearch.FieldQuery],
-                               source: Option[DataFrame] = None)
-      : (DataFrame, Seq[MultiVectorSearch.FieldQuery], CollectionMeta,
-         Option[(MultiVectorSearch.FieldQuery, Column) => Column]) = {
-    val meta = getMeta(name)
-    require(meta.isMultiVector, s"collection $name is single-vector; use search")
-    val df = source.getOrElse(loadedOrThrow(name))
+  /** Validate the queried fields against the declared schema and prepare
+    * each query vector — shared by every multi-vector route. */
+  private def prepareMultiFields(meta: CollectionMeta, fields: Seq[MultiVectorSearch.FieldQuery])
+      : Seq[MultiVectorSearch.FieldQuery] = {
     val declared = meta.vectorFields.map(f => f.name -> f).toMap
-    val prepared = fields.map { fq =>
+    fields.map { fq =>
       val vf = declared.getOrElse(fq.vectorCol,
         throw new IllegalArgumentException(
-          s"${fq.vectorCol} is not a declared vector field of $name"))
+          s"${fq.vectorCol} is not a declared vector field of ${meta.name}"))
       require(fq.queryVector.length == meta.dimOf(vf),
         s"vector dimension mismatch on ${vf.name}: expected ${meta.dimOf(vf)}, got ${fq.queryVector.length}")
       fq.copy(queryVector = GraftCatalog.prepareQueryVector(fq.queryVector, meta))
     }
-    val fused: Option[(MultiVectorSearch.FieldQuery, Column) => Column] =
-      meta.quantization match {
-        case "none" => None
-        case q => Some((fq, qc) =>
-          graft.functions.distance_quant(col(fq.vectorCol), qc, q, meta.distance))
-      }
-    (df, prepared, meta, fused)
   }
+
+  /** The resident multi-vector routes' shared resolve: guards, the
+    * resident frame (the prepared anchor) and the prepared fields. */
+  private def resolveMulti(name: String, fields: Seq[MultiVectorSearch.FieldQuery])
+      : (DataFrame, CollectionMeta, Seq[MultiVectorSearch.FieldQuery]) = {
+    val meta = getMeta(name)
+    require(meta.isMultiVector, s"collection $name is single-vector; use search")
+    val df = loadedOrThrow(name)
+    (df, meta, prepareMultiFields(meta, fields))
+  }
+
+  /** The weighted multi-vector plan over one query Column per INCLUDED
+    * field. Quantized storage scores each field through the FUSED kernel
+    * ([[queryDistance]]) instead of materializing a dequantized array
+    * column per field per row. */
+  private def multiPlan(df: DataFrame, meta: CollectionMeta,
+                        routed: Seq[MultiVectorSearch.FieldQuery], topK: Int,
+                        keepCols: Seq[String] = Nil)(qs: Seq[Column]): DataFrame =
+    MultiVectorSearch.searchWith(df, routed, qs, topK, meta.distance, meta.idColumn,
+      Some((fq, q) => queryDistance(meta, fq.vectorCol, q)), keepCols)
+
+  /** The multi routes' shape: everything about the fields except the
+    * query vectors. */
+  private def multiShape(routed: Seq[MultiVectorSearch.FieldQuery]): Seq[(String, Double, Boolean)] =
+    routed.map(f => (f.vectorCol, f.ratio, f.include))
 
   /** [[searchMulti]] through the prepared (plan-once/execute-many) path:
     * the shape — (field, ratio, include) list + topK — compiles once with
     * one placeholder literal per INCLUDED field, and each request swaps
     * the query vectors into the compiled physical plan ([[searchPrepared]]
-    * semantics; same staleness-by-resident-identity contract, same
-    * negative-cache fallback for unparameterizable shapes). */
+    * semantics; same staleness-by-resident-identity contract). */
   def searchMultiPrepared(name: String, fields: Seq[MultiVectorSearch.FieldQuery],
-                          topK: Int)
-      : (org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]) = {
-    val (searchable, routed, meta, fused) = multiSearchParts(name, fields)
-    val anchor = loadedOrThrow(name) // the resident object, the staleness key
-    val included = routed.filter(_.include)
-    require(included.nonEmpty, "at least one field must be included")
-    val key = MultiPreparedKey(name, routed.map(f => (f.vectorCol, f.ratio, f.include)), topK)
-    val cached = preparedMultiSearches.synchronized {
-      Option(preparedMultiSearches.get(key)).filter(_.df eq anchor)
-    }
-    val entry = cached.getOrElse {
-      import org.apache.spark.sql.graft.PreparedPlan
-      val e =
-        try {
-          val phs = included.map(f => PreparedPlan.placeholder(f.queryVector.length))
-          val searchDf = MultiVectorSearch.searchWith(
-            searchable, routed, phs.map(_._1), topK, meta.distance, meta.idColumn,
-            fused)
-          PreparedEntry(anchor, Some(PreparedPlan.compileMulti(searchDf, phs.map(_._2))))
-        } catch {
-          // typed negative-cache signal only — see searchPrepared
-          case _: PreparedPlan.PlaceholderFoldedException => PreparedEntry(anchor, None)
-        }
-      preparedMultiSearches.synchronized { preparedMultiSearches.put(key, e) }
-      e
-    }
-    entry.prepared match {
-      case Some(p) => (p.schema, p.run(included.map(_.queryVector)))
-      case None =>
-        val out = searchMulti(name, fields, topK)
-        (out.schema, out.collect().toIndexedSeq)
-    }
+                          topK: Int): (StructType, Seq[Row]) = {
+    val (df, meta, routed) = resolveMulti(name, fields)
+    runPrepared(name, ("multi", multiShape(routed), topK), df,
+      routed.filter(_.include).map(_.queryVector))(multiPlan(df, meta, routed, topK))
   }
 }
 
@@ -3808,8 +3436,9 @@ object GraftCatalog {
     p
   }
 
-  /** Prepared-search plan cache bound (per catalog): a serving workload has
-    * a handful of live shapes; each entry is one physical plan tree (KB). */
+  /** Prepared-plan cache bound (per catalog, every route together): a
+    * serving workload has a handful of live shapes; each entry is one
+    * physical plan tree (KB). */
   val PreparedCacheMax: Int = 64
 
   /** Bound on cached per-version artifacts (snapshot plan + sidecars);

@@ -473,7 +473,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         val binFilter = optFilter(req)
         // r12: the corpus-sized Hamming pass is plan-once (query code
         // swaps); the bounded rerank stays plan-per-call for its parquet
-        // pushdown — see GraftCatalog.binaryRerank
+        // pushdown — see GraftCatalog.exactRerank
         withVacuumRecovery(name) {
           val (schema, rows) =
             catalog.searchBinaryPrepared(name, vector, topK, overFetch, binFilter)

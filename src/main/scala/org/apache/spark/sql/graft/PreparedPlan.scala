@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, FloatType, LongType, StructType}
 
 /** Plan-once / execute-many ("prepared statement") support for the serving
   * path. An r8 probe (PLANS.md "1M dispatch floor") measured ~22-43 ms of
@@ -15,14 +15,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, Str
   * freshly-built DataFrame — at 1M rows that was HALF the request. The bench
   * amortizes it by hoisting each query as one memoized Dataset; this class
   * gives the product the same model for queries whose only per-request
-  * variation is the query VECTOR:
+  * variation is a few VALUES (query vectors, a probed cell set, a query
+  * code):
   *
-  *  1. build the search DataFrame once with a [[placeholder]] vector Column;
+  *  1. build the search DataFrame once with [[placeholder]] Columns;
   *  2. [[compile]] it — analysis, optimization, physical planning and
   *     (lazily, cached by generated source) whole-stage codegen all happen
   *     HERE, exactly once;
-  *  3. per request, [[Prepared.run]] swaps the placeholder literal for the
-  *     real vector by reference identity in the PHYSICAL plan — a pure tree
+  *  3. per request, [[Prepared.run]] swaps the placeholder literals for the
+  *     real values by reference identity in the PHYSICAL plan — a pure tree
   *     copy, no Catalyst phase re-runs — and `executeCollect()`s.
   *
   * The swapped literal lands in the codegen `references` array, not the
@@ -35,18 +36,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, Str
   * physical tree is reusable where an adaptive shell re-plans per execute.
   *
   * Staleness safety is the CALLER's contract: a Prepared is valid only for
-  * the exact DataFrame it was compiled from. GraftCatalog keys its cache on
-  * the resident DataFrame's object identity — every mutation/load/release
-  * swaps that object (rebind), so a stale plan is unreachable by
-  * construction (PreparedSearchSpec pins this).
+  * the exact DataFrame it was compiled from. GraftCatalog keys its one
+  * cache on the identity of the anchor each plan compiled against — the
+  * resident DataFrame (every mutation/load/release swaps it) or the
+  * memoized per-version indexed snapshot — so a stale plan is unreachable
+  * by construction (PreparedSearchSpec pins this).
   */
 object PreparedPlan {
 
   /** Query vectors are float arrays end-to-end (edge parity). */
   val VectorType: ArrayType = ArrayType(FloatType, containsNull = false)
 
-  /** A compiled physical plan with one-or-more identified swappable vector
-    * literals (one per query vector of the shape). */
+  /** A compiled physical plan with one or more identified swappable
+    * literals (one per per-request value of the shape). */
   final class Prepared private[PreparedPlan] (
       val schema: StructType,
       session: org.apache.spark.sql.SparkSession,
@@ -54,34 +56,25 @@ object PreparedPlan {
       placeholders: Seq[AnyRef],
       /** Each placeholder literal's dataType, recorded from the surviving
         * plan literal at compile — the swap re-creates a Literal of the
-        * SAME Catalyst type, whatever the slot holds (query vectors,
-        * probed-cell arrays). */
+        * SAME Catalyst type, whatever the slot holds. */
       types: Seq[DataType]) {
     private[this] val toScala = CatalystTypeConverters.createToScalaConverter(schema)
 
-    /** Execute the prepared plan against `vector` (already prepared —
-      * normalized/quantize-round-tripped — by the caller, same contract as
-      * the literal the unprepared path embeds). The session is pinned
-      * active for the calling thread first: SparkPlan.makeCopy (under the
-      * literal swap) reads the thread-local active session, and serving
+    /** Execute the plan with `values` swapped in: they align positionally
+      * with the compiled placeholders and convert under each slot's
+      * recorded Catalyst type (query vectors, probed-cell arrays, query
+      * codes; array slots may change LENGTH between requests — only the
+      * type is pinned). Values are already prepared (normalized /
+      * quantize-round-tripped) by the caller — the same contract as the
+      * literal the plan-per-call path embeds. A swapped copy is a fresh
+      * physical tree, so per-execution lazy state recomputes: a
+      * FileSourceScan's selected partitions re-prune under the NEW literal
+      * (IvfCatalogSpec pins this for the prepared probe). The session is
+      * pinned active for the calling thread first: SparkPlan.makeCopy
+      * (under the swap) reads the thread-local active session, and serving
       * threads (the HTTP executor) don't inherit the driver main thread's. */
-    def run(vector: Array[Float]): Seq[Row] = run(Seq(vector))
-
-    /** Multi-vector variant: `vectors` align positionally with the
-      * placeholders the plan was compiled with. */
-    def run(vectors: Seq[Array[Float]]): Seq[Row] = runValues(vectors)
-
-    /** Fully general swap: `values` align positionally with the compiled
-      * placeholders and convert under each slot's recorded Catalyst type
-      * (a probed-cell Array[Long] swaps exactly like a query vector; array
-      * slots may change LENGTH between requests — only the type is
-      * pinned). A swapped copy is a fresh physical tree, so per-execution
-      * lazy state recomputes: a FileSourceScan's selected partitions
-      * re-prune under the NEW literal (IvfCatalogSpec pins this for the
-      * prepared probe). */
-    def runValues(values: Seq[Any]): Seq[Row] = {
+    def run(values: Seq[Any]): Seq[Row] =
       swap(values).executeCollect().toIndexedSeq.map(r => toScala(r).asInstanceOf[Row])
-    }
 
     private def swap(values: Seq[Any]): SparkPlan = {
       require(values.length == placeholders.length,
@@ -109,26 +102,17 @@ object PreparedPlan {
         .toArray
   }
 
-  /** A placeholder query-vector Column plus the identity handle used to find
-    * (and swap) its literal in the compiled plan. The VALUES never score a
-    * row — [[Prepared.run]] replaces them before any execution. */
-  def placeholder(dim: Int): (Column, AnyRef) = {
-    val ph = Literal.create(Array.fill(dim)(0.0f), VectorType)
-    (GraftBridge.column(ph), ph.value.asInstanceOf[AnyRef])
-  }
-
-  /** A placeholder long-array Column (probed cell ids) — same identity-swap
-    * contract as [[placeholder]]; the array LENGTH may differ per request
-    * (each swap ships a fresh literal), only the element type is fixed. */
-  def placeholderLongArray(): (Column, AnyRef) = {
-    val ph = Literal.create(Array(-1L), ArrayType(LongType, containsNull = false))
-    (GraftBridge.column(ph), ph.value.asInstanceOf[AnyRef])
-  }
-
-  /** A placeholder binary Column (a packed query CODE) — the identity-swap
-    * contract over a byte-array literal; length may differ per request. */
-  def placeholderBinary(): (Column, AnyRef) = {
-    val ph = Literal.create(Array[Byte](0), org.apache.spark.sql.types.BinaryType)
+  /** A placeholder Column of the same kind as the per-request value
+    * `like`, plus the identity handle used to find (and swap) its literal in
+    * the compiled plan: a float query vector (same length), a long array
+    * (probed cell ids) or a binary (a packed query code). The VALUES never
+    * reach a row — [[Prepared.run]] replaces them before any execution. */
+  def placeholder(like: Any): (Column, AnyRef) = {
+    val ph = like match {
+      case v: Array[Float] => Literal.create(new Array[Float](v.length), VectorType)
+      case _: Array[Long]  => Literal.create(Array(-1L), ArrayType(LongType, containsNull = false))
+      case _: Array[Byte]  => Literal.create(Array[Byte](0), BinaryType)
+    }
     (GraftBridge.column(ph), ph.value.asInstanceOf[AnyRef])
   }
 
@@ -137,7 +121,7 @@ object PreparedPlan {
     * cache may act on. A dedicated type so an unrelated Spark-internal
     * IllegalStateException (stopped session, codegen fault) can never be
     * mistaken for "shape not parameterizable" and permanently cached
-    * against the resident object (r9 advice). */
+    * against its anchor (r9 advice). */
   final class PlaceholderFoldedException(msg: String) extends IllegalStateException(msg)
 
   /** A fresh AQE-off PLANNING session per compile: the clone shares the
@@ -162,15 +146,9 @@ object PreparedPlan {
   /** Compile `df` once (all Catalyst phases), verifying EVERY placeholder
     * literal survived into the physical plan by reference. Throws
     * [[PlaceholderFoldedException]] if a rewrite folded/copied any away —
-    * callers fall back to the plan-per-call path rather than silently
+    * callers then run the plan over literal values rather than silently
     * serving a placeholder's zeros. */
-  def compile(df: DataFrame, placeholder: AnyRef): Prepared =
-    compileMulti(df, Seq(placeholder))
-
-  /** [[compile]] for shapes with several query vectors (multi-vector
-    * weighted search): one placeholder per included field, swapped
-    * positionally by [[Prepared.run]]. */
-  def compileMulti(df: DataFrame, placeholders: Seq[AnyRef]): Prepared = {
+  def compile(df: DataFrame, placeholders: Seq[AnyRef]): Prepared = {
     val spark = df.sparkSession
     // re-plan the logical plan under the AQE-off clone: the
     // InsertAdaptiveSparkPlan preparation rule reads the PLANNING session's

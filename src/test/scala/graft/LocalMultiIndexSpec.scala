@@ -80,7 +80,7 @@ class LocalMultiIndexSpec extends SparkSpec {
     val q0raw = Array(100f, 1f, 0f, 0f)
     val q1raw = Array(0f, 99f, 1f, 0f)
     // local rung takes PRE-PREPARED queries (the quantize round-trip the
-    // distributed path applies inside multiSearchParts)
+    // distributed path applies inside prepareMultiFields)
     val meta = cat.getMeta("lmv")
     val q0 = GraftCatalog.prepareQueryVector(q0raw, meta)
     val q1 = GraftCatalog.prepareQueryVector(q1raw, meta)

@@ -4,6 +4,10 @@ import java.nio.file.Files
 
 import scala.util.Random
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.graft.PreparedPlan
+import org.apache.spark.sql.types.StructType
+
 import graft.collection.{CollectionMeta, GraftCatalog, IndexField}
 
 /** Prepared (plan-once/execute-many) search: the serving-path cache that
@@ -41,8 +45,7 @@ class PreparedSearchSpec extends SparkSpec {
   }
 
   /** Canonical comparable form of a result set. */
-  private def canon(schema: org.apache.spark.sql.types.StructType,
-                    rs: Seq[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
+  private def canon(schema: StructType, rs: Seq[Row]): Seq[Seq[Any]] =
     rs.map(r => schema.fieldNames.toSeq.map(f => r.get(r.fieldIndex(f))))
 
   private def viaSearch(cat: GraftCatalog, name: String, q: Array[Float], topK: Int,
@@ -205,6 +208,67 @@ class PreparedSearchSpec extends SparkSpec {
     intercept[IllegalStateException] { cat.searchPrepared("prl", q, 5) }
   }
 
+  test("negative entry: a folded placeholder serves through the lit builder and " +
+    "compiles once per anchor; an unrelated compile failure surfaces uncached") {
+    val cat = newCatalog()
+    val (anchorA, anchorB) = (new Object, new Object)
+    // driven directly: a PlaceholderFoldedException caches the negative
+    // entry against its anchor — one compile per anchor, not per request
+    var compiles = 0
+    def folded(): PreparedPlan.Prepared = {
+      compiles += 1
+      throw new PreparedPlan.PlaceholderFoldedException("folded")
+    }
+    assert(cat.preparedFor("neg", "shape", anchorA)(folded()).isEmpty)
+    assert(cat.preparedFor("neg", "shape", anchorA)(folded()).isEmpty)
+    assert(compiles === 1, "the negative entry must be cached per anchor")
+    assert(cat.preparedFor("neg", "shape", anchorB)(folded()).isEmpty)
+    assert(compiles === 2, "a new anchor must compile again")
+
+    // an unrelated IllegalStateException (stopped session, codegen fault)
+    // surfaces and is NEVER cached as "unparameterizable"
+    var broken = 0
+    def failing(): PreparedPlan.Prepared = {
+      broken += 1
+      throw new IllegalStateException("codegen fault")
+    }
+    for (_ <- 1 to 2) {
+      val e = intercept[IllegalStateException](
+        cat.preparedFor("ise", "shape", anchorA)(failing()))
+      assert(!e.isInstanceOf[PreparedPlan.PlaceholderFoldedException])
+    }
+    assert(broken === 2, "a failed compile must not be cached")
+    // the key stays open: a compilable plan caches normally afterwards
+    var good = 0
+    def compilable(): PreparedPlan.Prepared = {
+      good += 1
+      val (c, h) = PreparedPlan.placeholder(Array(1f, 2f))
+      PreparedPlan.compile(spark.range(1).select(c.as("q")), Seq(h))
+    }
+    val p = cat.preparedFor("ise", "shape", anchorA)(compilable())
+    assert(p.isDefined)
+    assert(cat.preparedFor("ise", "shape", anchorA)(compilable()) === p)
+    assert(good === 1)
+    assert(p.get.run(Seq(Array(3f, 4f))).map(_.getSeq[Float](0)) === Seq(Seq(3f, 4f)))
+
+    // through a route's builder: size(<placeholder>) constant-folds, so the
+    // shape is unparameterizable and every request is served by the SAME
+    // builder over `lit` values — with the request's own values
+    var builds = 0
+    def plan(qs: Seq[Column]): DataFrame = {
+      builds += 1
+      spark.range(1).select(org.apache.spark.sql.functions.size(qs.head).as("n"))
+    }
+    def serve(anchor: AnyRef, q: Array[Float]): Seq[Int] =
+      cat.runPrepared("lit", "shape", anchor, Seq(q))(plan)._2.map(_.getInt(0))
+    assert(serve(anchorA, Array(1f, 2f, 3f)) === Seq(3))
+    assert(builds === 2, "first request: one failed compile plus one lit run")
+    assert(serve(anchorA, Array(1f, 2f)) === Seq(2))
+    assert(builds === 3, "a negative hit runs the lit builder only")
+    assert(serve(anchorB, Array(1f)) === Seq(1))
+    assert(builds === 5, "a new anchor compiles again")
+  }
+
   test("cache stays correct past the LRU bound (many distinct shapes)") {
     val cat = newCatalog()
     cat.createCollection(meta("plru"))
@@ -318,22 +382,29 @@ class PreparedSearchSpec extends SparkSpec {
     }
     build("a")
     val q = vecs(1, 99).head
-    // populate every per-version artifact: snapshot plan, centroids,
-    // codebook, binary thresholds
-    val ivfA = cat.searchIvf("va", q, 5, nprobe = 4).collect().map(_.getString(0)).toSeq
-    val pqA = cat.searchPq("va", q, 5).collect().map(_.getString(0)).toSeq
-    val binA = cat.searchBinary("va", q, 5).collect().map(_.getString(0)).toSeq
-    assert((ivfA ++ pqA ++ binA).forall(_.startsWith("a")))
+    // every route over the per-version artifacts, plan-per-call and
+    // prepared (the prepared plans anchor on the memoized snapshot)
+    def ids(df: DataFrame): Seq[String] = df.collect().map(_.getString(0)).toSeq
+    def idsOf(r: (StructType, Seq[Row])): Seq[String] = r._2.map(_.getString(0))
+    val routes: Seq[(String, () => Seq[String])] = Seq(
+      "searchIvf" -> (() => ids(cat.searchIvf("va", q, 5, nprobe = 4))),
+      "searchPq" -> (() => ids(cat.searchPq("va", q, 5))),
+      "searchBinary" -> (() => ids(cat.searchBinary("va", q, 5))),
+      "searchIvfPrepared" -> (() => idsOf(cat.searchIvfPrepared("va", q, 5, nprobe = 4))),
+      "searchPqPrepared" -> (() => idsOf(cat.searchPqPrepared("va", q, 5))),
+      "searchBinaryPrepared" -> (() => idsOf(cat.searchBinaryPrepared("va", q, 5))))
+    // populate every per-version artifact (snapshot plan, centroids,
+    // codebook, binary thresholds) and every prepared plan
+    val before = routes.map { case (n, f) => n -> f() }.toMap
+    assert(before.values.flatten.forall(_.startsWith("a")), before.toString)
 
     cat.dropCollection("va")
     build("b")
     assert(cat.getMeta("va").currentVersion === 1, "the recreated collection must reuse v1")
-    val ivfB = cat.searchIvf("va", q, 5, nprobe = 4).collect().map(_.getString(0)).toSeq
-    val pqB = cat.searchPq("va", q, 5).collect().map(_.getString(0)).toSeq
-    val binB = cat.searchBinary("va", q, 5).collect().map(_.getString(0)).toSeq
-    assert((ivfB ++ pqB ++ binB).nonEmpty)
-    assert((ivfB ++ pqB ++ binB).forall(_.startsWith("b")),
-      s"stale artifacts served: $ivfB / $pqB / $binB")
+    val after = routes.map { case (n, f) => n -> f() }.toMap
+    assert(after.values.flatten.nonEmpty)
+    assert(after.values.flatten.forall(_.startsWith("b")), s"stale artifacts served: $after")
+    val pqB = after("searchPq")
     // and the local serving loaders share the same cache safely
     val local = cat.localBinIndex("va").search(q, 5).map(_._1.toString)
     assert(local.nonEmpty && local.forall(_.startsWith("b")), local.toString)
