@@ -8,8 +8,11 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,8,3072] runs the WHOLE harness
-    // with real executor JVMs (the full-strength ClusterSmoke): needs
-    // SPARK_HOME + SPARK_SCALA_VERSION set, see ClusterSmoke's scaladoc
+    // with real executor JVMs (scripts/cluster_verify.sh). It needs
+    // SPARK_HOME at the Spark distribution — the standalone Worker builds
+    // each executor's JVM command from its launcher classpath — and
+    // SPARK_SCALA_VERSION=2.13, which the launcher reads instead of looking
+    // for a source build's launcher/target directory
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder()
       .master(master)

@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PreparedPlan
-import org.apache.spark.sql.types.{ArrayType, FloatType, ShortType, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, ShortType, StringType, StructField,
+  StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.FilterExpr
@@ -283,6 +284,9 @@ class GraftCatalog(spark: SparkSession, root: String,
   private def centroidDir(name: String, v: Int) = new Path(colDir(name), s"v${v}_centroids")
   private def pqDir(name: String, v: Int) = new Path(colDir(name), s"v${v}_pq")
   private def binDir(name: String, v: Int) = new Path(colDir(name), s"v${v}_bin")
+  /** Everything version `v` publishes: its data dir and its sidecars. */
+  private def versionDirs(name: String, v: Int) =
+    Seq(versionDir(name, v), centroidDir(name, v), pqDir(name, v), binDir(name, v))
   private def claimPath(name: String, v: Int) = new Path(colDir(name), s"v$v.claim")
 
   /** A per-ATTEMPT fencing token, also the claim file's content:
@@ -745,10 +749,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     // a failed staging write must not orphan the hidden staging dir
     try {
       val pk = meta.idColumn
-      def decoded: Column = meta.quantization match {
-        case "none" => col(VectorCol)
-        case q      => dequantize(col(VectorCol), q)
-      }
+      val decoded = decodedCol(meta, VectorCol)
       // Binary prefilter layout: trained midrange sign-bit thresholds (one
       // cheap min/max aggregation — no sampling needed, unlike Lloyd) and a
       // packed ceil(dim/8)-byte code column riding the snapshot, so
@@ -794,14 +795,8 @@ class GraftCatalog(spark: SparkSession, root: String,
           // within probed cells ([[searchMultiIvf]]). PQ/binary layouts are
           // single-vector-only (meta requires), so for multi-vector `withBin`
           // is identity and the pqConfig branch below is unreachable.
-          val routedVec: Column = meta.routingVector match {
-            case Some(r) => meta.quantization match {
-              case "none" => col(r.name)
-              case q      => dequantize(col(r.name), q)
-            }
-            case None => decoded
-          }
-          val withVec = df.withColumn(GraftCatalog.SearchVecCol, routedVec)
+          val withVec = df.withColumn(GraftCatalog.SearchVecCol,
+            decodedCol(meta, meta.routingVector.fold(VectorCol)(_.name)))
           // each Lloyd iteration is one corpus scan — the default 2 is the
           // quality/cost balance; 0 = raw pk-ordered seeds (cheapest
           // flush), more when cluster structure warrants it. With
@@ -941,10 +936,7 @@ class GraftCatalog(spark: SparkSession, root: String,
         .collect { case n if n.matches("v\\d+") => n.drop(1).toInt }
         .filter(_ < v)
       live.foreach { w =>
-        fs.delete(versionDir(name, w), true)
-        fs.delete(centroidDir(name, w), true)
-        fs.delete(pqDir(name, w), true)
-        fs.delete(binDir(name, w), true)
+        versionDirs(name, w).foreach(fs.delete(_, true))
         fs.delete(claimPath(name, w), false)
       }
     }
@@ -1094,59 +1086,37 @@ class GraftCatalog(spark: SparkSession, root: String,
   private def decorateSegment(name: String, meta: CollectionMeta,
                               log: DataFrame): DataFrame = {
     if (meta.ivfCells.isEmpty && meta.pqConfig.isEmpty && !meta.hasBinaryIndex) return log
-    val base = chainBase(name, meta.currentVersion)
-    def missing(kind: String) = new IllegalStateException(
-      s"collection $name: $kind sidecar missing at chain base v$base (the base was " +
-        "flushed empty or predates the layout) — run a full flush instead of a delta")
-    val decoded: Column = meta.quantization match {
-      case "none" => col(VectorCol)
-      case q      => dequantize(col(VectorCol), q)
-    }
+    val l = layoutOf(name, meta).getOrElse(throw new IllegalStateException(
+      s"collection $name: index sidecar missing at chain base " +
+        s"v${chainBase(name, meta.currentVersion)} (the base was flushed empty) — " +
+        "run a full flush instead of a delta"))
+    val decoded = decodedCol(meta, VectorCol)
     val vecPresent = col(VectorCol).isNotNull
     // cell assignment first: a residual PQ encode reads the assigned cell.
     // Multi-vector segments assign by the ROUTING field — the same column
     // flush trained the base's centroids on (delete markers carry NULL in
     // every data column, routing included, so the vec-present gate holds).
-    val (routedVec, routedPresent) = meta.routingVector match {
-      case Some(r) =>
-        val rv: Column = meta.quantization match {
-          case "none" => col(r.name)
-          case q      => dequantize(col(r.name), q)
-        }
-        (rv, col(r.name).isNotNull)
-      case None => (decoded, vecPresent)
-    }
-    val withCell = meta.ivfCells match {
-      case Some(_) =>
-        if (!fs.exists(centroidDir(name, base))) throw missing("centroid")
-        val centroids = readCentroids(name, base)
-        log.withColumn(GraftCatalog.CellCol,
-          when(routedPresent,
-            graft.functions.arg_min_distance(routedVec, centroids, meta.distance))
-            .cast("int"))
-      case None => log
-    }
-    val withPq = meta.pqConfig match {
-      case Some((m, _)) =>
-        if (!fs.exists(pqDir(name, base))) throw missing("PQ codebook")
-        val (cb, residFlag) = readPqCodebook(name, base, m)
-        val hasCells = meta.ivfCells.isDefined && fs.exists(centroidDir(name, base))
-        val residual = resolveResidualLayout(name, residFlag, hasCells)
+    val routed = meta.routingVector.fold(VectorCol)(_.name)
+    val withCell =
+      if (!l.hasCells) log
+      else log.withColumn(GraftCatalog.CellCol,
+        when(col(routed).isNotNull, graft.functions.arg_min_distance(
+          decodedCol(meta, routed), l.centroids, meta.distance)).cast("int"))
+    val withPq =
+      if (meta.pqConfig.isEmpty) withCell
+      else {
+        val (cb, residual) = l.pq
         val enc =
           if (residual)
             graft.functions.pq_encode(graft.ann.Pq.residual(
-              decoded, col(GraftCatalog.CellCol).cast("long"),
-              readCentroids(name, base)), cb.cents)
+              decoded, col(GraftCatalog.CellCol).cast("long"), l.centroids), cb.cents)
           else graft.functions.pq_encode(decoded, cb.cents)
         withCell.withColumn(GraftCatalog.PqCodeCol, when(vecPresent, enc))
-      case None => withCell
-    }
-    if (meta.hasBinaryIndex) {
-      if (!fs.exists(binDir(name, base))) throw missing("binary threshold")
-      val th = readBinThresholds(name, base)
+      }
+    if (meta.hasBinaryIndex)
       withPq.withColumn(GraftCatalog.BinCol,
-        when(vecPresent, graft.ann.Bin.encode(decoded, th)))
-    } else withPq
+        when(vecPresent, graft.ann.Bin.encode(decoded, l.thresholds)))
+    else withPq
   }
 
   /** Atomic claim of the version slot, shared by [[flush]] and
@@ -1206,8 +1176,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     // live ledger — durable data loss. No concurrent writer can recreate
     // these dirs while we hold the claim.
     try
-      for (d <- Seq(versionDir(name, v), centroidDir(name, v), pqDir(name, v), binDir(name, v)))
-        if (fs.exists(d)) fs.delete(d, true)
+      for (d <- versionDirs(name, v)) if (fs.exists(d)) fs.delete(d, true)
     catch { case e: Throwable =>
       fs.delete(claimPath(name, v), false)
       fs.delete(staging, true)
@@ -1221,36 +1190,33 @@ class GraftCatalog(spark: SparkSession, root: String,
     * flush/flushDelta. Production no-op. */
   protected def interleaveAfterClaim(name: String, v: Int): Unit = ()
 
-  /** Abort the publish after claiming: delete this attempt's `v<N>`
-    * artifacts and claim — but ONLY while the claim still holds our token.
-    * If the claim was reclaimed mid-flush (writer paused past staleClaimMs),
-    * those dirs may be ANOTHER writer's freshly published data; a fenced-out
-    * writer deletes nothing but its own staging. */
+  /** Exact row count of the parquet files under `dir` — recursing into
+    * `__cell=<k>` partition dirs, skipping hidden entries by Spark's rule —
+    * summed from the footers DRIVER-SIDE: zero Spark jobs, same discipline
+    * as [[validateParquetDir]]. Lets [[flushDelta]] detect an all-empty
+    * staged ledger from the write it just performed (r15), bounds a refresh
+    * window ([[windowRowBound]]) and tells an empty flush from a missing
+    * sidecar ([[layoutOf]]). */
+  private def parquetDirRowCount(dir: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    fs.listStatus(dir).iterator.map { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(".") || (n.startsWith("_") && !n.contains("="))) 0L
+      else if (st.isDirectory) parquetDirRowCount(st.getPath)
+      else {
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try in.getRecordCount finally in.close()
+      }
+    }.sum
+  }
+
   /** Driver-side readability validation of a just-written parquet segment
     * dir: read every data file's footer directly — the check
     * `spark.read.parquet(...).schema` performs, minus the Spark job it
     * dispatches to do it. Only for O(changes)-sized delta segments (a
     * handful of files written moments ago by this same call); a corrupt or
     * truncated file fails here exactly as inference would. */
-  /** Exact row count of the parquet files under `dir`, summed from the
-    * footers DRIVER-SIDE — zero Spark jobs, same discipline as
-    * [[validateParquetDir]] (r15: lets [[flushDelta]] detect an all-empty
-    * staged ledger from the write it just performed, replacing the
-    * streaming path's per-batch `isEmpty` probe job). */
-  private def parquetDirRowCount(dir: Path): Long = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    fs.listStatus(dir).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map { st =>
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try in.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally in.close()
-    }.sum
-  }
-
   private[graft] def validateParquetDir(dir: Path): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val files = fs.listStatus(dir).filter { st =>
@@ -1265,12 +1231,14 @@ class GraftCatalog(spark: SparkSession, root: String,
     }
   }
 
+  /** Abort the publish after claiming: delete this attempt's `v<N>`
+    * artifacts and claim — but ONLY while the claim still holds our token.
+    * If the claim was reclaimed mid-flush (writer paused past staleClaimMs),
+    * those dirs may be ANOTHER writer's freshly published data; a fenced-out
+    * writer deletes nothing but its own staging. */
   private def abortPublish(name: String, v: Int, token: String, staging: Path): Unit = {
     if (ownsClaim(name, v, token)) {
-      fs.delete(versionDir(name, v), true)
-      fs.delete(centroidDir(name, v), true)
-      fs.delete(pqDir(name, v), true)
-      fs.delete(binDir(name, v), true)
+      versionDirs(name, v).foreach(fs.delete(_, true))
       fs.delete(claimPath(name, v), false)
     }
     fs.delete(staging, true)
@@ -1383,10 +1351,9 @@ class GraftCatalog(spark: SparkSession, root: String,
     * anti-join into the base child, so the base scan keeps its
     * partition-directory pruning (pinned by CatalogDeltaIndexedSpec) and
     * the segments are O(changes) side reads. Cached per head version like
-    * every per-version artifact. */
-  private def indexedState(name: String, meta: CollectionMeta): DataFrame = {
+    * every per-version artifact; read through [[IndexedLayout.state]]. */
+  private def indexedState(name: String, meta: CollectionMeta, base: Int): DataFrame = {
     val head = meta.currentVersion
-    val base = chainBase(name, head)
     if (base == head) versionSnapshot(name, head)
     else versionArtifact(name, head, "istate") {
       val df = versionSnapshot(name, base)
@@ -1413,10 +1380,81 @@ class GraftCatalog(spark: SparkSession, root: String,
     }
   }
 
-  /** The version whose index sidecars govern the current head: sidecars
-    * only ride full snapshots, so a delta head reads the chain base's. */
-  private def sidecarVersion(name: String, meta: CollectionMeta): Int =
-    chainBase(name, meta.currentVersion)
+  /** The read side's ONE view of an indexed head — what the IVF, PQ,
+    * binary and multi-IVF routes, their audits and batch routes, the
+    * driver-local loaders and the refresh read: the chain `base` whose
+    * sidecars govern the head (sidecars only ride full snapshots, so a
+    * delta head reads its base's), the head's memoized [[indexedState]]
+    * (the prepared anchor) and the sidecars the layout declares. Every
+    * member is lazy and each sidecar is read once per version
+    * ([[versionArtifact]] — each read is a collect() job), so a route pays
+    * only for what it uses. Built only by [[layoutOf]], which has already
+    * checked that every declared sidecar exists. */
+  private final class IndexedLayout(val name: String, val meta: CollectionMeta, val base: Int) {
+    lazy val state: DataFrame = indexedState(name, meta, base)
+    def hasCells: Boolean = meta.ivfCells.isDefined
+    lazy val centroids: Seq[(Long, Array[Float])] =
+      versionArtifact(name, base, "centroids")(readDirNoInfer(centroidDir(name, base))
+        .collect().map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Float]]("cvec").toArray)).toSeq)
+    lazy val thresholds: Array[Double] = versionArtifact(name, base, "binth")(
+      readDirNoInfer(binDir(name, base)).orderBy("d").collect().map(_.getAs[Double]("t")))
+    /** The codebook and whether its codes quantize RESIDUALS (vec −
+      * cellCentroid, IVF-PQ) or decoded vectors — the sidecar's recorded
+      * flag, resolved by ONE rule for every PQ reader and writer: flagless
+      * WITHOUT an IVF layout is unambiguously raw (the only layout that
+      * cohort could hold); flagless WITH one is genuinely ambiguous — raw
+      * and residual pre-flag cohorts both exist and a wrong guess silently
+      * mis-scores the other — so it demands a re-flush; a residual flag
+      * without cells is a layout mismatch. */
+    lazy val pq: (graft.ann.PqCodebook, Boolean) = {
+      val (cb, flag) = versionArtifact(name, base, "pqcb") {
+        val sidecar = readDirNoInfer(pqDir(name, base))
+        val rows = sidecar.collect()
+        val byJ = rows.groupBy(_.getAs[Int]("j"))
+        (graft.ann.PqCodebook((0 until meta.pqSubspaces.get).map { j =>
+          byJ(j).sortBy(_.getAs[Int]("c")).map(_.getAs[Seq[Float]]("cvec").toArray)
+        }.toArray),
+          if (sidecar.columns.contains("residual") && rows.nonEmpty)
+            Some(rows(0).getAs[Boolean]("residual"))
+          else None)
+      }
+      val residual = flag.getOrElse {
+        require(!hasCells,
+          s"collection $name: pre-flag PQ sidecar over an IVF layout — whether " +
+            "the codes are raw or residual is unrecorded and cannot be " +
+            "inferred; re-flush the collection to write a flagged sidecar")
+        false
+      }
+      require(!residual || hasCells,
+        s"collection $name: sidecar records a residual layout but the collection has no IVF layout")
+      (cb, residual)
+    }
+  }
+
+  /** The indexed head's [[IndexedLayout]], or None when its chain base was
+    * flushed EMPTY (flush writes no sidecar for an empty corpus, and an
+    * empty indexed base takes no delta segments). A declared sidecar
+    * missing on a base that HOLDS rows — a snapshot predating the layout,
+    * a lost rename, a hand-deleted dir — refuses loudly: read as "flushed
+    * empty" it would answer a populated collection with no rows. The row
+    * count is summed from the base's parquet footers on the driver (no
+    * Spark job), and only on the missing branch. Each caller keeps its own
+    * empty answer (or refusal) for None. */
+  private def layoutOf(name: String, meta: CollectionMeta): Option[IndexedLayout] = {
+    val base = chainBase(name, meta.currentVersion)
+    val missing = Seq(
+      meta.ivfCells.map(_ => "centroid" -> centroidDir(name, base)),
+      meta.pqConfig.map(_ => "PQ codebook" -> pqDir(name, base)),
+      Option.when(meta.hasBinaryIndex)("binary threshold" -> binDir(name, base))
+    ).flatten.collect { case (kind, dir) if !fs.exists(dir) => kind }
+    if (missing.isEmpty) return Some(new IndexedLayout(name, meta, base))
+    val rows = parquetDirRowCount(versionDir(name, base))
+    if (rows == 0L) None
+    else throw new IllegalStateException(
+      s"collection $name: ${missing.mkString(" and ")} sidecar missing for version $base, " +
+        s"whose snapshot holds $rows rows — the snapshot predates the layout or lost " +
+        "its sidecar; re-flush to rebuild it")
+  }
 
   /** Collection count/byte-size info (A2 — edge/edge.go:283-284, snapshot
     * sizes core/vectorindex/hnsw.go:476-490): rows of the resident state (or
@@ -1508,10 +1546,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     (1 to math.min(meta.currentVersion - keepLast, chainFloor))
       .filter(v => fs.exists(versionDir(name, v)))
       .map { v =>
-        fs.delete(versionDir(name, v), true)
-        fs.delete(centroidDir(name, v), true)
-        fs.delete(pqDir(name, v), true)
-        fs.delete(binDir(name, v), true)
+        versionDirs(name, v).foreach(fs.delete(_, true))
         fs.delete(claimPath(name, v), false)
         v
       }
@@ -1576,8 +1611,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     destFs.mkdirs(destDir)
     val conf = spark.sparkContext.hadoopConfiguration
     (1 to meta.currentVersion).foreach { v =>
-      Seq(versionDir(name, v), centroidDir(name, v), pqDir(name, v), binDir(name, v))
-        .filter(fs.exists)
+      versionDirs(name, v).filter(fs.exists)
         .foreach { src =>
           org.apache.hadoop.fs.FileUtil.copy(
             fs, src, destFs, new Path(destDir, src.getName), false, conf)
@@ -1767,6 +1801,24 @@ class GraftCatalog(spark: SparkSession, root: String,
       case quant  => graft.functions.distance_quant(col(vec), q, quant, meta.distance)
     }
 
+  /** Stored vector column `c` as floats: itself when unquantized. */
+  private def decodedCol(meta: CollectionMeta, c: String): Column = meta.quantization match {
+    case "none" => col(c)
+    case q      => dequantize(col(c), q)
+  }
+
+  /** `df` with the float vector column the batch kernels read, and its
+    * name: the stored column unquantized, else a decoded copy. */
+  private def withDecoded(df: DataFrame, meta: CollectionMeta): (DataFrame, String) =
+    if (meta.quantization == "none") (df, VectorCol)
+    else (df.withColumn(GraftCatalog.SearchVecCol, decodedCol(meta, VectorCol)),
+      GraftCatalog.SearchVecCol)
+
+  /** A route's empty answer: no rows, columns `cols` typed by `T`. */
+  private def noRows[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      cols: String*): DataFrame =
+    spark.createDataFrame(Seq.empty[T]).toDF(cols: _*)
+
   /** The [[search]] plan over query Column `q`. Schema-less collections
     * evaluate the SAME filter AST through the string-coerced map (CoreMeta
     * parse-compare semantics, [[applyFilter]]) — applied before scoring,
@@ -1906,9 +1958,7 @@ class GraftCatalog(spark: SparkSession, root: String,
                               probed: Array[Long])
 
   /** The IVF routes' shared resolve: guards, query prep and the centroid
-    * probe — or the empty answer of a collection flushed empty (no
-    * centroid sidecar; an empty base also can't have delta segments —
-    * flushDelta refuses). */
+    * probe — or the empty answer of a collection flushed empty. */
   private def resolveIvf(name: String, queryVector: Array[Float],
                          nprobe: Int): Either[DataFrame, IvfRoute] = {
     val meta = getMeta(name)
@@ -1917,14 +1967,12 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
     require(queryVector.length == meta.dim,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) {
-      import spark.implicits._
-      return Left(Seq.empty[(String, Long, Double)].toDF(meta.idColumn, "cell", "dist"))
-    }
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val probed = graft.ann.Ann.probeCells(readCentroids(name, sv), qv, nprobe, meta.distance)
-    Right(IvfRoute(meta, indexedState(name, meta), qv, probed.toArray))
+    layoutOf(name, meta).toRight(noRows[(String, Long, Double)](meta.idColumn, "cell", "dist"))
+      .map { l =>
+        val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
+        val probed = graft.ann.Ann.probeCells(l.centroids, qv, nprobe, meta.distance)
+        IvfRoute(meta, l.state, qv, probed.toArray)
+      }
   }
 
   /** The IVF plan over query Column `q` and probed-cell array Column
@@ -1966,7 +2014,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(queries.nonEmpty, "searchBatch requires at least one query")
     // duplicate qids would silently merge into ONE window partition in
     // knnJoin (row_number bounds the combined candidate set) — reject at
-    // the primitive, not just the HTTP layer
+    // the primitive, which the HTTP layer serves through
     require(queries.map(_._1).distinct.size == queries.size,
       "searchBatch query ids must be unique")
     require(meta.idColumn != "qid",
@@ -1976,213 +2024,186 @@ class GraftCatalog(spark: SparkSession, root: String,
         s"query $qid dimension mismatch: expected ${meta.dim}, got ${v.length}")
     }
     import spark.implicits._
-    if (meta.ivfCells.isEmpty) {
-      // flat fallback over the loaded collection (same residency contract
-      // as single-query search — no flush required)
-      val df0 = loadedOrThrow(name)
-      val df = applyFilter(df0, meta, filter)
-      val qdfFlat = queries.map { case (qid, v) =>
-        (qid, GraftCatalog.prepareQueryVector(v, meta).toSeq)
-      }.toDF("__batch_qid", "__batch_qvec")
-      val decodedFlat = meta.quantization match {
-        case "none" => df
-        case q      => df.withColumn(GraftCatalog.SearchVecCol, dequantize(col(VectorCol), q))
-      }
-      val vc = if (meta.quantization == "none") VectorCol else GraftCatalog.SearchVecCol
-      return graft.ann.Ann.bruteForceTopK(decodedFlat, qdfFlat, topK,
-        meta.idColumn, vc, "__batch_qid", "__batch_qvec", meta.distance)
-        .select(col("__batch_qid").as("qid"), col(meta.idColumn), col("dist"), col("rn"))
-    }
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) {
-      // flushed empty → no cells, no neighbors (same contract as knnJoin:
-      // a query with no candidates produces no rows)
-      return Seq.empty[(String, String, Double, Int)]
-        .toDF("qid", meta.idColumn, "dist", "rn")
-    }
-    val centroids = readCentroids(name, sv)
     // internal query-column names that cannot collide with a declared pk
     val qdf = queries.map { case (qid, v) =>
       (qid, GraftCatalog.prepareQueryVector(v, meta).toSeq)
-    }.toDF("__batch_qid", "__batch_qvec")
-    val snap0 = indexedState(name, meta)
-      .withColumnRenamed(GraftCatalog.CellCol, "cell")
-    val snap = applyFilter(snap0, meta, filter)
-    val decoded = meta.quantization match {
-      case "none" => snap
-      case q      => snap.withColumn(GraftCatalog.SearchVecCol, dequantize(col(VectorCol), q))
+    }.toDF("__audit_qid", "__audit_qvec")
+    if (meta.ivfCells.isEmpty) {
+      // flat fallback over the loaded collection (same residency contract
+      // as single-query search — no flush required)
+      val (corpus, vc) = withDecoded(applyFilter(loadedOrThrow(name), meta, filter), meta)
+      return graft.ann.Ann.bruteForceTopK(corpus, qdf, topK,
+        meta.idColumn, vc, "__audit_qid", "__audit_qvec", meta.distance)
+        .select(col("__audit_qid").as("qid"), col(meta.idColumn), col("dist"), col("rn"))
     }
-    val vecCol = if (meta.quantization == "none") VectorCol else GraftCatalog.SearchVecCol
-    graft.ann.Ann.knnJoin(decoded, qdf, topK,
-      meta.idColumn, vecCol, "__batch_qid", "__batch_qvec", centroids, nprobe, meta.distance)
-      .select(col("__batch_qid").as("qid"), col(meta.idColumn), col("dist"), col("rn"))
+    require(meta.currentVersion > 0, s"collection $name has never been flushed")
+    // flushed empty → no cells, no neighbors (same contract as knnJoin: a
+    // query with no candidates produces no rows)
+    layoutOf(name, meta) match {
+      case None    => noRows[(String, String, Double, Int)]("qid", meta.idColumn, "dist", "rn")
+      case Some(l) => ivfKnn(l, ivfCorpus(l, filter), qdf, topK, nprobe)
+    }
   }
 
-  /** Recall audit of the IVF probe as a CATALOG call (the `ann_recall`
-    * discipline made an API — the reference's e2e recall eyeballing,
-    * e2e/edge/2025-03-07, made programmatic for index rollouts): per
-    * sampled query row, |exact top-k ∩ nprobe-probed top-k| / k. BOTH arms
-    * run the same audited [[graft.ann.Ann.knnJoin]] path — the exact arm
-    * is nprobe = |cells|, the spec-pinned degeneration to brute force — so
-    * the audit cannot drift from the serving plan it certifies. The query
-    * set is the content-deterministic id-hash sample
-    * `xxhash64(pk) % sampleMod == 0` of the collection itself: at 100 TB a
-    * recall audit SAMPLES (sampleMod sizes the cost); every stage stays
-    * the bounded cell-join + partial-WindowGroupLimit shape, never
-    * corpus × corpus. Works over delta chains like every snapshot rung
-    * ([[indexedState]]). Output: (qid, hits, recall) per sampled query. */
+  /** The IVF batch corpus: the indexed state with its `cell` column,
+    * pre-filtered ([[searchIvf]]'s S3 semantics), decoded for the kernel —
+    * (frame, vector column). */
+  private def ivfCorpus(l: IndexedLayout, filter: Option[FilterExpr]): (DataFrame, String) =
+    withDecoded(applyFilter(l.state.withColumnRenamed(GraftCatalog.CellCol, "cell"),
+      l.meta, filter), l.meta)
+
+  /** The IVF batch plan over query frame `qdf` (`__audit_qid`,
+    * `__audit_qvec`): the k nearest rows of `corpus` for EVERY query in one
+    * [[graft.ann.Ann.knnJoin]] — row-local probe-cell selection, ONE cell
+    * equi-join (partition-pruned on the cell-partitioned snapshot, never
+    * query × corpus), the per-qid partial WindowGroupLimit below the
+    * exchange. [[searchBatch]] and both arms of [[auditRecall]] are this
+    * plan. Output: (qid, pk, dist, rn). */
+  private def ivfKnn(l: IndexedLayout, corpus: (DataFrame, String), qdf: DataFrame, k: Int,
+                     nprobe: Int): DataFrame =
+    graft.ann.Ann.knnJoin(corpus._1, qdf, k, l.meta.idColumn, corpus._2,
+      "__audit_qid", "__audit_qvec", l.centroids, nprobe, l.meta.distance)
+      .select(col("__audit_qid").as("qid"), col(l.meta.idColumn), col("dist"), col("rn"))
+
+  /** The recall audits' ONE skeleton — per sampled query row, |exact top-k
+    * ∩ probed top-k| / k (the `ann_recall` discipline made an API: the
+    * reference's e2e recall eyeballing, e2e/edge/2025-03-07, made
+    * programmatic for index rollouts). It owns the guards every audit
+    * shares, the query set — the content-deterministic id-hash sample
+    * `xxhash64(pk) % sampleMod == 0` of the collection itself (at 100 TB a
+    * recall audit SAMPLES; sampleMod sizes the cost) —, the empty answer
+    * of an empty flush and the recall join. A rung supplies only its two
+    * arms, (exact, probed), each over (qid, pk): `arms` gets the layout and
+    * `sample(frame, query columns)`, which returns `__audit_qid` (the
+    * sampled pk as a string) plus those columns. Every stage is
+    * sample-bounded, never corpus × corpus. Recall divides by the EXACT
+    * arm's actual row count, not the constant k: a collection (or probed
+    * state) with fewer than k rows would otherwise report a perfect probe
+    * as recall < 1. Output: (qid, hits, recall) per sampled query. */
+  private def auditOf(name: String, meta: CollectionMeta, method: String, sampleMod: Long,
+      k: Int)(arms: (IndexedLayout, (DataFrame, Seq[Column]) => DataFrame) =>
+        (DataFrame, DataFrame)): DataFrame = {
+    require(meta.currentVersion > 0, s"collection $name has never been flushed")
+    require(sampleMod >= 1, "sampleMod must be >= 1")
+    require(k >= 1, "k must be >= 1")
+    require(meta.idColumn != "qid",
+      s"$method reserves the output column name 'qid'; the collection pk shadows it")
+    val pk = meta.idColumn
+    def sample(df: DataFrame, q: Seq[Column]): DataFrame =
+      df.where(pmod(xxhash64(col(pk)), lit(sampleMod)) === 0)
+        .select(col(pk).cast("string").as("__audit_qid") +: q: _*)
+    layoutOf(name, meta).fold(noRows[(String, Long, Double)]("qid", "hits", "recall")) { l =>
+      val (exact, probed) = arms(l, sample)
+      // the member method `count(name)` shadows functions.count here
+      val hitCount = org.apache.spark.sql.functions.count(col("__hit"))
+      val exactCount = org.apache.spark.sql.functions.count(lit(1))
+      exact.select(col("qid"), col(pk))
+        .join(probed.select(col("qid"), col(pk), lit(1).as("__hit")), Seq("qid", pk), "left")
+        .groupBy("qid")
+        .agg(hitCount.as("hits"), (hitCount / exactCount).as("recall"))
+        .orderBy("qid")
+    }
+  }
+
+  /** Recall audit of the IVF probe ([[auditOf]]): BOTH arms run the
+    * [[searchBatch]] plan ([[ivfKnn]]) — the exact arm is nprobe = |cells|,
+    * the spec-pinned degeneration to brute force — so the audit cannot
+    * drift from the serving plan it certifies. Works over delta chains
+    * like every snapshot rung ([[indexedState]]). */
   def auditRecall(name: String, sampleMod: Long, nprobe: Int, k: Int = 10,
                   filter: Option[FilterExpr] = None): DataFrame = {
     val meta = getMeta(name)
     require(!meta.isMultiVector, s"collection $name is multi-vector; use auditRecallMulti")
     require(meta.ivfCells.isDefined,
       s"collection $name has no IVF layout — auditRecall certifies the IVF probe")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(sampleMod >= 1, "sampleMod must be >= 1")
     require(nprobe >= 1, "nprobe must be >= 1")
-    require(k >= 1, "k must be >= 1")
-    require(meta.idColumn != "qid",
-      "auditRecall reserves the output column name 'qid'; the collection pk shadows it")
-    import spark.implicits._
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv)))
-      return Seq.empty[(String, Long, Double)].toDF("qid", "hits", "recall")
-    val centroids = readCentroids(name, sv)
-    // `filter` audits the FILTERED probe ([[searchIvf]]'s pre-filter):
-    // both arms see the same filtered corpus, so the number measures what
-    // a selective predicate does to IVF recall (survivors of a selective
-    // filter scatter across cells — exactly the rollout question). Queries
-    // are sampled from the filtered set too: they are the queries that
-    // serving path answers.
-    val snap0 = indexedState(name, meta)
-      .withColumnRenamed(GraftCatalog.CellCol, "cell")
-    val snap = applyFilter(snap0, meta, filter)
-    val decoded = meta.quantization match {
-      case "none" => snap
-      case q      => snap.withColumn(GraftCatalog.SearchVecCol, dequantize(col(VectorCol), q))
+    auditOf(name, meta, "auditRecall", sampleMod, k) { (l, sample) =>
+      // `filter` audits the FILTERED probe ([[searchIvf]]'s pre-filter):
+      // both arms see the same filtered corpus, so the number measures what
+      // a selective predicate does to IVF recall (survivors of a selective
+      // filter scatter across cells — exactly the rollout question). Queries
+      // are sampled from the filtered set too: they are the queries that
+      // serving path answers.
+      val corpus @ (frame, vc) = ivfCorpus(l, filter)
+      val qdf = sample(frame, Seq(col(vc).as("__audit_qvec")))
+      (ivfKnn(l, corpus, qdf, k, l.centroids.size), ivfKnn(l, corpus, qdf, k, nprobe))
     }
-    val vecCol = if (meta.quantization == "none") VectorCol else GraftCatalog.SearchVecCol
-    val pk = meta.idColumn
-    val qdf = decoded
-      .where(pmod(xxhash64(col(pk)), lit(sampleMod)) === 0)
-      .select(col(pk).cast("string").as("__audit_qid"), col(vecCol).as("__audit_qvec"))
-    def arm(np: Int) = graft.ann.Ann.knnJoin(decoded, qdf, k, pk, vecCol,
-      "__audit_qid", "__audit_qvec", centroids, np, meta.distance)
-      .select(col("__audit_qid").as("qid"), col(pk))
-    val hitCount = org.apache.spark.sql.functions.count(col("__hit")) // the
-    // member method `count(name)` shadows functions.count here
-    // recall divides by the EXACT arm's actual row count, not the constant
-    // k: a collection (or probed state) with fewer than k rows would
-    // otherwise report a perfect probe as recall < 1
-    val exactCount = org.apache.spark.sql.functions.count(lit(1))
-    arm(centroids.size)
-      .join(arm(nprobe).withColumn("__hit", lit(1)), Seq("qid", pk), "left")
-      .groupBy("qid")
-      .agg(hitCount.as("hits"), (hitCount / exactCount).as("recall"))
-      .orderBy("qid")
   }
 
-  /** Shared two-pass audit core for the approximate rungs: cap `scored`
-    * (__audit_qid, pk, __s — pass-1 ordering value) to `candCount` rows per
-    * query (partial WindowGroupLimit below the exchange, the knnJoin
-    * discipline), re-score candidates EXACTLY on the stored vectors, keep
-    * top-k, and compare against the bounded brute-force arm
+  /** The approximate rungs' two audit arms: cap `scored` (__audit_qid, pk,
+    * __s — the pass-1 ordering value) to `candCount` rows per query
+    * (partial WindowGroupLimit below the exchange, the knnJoin
+    * discipline), re-score the candidates EXACTLY on the stored vectors and
+    * keep top-k; the exact arm is the bounded brute force
     * ([[graft.ann.Ann.bruteForceTopK]]: queries broadcast over ONE corpus
-    * scan). Every stage is sample-bounded; nothing is corpus × corpus. */
-  private def auditTwoPassRecall(decoded: DataFrame, qdf: DataFrame, scored: DataFrame,
-      pk: String, vecCol: String, metric: String, candCount: Int, k: Int): DataFrame = {
+    * scan). `corpus` is the (filtered) decoded state and its vector
+    * column; `qdf` carries `__audit_qvec`. */
+  private def twoPassArms(meta: CollectionMeta, corpus: (DataFrame, String), qdf: DataFrame,
+      scored: DataFrame, candCount: Int, k: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
+    val (decoded, vecCol) = corpus
+    val pk = meta.idColumn
     val wh = Window.partitionBy(col("__audit_qid")).orderBy(col("__s").asc, col(pk).asc)
     val cand = scored.withColumn("__rn", row_number().over(wh))
       .where(col("__rn") <= candCount).select(col("__audit_qid"), col(pk))
     val rer = cand.join(decoded.select(col(pk), col(vecCol)), Seq(pk))
       .join(broadcast(qdf.select(col("__audit_qid"), col("__audit_qvec"))), Seq("__audit_qid"))
-      .select(col("__audit_qid"), col(pk),
-        round(graft.functions.distance(col(vecCol), col("__audit_qvec"), metric), 6).as("__d"))
+      .select(col("__audit_qid"), col(pk), round(graft.functions.distance(
+        col(vecCol), col("__audit_qvec"), meta.distance), 6).as("__d"))
     val wr = Window.partitionBy(col("__audit_qid")).orderBy(col("__d").asc, col(pk).asc)
     val approx = rer.withColumn("__rn", row_number().over(wr)).where(col("__rn") <= k)
-      .select(col("__audit_qid").as("qid"), col(pk), lit(1).as("__hit"))
+      .select(col("__audit_qid").as("qid"), col(pk))
     val exact = graft.ann.Ann.bruteForceTopK(decoded,
         qdf.select(col("__audit_qid"), col("__audit_qvec")), k, pk, vecCol,
-        "__audit_qid", "__audit_qvec", metric)
+        "__audit_qid", "__audit_qvec", meta.distance)
       .select(col("__audit_qid").as("qid"), col(pk))
-    val hitCount = org.apache.spark.sql.functions.count(col("__hit"))
-    val exactCount = org.apache.spark.sql.functions.count(lit(1))
-    exact.join(approx, Seq("qid", pk), "left")
-      .groupBy("qid")
-      .agg(hitCount.as("hits"), (hitCount / exactCount).as("recall"))
-      .orderBy("qid")
+    (exact, approx)
   }
 
   /** Recall audit of the BINARY rung ([[searchBinary]]'s two-pass shape,
-    * multi-query): per sampled query, |exact top-k ∩ (Hamming top k·overFetch
-    * → exact rerank top-k)| / k. The overFetch dial is exactly what this
-    * audit certifies before a rollout trusts the sign-sketch trade. The
-    * query side is the id-hash 1/sampleMod sample of the (optionally
-    * filtered) collection itself; its pass-1 codes are the rows' own stored
-    * codes — what [[searchBinary]] would compute for those vectors. Pass 1
-    * is one broadcast cross join over the codes-only projection with a
-    * per-query bounded window — at 100 TB the audit SAMPLES, and every
-    * stage is bounded by sample × candCount. */
+    * multi-query; [[auditOf]]): per sampled query, |exact top-k ∩ (Hamming
+    * top k·overFetch → exact rerank top-k)| / k. The overFetch dial is
+    * exactly what this audit certifies before a rollout trusts the
+    * sign-sketch trade. The queries' pass-1 codes are the sampled rows' own
+    * stored codes — what [[searchBinary]] would compute for those vectors.
+    * Pass 1 is one broadcast cross join over the codes-only projection with
+    * a per-query bounded window; every stage is bounded by sample ×
+    * candCount. */
   def auditRecallBin(name: String, sampleMod: Long, k: Int = 10, overFetch: Int = 3,
                      filter: Option[FilterExpr] = None): DataFrame = {
     val meta = getMeta(name)
     require(meta.hasBinaryIndex, s"collection $name has no binary index layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(sampleMod >= 1, "sampleMod must be >= 1")
-    require(k >= 1, "k must be >= 1")
     require(overFetch >= 1, "overFetch must be >= 1")
-    require(meta.idColumn != "qid",
-      "auditRecallBin reserves the output column name 'qid'; the collection pk shadows it")
-    import spark.implicits._
-    val sv = sidecarVersion(name, meta)
-    val full0 = indexedState(name, meta)
-    if (!fs.exists(binDir(name, sv))) {
-      require(full0.isEmpty,
-        s"collection $name: binary sidecar missing for version $sv — " +
-          "the snapshot predates the binary layout; re-flush to build it")
-      return Seq.empty[(String, Long, Double)].toDF("qid", "hits", "recall")
+    auditOf(name, meta, "auditRecallBin", sampleMod, k) { (l, sample) =>
+      val corpus @ (frame, vc) = withDecoded(applyFilter(l.state, meta, filter), meta)
+      val qdf = sample(frame, Seq(col(vc).as("__audit_qvec"),
+        col(GraftCatalog.BinCol).as("__audit_qcode")))
+      val scored = frame.select(col(meta.idColumn), col(GraftCatalog.BinCol))
+        .crossJoin(broadcast(qdf.select(col("__audit_qid"), col("__audit_qcode"))))
+        .select(col("__audit_qid"), col(meta.idColumn),
+          graft.ann.Bin.hammingCols(col(GraftCatalog.BinCol), col("__audit_qcode")).as("__s"))
+      twoPassArms(meta, corpus, qdf, scored, k * overFetch, k)
     }
-    val full = applyFilter(full0, meta, filter)
-    val decoded = meta.quantization match {
-      case "none" => full
-      case q      => full.withColumn(GraftCatalog.SearchVecCol, dequantize(col(VectorCol), q))
-    }
-    val vecCol = if (meta.quantization == "none") VectorCol else GraftCatalog.SearchVecCol
-    val pk = meta.idColumn
-    val qdf = decoded.where(pmod(xxhash64(col(pk)), lit(sampleMod)) === 0)
-      .select(col(pk).cast("string").as("__audit_qid"),
-        col(vecCol).as("__audit_qvec"),
-        col(GraftCatalog.BinCol).as("__audit_qcode"))
-    val scored = decoded.select(col(pk), col(GraftCatalog.BinCol))
-      .crossJoin(broadcast(qdf.select(col("__audit_qid"), col("__audit_qcode"))))
-      .select(col("__audit_qid"), col(pk),
-        graft.ann.Bin.hammingCols(col(GraftCatalog.BinCol), col("__audit_qcode")).as("__s"))
-    auditTwoPassRecall(decoded, qdf, scored, pk, vecCol, meta.distance, k * overFetch, k)
   }
 
   /** Recall audit of the PQ rung ([[searchPq]]'s reranked shape,
-    * multi-query): per sampled query, |exact top-k ∩ (ADC top k·overFetch →
-    * exact rerank top-k)| / k. Pass-1 ordering is euclidean(query,
-    * reconstruction) — arithmetically THE ADC distance (√Σ_j ‖q_j − c_j‖²),
-    * computed per (row, query) pair via one [[graft.functions.pq_decode]]
-    * column so the multi-query form needs no per-query LUT plan constants;
-    * residual (IVF-PQ) layouts add the row's cell centroid back
-    * ([[graft.ann.Pq.addCentroid]]) before the distance. Sidecar-flag
-    * handling (raw vs residual, flagless cohorts) is [[searchPq]]'s,
-    * verbatim. `nprobe` applies the same probed-cell restriction as
-    * [[searchPq]]'s nprobe (per query, against its own nearest cells), so
-    * the audit certifies the probed serving shape rather than the
-    * unprobed full ADC scan. */
+    * multi-query; [[auditOf]]): per sampled query, |exact top-k ∩ (ADC top
+    * k·overFetch → exact rerank top-k)| / k. Pass-1 ordering is
+    * euclidean(query, reconstruction) — arithmetically THE ADC distance
+    * (√Σ_j ‖q_j − c_j‖²), computed per (row, query) pair via one
+    * [[graft.functions.pq_decode]] column so the multi-query form needs no
+    * per-query LUT plan constants; residual (IVF-PQ) layouts add the row's
+    * cell centroid back ([[graft.ann.Pq.addCentroid]]) before the distance.
+    * Sidecar-flag handling (raw vs residual, flagless cohorts) is
+    * [[searchPq]]'s ([[IndexedLayout.pq]]). `nprobe` applies the same
+    * probed-cell restriction as [[searchPq]]'s nprobe (per query, against
+    * its own nearest cells), so the audit certifies the probed serving
+    * shape rather than the unprobed full ADC scan. */
   def auditRecallPq(name: String, sampleMod: Long, k: Int = 10, overFetch: Int = 4,
                     filter: Option[FilterExpr] = None,
                     nprobe: Option[Int] = None): DataFrame = {
     val meta = getMeta(name)
     require(meta.pqConfig.isDefined, s"collection $name has no PQ layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(sampleMod >= 1, "sampleMod must be >= 1")
-    require(k >= 1, "k must be >= 1")
     require(overFetch >= 1, "overFetch must be >= 1")
     nprobe.foreach { np =>
       require(np >= 1, "nprobe must be >= 1")
@@ -2190,66 +2211,37 @@ class GraftCatalog(spark: SparkSession, root: String,
         s"collection $name has no IVF layout — auditing a probed PQ path " +
           "(nprobe) needs ivfCells + pqSubspaces")
     }
-    require(meta.idColumn != "qid",
-      "auditRecallPq reserves the output column name 'qid'; the collection pk shadows it")
-    import spark.implicits._
-    val sv = sidecarVersion(name, meta)
-    val full0 = indexedState(name, meta)
-    if (!fs.exists(pqDir(name, sv))) {
-      // only an EMPTY flush legitimately lacks the sidecar — a populated
-      // snapshot without one must ERROR, not return a vacuous green audit
-      // (the auditRecallBin contract)
-      require(full0.isEmpty,
-        s"collection $name: PQ sidecar missing for version $sv — " +
-          "the snapshot predates the PQ layout; re-flush to build it")
-      return Seq.empty[(String, Long, Double)].toDF("qid", "hits", "recall")
+    auditOf(name, meta, "auditRecallPq", sampleMod, k) { (l, sample) =>
+      val (cb, residual) = l.pq
+      val corpus @ (frame, vc) = withDecoded(applyFilter(l.state, meta, filter), meta)
+      val pk = meta.idColumn
+      val recon0 = graft.ann.Pq.decode(col(GraftCatalog.PqCodeCol), cb)
+      val recon =
+        if (residual)
+          graft.ann.Pq.addCentroid(recon0, col(GraftCatalog.CellCol).cast("long"), l.centroids)
+        else recon0
+      val qdf = sample(frame, Seq(col(vc).as("__audit_qvec")))
+      // `nprobe` audits the PROBED serving path ([[searchPq]] with nprobe):
+      // pass 1 restricts each query's candidates to its own nprobe nearest
+      // cells — per query, via the same top-cells selection the serving
+      // probe makes — so the recall number certifies exactly the path a
+      // probed rollout serves instead of overstating it with the unprobed
+      // full ADC scan. The exact arm stays unrestricted brute force (it is
+      // the truth the probe is measured against).
+      val qprobe = nprobe.fold(qdf)(np => qdf.withColumn("__audit_qcells",
+        graft.functions.top_cells(col("__audit_qvec"), l.centroids, meta.distance, np)))
+      val pass1 = frame.select(
+        (Seq(col(pk), recon.as("__recon")) ++
+          (if (nprobe.isDefined) Seq(col(GraftCatalog.CellCol).cast("long").as("__cell"))
+           else Nil)): _*)
+        .crossJoin(broadcast(qprobe))
+      val scored0 =
+        if (nprobe.isDefined) pass1.where(array_contains(col("__audit_qcells"), col("__cell")))
+        else pass1
+      val scored = scored0.select(col("__audit_qid"), col(pk),
+        graft.functions.euclidean_distance(col("__recon"), col("__audit_qvec")).as("__s"))
+      twoPassArms(meta, corpus, qdf, scored, k * overFetch, k)
     }
-    val (cb, residFlag) = readPqCodebook(name, sv, meta.pqSubspaces.get)
-    val full = applyFilter(full0, meta, filter)
-    val hasCells = meta.ivfCells.isDefined && fs.exists(centroidDir(name, sv))
-    val residualLayout = resolveResidualLayout(name, residFlag, hasCells)
-    val decoded = meta.quantization match {
-      case "none" => full
-      case q      => full.withColumn(GraftCatalog.SearchVecCol, dequantize(col(VectorCol), q))
-    }
-    val vecCol = if (meta.quantization == "none") VectorCol else GraftCatalog.SearchVecCol
-    val pk = meta.idColumn
-    val recon0 = graft.ann.Pq.decode(col(GraftCatalog.PqCodeCol), cb)
-    val recon =
-      if (residualLayout)
-        graft.ann.Pq.addCentroid(recon0, col(GraftCatalog.CellCol).cast("long"),
-          readCentroids(name, sv))
-      else recon0
-    val qdf = decoded.where(pmod(xxhash64(col(pk)), lit(sampleMod)) === 0)
-      .select(col(pk).cast("string").as("__audit_qid"), col(vecCol).as("__audit_qvec"))
-    // `nprobe` audits the PROBED serving path ([[searchPq]] with nprobe):
-    // pass 1 restricts each query's candidates to its own nprobe nearest
-    // cells — per query, via the same top-cells selection the serving probe
-    // makes — so the recall number certifies exactly the path a probed
-    // rollout serves instead of overstating it with the unprobed full ADC
-    // scan. The exact arm stays unrestricted brute force (it is the truth
-    // the probe is measured against).
-    nprobe.foreach { _ =>
-      require(hasCells,
-        s"collection $name has no centroid sidecar — cannot audit a probed path")
-    }
-    val qprobe = nprobe match {
-      case Some(np) => qdf.withColumn("__audit_qcells",
-        graft.functions.top_cells(col("__audit_qvec"), readCentroids(name, sv),
-          meta.distance, np))
-      case None => qdf
-    }
-    val pass1 = decoded.select(
-      (Seq(col(pk), recon.as("__recon")) ++
-        (if (nprobe.isDefined) Seq(col(GraftCatalog.CellCol).cast("long").as("__cell"))
-         else Nil)): _*)
-      .crossJoin(broadcast(qprobe))
-    val scored0 =
-      if (nprobe.isDefined) pass1.where(array_contains(col("__audit_qcells"), col("__cell")))
-      else pass1
-    val scored = scored0.select(col("__audit_qid"), col(pk),
-      graft.functions.euclidean_distance(col("__recon"), col("__audit_qvec")).as("__s"))
-    auditTwoPassRecall(decoded, qdf, scored, pk, vecCol, meta.distance, k * overFetch, k)
   }
 
   /** ADC (product-quantization) search over the PQ code layout of the
@@ -2329,7 +2321,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * restricted to the nearest cells — partition-directory pruning cuts
     * the I/O to nprobe/k of the (already code-only) read. Which layout the
     * snapshot actually stores is read from the sidecar's recorded flag
-    * ([[resolveResidualLayout]]). */
+    * ([[IndexedLayout.pq]]). */
   private def resolvePq(name: String, queryVector: Array[Float], overFetch: Int,
                         nprobe: Option[Int]): Either[DataFrame, PqRoute] = {
     val meta = getMeta(name)
@@ -2338,31 +2330,21 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(queryVector.length == meta.dim,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
     require(overFetch >= 1, "overFetch must be >= 1")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(pqDir(name, sv))) {
-      import spark.implicits._
-      return Left(Seq.empty[(String, Double)].toDF(meta.idColumn, "dist"))
+    require(nprobe.isEmpty || meta.ivfCells.isDefined,
+      s"collection $name has no IVF layout — nprobe needs ivfCells + pqSubspaces")
+    layoutOf(name, meta).toRight(noRows[(String, Double)](meta.idColumn, "dist")).map { l =>
+      val (cb, residual) = l.pq
+      val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
+      // r12: the per-cell tables are EXECUTOR-BUILT from the per-version
+      // broadcast sidecar — the request ships dim floats, not cells·m·ksub
+      // doubles (8 MB/request at the 256/16/256 serving config, 128 MB at
+      // 4096 cells — measured as ~60% of serve_pq_1m). Bit-identical tables
+      // (PqSpec pins the kernel; the pq oracle rows gate it end-to-end).
+      val bc = if (residual) Some(pqBroadcast(name, l.base, cb, l.centroids)) else None
+      val probed = nprobe.map(np =>
+        graft.ann.Ann.probeCells(l.centroids, qv, np, meta.distance).toArray)
+      PqRoute(meta, l.state, qv, cb, l.hasCells, bc, probed)
     }
-    val (cb, residFlag) = readPqCodebook(name, sv, meta.pqSubspaces.get)
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val full = indexedState(name, meta)
-    nprobe.foreach { _ =>
-      require(meta.ivfCells.isDefined,
-        s"collection $name has no IVF layout — nprobe needs ivfCells + pqSubspaces")
-      require(fs.exists(centroidDir(name, sv)),
-        s"collection $name has no centroid sidecar")
-    }
-    val hasCells = meta.ivfCells.isDefined && fs.exists(centroidDir(name, sv))
-    val residual = resolveResidualLayout(name, residFlag, hasCells)
-    // r12: the per-cell tables are EXECUTOR-BUILT from the per-version
-    // broadcast sidecar — the request ships dim floats, not cells·m·ksub
-    // doubles (8 MB/request at the 256/16/256 serving config, 128 MB at
-    // 4096 cells — measured as ~60% of serve_pq_1m). Bit-identical tables
-    // (PqSpec pins the kernel; the pq oracle rows gate it end-to-end).
-    val bc = if (residual) Some(pqBroadcast(name, sv, cb, readCentroids(name, sv))) else None
-    val probed = nprobe.map(np =>
-      graft.ann.Ann.probeCells(readCentroids(name, sv), qv, np, meta.distance).toArray)
-    Right(PqRoute(meta, full, qv, cb, hasCells, bc, probed))
   }
 
   /** PASS 1 of the PQ routes over query Column `q` and probed-cell array
@@ -2440,9 +2422,7 @@ class GraftCatalog(spark: SparkSession, root: String,
                               qc: Array[Byte], withCell: Boolean)
 
   /** The binary routes' shared resolve: guards, threshold sidecar and the
-    * query code — or the empty answer of an empty flush. Only an EMPTY
-    * flush legitimately lacks the sidecar: a populated snapshot without
-    * one is a layout mismatch, not a no-result query. */
+    * query code — or the empty answer of an empty flush. */
   private def resolveBin(name: String, queryVector: Array[Float], topK: Int,
                          overFetch: Int): Either[DataFrame, BinRoute] = {
     val meta = getMeta(name)
@@ -2452,21 +2432,13 @@ class GraftCatalog(spark: SparkSession, root: String,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
     require(topK >= 1, "topK must be >= 1")
     require(overFetch >= 1, "overFetch must be >= 1")
-    val sv = sidecarVersion(name, meta)
-    val full = indexedState(name, meta)
-    if (!fs.exists(binDir(name, sv))) {
-      require(full.isEmpty,
-        s"collection $name: binary sidecar missing for version $sv — " +
-          "the snapshot predates the binary layout; re-flush to build it")
-      import spark.implicits._
-      return Left(Seq.empty[(String, Double)].toDF(meta.idColumn, "dist"))
+    layoutOf(name, meta).toRight(noRows[(String, Double)](meta.idColumn, "dist")).map { l =>
+      val th = l.thresholds
+      require(th.length == meta.dim,
+        s"binary sidecar dimension mismatch: ${th.length} vs ${meta.dim}")
+      val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
+      BinRoute(meta, l.state, qv, graft.ann.Bin.encodeOne(qv, th), l.hasCells)
     }
-    val th = readBinThresholds(name, sv)
-    require(th.length == meta.dim,
-      s"binary sidecar dimension mismatch: ${th.length} vs ${meta.dim}")
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    Right(BinRoute(meta, full, qv, graft.ann.Bin.encodeOne(qv, th),
-      full.columns.contains(GraftCatalog.CellCol)))
   }
 
   /** PASS 1 of the binary routes over query-code Column `code`: scans ONLY
@@ -2496,10 +2468,7 @@ class GraftCatalog(spark: SparkSession, root: String,
   private def exactRerank(meta: CollectionMeta, full: DataFrame, withCell: Boolean,
                           qv: Array[Float], cand: Seq[Row], topK: Int): DataFrame = {
     val candIds = cand.map(_.get(0))
-    val vec = meta.quantization match {
-      case "none" => col(VectorCol)
-      case q      => dequantize(col(VectorCol), q)
-    }
+    val vec = decodedCol(meta, VectorCol)
     val pk = meta.idColumn
     val pruned =
       if (withCell) {
@@ -2510,63 +2479,6 @@ class GraftCatalog(spark: SparkSession, root: String,
       .select(col(pk), round(graft.functions.distance(vec, lit(qv), meta.distance), 6).as("dist"))
       .orderBy(col("dist").asc, col(pk).asc).limit(topK)
   }
-
-  /** The centroid sidecar of version `v` — O(cells) rows, driver-sized.
-    * Cached per version ([[versionArtifact]]): the collect() is a full
-    * Spark job a served request should pay once, not every time. */
-  private def readCentroids(name: String, v: Int): Seq[(Long, Array[Float])] =
-    versionArtifact(name, v, "centroids")(
-      readDirNoInfer(centroidDir(name, v))
-        .collect().map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Float]]("cvec").toArray)).toSeq)
-
-  /** The binary-threshold sidecar of version `v` — dim doubles, cached per
-    * version like [[readCentroids]]. */
-  private def readBinThresholds(name: String, v: Int): Array[Double] =
-    versionArtifact(name, v, "binth")(
-      readDirNoInfer(binDir(name, v))
-        .orderBy("d").collect().map(_.getAs[Double]("t")))
-
-  /** Resolve whether a PQ sidecar holds RAW or RESIDUAL codes — ONE
-    * implementation of the flag/legacy-cohort rule every PQ reader and
-    * writer must apply identically (searchPq, auditRecallPq,
-    * localPqIndex, decorateSegment): flagless WITHOUT an IVF layout is
-    * unambiguously raw (the only layout that cohort could hold); flagless
-    * WITH one is genuinely ambiguous — raw and residual pre-flag cohorts
-    * both exist, a wrong guess silently mis-scores the other, so that
-    * case demands a re-flush; a recorded residual flag without the
-    * centroid sidecar is a layout mismatch. */
-  private def resolveResidualLayout(name: String, residFlag: Option[Boolean],
-                                    hasCells: Boolean): Boolean = {
-    val residual = residFlag.getOrElse {
-      require(!hasCells,
-        s"collection $name: pre-flag PQ sidecar over an IVF layout — whether " +
-          "the codes are raw or residual is unrecorded and cannot be " +
-          "inferred; re-flush the collection to write a flagged sidecar")
-      false
-    }
-    require(!residual || hasCells,
-      s"collection $name: sidecar records a residual layout but the centroid sidecar is missing")
-    residual
-  }
-
-  /** The PQ sidecar of version `v`: the codebook plus the recorded
-    * residual-layout flag. `residual = None` on sidecars written before the
-    * flag existed; callers resolve the cohort through
-    * [[resolveResidualLayout]]. */
-  private def readPqCodebook(name: String, v: Int,
-                             m: Int): (graft.ann.PqCodebook, Option[Boolean]) =
-    versionArtifact(name, v, "pqcb") {
-      val sidecar = readDirNoInfer(pqDir(name, v))
-      val rows = sidecar.collect()
-      val residual =
-        if (sidecar.columns.contains("residual") && rows.nonEmpty)
-          Some(rows(0).getAs[Boolean]("residual"))
-        else None
-      val byJ = rows.groupBy(_.getAs[Int]("j"))
-      (graft.ann.PqCodebook((0 until m).map { j =>
-        byJ(j).sortBy(_.getAs[Int]("c")).map(_.getAs[Seq[Float]]("cvec").toArray)
-      }.toArray), residual)
-    }
 
   /** The per-version EXECUTOR-side PQ serving sidecar (sorted cell ids +
     * centroids + codebook) as a real Spark broadcast — fetched once per
@@ -2592,14 +2504,17 @@ class GraftCatalog(spark: SparkSession, root: String,
                     filterColumns: Seq[String] = Nil): graft.ann.LocalBinIndex = {
     val meta = getMeta(name)
     require(meta.hasBinaryIndex, s"collection $name has no binary index layout")
+    val l = servedLayout(name, meta)
+    graft.ann.LocalBinIndex.fromCodes(l.state, meta.idColumn, GraftCatalog.BinCol,
+      meta.dim, l.thresholds, metaCols = localFilterSpecs(meta, filterColumns))
+  }
+
+  /** The layout a driver-local rung loads: the four loaders' shared
+    * guards, refusing an empty flush. */
+  private def servedLayout(name: String, meta: CollectionMeta): IndexedLayout = {
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    val sv = sidecarVersion(name, meta)
-    require(fs.exists(binDir(name, sv)),
-      s"collection $name was flushed empty — nothing to serve")
-    val th = readBinThresholds(name, sv)
-    val snap = indexedState(name, meta)
-    graft.ann.LocalBinIndex.fromCodes(snap, meta.idColumn, GraftCatalog.BinCol,
-      meta.dim, th, metaCols = localFilterSpecs(meta, filterColumns))
+    layoutOf(name, meta).getOrElse(throw new IllegalArgumentException(
+      s"collection $name was flushed empty — nothing to serve"))
   }
 
   /** Resolve `filterColumns` against the collection's DECLARED scalar
@@ -2637,18 +2552,13 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(!meta.isMultiVector,
       s"collection $name is multi-vector — the driver-local rungs serve single-vector layouts")
     require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    val sv = sidecarVersion(name, meta)
-    require(fs.exists(centroidDir(name, sv)),
-      s"collection $name was flushed empty — nothing to serve")
-    val centroids = readCentroids(name, sv)
-    val snap = indexedState(name, meta)
-      .withColumnRenamed(GraftCatalog.CellCol, "cell")
+    val l = servedLayout(name, meta)
     // vectors load in their STORED form (floats / f16|bf16 shorts / f8
     // bytes) — the serving node holds what disk holds (½ memory on f16,
     // ¼ on f8); probes decode per scan, bit-identically
-    graft.ann.LocalIvfIndex.fromAssigned(snap, meta.idColumn,
-      VectorCol, centroids, meta.distance,
+    graft.ann.LocalIvfIndex.fromAssigned(
+      l.state.withColumnRenamed(GraftCatalog.CellCol, "cell"), meta.idColumn,
+      VectorCol, l.centroids, meta.distance,
       metaCols = localFilterSpecs(meta, filterColumns),
       quant = meta.quantization)
   }
@@ -2668,18 +2578,13 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(meta.isMultiVector,
       s"collection $name is single-vector; use localIvfIndex")
     require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    val sv = sidecarVersion(name, meta)
-    require(fs.exists(centroidDir(name, sv)),
-      s"collection $name was flushed empty — nothing to serve")
-    val centroids = readCentroids(name, sv)
-    val snap = indexedState(name, meta)
-      .withColumnRenamed(GraftCatalog.CellCol, "cell")
+    val l = servedLayout(name, meta)
     // vectors load in their STORED form (floats / f16 shorts / f8 bytes) —
     // the serving node holds what disk holds; probes decode per scan
-    graft.ann.LocalMultiIndex.fromAssigned(snap, meta.idColumn,
+    graft.ann.LocalMultiIndex.fromAssigned(
+      l.state.withColumnRenamed(GraftCatalog.CellCol, "cell"), meta.idColumn,
       meta.vectorFields.map(f => f.name -> meta.dimOf(f)),
-      centroids, meta.distance, meta.routingVector.get.name,
+      l.centroids, meta.distance, meta.routingVector.get.name,
       quant = meta.quantization)
   }
 
@@ -2696,20 +2601,11 @@ class GraftCatalog(spark: SparkSession, root: String,
                    filterColumns: Seq[String] = Nil): graft.ann.LocalPqIndex = {
     val meta = getMeta(name)
     require(meta.pqConfig.isDefined, s"collection $name has no PQ layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    val sv = sidecarVersion(name, meta)
-    require(fs.exists(pqDir(name, sv)),
-      s"collection $name was flushed empty — nothing to serve")
-    val (cb, residFlag) = readPqCodebook(name, sv, meta.pqSubspaces.get)
-    val snap = indexedState(name, meta)
-    val hasCells = meta.ivfCells.isDefined &&
-      fs.exists(centroidDir(name, sv))
-    val centroids =
-      if (hasCells) readCentroids(name, sv)
-      else Seq.empty[(Long, Array[Float])]
-    val residual = resolveResidualLayout(name, residFlag, hasCells)
-    graft.ann.LocalPqIndex.fromCodes(snap, meta.idColumn, GraftCatalog.PqCodeCol, cb,
-      centroids, meta.distance, if (hasCells) Some(GraftCatalog.CellCol) else None,
+    val l = servedLayout(name, meta)
+    val (cb, residual) = l.pq
+    graft.ann.LocalPqIndex.fromCodes(l.state, meta.idColumn, GraftCatalog.PqCodeCol, cb,
+      if (l.hasCells) l.centroids else Nil, meta.distance,
+      if (l.hasCells) Some(GraftCatalog.CellCol) else None,
       residual = residual, metaCols = localFilterSpecs(meta, filterColumns))
   }
 
@@ -2783,20 +2679,8 @@ class GraftCatalog(spark: SparkSession, root: String,
     * read from file footers on the driver (tail-of-file metadata, no job,
     * no row data). An upper bound on the window's LWW winner count: every
     * winner is at least one ledger row. */
-  private def windowRowBound(name: String, window: Range): Long = {
-    var n = 0L
-    window.foreach { w =>
-      fs.listStatus(versionDir(name, w)).foreach { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try n += rdr.getRecordCount finally rdr.close()
-        }
-      }
-    }
-    n
-  }
+  private def windowRowBound(name: String, window: Range): Long =
+    window.iterator.map(w => parquetDirRowCount(versionDir(name, w))).sum
 
   /** A put winner's stored-form payload at column `i`, read by the
     * column's type — float[] / short[] vectors, byte[] f8 vectors and codes. */
@@ -2879,11 +2763,9 @@ class GraftCatalog(spark: SparkSession, root: String,
     val (reload, layout) = prev match {
       case _: graft.ann.LocalIvfIndex => (() => localIvfIndex(name, filterColumns),
         () => Seq(cell, graft.ann.LocalRung.storedCol(VectorCol, meta.quantization)))
-      case _: graft.ann.LocalPqIndex => (() => localPqIndex(name, filterColumns), () => {
-        val hasCells = meta.ivfCells.isDefined &&
-          fs.exists(centroidDir(name, chainBase(name, head)))
-        Seq(if (hasCells) cell else noCell, col(GraftCatalog.PqCodeCol))
-      })
+      case _: graft.ann.LocalPqIndex => (() => localPqIndex(name, filterColumns),
+        () => Seq(if (layoutOf(name, meta).exists(_.hasCells)) cell else noCell,
+          col(GraftCatalog.PqCodeCol)))
       case _: graft.ann.LocalBinIndex => (() => localBinIndex(name, filterColumns),
         () => Seq(noCell, col(GraftCatalog.BinCol)))
       case _: graft.ann.LocalMultiIndex => (() => localMultiIndex(name),
@@ -2928,16 +2810,15 @@ class GraftCatalog(spark: SparkSession, root: String,
     val meta = getMeta(name)
     // the BASE snapshot's files — the O(corpus) side whose directory
     // pruning the spec audits; delta segments are O(changes) side reads
-    val sv = sidecarVersion(name, meta)
-    val centroids = readCentroids(name, sv)
-    val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
-    val probed = graft.ann.Ann.probeCells(centroids, qv, nprobe, meta.distance)
-    val df = readVersionDir(name, sv)
-      .where(col(GraftCatalog.CellCol).isin(probed: _*))
-    df.queryExecution.sparkPlan
-      .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-      .flatMap(_.selectedPartitions.toPartitionArray.map(_.urlEncodedPath))
-      .toArray
+    layoutOf(name, meta).fold(Array.empty[String]) { l =>
+      val qv = GraftCatalog.prepareQueryVector(queryVector, meta)
+      val probed = graft.ann.Ann.probeCells(l.centroids, qv, nprobe, meta.distance)
+      readVersionDir(name, l.base).where(col(GraftCatalog.CellCol).isin(probed: _*))
+        .queryExecution.sparkPlan
+        .collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+        .flatMap(_.selectedPartitions.toPartitionArray.map(_.urlEncodedPath))
+        .toArray
+    }
   }
 
   /** Pre-touch the serving layout for `cells` (every cell when empty):
@@ -2955,18 +2836,17 @@ class GraftCatalog(spark: SparkSession, root: String,
   def warmCells(name: String, cells: Seq[Long] = Nil): Long = {
     val meta = getMeta(name)
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    val snap = indexedState(name, meta)
-    val sel =
-      if (cells.isEmpty || !snap.columns.contains(GraftCatalog.CellCol)) snap
-      else snap.where(col(GraftCatalog.CellCol).isin(cells: _*))
-    val touch = sel.schema.fields.toSeq.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-        sum(size(col(f.name)))
-      case f if f.dataType == org.apache.spark.sql.types.BinaryType =>
-        sum(length(col(f.name)))
+    layoutOf(name, meta).fold(0L) { l =>
+      val sel =
+        if (cells.isEmpty || !l.hasCells) l.state
+        else l.state.where(col(GraftCatalog.CellCol).isin(cells: _*))
+      val touch = sel.schema.fields.toSeq.collect {
+        case f if f.dataType.isInstanceOf[ArrayType] => sum(size(col(f.name)))
+        case f if f.dataType == org.apache.spark.sql.types.BinaryType => sum(length(col(f.name)))
+      }
+      val aggs = org.apache.spark.sql.functions.count(lit(1)) +: touch
+      sel.agg(aggs.head, aggs.tail: _*).collect().head.getLong(0)
     }
-    val aggs = org.apache.spark.sql.functions.count(lit(1)) +: touch
-    sel.agg(aggs.head, aggs.tail: _*).collect().head.getLong(0)
   }
 
   /** Weighted multi-vector search over a CFLAT-style collection
@@ -3030,8 +2910,7 @@ class GraftCatalog(spark: SparkSession, root: String,
                                    probed: Array[Long])
 
   /** The probed multi-vector routes' shared resolve — or the empty answer
-    * of a collection flushed empty (no sidecar, and no segments: flushDelta
-    * refuses on an indexed base flushed empty). */
+    * of a collection flushed empty. */
   private def resolveMultiIvf(name: String, fields: Seq[MultiVectorSearch.FieldQuery],
                               nprobe: Int): Either[DataFrame, MultiIvfRoute] = {
     val meta = getMeta(name)
@@ -3039,20 +2918,16 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
     require(meta.currentVersion > 0, s"collection $name has never been flushed")
     require(nprobe >= 1, "nprobe must be >= 1")
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv))) {
-      import spark.implicits._
-      return Left(Seq.empty[(String, Int, Double)].toDF(meta.idColumn, "cell", "score"))
-    }
-    val anchor = indexedState(name, meta)
-    val routed = prepareMultiFields(meta, fields)
-    val routing = meta.routingVector.get
-    val rq = routed.find(_.vectorCol == routing.name).getOrElse(
-      throw new IllegalArgumentException(
-        s"probed multi-vector search needs a query for the routing field ${routing.name}"))
-    val probed = graft.ann.Ann.probeCells(readCentroids(name, sv), rq.queryVector, nprobe,
-      meta.distance)
-    Right(MultiIvfRoute(meta, anchor, routed, probed.toArray))
+    layoutOf(name, meta).toRight(noRows[(String, Int, Double)](meta.idColumn, "cell", "score"))
+      .map { l =>
+        val routed = prepareMultiFields(meta, fields)
+        val routing = meta.routingVector.get
+        val rq = routed.find(_.vectorCol == routing.name).getOrElse(
+          throw new IllegalArgumentException(
+            s"probed multi-vector search needs a query for the routing field ${routing.name}"))
+        val probed = graft.ann.Ann.probeCells(l.centroids, rq.queryVector, nprobe, meta.distance)
+        MultiIvfRoute(meta, l.state, routed, probed.toArray)
+      }
   }
 
   /** The probed multi-vector plan over the included fields' query Columns
@@ -3063,32 +2938,24 @@ class GraftCatalog(spark: SparkSession, root: String,
       r.meta, r.routed, topK, keepCols = Seq("cell"))(v.init)
 
   /** Recall audit of the multi-vector IVF probe ([[auditRecall]]'s
-    * discipline on the [[searchMultiIvf]] rung): per sampled query row,
-    * |exact weighted top-k ∩ nprobe-probed weighted top-k| / k, where the
-    * query vectors are the sampled rows' OWN field vectors and `fields`
-    * gives the (field, ratio) weighting under audit. This is the number
-    * that tells a rollout how much the single-field routing probe costs
-    * the MULTI-field ranking — the failure mode specific to this rung
+    * discipline on the [[searchMultiIvf]] rung; [[auditOf]]): per sampled
+    * query row, |exact weighted top-k ∩ nprobe-probed weighted top-k| / k,
+    * where the query vectors are the sampled rows' OWN field vectors and
+    * `fields` gives the (field, ratio) weighting under audit. This is the
+    * number that tells a rollout how much the single-field routing probe
+    * costs the MULTI-field ranking — the failure mode specific to this rung
     * (a heavily-weighted field uncorrelated with the routing field pulls
-    * true winners into unprobed cells). Both arms run the same plan shape
-    * — row-local top_cells probe, ONE cell equi-join, per-qid bounded
-    * window — the exact arm at nprobe = |cells| (the spec-pinned
-    * degeneration to brute force), so the audit cannot drift from the
-    * serving plan. At 100 TB the query set SAMPLES (`sampleMod` sizes the
-    * cost) and every stage stays sample-bounded. Output: (qid, hits,
-    * recall). */
+    * true winners into unprobed cells). Both arms run the
+    * [[searchBatchMulti]] plan ([[multiProbedTopK]]), the exact arm at
+    * nprobe = |cells| (the spec-pinned degeneration to brute force), so
+    * the audit cannot drift from the serving plan. */
   def auditRecallMulti(name: String, sampleMod: Long, nprobe: Int,
                        fields: Seq[(String, Double)], k: Int = 10): DataFrame = {
     val meta = getMeta(name)
     require(meta.isMultiVector, s"collection $name is single-vector; use auditRecall")
     require(meta.ivfCells.isDefined, s"collection $name has no IVF layout")
-    require(meta.currentVersion > 0, s"collection $name has never been flushed")
-    require(sampleMod >= 1, "sampleMod must be >= 1")
     require(nprobe >= 1, "nprobe must be >= 1")
-    require(k >= 1, "k must be >= 1")
     require(fields.nonEmpty, "at least one (field, ratio) to audit")
-    require(meta.idColumn != "qid",
-      "auditRecallMulti reserves the output column name 'qid'; the collection pk shadows it")
     val declared = meta.vectorFields.map(_.name).toSet
     fields.foreach { case (f, _) =>
       require(declared(f), s"$f is not a declared vector field of $name") }
@@ -3096,35 +2963,16 @@ class GraftCatalog(spark: SparkSession, root: String,
     val ratioSum = fields.map(_._2).sum
     require(math.abs(ratioSum - 100.0) < 1e-9,
       s"ratios must sum to 100, got $ratioSum")
-    import spark.implicits._
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv)))
-      return Seq.empty[(String, Long, Double)].toDF("qid", "hits", "recall")
-    val centroids = readCentroids(name, sv)
-    val routing = meta.routingVector.get
-    val pk = meta.idColumn
-    val snap = indexedState(name, meta).withColumnRenamed(GraftCatalog.CellCol, "cell")
-    def dec(c: Column): Column = meta.quantization match {
-      case "none" => c
-      case q      => dequantize(c, q)
+    auditOf(name, meta, "auditRecallMulti", sampleMod, k) { (l, sample) =>
+      val snap = l.state.withColumnRenamed(GraftCatalog.CellCol, "cell")
+      // query side: the sampled rows' own vectors, decoded once — the stored
+      // routing vector probes, the stored field vectors score (what
+      // searchMultiIvf would compute for those query vectors, post-prep)
+      val qdf = sample(snap, decodedCol(meta, meta.routingVector.get.name).as("__audit_qr") +:
+        fields.map { case (f, _) => decodedCol(meta, f).as(s"__audit_q_$f") })
+      (multiProbedTopK(meta, snap, qdf, fields, l.centroids, l.centroids.size, k),
+        multiProbedTopK(meta, snap, qdf, fields, l.centroids, nprobe, k))
     }
-    // query side: the sampled rows' own vectors, decoded once — the stored
-    // routing vector probes, the stored field vectors score (what
-    // searchMultiIvf would compute for those query vectors, post-prep)
-    val qdf = snap.where(pmod(xxhash64(col(pk)), lit(sampleMod)) === 0)
-      .select(col(pk).cast("string").as("__audit_qid") +:
-        dec(col(routing.name)).as("__audit_qr") +:
-        fields.map { case (f, _) => dec(col(f)).as(s"__audit_q_$f") }: _*)
-    def arm(np: Int): DataFrame =
-      multiProbedTopK(meta, snap, qdf, fields, centroids, np, k)
-        .select(col("qid"), col(pk))
-    val hitCount = org.apache.spark.sql.functions.count(col("__hit"))
-    val exactCount = org.apache.spark.sql.functions.count(lit(1))
-    arm(centroids.size)
-      .join(arm(nprobe).withColumn("__hit", lit(1)), Seq("qid", pk), "left")
-      .groupBy("qid")
-      .agg(hitCount.as("hits"), (hitCount / exactCount).as("recall"))
-      .orderBy("qid")
   }
 
   /** Shared probe arm of the multi-vector batch shapes ([[auditRecallMulti]]
@@ -3209,33 +3057,22 @@ class GraftCatalog(spark: SparkSession, root: String,
           s"query $qid dimension mismatch on $f: expected ${declared(f)}, got ${v.length}")
       }
     }
-    import spark.implicits._
-    val sv = sidecarVersion(name, meta)
-    if (!fs.exists(centroidDir(name, sv)))
-      return Seq.empty[(String, String, Double, Int)]
-        .toDF("qid", meta.idColumn, "score", "rn")
-    val centroids = readCentroids(name, sv)
-    val snap = indexedState(name, meta).withColumnRenamed(GraftCatalog.CellCol, "cell")
-    def prep(v: Array[Float]) = GraftCatalog.prepareQueryVector(v, meta).toSeq
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__audit_qid",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-      org.apache.spark.sql.types.StructField("__audit_qr",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, containsNull = false), nullable = false) +:
-      weights.map { case (f, _) =>
-        org.apache.spark.sql.types.StructField(s"__audit_q_$f",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, containsNull = false), nullable = false)
-      })
-    val rows = queries.map { case (qid, m) =>
-      org.apache.spark.sql.Row.fromSeq(
-        qid +: prep(m(routing.name)) +: weights.map { case (f, _) => prep(m(f)) })
+    layoutOf(name, meta).fold(noRows[(String, String, Double, Int)](
+        "qid", meta.idColumn, "score", "rn")) { l =>
+      def prep(v: Array[Float]) = GraftCatalog.prepareQueryVector(v, meta).toSeq
+      val vec = ArrayType(FloatType, containsNull = false)
+      val schema = StructType(StructField("__audit_qid", StringType, nullable = false) +:
+        StructField("__audit_qr", vec, nullable = false) +:
+        weights.map { case (f, _) => StructField(s"__audit_q_$f", vec, nullable = false) })
+      val rows = queries.map { case (qid, m) =>
+        Row.fromSeq(qid +: prep(m(routing.name)) +: weights.map { case (f, _) => prep(m(f)) })
+      }
+      val qdf = spark.createDataFrame(
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
+      multiProbedTopK(meta, l.state.withColumnRenamed(GraftCatalog.CellCol, "cell"), qdf,
+        weights, l.centroids, nprobe, topK)
+        .orderBy(col("qid"), col("rn"))
     }
-    val qdf = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
-    multiProbedTopK(meta, snap, qdf, weights, centroids, nprobe, topK)
-      .orderBy(col("qid"), col("rn"))
   }
 
   /** Validate the queried fields against the declared schema and prepare

@@ -396,8 +396,6 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         }
         require(queries.size <= 1024,
           s"searchBatch is capped at 1024 queries per call, got ${queries.size}")
-        require(queries.map(_._1).distinct.size == queries.size,
-          "searchBatch query ids must be unique")
         val topK = intOr(req, "topK", 10)
         val nprobe = intOr(req, "nprobe", 4)
         val batchFilter = optFilter(req)
