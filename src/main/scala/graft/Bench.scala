@@ -41,6 +41,71 @@ object Bench {
   case class RowStat(reps: Int, minSec: Double, medSec: Double, maxSec: Double,
                      bytesRead: Long, shuffleWrite: Long)
 
+  // full JSON string escaping (backslash, quote, control chars): error
+  // messages carry paths and multiline job-abort text — quote-only
+  // replacement left the single-line output unparseable
+  private def jstr(s: String): String = JsonStr.quote(s)
+  private def jmap(kvs: Seq[(String, Any)]): String = kvs.map {
+    case (k, v: String) => jstr(k) + ":" + jstr(v)
+    case (k, v)         => jstr(k) + ":" + v
+  }.mkString("{", ",", "}")
+  private def jnum(t: Double, dp: Int): String = {
+    val p = math.pow(10, dp)
+    (math.round(t * p) / p).toString
+  }
+
+  /** The stdout line's length cap. The bench harness that parses this line
+    * keeps only the LAST 2000 characters of output (BENCH_rNN.json "tail" is
+    * exactly 2000 chars), and on a run with errors sbt prints an `[error]`
+    * footer after the line — the slack keeps the line's START inside the
+    * window, or nothing parses. */
+  val LineCap = 1650
+  /** An error or skip message on the stdout line: its first line, at most
+    * this many characters (BENCH_full.json keeps the full text). */
+  val MsgCap = 100
+
+  /** The one stdout line: the total, the `queries` rows that fit (in
+    * `priority` order), both ratio maps, errors and skips — at most
+    * [[LineCap]] characters whenever the fixed fields (total, ratio maps,
+    * `full`, `sf`) fit in it. Error and skip messages are cut to their first
+    * line, at most [[MsgCap]] characters, and take at most half the room the
+    * fixed fields leave; `queries` rows take the rest. Entries that do not
+    * fit are counted in `queries_dropped`, `errors_dropped` and
+    * `skipped_dropped` (each present only when nonzero) — never cut
+    * silently; BENCH_full.json carries everything. */
+  def stdoutLine(total: Double, priority: Seq[(String, Double)],
+                 vsBaseline: Seq[(String, Double)], vsBaselineScanOnly: Seq[(String, Double)],
+                 errors: Seq[(String, String)], skipped: Seq[(String, String)],
+                 sfDir: String): String = {
+    def msgs(kvs: Seq[(String, String)]) = kvs.map { case (k, m) =>
+      jstr(k) + ":" + jstr(m.linesIterator.nextOption().getOrElse("").take(MsgCap)) }
+    def used(es: Seq[String]) = es.map(_.length + 1).sum
+    // the longest prefix of `es` that fits in `budget` characters
+    def fit(es: Seq[String], budget: Int): Seq[String] = {
+      var n = 0
+      es.takeWhile { e => n += e.length + 1; n <= budget }
+    }
+    def dropped(key: String, n: Int) = if (n > 0) ",\"" + key + "\":" + n else ""
+    val head = "{\"metric\":\"total\",\"value\":" + jnum(total, 3) + ",\"unit\":\"sec\""
+    val ratios = ",\"vs_baseline\":" + jmap(vsBaseline) +
+      ",\"vs_baseline_scan_only\":" + jmap(vsBaselineScanOnly)
+    val last = ",\"full\":\"BENCH_full.json\",\"sf\":" + jstr(sfDir) + "}"
+    // the three maps' keys and braces, plus room for three dropped counters
+    val frame = ",\"queries\":{},\"errors\":{},\"skipped\":{}".length + 3 * 24
+    val room = LineCap - head.length - ratios.length - last.length - frame
+    val (errs, skips) = (msgs(errors), msgs(skipped))
+    val errKept = fit(errs, room / 2)
+    val skipKept = fit(skips, room / 2 - used(errKept))
+    val queries = priority.map { case (n, t) => jstr(n) + ":" + jnum(t, 4) }
+    val kept = fit(queries, room - used(errKept) - used(skipKept))
+    head + ",\"queries\":{" + kept.mkString(",") + "}" +
+      dropped("queries_dropped", queries.length - kept.length) + ratios +
+      ",\"errors\":{" + errKept.mkString(",") + "}" +
+      dropped("errors_dropped", errs.length - errKept.length) +
+      ",\"skipped\":{" + skipKept.mkString(",") + "}" +
+      dropped("skipped_dropped", skips.length - skipKept.length) + last
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -88,11 +153,11 @@ object Bench {
     val rowStats = mutable.LinkedHashMap.empty[String, Bench.RowStat]
     val io = new org.apache.spark.sql.graft.BenchMetrics(spark.sparkContext)
     def measured(fn: => Unit): (Double, Long, Long) = {
-      val (b0, s0) = io.snapshot()
+      val c0 = io.snapshot()
       val t0 = System.nanoTime(); fn
       val t = (System.nanoTime() - t0) / 1e9
-      val (b1, s1) = io.snapshot()
-      (t, b1 - b0, s1 - s0)
+      val d = io.snapshot() - c0
+      (t, d.bytesRead, d.shuffleWrite)
     }
     def recordStats(name: String, ts: Seq[Double], bytes: Seq[Long],
                     shuffle: Seq[Long]): Unit = {
@@ -224,19 +289,6 @@ object Bench {
     }
     @volatile var benchDone = false
 
-    // full JSON string escaping (backslash, quote, control chars): error
-    // messages carry paths and multiline job-abort text — quote-only
-    // replacement left the single-line output unparseable
-    def jstr(s: String): String = JsonStr.quote(s)
-    def jmap(kvs: Seq[(String, Any)]): String = kvs.map {
-      case (k, v: String) => jstr(k) + ":" + jstr(v)
-      case (k, v)         => jstr(k) + ":" + v
-    }.mkString("{", ",", "}")
-    def jnum(t: Double, dp: Int): String = {
-      val p = math.pow(10, dp)
-      (math.round(t * p) / p).toString
-    }
-
     def emitSnapshotImpl(): Unit = {
       val results = rows("results")
       val big1m = rows("big1m"); val big10m = rows("big10m")
@@ -326,12 +378,8 @@ object Bench {
         catch { case _: Exception => () }
       }
 
-      // ---- stdout line (r11 contract). The driver captures only the LAST
-      // 2000 characters of stdout (BENCH_rNN.json "tail" is exactly 2000
-      // chars), so the line is compact: headline rows at 4 dp plus both
-      // ratio maps, errors and skips. If the line would overflow, rows drop
-      // from the END of the priority list and a "queries_dropped" count
-      // records it (never a silent cut).
+      // ---- stdout line (r11 contract, [[stdoutLine]]): headline rows at 4
+      // dp plus both ratio maps, errors and skips, capped in length.
       // r15 (session 3): the DECLARED sf-suite rows lead, most-expensive
       // first — they are the only names the driver's per_query /
       // round-over-round / 8-vs-32-core scaling checks know, and the r15
@@ -350,25 +398,8 @@ object Bench {
         big1m ++ big10m ++
         rows("pq10m") ++ bin100m ++ rows("docs100k"))
         .filter { case (n, _) => !n.endsWith("_med") }
-      val head = "{\"metric\":\"total\",\"value\":" + jnum(total, 3) + ",\"unit\":\"sec\""
-      val tail = ",\"vs_baseline\":" + jmap(vsBaseline) +
-        ",\"vs_baseline_scan_only\":" + jmap(vsBaselineScanOnly) +
-        ",\"errors\":" + jmap(errorsSnap) +
-        ",\"skipped\":" + jmap(skippedSnap) +
-        ",\"full\":\"BENCH_full.json\",\"sf\":\"" + sfDir + "\"}"
-      val budget = 1850 - head.length - tail.length - 40
-      val kept = mutable.ArrayBuffer.empty[String]
-      var used = 0
-      val entryIt = priority.iterator.map { case (n, t) => jstr(n) + ":" + jnum(t, 4) }
-      var full = false
-      while (entryIt.hasNext && !full) {
-        val e = entryIt.next()
-        if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
-        else full = true
-      }
-      val dropped = priority.length - kept.length
-      println(head + ",\"queries\":{" + kept.mkString(",") + "}" +
-        (if (dropped > 0) ",\"queries_dropped\":" + dropped else "") + tail)
+      println(stdoutLine(total, priority, vsBaseline, vsBaselineScanOnly,
+        errorsSnap, skippedSnap, sfDir))
       Console.out.flush()
     }
     def emitSnapshot(): Unit = emitSnapshotImpl()

@@ -37,36 +37,21 @@ object QueryProbe {
       SparkEntry.queries("flat_scan_cosine")(spark, sfDir).collect()
     } catch { case _: Throwable => () }
     Files.createDirectories(Paths.get(planDir))
-    // job/task accounting per run: how much of a query is N tiny driver
-    // jobs vs actual task work (guide §1.1/§7.1 without the UI)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val logJobs = sys.env.contains("SPARK_PROBE_JOBS")
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (logJobs) jobStart.put(j.jobId, (System.nanoTime(),
-          Option(j.properties.getProperty("callSite.short")).getOrElse("?") + " | " +
-            j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString(";").take(120)))
-      }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (logJobs) Option(jobStart.remove(j.jobId)).foreach { case (t0, site) =>
-          println(f"  JOB ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f  $site")
-        }
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) taskMs.addAndGet(t.taskMetrics.executorRunTime)
-    })
+    // per-run job/task accounting, drained before each read: how much of a
+    // query is N tiny driver jobs vs actual task work (guide §1.1/§7.1
+    // without the UI)
+    val io = new org.apache.spark.sql.graft.BenchMetrics(spark.sparkContext)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
       spark.sparkContext.setJobDescription(s"probe:$name")
       val ts = (1 to 3).map { _ =>
-        val j0 = jobs.get(); val m0 = taskMs.get()
+        val c0 = io.snapshot()
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val t = (System.nanoTime() - t0) / 1e9
-        (t, jobs.get() - j0, (taskMs.get() - m0) / 1000.0)
+        val d = io.snapshot() - c0
+        (t, d.jobs, d.taskMs / 1000.0)
       }
       if (tag != "time") {
         val plan = fn(spark, sfDir).queryExecution.explainString(
@@ -75,7 +60,10 @@ object QueryProbe {
           plan.getBytes(StandardCharsets.UTF_8))
       }
       val best = ts.minBy(_._1)
-      println(f"PROBE $name%-32s min=${best._1}%7.3f jobs=${best._2}%3d taskSec=${best._3}%7.2f  " +
+      // every run's job count: adaptive execution can move a multi-stage
+      // plan's count by ±2 between identical runs
+      println(f"PROBE $name%-32s min=${best._1}%7.3f jobs=${ts.map(_._2).mkString(",")}%-8s " +
+        f"taskSec=${best._3}%7.2f  " +
         f"runs=${ts.map(t => f"${t._1}%.3f").mkString(",")}")
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.collection
 
 import scala.collection.mutable
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -317,17 +318,13 @@ class GraftCatalog(spark: SparkSession, root: String,
     * where that is possible) falls back to the file's mtime on the same
     * horizon, so a torn claim self-heals instead of wedging every future
     * flush of the slot until a human deletes it. */
-  private def claimIsStale(claim: Path): Boolean =
+  private def claimIsStale(claim: Path): Boolean = readClaim(claim).exists { content =>
     try {
-      val in = fs.open(claim)
-      val content = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-                    finally in.close()
-      val ts =
-        try content.trim.split(' ').last.toLong
-        catch { case _: NumberFormatException =>
-          fs.getFileStatus(claim).getModificationTime }
+      val ts = content.trim.split(' ').last.toLongOption
+        .getOrElse(fs.getFileStatus(claim).getModificationTime)
       System.currentTimeMillis() - ts > staleClaimMs
     } catch { case scala.util.control.NonFatal(_) => false }
+  }
 
   /** Lease fencing: does the claim file still hold OUR attempt's token? A
     * writer paused past `staleClaimMs` (GC death spiral, VM migration,
@@ -337,12 +334,22 @@ class GraftCatalog(spark: SparkSession, root: String,
     * every destructive publish step; the residual TOCTOU window is the
     * microseconds between check and act, down from the unbounded pause. */
   private def ownsClaim(name: String, v: Int, token: String): Boolean =
+    readClaim(claimPath(name, v)).contains(token)
+
+  /** The claim file's content; None when it cannot be read (absent, torn,
+    * or a store fault) — both readers above then answer `false`. */
+  private def readClaim(claim: Path): Option[String] =
     try {
-      val in = fs.open(claimPath(name, v))
-      val content = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-                    finally in.close()
-      content == token
-    } catch { case scala.util.control.NonFatal(_) => false }
+      val in = fs.open(claim)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Delete version `v`: its data dir, its sidecars and its claim. */
+  private def deleteVersion(name: String, v: Int): Unit = {
+    versionDirs(name, v).foreach(fs.delete(_, true))
+    fs.delete(claimPath(name, v), false)
+  }
 
   // ---- DDL ----
 
@@ -723,31 +730,18 @@ class GraftCatalog(spark: SparkSession, root: String,
     prev.foreach(_.unpersist(false))
   }
 
-  /** Persist the in-memory state as a new snapshot version (S7 Flush).
-    *
-    * Concurrent-writer safety: data is staged under a unique temp dir, then
-    * CLAIMED via an atomic directory rename onto `v<N>` — Hadoop `rename`
-    * fails when the destination exists, so of two drivers flushing the same
-    * collection exactly one wins; the loser deletes its staging dir and
-    * throws [[GraftCatalog.ConcurrentFlushException]] without orphaning a
-    * version. The snapshot is also re-read BEFORE the meta swap, so a broken
-    * write can never become the published current version. */
+  /** Persist the in-memory state as a new snapshot version (S7 Flush): the
+    * snapshot and its index sidecars are staged, then published through
+    * [[publishVersion]] — the one claim / fence / rename / validate / meta
+    * sequence every version write shares. The snapshot is re-read BEFORE
+    * the meta swap, so a broken write can never become the published
+    * current version. */
   def flush(name: String): Int = {
     val meta = getMeta(name)
     val df = loadedOrThrow(name)
     requireFreshAnchor(name, meta)
-    val v = meta.currentVersion + 1
-    val staging = new Path(colDir(name),
-      s".staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
-    val stagingData = new Path(staging, "data")
-    val stagingCentroids = new Path(staging, "centroids")
-    val stagingPq = new Path(staging, "pq")
-    val stagingBin = new Path(staging, "bin")
-    var wroteCentroids = false
-    var wrotePq = false
-    var wroteBin = false
-    // a failed staging write must not orphan the hidden staging dir
-    try {
+    val (v, reread) = publishVersion(name, meta) { (staging, v) =>
+      val stagingData = new Path(staging, "data")
       val pk = meta.idColumn
       val decoded = decodedCol(meta, VectorCol)
       // Binary prefilter layout: trained midrange sign-bit thresholds (one
@@ -762,24 +756,20 @@ class GraftCatalog(spark: SparkSession, root: String,
           graft.ann.Bin.trainThresholdsOpt(
             df.select(decoded.as(GraftCatalog.SearchVecCol)), GraftCatalog.SearchVecCol)
         else None
-      def withBin(d: DataFrame): DataFrame = binTh match {
-        case Some(th) => d.withColumn(GraftCatalog.BinCol, graft.ann.Bin.encode(decoded, th))
-        case None     => d
-      }
+      def withBin(d: DataFrame): DataFrame =
+        binTh.fold(d)(th => d.withColumn(GraftCatalog.BinCol, binCode(decoded, th)))
       // PQ code layout: per-subspace-Lloyd codebook trained at flush, codes
       // written as an m-byte column, codebook in a tiny sidecar —
       // [[searchPq]]'s ADC pass then scans ONLY the code column (parquet
       // column pruning), never the float vectors. On an IVF collection the
       // codes quantize RESIDUALS (vec − cellCentroid) — true IVF-PQ; without
-      // cells they quantize the decoded vectors. An empty collection skips
-      // the layout (no sidecar).
-      var pqCb: Option[graft.ann.PqCodebook] = None
-      // Whether the written codes quantize RESIDUALS (IVF-PQ) or decoded
-      // vectors — RECORDED in the pq sidecar (`residual` column) so readers
-      // gate the ADC path on the snapshot's actual layout instead of
-      // re-inferring it (a raw-code snapshot scored against residual LUTs
-      // returns silently wrong distances).
-      var pqResidual = false
+      // cells they quantize the decoded vectors. The sidecar RECORDS which
+      // (`residual`), so readers gate the ADC path on the snapshot's actual
+      // layout instead of re-inferring it (a raw-code snapshot scored against
+      // residual LUTs returns silently wrong distances). An empty collection
+      // skips the layout (no sidecar).
+      var pqCb: Option[(graft.ann.PqCodebook, Boolean)] = None
+      var cents: Option[Seq[(Long, Array[Float])]] = None
       val pqIters = meta.pqTrainIterations.getOrElse(2)
       meta.ivfCells match {
         case Some(k) =>
@@ -807,14 +797,23 @@ class GraftCatalog(spark: SparkSession, root: String,
             withVec, pk, GraftCatalog.SearchVecCol, k, meta.distance,
             iterations = meta.ivfTrainIterations.getOrElse(2),
             sampleMod = meta.ivfTrainSampleMod)
+          // REBALANCE on the cell before partitionBy: without it every write
+          // task emits a file into every cell dir — tasks×cells files (an
+          // 8k-file snapshot at 1M/k=256; a small-file explosion at 100 TB).
+          // The rebalance shuffle co-locates each cell into ~one task (AQE
+          // splits oversized/skewed cells), so the layout is ~one well-sized
+          // file per cell directory.
+          def writeCells(d: DataFrame): Unit =
+            d.hint("rebalance", GraftCatalog.CellCol).write.partitionBy(GraftCatalog.CellCol)
+              .mode("overwrite").parquet(stagingData.toString)
           if (centroids.isEmpty) {
             // empty collection: partitionBy would write a schemaless dir that
             // fails to re-read — fall back to the unpartitioned layout
             df.write.mode("overwrite").parquet(stagingData.toString)
           } else {
-            val assigned = graft.ann.Ann.ivfAssign(
-                withVec, pk, GraftCatalog.SearchVecCol, centroids, meta.distance)
-              .withColumnRenamed("cell", GraftCatalog.CellCol)
+            cents = Some(centroids)
+            val assigned = withVec.withColumn(GraftCatalog.CellCol,
+              cellCode(meta, col(GraftCatalog.SearchVecCol), centroids))
             meta.pqConfig match {
               case Some((mm, ks)) =>
                 // residual IVF-PQ: train + encode on vec − centroid(cell).
@@ -823,122 +822,69 @@ class GraftCatalog(spark: SparkSession, root: String,
                 // the flush's duration instead of re-running the assignment
                 // kernel each pass.
                 val resid = assigned
-                  .withColumn(GraftCatalog.ResidVecCol, graft.ann.Pq.residual(
-                    col(GraftCatalog.SearchVecCol), col(GraftCatalog.CellCol), centroids))
+                  .withColumn(GraftCatalog.ResidVecCol, pqInput(
+                    col(GraftCatalog.SearchVecCol), col(GraftCatalog.CellCol), Some(centroids)))
                   .persist(StorageLevel.MEMORY_AND_DISK)
                 try {
                   val cb = graft.ann.Pq.train(resid, pk, GraftCatalog.ResidVecCol,
                     mm, ks, iterations = pqIters, sampleMod = meta.pqTrainSampleMod)
-                  pqCb = Some(cb)
-                  pqResidual = true
-                  withBin(resid.withColumn(GraftCatalog.PqCodeCol, graft.functions.pq_encode(
-                      col(GraftCatalog.ResidVecCol), cb.cents))
+                  pqCb = Some(cb -> true)
+                  writeCells(withBin(resid
+                    .withColumn(GraftCatalog.PqCodeCol, pqCode(col(GraftCatalog.ResidVecCol), cb))
                     .drop(GraftCatalog.ResidVecCol)
-                    .drop(GraftCatalog.SearchVecCol))
-                    // REBALANCE on the cell before partitionBy: without it
-                    // every write task emits a file into every cell dir —
-                    // tasks×cells files (an 8k-file snapshot at 1M/k=256;
-                    // a small-file explosion at 100 TB). The rebalance
-                    // shuffle co-locates each cell into ~one task (AQE
-                    // splits oversized/skewed cells), so the layout is
-                    // ~one well-sized file per cell directory.
-                    .hint("rebalance", GraftCatalog.CellCol)
-                    .write.partitionBy(GraftCatalog.CellCol)
-                    .mode("overwrite").parquet(stagingData.toString)
+                    .drop(GraftCatalog.SearchVecCol)))
                 } finally resid.unpersist(false)
               case None =>
-                withBin(assigned.drop(GraftCatalog.SearchVecCol))
-                  .hint("rebalance", GraftCatalog.CellCol) // see PQ branch note
-                  .write.partitionBy(GraftCatalog.CellCol)
-                  .mode("overwrite").parquet(stagingData.toString)
+                writeCells(withBin(assigned.drop(GraftCatalog.SearchVecCol)))
             }
-            import spark.implicits._
-            centroids.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cvec")
-              .coalesce(1).write.mode("overwrite").parquet(stagingCentroids.toString)
-            wroteCentroids = true
           }
         case _ =>
-          val withCode = meta.pqConfig match {
-            case Some((mm, ks)) =>
-              // trainOpt's dim probe doubles as the emptiness check — no
-              // separate `df.isEmpty` job; None = empty corpus, no layout
-              graft.ann.Pq.trainOpt(df.withColumn(GraftCatalog.SearchVecCol, decoded),
-                pk, GraftCatalog.SearchVecCol, mm, ks, iterations = pqIters,
-                sampleMod = meta.pqTrainSampleMod) match {
-                case Some(cb) =>
-                  pqCb = Some(cb)
-                  df.withColumn(GraftCatalog.PqCodeCol,
-                    graft.functions.pq_encode(decoded, cb.cents))
-                case None => df
-              }
-            case _ => df
-          }
-          withBin(withCode).write.mode("overwrite").parquet(stagingData.toString)
+          // trainOpt's dim probe doubles as the emptiness check — no
+          // separate `df.isEmpty` job; None = empty corpus, no layout
+          pqCb = meta.pqConfig.flatMap { case (mm, ks) =>
+            graft.ann.Pq.trainOpt(df.withColumn(GraftCatalog.SearchVecCol, decoded),
+              pk, GraftCatalog.SearchVecCol, mm, ks, iterations = pqIters,
+              sampleMod = meta.pqTrainSampleMod)
+          }.map(_ -> false)
+          withBin(pqCb.fold(df) { case (cb, _) =>
+            df.withColumn(GraftCatalog.PqCodeCol, pqCode(decoded, cb)) })
+            .write.mode("overwrite").parquet(stagingData.toString)
       }
-      binTh.foreach { th =>
-        import spark.implicits._
-        th.zipWithIndex.map { case (t, d) => (d, t) }.toSeq.toDF("d", "t")
-          .coalesce(1).write.mode("overwrite").parquet(stagingBin.toString)
-        wroteBin = true
-      }
-      pqCb.foreach { cb =>
-        import spark.implicits._
-        cb.cents.zipWithIndex.flatMap { case (cbj, j) =>
-          cbj.zipWithIndex.map { case (cv, c) => (j, c, cv.toSeq) } }.toSeq
-          .toDF("j", "c", "cvec")
-          .withColumn("residual", lit(pqResidual)) // the layout flag
-          .coalesce(1).write.mode("overwrite").parquet(stagingPq.toString)
-        wrotePq = true
-      }
-    } catch { case e: Throwable =>
-      fs.delete(staging, true)
-      throw e
-    }
-    val token = claimVersionOrAbort(name, v, staging)
-    interleaveAfterClaim(name, v)
-    fenceOrAbort(name, v, token, staging)
-    renameOrAbort(name, v, token, staging, stagingData, versionDir(name, v))
-    if (wroteCentroids)
-      renameOrAbort(name, v, token, staging, stagingCentroids, centroidDir(name, v))
-    if (wrotePq) renameOrAbort(name, v, token, staging, stagingPq, pqDir(name, v))
-    if (wroteBin) renameOrAbort(name, v, token, staging, stagingBin, binDir(name, v))
-    fs.delete(staging, true)
-    // Validate + re-anchor BEFORE publishing: the read inspects footers, so
-    // an unreadable snapshot aborts here with the meta still on the old
-    // version. The IVF cell partition column is layout, not data — dropped
-    // from the resident view.
-    val reread =
-      try {
-        // no "dirschema" seeding here (r15, ADVICE): invalidatePrepared a
-        // few lines below wipes every (name, *) artifact on a SUCCESSFUL
-        // flush — the seed only ever survived abort/fence-loss paths,
-        // where a concurrent writer could republish v with a DIFFERENT
-        // schema and this instance would then silently read it with the
-        // stale one. versionSchema seeds lazily from published versions
-        // only, which covers every downstream read. readDirNoInfer keeps
-        // the validation (one footer read, driver-side — the same footer
-        // the inference job it replaces inspected) without the job (r15).
-        dropCellCol(readDirNoInfer(versionDir(name, v)))
-      } catch { case e: Throwable =>
-        abortPublish(name, v, token, staging)
-        throw e
-      }
-    fenceOrAbort(name, v, token, staging) // last fence before the publish
-    writeMeta(meta.copy(currentVersion = v)) // meta last: snapshot visible atomically
-    anchorVersion(name) = v
+      (stagingData -> versionDir(name, v)) +: Seq(
+        cents.map(cs => stageSidecar(staging, "centroids",
+          cs.map { case (cid, cv) => GraftCatalog.CentroidRow(cid, cv.toSeq) }) -> centroidDir(name, v)),
+        pqCb.map { case (cb, residual) =>
+          stageSidecar(staging, "pq", cb.cents.toSeq.zipWithIndex.flatMap { case (cbj, j) =>
+            cbj.toSeq.zipWithIndex.map { case (cv, c) => GraftCatalog.PqRow(j, c, cv.toSeq, residual) }
+          }) -> pqDir(name, v) },
+        binTh.map(th => stageSidecar(staging, "bin",
+          th.toSeq.zipWithIndex.map { case (t, d) => GraftCatalog.BinRow(d, t) }) -> binDir(name, v))
+      ).flatten
+    } { dir =>
+      // Validate + re-anchor BEFORE publishing: the read inspects footers, so
+      // an unreadable snapshot aborts here with the meta still on the old
+      // version. The IVF cell partition column is layout, not data — dropped
+      // from the resident view. No "dirschema" seeding here (r15, ADVICE):
+      // invalidatePrepared below wipes every (name, *) artifact on a
+      // SUCCESSFUL flush — the seed only ever survived abort/fence-loss
+      // paths, where a concurrent writer could republish v with a DIFFERENT
+      // schema and this instance would then silently read it with the stale
+      // one. versionSchema seeds lazily from published versions only, which
+      // covers every downstream read. readDirNoInfer keeps the validation
+      // (one footer read, driver-side — the same footer the inference job it
+      // replaces inspected) without the job (r15).
+      dropCellCol(readDirNoInfer(dir))
+    }.get
     if (!meta.versioning) {
       // prune EVERY superseded version, not just v-1: a delta chain leaves
       // multiple live dirs behind the new base, all obsolete once this full
       // snapshot (which folds them) is published. ONE directory listing —
       // probing 1..v-1 individually is O(lifetime version count) existence
       // RPCs per compaction, unbounded under a streaming delta cadence
-      val live = fs.listStatus(colDir(name)).toSeq.map(_.getPath.getName)
+      fs.listStatus(colDir(name)).toSeq.map(_.getPath.getName)
         .collect { case n if n.matches("v\\d+") => n.drop(1).toInt }
         .filter(_ < v)
-      live.foreach { w =>
-        versionDirs(name, w).foreach(fs.delete(_, true))
-        fs.delete(claimPath(name, w), false)
-      }
+        .foreach(deleteVersion(name, _))
     }
     // Re-anchor residency on the written snapshot: lineage collapses to a
     // parquet scan and the pre-flush cached copy is released. Prepared
@@ -972,8 +918,8 @@ class GraftCatalog(spark: SparkSession, root: String,
     * segments: the put rows are assigned to the chain base's PERSISTED
     * centroids and encoded with its persisted PQ codebook / binary
     * thresholds at segment-write time ([[decorateSegment]] — the same
-    * kernels [[flush]] runs, with zero training), so ingest on an indexed
-    * collection stays O(batch) and the snapshot rungs
+    * encode recipes [[flush]] runs, with zero training), so ingest on an
+    * indexed collection stays O(batch) and the snapshot rungs
     * ([[searchIvf]]/[[searchPq]]/[[searchBinary]]) fold base + segments at
     * read ([[indexedState]]). Sidecars retrain only at the next full
     * [[flush]] (compaction) — the reference shape: diskv appends feed the
@@ -983,8 +929,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * ledger; an indexed base that was flushed EMPTY has no sidecars to
     * extend and demands a full flush instead.
     *
-    * Same concurrent-writer discipline as [[flush]]: staged write, O_EXCL
-    * version claim, re-read before the meta swap. */
+    * Published through the same [[publishVersion]] as [[flush]]. */
   def flushDelta(name: String): Int = {
     val meta = getMeta(name)
     loadedOrThrow(name) // mutations imply residency; keep the error shape uniform
@@ -994,58 +939,71 @@ class GraftCatalog(spark: SparkSession, root: String,
     val log0 = pending.getOrElse(name, throw new IllegalStateException(
       s"collection $name has no pending changes to delta-flush"))
     val log = decorateSegment(name, meta, log0)
-    val v = meta.currentVersion + 1
-    val staging = new Path(colDir(name),
-      s".staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
-    val stagingData = new Path(staging, "data")
-    try {
+    val published = publishVersion(name, meta) { (staging, v) =>
+      val stagingData = new Path(staging, "data")
       log.write.mode("overwrite").parquet(stagingData.toString)
       // the marker rides INSIDE the data dir so the claim rename publishes
       // dir + marker atomically; parquet readers ignore `_`-prefixed files
       fs.create(new Path(stagingData, GraftCatalog.DeltaMarkerFile), true).close()
-    } catch { case e: Throwable =>
-      fs.delete(staging, true)
-      throw e
+      // r15 (r14 VERDICT #7): an all-empty ledger — every tracked mutation
+      // carried zero rows, e.g. an empty streaming micro-batch applied
+      // without a pre-probe — must NOT publish an empty segment (a version
+      // bump with no changes). The staged footers this call just wrote carry
+      // exact row counts, so the emptiness check is driver-side metadata:
+      // zero Spark jobs, and the per-batch `batch.isEmpty` probe job the
+      // streaming path used to pay for this guarantee is gone
+      // (ChangeFeed.runIntoCollection).
+      if (parquetDirRowCount(stagingData) == 0L) Nil
+      else Seq(stagingData -> versionDir(name, v))
+    } {
+      // readability check WITHOUT a Spark job (r14, guide §1.2): the segment
+      // is O(changes) small, so the footer reads — the same thing
+      // spark.read.parquet's schema inference does — run driver-side; the
+      // inference path dispatched one full job per flushDelta just to
+      // validate a directory this call wrote moments ago.
+      validateParquetDir
     }
-    // r15 (r14 VERDICT #7): an all-empty ledger — every tracked mutation
-    // carried zero rows, e.g. an empty streaming micro-batch applied
-    // without a pre-probe — must NOT publish an empty segment (a version
-    // bump with no changes). The staged footers this call just wrote carry
-    // exact row counts, so the emptiness check is driver-side metadata:
-    // zero Spark jobs, and the per-batch `batch.isEmpty` probe job the
-    // streaming path used to pay for this guarantee is gone
-    // (ChangeFeed.runIntoCollection).
-    val stagedRows =
-      try parquetDirRowCount(stagingData)
+    // the chain behind a delta head stays live even when versioning=false —
+    // the base + sibling segments ARE the current state; only a full flush
+    // (compaction) may prune them. An empty ledger published nothing: drop
+    // its empty frames all the same.
+    clearPending(name)
+    published.fold(meta.currentVersion)(_._1)
+  }
+
+  /** The ONE publish step of every version write ([[flush]],
+    * [[flushDelta]]). `stage(staging, v)` writes version `v`'s dirs under a
+    * fresh hidden staging dir and returns each (staged, published) dir pair
+    * — none when there is nothing to publish. Then: the O_EXCL version claim
+    * ([[claimVersionOrAbort]]), a fence, each staged dir's checked rename
+    * ([[renameOrAbort]]), `validate` on the published data dir, the last
+    * fence, and the meta write LAST — the version becomes visible
+    * atomically — and the resident anchor advances. A failure at any step
+    * releases what this attempt holds: its staging dir, and once claimed
+    * its `v<N>` dirs and claim ([[abortPublish]]). Returns the published
+    * version and `validate`'s result; None when stage had nothing. */
+  private def publishVersion[T](name: String, meta: CollectionMeta)(
+      stage: (Path, Int) => Seq[(Path, Path)])(validate: Path => T): Option[(Int, T)] = {
+    val v = meta.currentVersion + 1
+    val staging = new Path(colDir(name),
+      s".staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
+    // a failed staging write must not orphan the hidden staging dir
+    val staged =
+      try stage(staging, v)
       catch { case e: Throwable => fs.delete(staging, true); throw e }
-    if (stagedRows == 0L) {
-      fs.delete(staging, true)
-      clearPending(name) // the ledger held nothing; drop its empty frames
-      return meta.currentVersion
-    }
+    if (staged.isEmpty) { fs.delete(staging, true); return None }
     val token = claimVersionOrAbort(name, v, staging)
     interleaveAfterClaim(name, v)
     fenceOrAbort(name, v, token, staging)
-    renameOrAbort(name, v, token, staging, stagingData, versionDir(name, v))
+    staged.foreach { case (src, dst) => renameOrAbort(name, v, token, staging, src, dst) }
     fs.delete(staging, true)
-    // readability check WITHOUT a Spark job (r14, guide §1.2): the segment
-    // is O(changes) small, so the footer reads — the same thing
-    // spark.read.parquet's schema inference does — run driver-side; the
-    // inference path dispatched one full job per flushDelta just to
-    // validate a directory this call wrote moments ago.
-    try validateParquetDir(versionDir(name, v))
-    catch { case e: Throwable =>
-      abortPublish(name, v, token, staging)
-      throw e
-    }
+    val checked =
+      try validate(versionDir(name, v))
+      catch { case e: Throwable => abortPublish(name, v, token, staging); throw e }
     fenceOrAbort(name, v, token, staging) // last fence before the publish
-    writeMeta(meta.copy(currentVersion = v))
+    writeMeta(meta.copy(currentVersion = v)) // meta last: the version is visible atomically
     anchorVersion(name) = v
-    // the chain behind a delta head stays live even when versioning=false —
-    // the base + sibling segments ARE the current state; only a full flush
-    // (compaction) may prune them
-    clearPending(name)
-    v
+    Some(v -> checked)
   }
 
   /** Validate that `name` can take delta flushes NOW — a flushed base
@@ -1091,7 +1049,7 @@ class GraftCatalog(spark: SparkSession, root: String,
         s"v${chainBase(name, meta.currentVersion)} (the base was flushed empty) — " +
         "run a full flush instead of a delta"))
     val decoded = decodedCol(meta, VectorCol)
-    val vecPresent = col(VectorCol).isNotNull
+    def ifVec(c: Column): Column = when(col(VectorCol).isNotNull, c)
     // cell assignment first: a residual PQ encode reads the assigned cell.
     // Multi-vector segments assign by the ROUTING field — the same column
     // flush trained the base's centroids on (delete markers carry NULL in
@@ -1099,28 +1057,47 @@ class GraftCatalog(spark: SparkSession, root: String,
     val routed = meta.routingVector.fold(VectorCol)(_.name)
     val withCell =
       if (!l.hasCells) log
-      else log.withColumn(GraftCatalog.CellCol,
-        when(col(routed).isNotNull, graft.functions.arg_min_distance(
-          decodedCol(meta, routed), l.centroids, meta.distance)).cast("int"))
+      else log.withColumn(GraftCatalog.CellCol, when(col(routed).isNotNull,
+        cellCode(meta, decodedCol(meta, routed), l.centroids)).cast("int"))
     val withPq =
       if (meta.pqConfig.isEmpty) withCell
       else {
         val (cb, residual) = l.pq
-        val enc =
-          if (residual)
-            graft.functions.pq_encode(graft.ann.Pq.residual(
-              decoded, col(GraftCatalog.CellCol).cast("long"), l.centroids), cb.cents)
-          else graft.functions.pq_encode(decoded, cb.cents)
-        withCell.withColumn(GraftCatalog.PqCodeCol, when(vecPresent, enc))
+        withCell.withColumn(GraftCatalog.PqCodeCol, ifVec(pqCode(
+          pqInput(decoded, col(GraftCatalog.CellCol), Option.when(residual)(l.centroids)), cb)))
       }
     if (meta.hasBinaryIndex)
-      withPq.withColumn(GraftCatalog.BinCol,
-        when(vecPresent, graft.ann.Bin.encode(decoded, l.thresholds)))
+      withPq.withColumn(GraftCatalog.BinCol, ifVec(binCode(decoded, l.thresholds)))
     else withPq
   }
 
-  /** Atomic claim of the version slot, shared by [[flush]] and
-    * [[flushDelta]] (the subtlest concurrency logic here — one copy):
+  // ---- layout encode: ONE recipe per layout column, shared by [[flush]]
+  // (after training) and [[decorateSegment]] (against the base's sidecars);
+  // each writer applies them in its own order ----
+
+  /** `__cell`: the nearest centroid to `routed`, the routing field's
+    * decoded vector. */
+  private def cellCode(meta: CollectionMeta, routed: Column,
+                       centroids: Seq[(Long, Array[Float])]): Column =
+    graft.functions.arg_min_distance(routed, centroids, meta.distance)
+
+  /** What `__pq_code` quantizes: the decoded vector (raw layout), or its
+    * residual against its cell's centroid (IVF-PQ) — the layout the PQ
+    * sidecar's `residual` flag records. */
+  private def pqInput(decoded: Column, cell: Column,
+                      residualOver: Option[Seq[(Long, Array[Float])]]): Column =
+    residualOver.fold(decoded)(graft.ann.Pq.residual(decoded, cell, _))
+
+  /** `__pq_code`: the m-byte code of [[pqInput]] under codebook `cb`. */
+  private def pqCode(input: Column, cb: graft.ann.PqCodebook): Column =
+    graft.functions.pq_encode(input, cb.cents)
+
+  /** `__bin_code`: the packed sign code of the decoded vector. */
+  private def binCode(decoded: Column, th: Array[Double]): Column =
+    graft.ann.Bin.encode(decoded, th)
+
+  /** Atomic claim of the version slot, [[publishVersion]]'s claim step
+    * (the subtlest concurrency logic here — one copy):
     * exclusive create of `v<N>.claim` (a true O_EXCL CAS — see
     * tryCreateClaim; `rename` is NOT a CAS: onto an existing dir it
     * moves-into). Re-check the meta version after claiming so a flush that
@@ -1156,29 +1133,23 @@ class GraftCatalog(spark: SparkSession, root: String,
       if (!claimed || getMeta(name).currentVersion >= v)
         throw new GraftCatalog.ConcurrentFlushException(
           s"collection $name: version $v was claimed by a concurrent flush")
+      // We own the claim and v is UNPUBLISHED (meta-last invariant, re-checked
+      // above) — so any pre-existing v<N> dirs are a dead writer's orphans: a
+      // previous owner hard-crashed AFTER its staging rename but BEFORE
+      // writeMeta. They must be deleted NOW, not renamed onto: Hadoop rename
+      // onto an existing dir moves-INTO (nesting the new data as v<N>/data),
+      // after which the schema-verify read succeeds on the DEAD writer's
+      // files, writeMeta publishes them, and clearPending silently drops the
+      // live ledger — durable data loss. No concurrent writer can recreate
+      // these dirs while we hold the claim.
+      for (d <- versionDirs(name, v)) if (fs.exists(d)) fs.delete(d, true)
     } catch { case e: Throwable =>
       // EVERY abort after entry — a lost race, the meta re-check (which can
-      // itself throw on a transient meta read fault), or a torn claim
-      // write — must release what this attempt holds: a leaked fresh claim
-      // wedges the slot for staleClaimMs, a leaked staging dir holds
-      // corpus-sized bytes until a vacuum sweep.
+      // itself throw on a transient meta read fault), a torn claim write or
+      // a failed orphan sweep — must release what this attempt holds: a
+      // leaked fresh claim wedges the slot for staleClaimMs, a leaked
+      // staging dir holds corpus-sized bytes until a vacuum sweep.
       if (claimed) fs.delete(claim, false)
-      fs.delete(staging, true)
-      throw e
-    }
-    // We own the claim and v is UNPUBLISHED (meta-last invariant, re-checked
-    // above) — so any pre-existing v<N> dirs are a dead writer's orphans: a
-    // previous owner hard-crashed AFTER its staging rename but BEFORE
-    // writeMeta. They must be deleted NOW, not renamed onto: Hadoop rename
-    // onto an existing dir moves-INTO (nesting the new data as v<N>/data),
-    // after which the schema-verify read succeeds on the DEAD writer's
-    // files, writeMeta publishes them, and clearPending silently drops the
-    // live ledger — durable data loss. No concurrent writer can recreate
-    // these dirs while we hold the claim.
-    try
-      for (d <- versionDirs(name, v)) if (fs.exists(d)) fs.delete(d, true)
-    catch { case e: Throwable =>
-      fs.delete(claimPath(name, v), false)
       fs.delete(staging, true)
       throw e
     }
@@ -1237,10 +1208,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * those dirs may be ANOTHER writer's freshly published data; a fenced-out
     * writer deletes nothing but its own staging. */
   private def abortPublish(name: String, v: Int, token: String, staging: Path): Unit = {
-    if (ownsClaim(name, v, token)) {
-      versionDirs(name, v).foreach(fs.delete(_, true))
-      fs.delete(claimPath(name, v), false)
-    }
+    if (ownsClaim(name, v, token)) deleteVersion(name, v)
     fs.delete(staging, true)
   }
 
@@ -1262,14 +1230,10 @@ class GraftCatalog(spark: SparkSession, root: String,
     * collection — so any failed rename aborts the whole publish. */
   private def renameOrAbort(name: String, v: Int, token: String, staging: Path,
                             src: Path, dst: Path): Unit = {
-    val ok =
-      try fs.rename(src, dst)
-      catch { case e: Throwable => abortPublish(name, v, token, staging); throw e }
-    if (!ok) {
-      abortPublish(name, v, token, staging)
-      throw new java.io.IOException(
+    try {
+      if (!fs.rename(src, dst)) throw new java.io.IOException(
         s"collection $name: rename $src -> $dst failed while publishing v$v")
-    }
+    } catch { case e: Throwable => abortPublish(name, v, token, staging); throw e }
   }
 
   /** The optimistic-concurrency gate on publishing — see [[anchorVersion]]. */
@@ -1380,6 +1344,16 @@ class GraftCatalog(spark: SparkSession, root: String,
     }
   }
 
+  /** Stage one index sidecar as `<staging>/<kind>`: its rows
+    * ([[GraftCatalog.CentroidRow]], [[GraftCatalog.PqRow]],
+    * [[GraftCatalog.BinRow]] — each sidecar's one column definition) in a
+    * single parquet file, read back by [[IndexedLayout]] below. */
+  private def stageSidecar[R <: Product : TypeTag](staging: Path, kind: String, rows: Seq[R]): Path = {
+    val dir = new Path(staging, kind)
+    spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(dir.toString)
+    dir
+  }
+
   /** The read side's ONE view of an indexed head — what the IVF, PQ,
     * binary and multi-IVF routes, their audits and batch routes, the
     * driver-local loaders and the refresh read: the chain `base` whose
@@ -1391,13 +1365,14 @@ class GraftCatalog(spark: SparkSession, root: String,
     * only for what it uses. Built only by [[layoutOf]], which has already
     * checked that every declared sidecar exists. */
   private final class IndexedLayout(val name: String, val meta: CollectionMeta, val base: Int) {
+    import spark.implicits._
     lazy val state: DataFrame = indexedState(name, meta, base)
     def hasCells: Boolean = meta.ivfCells.isDefined
     lazy val centroids: Seq[(Long, Array[Float])] =
       versionArtifact(name, base, "centroids")(readDirNoInfer(centroidDir(name, base))
-        .collect().map(r => (r.getAs[Long]("cid"), r.getAs[Seq[Float]]("cvec").toArray)).toSeq)
+        .as[GraftCatalog.CentroidRow].collect().map(r => (r.cid, r.cvec.toArray)).toSeq)
     lazy val thresholds: Array[Double] = versionArtifact(name, base, "binth")(
-      readDirNoInfer(binDir(name, base)).orderBy("d").collect().map(_.getAs[Double]("t")))
+      readDirNoInfer(binDir(name, base)).as[GraftCatalog.BinRow].orderBy("d").collect().map(_.t))
     /** The codebook and whether its codes quantize RESIDUALS (vec −
       * cellCentroid, IVF-PQ) or decoded vectors — the sidecar's recorded
       * flag, resolved by ONE rule for every PQ reader and writer: flagless
@@ -1409,14 +1384,14 @@ class GraftCatalog(spark: SparkSession, root: String,
     lazy val pq: (graft.ann.PqCodebook, Boolean) = {
       val (cb, flag) = versionArtifact(name, base, "pqcb") {
         val sidecar = readDirNoInfer(pqDir(name, base))
-        val rows = sidecar.collect()
-        val byJ = rows.groupBy(_.getAs[Int]("j"))
+        val flagged = sidecar.columns.contains("residual")
+        val rows = (if (flagged) sidecar else sidecar.withColumn("residual", lit(false)))
+          .as[GraftCatalog.PqRow].collect()
+        val byJ = rows.groupBy(_.j)
         (graft.ann.PqCodebook((0 until meta.pqSubspaces.get).map { j =>
-          byJ(j).sortBy(_.getAs[Int]("c")).map(_.getAs[Seq[Float]]("cvec").toArray)
+          byJ(j).sortBy(_.c).map(_.cvec.toArray)
         }.toArray),
-          if (sidecar.columns.contains("residual") && rows.nonEmpty)
-            Some(rows(0).getAs[Boolean]("residual"))
-          else None)
+          Option.when(flagged && rows.nonEmpty)(rows(0).residual))
       }
       val residual = flag.getOrElse {
         require(!hasCells,
@@ -1545,11 +1520,7 @@ class GraftCatalog(spark: SparkSession, root: String,
         .getOrElse(meta.currentVersion - keepLast)
     (1 to math.min(meta.currentVersion - keepLast, chainFloor))
       .filter(v => fs.exists(versionDir(name, v)))
-      .map { v =>
-        versionDirs(name, v).foreach(fs.delete(_, true))
-        fs.delete(claimPath(name, v), false)
-        v
-      }
+      .map { v => deleteVersion(name, v); v }
   }
 
   /** Read an older snapshot (S10 versioning / time travel). A full-snapshot
@@ -1815,7 +1786,7 @@ class GraftCatalog(spark: SparkSession, root: String,
       GraftCatalog.SearchVecCol)
 
   /** A route's empty answer: no rows, columns `cols` typed by `T`. */
-  private def noRows[T <: Product : scala.reflect.runtime.universe.TypeTag](
+  private def noRows[T <: Product : TypeTag](
       cols: String*): DataFrame =
     spark.createDataFrame(Seq.empty[T]).toDF(cols: _*)
 
@@ -3370,6 +3341,15 @@ object GraftCatalog {
     * inside the segment dir (`_`-prefixed: invisible to parquet readers) so
     * the layout kind is recorded, never inferred from the data schema. */
   val DeltaMarkerFile = "_graft_delta"
+
+  /** The index sidecars' rows — each sidecar's one column definition,
+    * written by [[GraftCatalog.flush]] and read by its `IndexedLayout`:
+    * centroids one row per cell; the PQ codebook one row per (subspace `j`,
+    * codeword `c`) plus the layout flag (`residual` — absent on pre-flag
+    * sidecars); binary thresholds one row per dimension. */
+  private[collection] final case class CentroidRow(cid: Long, cvec: Seq[Float])
+  private[collection] final case class PqRow(j: Int, c: Int, cvec: Seq[Float], residual: Boolean)
+  private[collection] final case class BinRow(d: Int, t: Double)
   import CollectionMeta.VectorCol
 
   /** Mirror of the stored-vector prep for a driver-side query vector:
@@ -3403,28 +3383,10 @@ object GraftCatalog {
       require(rows.columns.contains(userVectorCol), s"missing vector column '$userVectorCol'")
     if (meta.isSchemaless) return schemalessEncode(rows, meta, userVectorCol)
     val inputCols = rows.columns.toSet
-
-    /** Shared vector prep: null/dim checks, float32 cast, cosine normalize,
-      * quantize — applied to the implicit single vector and to every
-      * declared vector field alike. */
-    def encodeVector(raw0: Column, dim: Int, label: String): Column = {
-      val raw = when(raw0.isNull,
-        raise_error(lit(s"$label must not be null"))).otherwise(raw0)
-      val dimChecked = when(size(raw) =!= dim, raise_error(concat(
-          lit(s"$label dimension mismatch: expected $dim, got "), size(raw).cast("string"))))
-        .otherwise(raw)
-      val floatVec = dimChecked.cast("array<float>")
-      val prepped = if (meta.distance == "cosine") l2_normalize(floatVec) else floatVec
-      meta.quantization match {
-        case "none" => prepped
-        case q      => quantize(prepped, q)
-      }
-    }
-
     val metaCols: Seq[Column] = meta.fields.map { f =>
       if (f.isVector) {
         require(inputCols.contains(f.name), s"missing vector column '${f.name}'")
-        encodeVector(col(f.name), meta.dimOf(f), s"vector ${f.name}").as(f.name)
+        encodeVector(meta, col(f.name), meta.dimOf(f), s"vector ${f.name}").as(f.name)
       } else if (!inputCols.contains(f.name)) {
         if (f.enableNull) lit(f.defaultValue).cast(f.dataType).as(f.name)
         else throw new IllegalArgumentException(
@@ -3456,14 +3418,31 @@ object GraftCatalog {
 
     if (meta.isMultiVector) rows.select(metaCols: _*)
     else rows.select(
-      metaCols :+ encodeVector(col(userVectorCol), meta.dim, "vector").as(VectorCol): _*)
+      metaCols :+ encodeVector(meta, col(userVectorCol), meta.dim, "vector").as(VectorCol): _*)
+  }
+
+  /** The ONE stored-vector prep: null/dim checks, float32 cast, cosine
+    * normalize, quantize — applied to the implicit single vector, to every
+    * declared vector field and to schema-less rows alike. */
+  private def encodeVector(meta: CollectionMeta, raw0: Column, dim: Int, label: String): Column = {
+    val raw = when(raw0.isNull,
+      raise_error(lit(s"$label must not be null"))).otherwise(raw0)
+    val dimChecked = when(size(raw) =!= dim, raise_error(concat(
+        lit(s"$label dimension mismatch: expected $dim, got "), size(raw).cast("string"))))
+      .otherwise(raw)
+    val floatVec = dimChecked.cast("array<float>")
+    val prepped = if (meta.distance == "cosine") l2_normalize(floatVec) else floatVec
+    meta.quantization match {
+      case "none" => prepped
+      case q      => quantize(prepped, q)
+    }
   }
 
   /** Core-v3 ingest (SURVEY.md §1.2): rows carry `_id`, `vector`, and any
     * other columns — the extras are string-coerced into the metadata map
     * (forcedStringTypeChanger, pkg/index/bitmap_index.go:48-63); `_id` must
-    * be a non-null string (core/core.go:506). Vector prep matches the typed
-    * path. */
+    * be a non-null string (core/core.go:506). Vector prep is the typed
+    * path's [[encodeVector]]. */
   private def schemalessEncode(rows: DataFrame, meta: CollectionMeta,
                                userVectorCol: String): DataFrame = {
     val idKey = graft.core.CoreMeta.IdKey
@@ -3475,17 +3454,7 @@ object GraftCatalog {
     val metaMap =
       if (metaKeys.isEmpty) map().cast("map<string,string>")
       else map(metaKeys.flatMap(k => Seq(lit(k), col(k).cast("string"))): _*)
-    val rawVec = col(userVectorCol)
-    val dimChecked = when(rawVec.isNull, raise_error(lit("vector must not be null")))
-      .otherwise(when(size(rawVec) =!= meta.dim, raise_error(concat(
-        lit(s"vector dimension mismatch: expected ${meta.dim}, got "),
-        size(rawVec).cast("string")))).otherwise(rawVec))
-    val floatVec = dimChecked.cast("array<float>")
-    val prepped = if (meta.distance == "cosine") l2_normalize(floatVec) else floatVec
-    val encoded = meta.quantization match {
-      case "none" => prepped
-      case q      => quantize(prepped, q)
-    }
-    rows.select(id.as(idKey), metaMap.as(CollectionMeta.MetaCol), encoded.as(VectorCol))
+    rows.select(id.as(idKey), metaMap.as(CollectionMeta.MetaCol),
+      encodeVector(meta, col(userVectorCol), meta.dim, "vector").as(VectorCol))
   }
 }

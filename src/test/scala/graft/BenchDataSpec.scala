@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * generator must emit EXACTLY the code Bin.encode produces over the float
   * collection's embedding for the same vec_id — the 100M Hamming row's
   * correctness rests on the query (encoded from the float collection) and
-  * the corpus (codes-only, floats never materialized) agreeing. */
+  * the corpus (codes-only, floats never materialized) agreeing. Also pins
+  * the stdout line builder's length cap (`Bench.stdoutLine`). */
 class BenchDataSpec extends SparkSpec {
 
   test("ensureBinCodeBenchData codes equal Bin.encode over ensureBenchData " +
@@ -105,5 +106,39 @@ class BenchDataSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSeq
       assert(bcTop === pqTop)
     } finally { bc.destroy(); () }
+  }
+
+  test("the bench stdout line stays under its cap with 40 long multi-line errors; " +
+    "messages keep one line of at most 100 characters and every cut entry is counted") {
+    val errors = (1 to 40).map(i => f"suite_$i%02d" ->
+      (s"job aborted in stage $i: " + "x" * 300 + "\n\tat org.apache.spark.Frame.run(Frame.scala:1)\n" +
+        "Caused by: java.io.IOException: disk full"))
+    val skipped = Seq("bin100m" -> ("deadline: 3300 s elapsed\n" + "y" * 200))
+    val priority = (1 to 200).map(i => f"query_name_$i%03d" -> i * 0.5)
+    val ratios = (1 to 12).map(i => s"flat_scan_cosine_${i}m" -> 1.23)
+    val line = Bench.stdoutLine(66.3, priority, ratios, ratios, errors, skipped, "/data/sf0.1")
+    assert(!line.contains("\n"))
+    assert(line.length <= Bench.LineCap, s"line is ${line.length} chars")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    val errs = json.get("errors")
+    assert(errs.size > 0)
+    errs.fields().forEachRemaining { e =>
+      val m = e.getValue.asText
+      assert(m.length <= Bench.MsgCap && !m.contains("\n"), m)
+      assert(m.startsWith("job aborted in stage"))
+    }
+    assert(errs.size + json.get("errors_dropped").asInt === 40)
+    val kept = json.get("queries")
+    assert(kept.size > 0)
+    assert(kept.size + json.get("queries_dropped").asInt === 200)
+    // the fixed fields are never cut
+    assert(json.get("vs_baseline").size === 12 && json.get("vs_baseline_scan_only").size === 12)
+    assert(json.get("value").asDouble === 66.3 && json.get("sf").asText === "/data/sf0.1")
+    assert(json.get("skipped").size + Option(json.get("skipped_dropped")).fold(0)(_.asInt) === 1)
+    // a clean run: no dropped counters, every entry whole
+    val clean = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Bench.stdoutLine(1.0, priority.take(5), ratios, ratios, Nil, Nil, "/data/sf0.1"))
+    assert(clean.get("queries").size === 5 && !clean.has("queries_dropped") &&
+      !clean.has("errors_dropped") && !clean.has("skipped_dropped"))
   }
 }

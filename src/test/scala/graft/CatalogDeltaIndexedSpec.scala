@@ -175,33 +175,51 @@ class CatalogDeltaIndexedSpec extends SparkSpec {
   }
 
   test("segments stay O(batch) and carry the encoded layout columns") {
-    val root = Files.createTempDirectory("graft-dix-sz").toString
-    val cat = new GraftCatalog(spark, root)
-    cat.createCollection(CollectionMeta("dsz", dim = 4, distance = "euclidean",
-      fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0),
-      pqSubspaces = Some(2), pqCodewords = Some(8), pqTrainIterations = Some(0),
-      binaryIndex = Some(true)))
-    cat.loadCollection("dsz")
-    cat.insert("dsz", clustered)
-    cat.flush("dsz")
-    cat.insert("dsz", Seq(("B1_3", 3L, Seq(0f, 100f, 0f, 0f)))
-      .toDF("id", "grp", "vector"))
-    cat.delete("dsz", Single("id", FilterExpr.Eq, "B2_4"))
-    cat.flushDelta("dsz")
-    val seg = spark.read.parquet(s"$root/dsz/v2")
-    // O(batch): exactly the two ledger rows, not the corpus
-    assert(seg.count() === 2)
-    val put = seg.where(col(GraftCatalog.DeltaOpCol) === "put").collect().head
-    val del = seg.where(col(GraftCatalog.DeltaOpCol) === "del").collect().head
-    for (c <- Seq(GraftCatalog.CellCol, GraftCatalog.PqCodeCol, GraftCatalog.BinCol)) {
-      assert(!put.isNullAt(put.fieldIndex(c)), s"put row must carry $c")
-      assert(del.isNullAt(del.fieldIndex(c)), s"del marker must not carry $c")
+    // flush and flushDelta share one encode recipe per layout column: a
+    // base row re-put with unchanged content encodes to the SAME cell,
+    // residual PQ code and sign code in the segment as in the full
+    // snapshot — on f32 and on f16 storage (the recipes read the decoded
+    // vector)
+    val reput = Seq("B0_2", "B1_5", "B3_6")
+    for (quant <- Seq("none", "f16")) {
+      val root = Files.createTempDirectory("graft-dix-sz").toString
+      val cat = new GraftCatalog(spark, root)
+      cat.createCollection(CollectionMeta("dsz", dim = 4, distance = "euclidean",
+        fields = fields, ivfCells = Some(4), ivfTrainIterations = Some(0),
+        pqSubspaces = Some(2), pqCodewords = Some(8), pqTrainIterations = Some(0),
+        binaryIndex = Some(true), quantization = quant))
+      cat.loadCollection("dsz")
+      cat.insert("dsz", clustered)
+      cat.flush("dsz")
+      cat.insert("dsz", Seq(("B1_3", 3L, Seq(0f, 100f, 0f, 0f)))
+        .toDF("id", "grp", "vector"))
+      cat.delete("dsz", Single("id", FilterExpr.Eq, "B2_4"))
+      cat.insert("dsz", clustered.where(col("id").isin(reput: _*)))
+      cat.flushDelta("dsz")
+      val seg = spark.read.parquet(s"$root/dsz/v2")
+      // O(batch): exactly the ledger rows, not the corpus
+      assert(seg.count() === 2 + reput.size, quant)
+      val put = seg.where(col("id") === "B1_3").collect().head
+      val del = seg.where(col(GraftCatalog.DeltaOpCol) === "del").collect().head
+      for (c <- Seq(GraftCatalog.CellCol, GraftCatalog.PqCodeCol, GraftCatalog.BinCol)) {
+        assert(!put.isNullAt(put.fieldIndex(c)), s"put row must carry $c ($quant)")
+        assert(del.isNullAt(del.fieldIndex(c)), s"del marker must not carry $c ($quant)")
+      }
+      // the put's encoded cell is cluster 2's (where the vector moved)
+      val base = spark.read.parquet(s"$root/dsz/v1")
+      val a2cell = base.where(col("id") === "A2").select(GraftCatalog.CellCol)
+        .collect().head.getInt(0)
+      assert(put.getInt(put.fieldIndex(GraftCatalog.CellCol)) === a2cell, quant)
+      // the re-put rows carry the base snapshot's layout bytes exactly
+      assert(spark.read.parquet(s"$root/dsz/v1_pq").select("residual").distinct()
+        .collect().map(_.getBoolean(0)).toSeq === Seq(true), "the PQ layout must be residual")
+      def layout(df: DataFrame): Set[String] = df.where(col("id").isin(reput: _*))
+        .select(concat_ws("|", col("id"), col(GraftCatalog.CellCol).cast("string"),
+          hex(col(GraftCatalog.PqCodeCol)), hex(col(GraftCatalog.BinCol))))
+        .collect().map(_.getString(0)).toSet
+      assert(layout(seg).size === reput.size)
+      assert(layout(seg) === layout(base), quant)
     }
-    // the put's encoded cell is cluster 2's (where the vector moved)
-    val a2cell = spark.read.parquet(s"$root/dsz/v1")
-      .where(col("id") === "A2").select(GraftCatalog.CellCol)
-      .collect().head.getInt(0)
-    assert(put.getInt(put.fieldIndex(GraftCatalog.CellCol)) === a2cell)
   }
 
   test("base partition pruning survives the fold (the 100 TB property)") {
