@@ -6,7 +6,7 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.PreparedPlan
+import org.apache.spark.sql.graft.{Partitions, PreparedPlan}
 import org.apache.spark.sql.types.{ArrayType, FloatType, ShortType, StringType, StructField,
   StructType}
 import org.apache.spark.storage.StorageLevel
@@ -39,6 +39,9 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   private val loaded = mutable.Map.empty[String, DataFrame]
   private val mutationCount = mutable.Map.empty[String, Int]
+  /** The scan parallelism of each resident anchor (its load or flush
+    * re-read): [[rebind]]'s partition bound, with defaultParallelism. */
+  private val anchorParts = mutable.Map.empty[String, Int]
   // r14: names whose RESIDENT state is structurally the v0 empty relation
   // (set only by loadCollection at currentVersion == 0, cleared by the
   // first row-adding mutation). Lets [[insert]] skip the upsert's
@@ -144,18 +147,30 @@ class GraftCatalog(spark: SparkSession, root: String,
     (df.schema, df.collect().toIndexedSeq)
 
   /** Drop every prepared plan of `name` — called where the resident object
-    * is swapped or retired so retired plan trees (and the unpersisted cache
-    * relations they reference) don't linger until LRU eviction. */
-  private def invalidatePrepared(name: String): Unit = {
+    * is swapped, so retired plan trees (and the unpersisted cache relations
+    * they reference) don't linger until LRU eviction. A mutation changes
+    * no published version, so it keeps the per-version artifacts. */
+  private def dropPlans(name: String): Unit =
     preparedPlans.synchronized { preparedPlans.keySet().removeIf(_._1 == name) }
+
+  /** Drop every prepared plan AND every per-version artifact of `name` —
+    * flush, load, release, drop and vacuum recovery, where the resident
+    * object is retired or a version number may come to mean other files. */
+  private def invalidatePrepared(name: String): Unit = {
+    dropPlans(name)
+    releaseArtifacts(_._1 == name)
+  }
+
+  /** Remove and release every [[versionArtifacts]] entry whose key `drop`
+    * selects. */
+  private def releaseArtifacts(drop: ((String, Int, String)) => Boolean): Unit =
     versionArtifacts.synchronized {
       val it = versionArtifacts.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (e.getKey._1 == name) { GraftCatalog.releaseArtifact(e.getValue); it.remove() }
+        if (drop(e.getKey)) { GraftCatalog.releaseArtifact(e.getValue); it.remove() }
       }
     }
-  }
 
   /** Per-(name, version) cache of the IMMUTABLE per-version artifacts the
     * distributed index rungs otherwise re-derive on EVERY request — the
@@ -168,7 +183,9 @@ class GraftCatalog(spark: SparkSession, root: String,
     * rename and vacuum removes whole versions — so a version-keyed entry
     * cannot silently go stale while the name exists; [[invalidatePrepared]]
     * (drop/release/flush/load call sites) purges a name's entries, since a
-    * re-created collection legitimately reuses version numbers. A
+    * re-created collection legitimately reuses version numbers, and
+    * [[publishVersion]] releases the superseded head's fold (`istate`,
+    * `iwinners`), which no later head reads. A
     * CROSS-driver drop+recreate is outside this instance's view, same as
     * the resident cache: reads against the deleted files fail LOUDLY (the
     * vacuum reader contract), never silently serve the old bytes. Entries
@@ -388,6 +405,7 @@ class GraftCatalog(spark: SparkSession, root: String,
   def dropCollection(name: String): Unit = {
     loaded.remove(name).foreach(_.unpersist())
     mutationCount.remove(name)
+    anchorParts.remove(name)
     anchorVersion.remove(name)
     invalidatePrepared(name)
     clearPending(name)
@@ -492,6 +510,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     loaded.remove(name).foreach(_.unpersist())
     mutationCount.remove(name)
     invalidatePrepared(name)
+    anchorParts(name) = Partitions.scanParallelism(df)
     val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     loaded(name) = cached
     anchorVersion(name) = meta.currentVersion
@@ -506,6 +525,7 @@ class GraftCatalog(spark: SparkSession, root: String,
   def releaseCollection(name: String): Unit = {
     loaded.remove(name).foreach(_.unpersist())
     mutationCount.remove(name)
+    anchorParts.remove(name)
     anchorVersion.remove(name)
     knownEmptyResident -= name
     invalidatePrepared(name)
@@ -722,11 +742,19 @@ class GraftCatalog(spark: SparkSession, root: String,
     val prev = loaded.get(name)
     val n = mutationCount.getOrElse(name, 0) + 1
     mutationCount(name) = n
+    // An upsert unions the batch's partitions onto the resident frame, so
+    // without a bound every insert adds tasks to every later search. The
+    // coalesce is narrow (no job, no shuffle) and keeps rows balanced
+    // across partitions; the bound keeps the anchor's scan parallelism,
+    // and its defaultParallelism floor keeps a collection loaded empty and
+    // filled by inserts from collapsing to one partition.
+    val capped = Partitions.strided(next,
+      math.max(anchorParts.getOrElse(name, 0), spark.sparkContext.defaultParallelism))
     val bound =
-      if (n % LineageCutEvery == 0) next.localCheckpoint(true) // eager; truncates lineage
-      else next.persist(StorageLevel.MEMORY_AND_DISK)
+      if (n % LineageCutEvery == 0) capped.localCheckpoint(true) // eager; truncates lineage
+      else capped.persist(StorageLevel.MEMORY_AND_DISK)
     loaded(name) = bound
-    invalidatePrepared(name)
+    dropPlans(name)
     prev.foreach(_.unpersist(false))
   }
 
@@ -892,6 +920,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     // check already keeps them from being SERVED, but a retired plan tree
     // pins the just-unpersisted relation until LRU eviction otherwise.
     val prev = loaded.get(name)
+    anchorParts(name) = Partitions.scanParallelism(reread)
     loaded(name) = reread.persist(StorageLevel.MEMORY_AND_DISK)
     invalidatePrepared(name)
     prev.foreach(_.unpersist(false))
@@ -1003,6 +1032,10 @@ class GraftCatalog(spark: SparkSession, root: String,
     fenceOrAbort(name, v, token, staging) // last fence before the publish
     writeMeta(meta.copy(currentVersion = v)) // meta last: the version is visible atomically
     anchorVersion(name) = v
+    // the superseded head's chain fold serves no later head (each head
+    // folds its own segments); the base's sidecars stay cached
+    releaseArtifacts { case (n, hv, kind) =>
+      n == name && hv == meta.currentVersion && (kind == "istate" || kind == "iwinners") }
     Some(v -> checked)
   }
 
@@ -1329,9 +1362,9 @@ class GraftCatalog(spark: SparkSession, root: String,
       // With the winners cached a chain probe pays base pruned scan +
       // broadcast anti-join + union of cached rows. Lifecycle: the cache
       // entry holds the only reference; when invalidatePrepared (flush /
-      // load / release / drop) or LRU eviction drops it, the ContextCleaner
-      // releases the blocks once the plan is unreachable.
-      // its OWN artifact entry so the release hooks (invalidatePrepared /
+      // load / release / drop), the next publish or LRU eviction drops it,
+      // the ContextCleaner releases the blocks once the plan is unreachable.
+      // its OWN artifact entry so the release hooks (releaseArtifacts /
       // LRU eviction) can reach and unpersist it — nested inside the
       // istate plan it would outlive every map reference
       val winners = versionArtifact(name, head, "iwinners")(

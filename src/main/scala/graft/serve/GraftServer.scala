@@ -36,9 +36,11 @@ import graft.collection.{CollectionMeta, GraftCatalog, IndexField}
   * }}}
   *
   * Built on the JDK's HttpServer + the json4s already on the Spark
-  * classpath — zero extra dependencies. Requests are serialized through a
-  * single-threaded executor (the catalog's residency map is not
-  * thread-safe; a production deployment would shard locks per collection).
+  * classpath — zero extra dependencies. The JDK server is created by
+  * [[GraftServer.httpServer]], which turns Nagle's algorithm off on every
+  * accepted socket (as gRPC-Go does): with Nagle on, each response waited
+  * ~40 ms for the client's delayed ACK. Requests run on a small pool behind
+  * a two-lane read/write gate.
   * The engine's validation/state-machine errors (bad schema, not-loaded —
   * edge/constants.go:30) map to HTTP 400 with `{"error": msg}`, mirroring
   * the reference's status-in-response contract.
@@ -47,8 +49,8 @@ import graft.collection.{CollectionMeta, GraftCatalog, IndexField}
   * server: every search is a Spark job. `/search` runs through the
   * catalog's prepared-plan cache (plan-once/execute-many — the ~22-43 ms
   * per-request Catalyst re-analysis the r8 probe measured is paid once per
-  * (resident state, query shape), leaving the ~12-21 ms scheduling floor,
-  * PLANS.md) — fine for batch/analytical clients, not for the reference's
+  * (resident state, query shape), leaving the Spark job's scheduling and
+  * task time) — fine for batch/analytical clients, not for the reference's
   * sub-millisecond HNSW point serving; THAT latency class is served by the
   * driver-local routes (searchLocal/searchLocalPq/searchLocalBin).
   */
@@ -71,9 +73,30 @@ object Serve {
   }
 }
 
+object GraftServer {
+  /** The JDK property `sun.net.httpserver.ServerConfig` reads to set
+    * TCP_NODELAY on every socket the server accepts. */
+  private[serve] val NoDelayProperty = "sun.net.httpserver.nodelay"
+
+  /** The one place a JDK [[HttpServer]] is created for graft, bound to
+    * 127.0.0.1:`port` (0 = ephemeral). Sets [[NoDelayProperty]] to `true`
+    * first, but only when it is unset: an operator's
+    * `-Dsun.net.httpserver.nodelay=false` is kept as given.
+    *
+    * Limit: the JDK reads the property once per JVM, at the first
+    * `HttpServer.create`. If another HttpServer was created earlier in the
+    * same JVM, the property set here has no effect and Nagle stays as that
+    * first creation found it; nothing outside the JDK's internals can
+    * detect this. */
+  def httpServer(port: Int): HttpServer = {
+    System.getProperties.putIfAbsent(NoDelayProperty, "true")
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
+}
+
 class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
   private val catalog = new GraftCatalog(spark, root)
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = GraftServer.httpServer(port)
   // A small pool instead of the r13 single thread, gated by [[routeGate]]:
   // driver-local probe routes run concurrently with each other (read lock —
   // they touch only immutable resident indexes, the synchronized rung

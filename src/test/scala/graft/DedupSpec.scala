@@ -200,6 +200,39 @@ class DedupSpec extends SparkSpec {
     } finally spark.conf.set(partsKey, prevParts)
   }
 
+  test("duplicateClusters: the loop's AQE gate is an absolute edge bound, not relative " +
+      "to the session default") {
+    import spark.implicits._
+    val partsKey = "spark.sql.shuffle.partitions"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val prevParts = spark.conf.get(partsKey)
+    /** The AQE values jobs started with while `body` ran. */
+    def aqeDuring(body: => Unit): Set[String] = {
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          seen.add(spark.conf.get(aqeKey)); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try body finally spark.sparkContext.removeSparkListener(listener)
+      scala.jdk.CollectionConverters.SetHasAsScala(seen).asScala.toSet
+    }
+    spark.conf.set(partsKey, "200")
+    try {
+      // 150k two-node components = 300k directed edges: past the floor
+      // (2 × 100k), far under the 200-partition default. A gate relative
+      // to that default turned AQE off here.
+      val mid = (0L until 150000L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b")
+      val onMid = aqeDuring(assert(Dedup.duplicateClusters(mid).count() === 300000L))
+      assert(!onMid.contains("false"), s"a 300k-edge graph must keep AQE on: $onMid")
+      // a floor-sized graph still runs its loop with AQE off
+      val small = (0L until 3000L).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b")
+      val onSmall = aqeDuring(assert(Dedup.duplicateClusters(small).count() === 6000L))
+      assert(onSmall.contains("false"), s"a 6k-edge graph runs its loop with AQE off: $onSmall")
+    } finally spark.conf.set(partsKey, prevParts)
+  }
+
   test("simhash banded pairs EQUAL brute-force hamming pairs (lossless for h ≤ bands−1)") {
     // 15 groups × {base, exact copy, one-token variant}: copies give
     // hamming 0 (guaranteed pairs), variants give small-but-varied hamming
