@@ -106,6 +106,38 @@ object Bench {
       dropped("skipped_dropped", skips.length - skipKept.length) + last
   }
 
+  /** The big suites' rows split into `vs_baseline` (each flat-scan row's
+    * time over the 1M parallel flat scan, 0.02-0.03 s per UPDATE-LOG.md:107,
+    * linearly extrapolated to its suite's size), `vs_baseline_scan_only`
+    * and `local_bin_100m_sec`. The driver-local 100M rows (`local_bin*`:
+    * load, per-probe latency, fold) are not flat scans: they keep raw
+    * seconds under their own key. `point_lookup*`, `*_med` and failed (≤ 0)
+    * rows take no ratio.
+    *
+    * Scan-only is a supplementary decomposition: each measured time =
+    * per-job dispatch floor (the suite's point_lookup on the same cached
+    * data — pure scheduling, no scan) + scan work. The reference's 0.025 s
+    * is an IN-PROCESS search with no dispatch cost, so the floor-subtracted
+    * ratio isolates the engine's scan throughput from Spark's constant
+    * per-job overhead (which amortizes to zero at the multi-second jobs
+    * 100 TB implies); a suite without its floor row has none. The raw
+    * vs_baseline stays the headline number. */
+  def baselineSplit(big1m: Seq[(String, Double)], big10m: Seq[(String, Double)],
+                    bin100m: Seq[(String, Double)])
+      : (Seq[(String, Double)], Seq[(String, Double)], Seq[(String, Double)]) = {
+    val (localBin100m, scanBin100m) = bin100m.partition(_._1.contains("local_bin"))
+    val suites = Seq(big1m -> Baseline1mFlatScanSec, big10m -> Baseline1mFlatScanSec * 10,
+      scanBin100m -> Baseline1mFlatScanSec * 100)
+    def ratios(scanOnly: Boolean) = suites.flatMap { case (suite, base) =>
+      val floor = if (!scanOnly) Some(0.0) else suite.collectFirst {
+        case (n, t) if n.startsWith("point_lookup") && !n.endsWith("_med") && t > 0 => t }
+      floor.toSeq.flatMap(f => suite.collect {
+        case (n, t) if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") =>
+          n -> math.round(math.max(0.0, t - f) / base * 100.0) / 100.0 })
+    }
+    (ratios(scanOnly = false), ratios(scanOnly = true), localBin100m)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -296,38 +328,7 @@ object Bench {
       // flat scans: they report raw seconds under their own key, never as
       // ratios against the flat-scan baseline
       val bin100m = rows("bin100m")
-      val (localBin100m, scanBin100m) = bin100m.partition(_._1.contains("local_bin"))
-      // Baseline rows: 1M parallel flat scan 0.02-0.03 s (UPDATE-LOG.md:107);
-      // 10M is the linear extrapolation of the same number.
-      val vsBaseline =
-        big1m.collect { case (n, t)
-            if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") =>
-          n -> math.round(t / Baseline1mFlatScanSec * 100.0) / 100.0 } ++
-        big10m.collect { case (n, t)
-            if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") =>
-          n -> math.round(t / (Baseline1mFlatScanSec * 10) * 100.0) / 100.0 } ++
-        scanBin100m.collect { case (n, t)
-            if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") =>
-          n -> math.round(t / (Baseline1mFlatScanSec * 100) * 100.0) / 100.0 }
-      // Supplementary decomposition: each measured time = per-job dispatch
-      // floor (point_lookup on the same cached data — pure scheduling, no
-      // scan) + scan work. The reference's 0.025 s is an IN-PROCESS search
-      // with no dispatch cost, so the floor-subtracted ratio isolates the
-      // engine's scan throughput from Spark's constant per-job overhead
-      // (which amortizes to zero at the multi-second jobs 100 TB implies).
-      // The raw vs_baseline above stays the headline number.
-      val vsBaselineScanOnly = {
-        def adj(suite: Seq[(String, Double)], base: Double) = {
-          val floor = suite.collectFirst {
-            case (n, t) if n.startsWith("point_lookup") && !n.endsWith("_med") && t > 0 => t
-          }
-          suite.collect { case (n, t)
-              if t > 0 && !n.startsWith("point_lookup") && !n.endsWith("_med") && floor.isDefined =>
-            n -> math.round(math.max(0.0, t - floor.get) / base * 100.0) / 100.0 }
-        }
-        adj(big1m, Baseline1mFlatScanSec) ++ adj(big10m, Baseline1mFlatScanSec * 10) ++
-          adj(scanBin100m, Baseline1mFlatScanSec * 100)
-      }
+      val (vsBaseline, vsBaselineScanOnly, localBin100m) = baselineSplit(big1m, big10m, bin100m)
 
       val total = results.map(_._2).filter(_ > 0).sum
       val suiteOrder = Seq("results", "big1m", "big10m", "ivf1m", "pq1m",

@@ -37,42 +37,45 @@ class GraftCatalog(spark: SparkSession, root: String,
   /** User-facing vector column name on ingest/search results. */
   val UserVectorCol = "vector"
 
-  private val loaded = mutable.Map.empty[String, DataFrame]
-  private val mutationCount = mutable.Map.empty[String, Int]
-  /** The scan parallelism of each resident anchor (its load or flush
-    * re-read): [[rebind]]'s partition bound, with defaultParallelism. */
-  private val anchorParts = mutable.Map.empty[String, Int]
-  // r14: names whose RESIDENT state is structurally the v0 empty relation
-  // (set only by loadCollection at currentVersion == 0, cleared by the
-  // first row-adding mutation). Lets [[insert]] skip the upsert's
-  // anti-join+union against a provably-empty base — the initial bulk load
-  // of every create→load→insert lifecycle otherwise drags that dead plan
-  // through every downstream flush/search evaluation (guide §1.2: remove
-  // work the job provably doesn't need).
-  private val knownEmptyResident = mutable.Set.empty[String]
+  /** One loaded collection's in-memory state — the reference's one
+    * load/release state machine (edge/edge_state_manager.go) as one record.
+    * Every operation builds its next record whole and then swaps it in, so
+    * one that throws leaves the previous record — frame and ledger — intact.
+    *
+    * @param frame the RESIDENT state: the anchor plus every mutation since.
+    * @param anchorVersion the published version the frame is anchored on,
+    *   advanced by every publish. Publishing REQUIRES it to equal
+    *   `meta.currentVersion`: a frame anchored below the head never folded
+    *   the segments another driver published in between, so a full flush
+    *   would compact those acknowledged, durable changes AWAY — silent
+    *   cross-driver data loss the claim CAS cannot catch (the slot the
+    *   stale writer claims IS free). Stale writers re-load (discarding
+    *   unflushed local mutations) and retry.
+    * @param anchorParts the scan parallelism of the anchor (the load or
+    *   flush re-read): with defaultParallelism, [[commit]]'s partition bound.
+    * @param mutations mutations since the load or the last full flush: the
+    *   frame's lineage-cut cadence ([[LineageCutEvery]]).
+    * @param knownEmpty the frame is the v0 empty relation (a load at v0,
+    *   until the first row-adding mutation), so [[insert]] skips the
+    *   upsert's anti-join+union against it — a dead plan every downstream
+    *   flush/search of a create→load→insert lifecycle would otherwise carry.
+    * @param ledger the changes since the last flush; None when none. */
+  private case class Residency(frame: DataFrame, anchorVersion: Int, anchorParts: Int,
+                               mutations: Int = 0, knownEmpty: Boolean = false,
+                               ledger: Option[Ledger] = None) {
+    def release(): Unit = { frame.unpersist(); ledger.foreach(_.rows.unpersist(false)) }
+  }
 
-  /** The published version each resident copy is anchored on — set by
-    * [[loadCollection]], advanced by every successful flush/flushDelta.
-    * Publishing REQUIRES `anchor == meta.currentVersion` (optimistic
-    * concurrency over the meta head): a resident state anchored below the
-    * head never folded the segments another driver published in between, so
-    * a full flush would compact those acknowledged, durable changes AWAY —
-    * silent cross-driver data loss, and the claim CAS alone cannot catch it
-    * (the slot the stale writer claims IS free). Stale writers re-load
-    * (discarding unflushed local mutations — the documented re-anchor
-    * semantics) and retry. */
-  private val anchorVersion = mutable.Map.empty[String, Int]
+  /** The pending-change ledger: every insert/delete/applyChanges batch
+    * since the last flush as `(collection columns…, __op, __seq)` — puts
+    * carry the validated row, deletes the pk with the rest NULL.
+    * [[flushDelta]] writes EXACTLY this as an O(changes) delta segment — the
+    * reference's append-a-WAL-segment shape (diskv/db.go bitcask segments)
+    * instead of an O(corpus) rewrite per flush. `seq` is the last batch's
+    * sequence number, which is also the batch count: the ledger's cadence. */
+  private case class Ledger(rows: DataFrame, seq: Long)
 
-  /** Per-collection pending-change ledger since the last flush: the rows of
-    * every insert/delete/applyChanges as `(collection columns…, __op, __seq)`
-    * — puts carry the validated row, deletes carry the pk with the rest
-    * NULL. [[flushDelta]] writes EXACTLY this ledger as an O(changes) delta
-    * segment instead of flush's O(corpus) snapshot rewrite — the reference's
-    * append-a-WAL-segment shape (diskv/db.go bitcask segments) at 100 TB,
-    * where rewriting the corpus per flush is the scale-killer. */
-  private val pending = mutable.Map.empty[String, DataFrame]
-  private val pendingCount = mutable.Map.empty[String, Int]
-  private val pendingSeq = mutable.Map.empty[String, Long]
+  private val residents = mutable.Map.empty[String, Residency]
 
   /** Prepared (plan-once/execute-many) plans of every distributed search
     * route, keyed by (collection, SHAPE): the route's tag plus everything
@@ -82,7 +85,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * comparison, not an epoch protocol — a plan over replaced state is
     * unreachable by construction (PreparedSearchSpec pins this). Two
     * anchors exist: the flat, hybrid and multi routes anchor on the
-    * RESIDENT DataFrame (every mutation ([[rebind]]), load and release
+    * RESIDENT DataFrame (every mutation ([[commit]]), load and release
     * swaps it); the IVF, PQ, binary and multi-IVF routes anchor on the
     * memoized [[indexedState]] snapshot (a new version is a new object).
     * `prepared = None` is a NEGATIVE entry: the shape's placeholder folded
@@ -403,12 +406,7 @@ class GraftCatalog(spark: SparkSession, root: String,
   }
 
   def dropCollection(name: String): Unit = {
-    loaded.remove(name).foreach(_.unpersist())
-    mutationCount.remove(name)
-    anchorParts.remove(name)
-    anchorVersion.remove(name)
-    invalidatePrepared(name)
-    clearPending(name)
+    releaseCollection(name)
     fs.delete(colDir(name), true)
   }
 
@@ -487,7 +485,7 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   // ---- residency state machine ----
 
-  def isLoaded(name: String): Boolean = loaded.contains(name)
+  def isLoaded(name: String): Boolean = residents.contains(name)
 
   /** Load the latest snapshot into memory (S8 + Load RPC). A delta-chain
     * head ([[flushDelta]]) folds base + segments on the way in. Re-anchoring
@@ -495,48 +493,42 @@ class GraftCatalog(spark: SparkSession, root: String,
     * later [[flushDelta]] cannot resurrect changes the re-load threw away. */
   def loadCollection(name: String): DataFrame = {
     val meta = getMeta(name)
-    clearPending(name)
+    // the fold is the step that fails (a vacuumed or missing chain
+    // version), so it runs before anything is released: a failed re-load
+    // keeps the previous record whole, its ledger included
     val df =
       if (meta.currentVersion == 0)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.structType)
       else foldChain(name, meta, meta.currentVersion)
-    // A re-load (re-anchor) must release the PREVIOUS resident copy — every
-    // other residency swap (release/drop/flush rebind) unpersists, and the
-    // fresh anchor also restarts the lineage-cut cadence. Unpersist BEFORE
-    // persisting the new anchor: when no mutation happened between loads
-    // the two plans are sameResult, so persist-then-unpersist would drop
-    // the single shared CacheManager entry and leave the "re-loaded"
-    // collection silently non-resident.
-    loaded.remove(name).foreach(_.unpersist())
-    mutationCount.remove(name)
-    invalidatePrepared(name)
-    anchorParts(name) = Partitions.scanParallelism(df)
-    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    loaded(name) = cached
-    anchorVersion(name) = meta.currentVersion
-    if (meta.currentVersion == 0) knownEmptyResident += name
-    else knownEmptyResident -= name
-    cached
+    // Release the previous record BEFORE planning and persisting the new
+    // anchor: when no mutation happened between loads the two plans are
+    // sameResult, so persist-then-unpersist would drop the single shared
+    // CacheManager entry and leave the "re-loaded" collection silently
+    // non-resident, and planning first would plan the cache scan (no file
+    // scan, so scanParallelism reads 0). A fresh record also restarts both
+    // lineage-cut cadences.
+    releaseCollection(name)
+    val parts = Partitions.scanParallelism(df)
+    val r = Residency(df.persist(StorageLevel.MEMORY_AND_DISK), meta.currentVersion, parts,
+      knownEmpty = meta.currentVersion == 0)
+    residents(name) = r
+    r.frame
   }
 
   /** Release from memory (Release RPC → unpersist). Unflushed mutations —
     * resident state AND the pending-change ledger — are discarded, matching
     * the reference's release-without-flush semantics. */
   def releaseCollection(name: String): Unit = {
-    loaded.remove(name).foreach(_.unpersist())
-    mutationCount.remove(name)
-    anchorParts.remove(name)
-    anchorVersion.remove(name)
-    knownEmptyResident -= name
+    residents.remove(name).foreach(_.release())
     invalidatePrepared(name)
-    clearPending(name)
   }
 
   /** Serving-layer recovery hook for a reader that lost a vacuum race:
     * drop every cached derivation for `name` (prepared plans + per-version
     * artifacts) and, if a resident copy is loaded, re-anchor it on the
     * published head — the same re-load [[StaleResidentException]] demands.
-    * The snapshot rungs (searchIvf/searchPq/searchBinary) don't need
+    * A re-load that fails keeps the resident record, ledger included. The
+    * snapshot rungs (searchIvf/searchPq/searchBinary) don't need
     * residency: their next call re-reads meta and picks the new head, so
     * for them the purge alone is the recovery. */
   def recoverAfterVacuumRace(name: String): Unit = {
@@ -547,12 +539,12 @@ class GraftCatalog(spark: SparkSession, root: String,
   /** The current RESIDENT state (mutations applied, possibly unflushed) —
     * unlike [[loadCollection]], which re-anchors on the latest snapshot.
     * Fails if the collection is not loaded. */
-  def resident(name: String): DataFrame = loadedOrThrow(name)
+  def resident(name: String): DataFrame = residency(name).frame
 
   /** The reference's ErrCollectionNotLoad behavior (edge/constants.go:30,
     * authorization check edge/edge_helper.go:75-83). */
-  private def loadedOrThrow(name: String): DataFrame =
-    loaded.getOrElse(name,
+  private def residency(name: String): Residency =
+    residents.getOrElse(name,
       throw new IllegalStateException(s"collection $name is not loaded in memory"))
 
   /** Snapshot layout columns (IVF cell, PQ code) are index artifacts, not
@@ -563,13 +555,13 @@ class GraftCatalog(spark: SparkSession, root: String,
 
   // ---- pending-change ledger (delta-flush support) ----
 
-  /** Append one mutation batch to the ledger. Rows are stamped with the
+  /** `cur` with one mutation batch appended. Rows are stamped with the
     * batch's sequence number — the fold's LWW order across delta segments is
     * `(segment version, __seq, op)`, so later batches beat earlier ones and
     * an equal-seq put/del pair resolves to the put ("put" > "del" on every
     * engine path). Within one batch, at most one row per pk is the caller's
     * contract (same as [[Mutations.upsert]]). The ledger is persisted with
-    * the same lineage-cut cadence as [[rebind]].
+    * the same lineage-cut cadence as the resident frame ([[commit]]).
     *
     * Pre-base mutations are not tracked: [[flushDelta]] needs a base
     * snapshot, and the full [[flush]] that creates one clears the ledger —
@@ -579,7 +571,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * rows against the base snapshot's persisted sidecars at segment-write
     * time (no retrain; see [[decorateSegment]]).
     *
-    * Laziness contract (the standard Spark one, same as [[rebind]]): put
+    * Laziness contract (the standard Spark one, same as [[commit]]): put
     * batches are held as plans over the caller's DataFrame and evaluated at
     * flush/checkpoint time — callers must not mutate an input's backing
     * files between the mutation call and the flushDelta that persists it
@@ -588,28 +580,20 @@ class GraftCatalog(spark: SparkSession, root: String,
     * rule forbids deriving a put batch from THIS collection's own
     * [[resident]] view (read-modify-write loops): resident lineage is
     * localCheckpointed and REBOUND by the very mutation being appended —
-    * the old checkpoint's blocks are released on a later rebind/flush, so
+    * the old checkpoint's blocks are released on a later mutation/flush, so
     * a lazy plan over them can become unrecomputable before the segment
     * writes. Materialize such batches first (`.localCheckpoint(true)`, or
     * write/read a scratch table) and pass the materialized frame. */
   private def tracksPending(meta: CollectionMeta): Boolean =
     meta.currentVersion > 0
 
-  private def appendPending(name: String, meta: CollectionMeta,
-                            rows: DataFrame, op: String): Unit = {
-    if (!tracksPending(meta)) return
-    val seq = pendingSeq.getOrElse(name, 0L) + 1
-    pendingSeq(name) = seq
+  private def appendPending(cur: Option[Ledger], rows: DataFrame, op: String): Ledger = {
+    val seq = cur.fold(0L)(_.seq) + 1
     val stamped = rows
       .withColumn(GraftCatalog.DeltaOpCol, lit(op))
       .withColumn(GraftCatalog.DeltaSeqCol, lit(seq))
-    val merged = pending.get(name) match {
-      case Some(cur) => cur.unionByName(stamped, allowMissingColumns = true)
-      case None      => stamped
-    }
-    val n = pendingCount.getOrElse(name, 0) + 1
-    pendingCount(name) = n
-    // LAZY checkpoint on the cadence: cuts LOGICAL lineage like rebind's,
+    val merged = cur.fold(stamped)(_.rows.unionByName(stamped, allowMissingColumns = true))
+    // LAZY checkpoint on the cadence: cuts LOGICAL lineage like the frame's,
     // but the materialization happens only when something evaluates the
     // ledger (flushDelta) — a workload that full-flushes and never
     // delta-flushes pays nothing for the bookkeeping (an EAGER cut here
@@ -619,28 +603,19 @@ class GraftCatalog(spark: SparkSession, root: String,
     // materializes for real — without it a 10k-mutation stream hands
     // flushDelta a 10k-deep union RDD graph (DAGScheduler recursion /
     // task-serialization blow-up)
-    val bound =
-      if (n % EagerCutEvery == 0) merged.localCheckpoint(true)
-      else if (n % LineageCutEvery == 0) merged.localCheckpoint(false)
-      else merged.persist(StorageLevel.MEMORY_AND_DISK)
-    val prev = pending.get(name)
-    pending(name) = bound
-    prev.foreach(_.unpersist(false))
+    Ledger(
+      if (seq % EagerCutEvery == 0) merged.localCheckpoint(true)
+      else if (seq % LineageCutEvery == 0) merged.localCheckpoint(false)
+      else merged.persist(StorageLevel.MEMORY_AND_DISK),
+      seq)
   }
 
   /** Delete-marker rows for the ledger: the pk, everything else NULL (the
     * fold only reads a del winner's key). */
-  private def delMarkers(name: String, keys: DataFrame, pk: String): DataFrame = {
-    val schema = loadedOrThrow(name).schema
+  private def delMarkers(schema: StructType, keys: DataFrame, pk: String): DataFrame = {
     val cols = col(pk) +: schema.fields.toIndexedSeq.filter(_.name != pk)
       .map(f => lit(null).cast(f.dataType).as(f.name))
     keys.select(cols: _*)
-  }
-
-  private def clearPending(name: String): Unit = {
-    pending.remove(name).foreach(_.unpersist(false))
-    pendingCount.remove(name)
-    pendingSeq.remove(name)
   }
 
   // ---- ingest / mutation ----
@@ -653,18 +628,13 @@ class GraftCatalog(spark: SparkSession, root: String,
   def insert(name: String, rows: DataFrame): Unit = {
     val meta = getMeta(name)
     val validated = GraftCatalog.validateAndEncode(rows, meta, UserVectorCol)
-    val pk = meta.idColumn
     // the v0-empty base contributes nothing to the upsert (anti-join of an
     // empty base = empty, union = the batch) — and validateAndEncode emits
     // columns in meta-field order, the same order the empty relation has,
     // so the resident schema is unchanged by the skip
-    val base = loadedOrThrow(name)
-    val next =
-      if (knownEmptyResident(name)) validated
-      else Mutations.upsert(base, validated, pk)
-    knownEmptyResident -= name
-    appendPending(name, meta, validated, "put")
-    rebind(name, next)
+    val r = residency(name)
+    val next = if (r.knownEmpty) validated else Mutations.upsert(r.frame, validated, meta.idColumn)
+    commit(name, r, meta, next, knownEmpty = false, Seq(validated -> "put"))
   }
 
   /** Delete rows matching a conjunctive filter (P5). Schema-less
@@ -674,23 +644,23 @@ class GraftCatalog(spark: SparkSession, root: String,
     * are deleted, per the index semantics "absent key = no postings". */
   def delete(name: String, filter: FilterExpr): Unit = {
     val meta = getMeta(name)
-    val cur = loadedOrThrow(name)
+    val r = residency(name)
     val pred: Column =
       if (meta.isSchemaless)
         graft.core.CoreMeta.filterColumn(
           col(CollectionMeta.MetaCol), col(meta.idColumn), filter)
       else filter.toColumn
     // ledger first: the keys matching AT DELETE TIME, MATERIALIZED now —
-    // rebind unpersists the pre-delete resident `cur` in this same call, so
-    // a lazy marker plan would re-execute the whole resident lineage (an
+    // the commit unpersists the pre-delete frame in this same call, so a
+    // lazy marker plan would re-execute the whole resident lineage (an
     // O(corpus) recompute hiding inside the O(changes) flushDelta); the
-    // eager checkpoint scans the still-cached state instead and pins O(keys)
-    if (tracksPending(meta))
-      appendPending(name, meta,
-        delMarkers(name, cur.where(pred <=> lit(true)).select(col(meta.idColumn)), meta.idColumn)
-          .localCheckpoint(true),
-        "del")
-    rebind(name, cur.where(!(pred <=> lit(true))))
+    // eager checkpoint scans the still-cached state and pins O(keys)
+    val markers =
+      if (!tracksPending(meta)) Nil
+      else Seq(delMarkers(r.frame.schema,
+        r.frame.where(pred <=> lit(true)).select(col(meta.idColumn)), meta.idColumn)
+        .localCheckpoint(true) -> "del")
+    commit(name, r, meta, r.frame.where(!(pred <=> lit(true))), r.knownEmpty, markers)
   }
 
   /** WAL replay (S9, the Spark shape of diskv's startup replay —
@@ -723,39 +693,48 @@ class GraftCatalog(spark: SparkSession, root: String,
     // known-empty base (fresh v0 load — the WAL-replay-into-empty path)
     // both joins vanish: anti-join of empty = empty, dels hit nothing,
     // next = the validated puts.
-    val base = loadedOrThrow(name)
+    val r = residency(name)
     val next =
-      if (knownEmptyResident(name)) validated
-      else Mutations.deleteByKeys(base, latest.select(col(pk)), pk)
-        .unionByName(validated)
-    knownEmptyResident -= name // put winners may add rows
-    appendPending(name, meta, validated, "put")
-    appendPending(name, meta, delMarkers(name, delKeys, pk), "del")
-    rebind(name, next)
+      if (r.knownEmpty) validated
+      else Mutations.deleteByKeys(r.frame, latest.select(col(pk)), pk).unionByName(validated)
+    commit(name, r, meta, next, knownEmpty = false, // put winners may add rows
+      Seq(validated -> "put", delMarkers(r.frame.schema, delKeys, pk) -> "del"))
   }
 
-  /** Swap the resident DataFrame: persist (or checkpoint) the new state
-    * FIRST, then unpersist the replaced one — the round-1 path leaked the
-    * old cached copy on every mutation (executor-memory leak) and let
-    * lineage grow unboundedly. Plan depth is now ≤ [[LineageCutEvery]]. */
-  private def rebind(name: String, next: DataFrame): Unit = {
-    val prev = loaded.get(name)
-    val n = mutationCount.getOrElse(name, 0) + 1
-    mutationCount(name) = n
-    // An upsert unions the batch's partitions onto the resident frame, so
-    // without a bound every insert adds tasks to every later search. The
-    // coalesce is narrow (no job, no shuffle) and keeps rows balanced
-    // across partitions; the bound keeps the anchor's scan parallelism,
-    // and its defaultParallelism floor keeps a collection loaded empty and
-    // filled by inserts from collapsing to one partition.
-    val capped = Partitions.strided(next,
-      math.max(anchorParts.getOrElse(name, 0), spark.sparkContext.defaultParallelism))
+  /** Commit one mutation as one record update: the ledger with `batches`
+    * appended (when the collection tracks them) and `next` bound as the
+    * resident frame are both built before the swap, so a mutation that
+    * throws — an eager cut evaluating a bad batch — leaves the previous
+    * record whole. The new frame is persisted (or checkpointed) FIRST and
+    * the replaced one unpersisted after — the round-1 path leaked the old
+    * cached copy on every mutation (executor-memory leak) and let lineage
+    * grow unboundedly. Plan depth is now ≤ [[LineageCutEvery]]. */
+  private def commit(name: String, r: Residency, meta: CollectionMeta, next: DataFrame,
+                     knownEmpty: Boolean, batches: Seq[(DataFrame, String)]): Unit = {
+    val n = r.mutations + 1
+    var ledger = r.ledger
+    def dropNewLedger(): Unit = if (ledger ne r.ledger) ledger.foreach(_.rows.unpersist(false))
     val bound =
-      if (n % LineageCutEvery == 0) capped.localCheckpoint(true) // eager; truncates lineage
-      else capped.persist(StorageLevel.MEMORY_AND_DISK)
-    loaded(name) = bound
+      try {
+        if (tracksPending(meta)) batches.foreach { case (rows, op) =>
+          val appended = appendPending(ledger, rows, op)
+          dropNewLedger() // an intermediate of this call
+          ledger = Some(appended)
+        }
+        // An upsert unions the batch's partitions onto the resident frame,
+        // so without a bound every insert adds tasks to every later search.
+        // The coalesce is narrow (no job, no shuffle) and balanced; the
+        // bound keeps the anchor's scan parallelism, and its
+        // defaultParallelism floor keeps a collection loaded empty and
+        // filled by inserts from collapsing to one partition.
+        val capped = Partitions.strided(next,
+          math.max(r.anchorParts, spark.sparkContext.defaultParallelism))
+        if (n % LineageCutEvery == 0) capped.localCheckpoint(true) // eager; truncates lineage
+        else capped.persist(StorageLevel.MEMORY_AND_DISK)
+      } catch { case e: Throwable => dropNewLedger(); throw e }
+    residents(name) = r.copy(frame = bound, mutations = n, knownEmpty = knownEmpty, ledger = ledger)
     dropPlans(name)
-    prev.foreach(_.unpersist(false))
+    r.release() // a collection that tracks no ledger has none to release
   }
 
   /** Persist the in-memory state as a new snapshot version (S7 Flush): the
@@ -766,8 +745,9 @@ class GraftCatalog(spark: SparkSession, root: String,
     * current version. */
   def flush(name: String): Int = {
     val meta = getMeta(name)
-    val df = loadedOrThrow(name)
-    requireFreshAnchor(name, meta)
+    val r = residency(name)
+    val df = r.frame
+    requireFreshAnchor(r, meta)
     val (v, reread) = publishVersion(name, meta) { (staging, v) =>
       val stagingData = new Path(staging, "data")
       val pk = meta.idColumn
@@ -914,18 +894,18 @@ class GraftCatalog(spark: SparkSession, root: String,
         .filter(_ < v)
         .foreach(deleteVersion(name, _))
     }
-    // Re-anchor residency on the written snapshot: lineage collapses to a
-    // parquet scan and the pre-flush cached copy is released. Prepared
-    // plans over the pre-flush object are purged here too — the identity
-    // check already keeps them from being SERVED, but a retired plan tree
-    // pins the just-unpersisted relation until LRU eviction otherwise.
-    val prev = loaded.get(name)
-    anchorParts(name) = Partitions.scanParallelism(reread)
-    loaded(name) = reread.persist(StorageLevel.MEMORY_AND_DISK)
+    // Re-anchor residency on the written snapshot with one new record:
+    // lineage collapses to a parquet scan, the pre-flush cached copy is
+    // released, and so is the ledger, which the full snapshot subsumes.
+    // Prepared plans over the pre-flush object are purged here too — the
+    // identity check already keeps them from being SERVED, but a retired
+    // plan tree pins the just-unpersisted relation until LRU eviction
+    // otherwise.
+    val parts = Partitions.scanParallelism(reread)
+    residents(name) = Residency(reread.persist(StorageLevel.MEMORY_AND_DISK), v, parts,
+      knownEmpty = r.knownEmpty)
     invalidatePrepared(name)
-    prev.foreach(_.unpersist(false))
-    mutationCount(name) = 0
-    clearPending(name) // the full snapshot subsumes the ledger
+    r.release()
     v
   }
 
@@ -961,12 +941,12 @@ class GraftCatalog(spark: SparkSession, root: String,
     * Published through the same [[publishVersion]] as [[flush]]. */
   def flushDelta(name: String): Int = {
     val meta = getMeta(name)
-    loadedOrThrow(name) // mutations imply residency; keep the error shape uniform
-    requireFreshAnchor(name, meta)
+    val r = residency(name) // mutations imply residency; keep the error shape uniform
+    requireFreshAnchor(r, meta)
     require(meta.currentVersion > 0,
       s"collection $name has no base snapshot — run a full flush before delta flushes")
-    val log0 = pending.getOrElse(name, throw new IllegalStateException(
-      s"collection $name has no pending changes to delta-flush"))
+    val log0 = r.ledger.getOrElse(throw new IllegalStateException(
+      s"collection $name has no pending changes to delta-flush")).rows
     val log = decorateSegment(name, meta, log0)
     val published = publishVersion(name, meta) { (staging, v) =>
       val stagingData = new Path(staging, "data")
@@ -995,8 +975,10 @@ class GraftCatalog(spark: SparkSession, root: String,
     // the chain behind a delta head stays live even when versioning=false —
     // the base + sibling segments ARE the current state; only a full flush
     // (compaction) may prune them. An empty ledger published nothing: drop
-    // its empty frames all the same.
-    clearPending(name)
+    // its empty frames all the same. The record keeps its frame and its
+    // mutation count (the frame's cadence runs on across delta flushes).
+    residents.updateWith(name)(_.map(_.copy(ledger = None)))
+    log0.unpersist(false)
     published.fold(meta.currentVersion)(_._1)
   }
 
@@ -1031,7 +1013,7 @@ class GraftCatalog(spark: SparkSession, root: String,
       catch { case e: Throwable => abortPublish(name, v, token, staging); throw e }
     fenceOrAbort(name, v, token, staging) // last fence before the publish
     writeMeta(meta.copy(currentVersion = v)) // meta last: the version is visible atomically
-    anchorVersion(name) = v
+    residents.updateWith(name)(_.map(_.copy(anchorVersion = v)))
     // the superseded head's chain fold serves no later head (each head
     // folds its own segments); the base's sidecars stay cached
     releaseArtifacts { case (n, hv, kind) =>
@@ -1052,7 +1034,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     require(meta.currentVersion > 0,
       s"collection $name: delta flushes require a flushed base snapshot — " +
         "run a full flush first")
-    decorateSegment(name, meta, loadedOrThrow(name).limit(0))
+    decorateSegment(name, meta, resident(name).limit(0))
     ()
   }
 
@@ -1172,9 +1154,9 @@ class GraftCatalog(spark: SparkSession, root: String,
       // writeMeta. They must be deleted NOW, not renamed onto: Hadoop rename
       // onto an existing dir moves-INTO (nesting the new data as v<N>/data),
       // after which the schema-verify read succeeds on the DEAD writer's
-      // files, writeMeta publishes them, and clearPending silently drops the
-      // live ledger — durable data loss. No concurrent writer can recreate
-      // these dirs while we hold the claim.
+      // files, writeMeta publishes them, and the live ledger is dropped as
+      // if it were published — durable data loss. No concurrent writer can
+      // recreate these dirs while we hold the claim.
       for (d <- versionDirs(name, v)) if (fs.exists(d)) fs.delete(d, true)
     } catch { case e: Throwable =>
       // EVERY abort after entry — a lost race, the meta re-check (which can
@@ -1269,16 +1251,15 @@ class GraftCatalog(spark: SparkSession, root: String,
     } catch { case e: Throwable => abortPublish(name, v, token, staging); throw e }
   }
 
-  /** The optimistic-concurrency gate on publishing — see [[anchorVersion]]. */
-  private def requireFreshAnchor(name: String, meta: CollectionMeta): Unit = {
-    val anchor = anchorVersion.getOrElse(name, meta.currentVersion)
-    if (anchor != meta.currentVersion)
+  /** The optimistic-concurrency gate on publishing — see
+    * [[Residency]]'s `anchorVersion`. */
+  private def requireFreshAnchor(r: Residency, meta: CollectionMeta): Unit =
+    if (r.anchorVersion != meta.currentVersion)
       throw new GraftCatalog.StaleResidentException(
-        s"collection ${meta.name}: resident state is anchored on v$anchor but the " +
+        s"collection ${meta.name}: resident state is anchored on v${r.anchorVersion} but the " +
           s"published head is v${meta.currentVersion} (a concurrent writer flushed) — " +
           "re-load the collection before flushing; compacting the stale resident state " +
           "would silently drop the other writer's published changes")
-  }
 
   // ---- delta-chain fold ----
 
@@ -1469,7 +1450,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     * latest snapshot when unloaded) + on-disk bytes of the current version. */
   def info(name: String): GraftCatalog.CollectionInfo = {
     val meta = getMeta(name)
-    val rows = loaded.get(name).map(_.count()).getOrElse(
+    val rows = residents.get(name).map(_.frame.count()).getOrElse(
       if (meta.currentVersion == 0) 0L else snapshot(name).count())
     val bytes =
       if (meta.currentVersion == 0) 0L
@@ -1789,7 +1770,7 @@ class GraftCatalog(spark: SparkSession, root: String,
       : (DataFrame, CollectionMeta, Array[Float]) = {
     val meta = getMeta(name)
     require(!meta.isMultiVector, s"collection $name is multi-vector; use searchMulti")
-    val df = loadedOrThrow(name)
+    val df = resident(name)
     require(queryVector.length == meta.dim,
       s"vector dimension mismatch: expected ${meta.dim}, got ${queryVector.length}")
     (df, meta, GraftCatalog.prepareQueryVector(queryVector, meta))
@@ -1876,7 +1857,7 @@ class GraftCatalog(spark: SparkSession, root: String,
         customDistance = Some(queryDistance(meta, VectorCol, q))),
       metaFilterColumn(meta, filter), overFetch)
 
-  def count(name: String): Long = loadedOrThrow(name).count()
+  def count(name: String): Long = resident(name).count()
 
   /** The filter AST as a predicate over this collection's rows — typed
     * collections compare the declared columns directly (the predicate
@@ -2035,7 +2016,7 @@ class GraftCatalog(spark: SparkSession, root: String,
     if (meta.ivfCells.isEmpty) {
       // flat fallback over the loaded collection (same residency contract
       // as single-query search — no flush required)
-      val (corpus, vc) = withDecoded(applyFilter(loadedOrThrow(name), meta, filter), meta)
+      val (corpus, vc) = withDecoded(applyFilter(resident(name), meta, filter), meta)
       return graft.ann.Ann.bruteForceTopK(corpus, qdf, topK,
         meta.idColumn, vc, "__audit_qid", "__audit_qvec", meta.distance)
         .select(col("__audit_qid").as("qid"), col(meta.idColumn), col("dist"), col("rn"))
@@ -3100,7 +3081,7 @@ class GraftCatalog(spark: SparkSession, root: String,
       : (DataFrame, CollectionMeta, Seq[MultiVectorSearch.FieldQuery]) = {
     val meta = getMeta(name)
     require(meta.isMultiVector, s"collection $name is single-vector; use search")
-    val df = loadedOrThrow(name)
+    val df = resident(name)
     (df, meta, prepareMultiFields(meta, fields))
   }
 

@@ -271,6 +271,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       case ("GET", "collections" :: name :: Nil) => ok(infoJson(name))
       case ("DELETE", "collections" :: name :: Nil) =>
         requireExists(name); catalog.dropCollection(name); dropLocalRungs(name)
+        // the route gate keeps every read-lane builder out while this runs
+        localBuildLocks.remove(name)
         ok(JObject("dropped" -> JString(name)))
       case ("POST", "collections" :: name :: "load" :: Nil) =>
         catalog.loadCollection(name); ok(infoJson(name))
@@ -755,8 +757,6 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     case other => throw new IllegalArgumentException(s"expected a number, got $other")
   }
 
-  /** (vector, topK, nprobe) of a local-probe request body — shared by the
-    * searchLocal / searchLocalPq routes. */
   /** ONE definition of the query-vector field every search route shares —
     * a change to numeric coercion or validation lands once, not in each of
     * the eight routes that accept a vector. */
@@ -770,8 +770,6 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
   private def intOr(req: JValue, field: String, default: Int): Int =
     (req \ field).toOption.map(num(_).toInt).getOrElse(default)
 
-  /** The (field, ratio) weight list — ONE parser for the multi audit rung
-    * and `/searchBatchMulti`. */
   /** Wire ratios accept fractions — a DOCUMENTED extension of the
     * reference's integer contract (experimental_analyzer.go parses int) —
     * but quantize to 2 dp at the parse boundary: the (field, ratio) list is
@@ -781,6 +779,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
   private def parseRatio(j: JValue): Double =
     math.rint(num(j) * 100.0) / 100.0
 
+  /** The (field, ratio) weight list — ONE parser for the multi audit rung
+    * and `/searchBatchMulti`. */
   private def parseWeights(req: JValue, route: String): Seq[(String, Double)] =
     req \ "weights" match {
       case JArray(ws) => ws.map { w =>
@@ -811,6 +811,8 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       case _ => throw new IllegalArgumentException(s"$route requires \"fields\": [..]")
     }
 
+  /** (vector, topK, nprobe) of a local-probe request body — shared by the
+    * searchLocal / searchLocalPq routes. */
   private def parseProbe(req: JValue, route: String): (Array[Float], Int, Int) =
     (parseVector(req, route), intOr(req, "topK", 10), intOr(req, "nprobe", 4))
 
@@ -897,15 +899,6 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     if (m.isSchemaless) Nil else m.fields.filterNot(_.isVector).map(_.name)
   }
 
-  /** The ONE lazy-metadata / filtered-request-upgrade cache rule of the
-    * local serving rungs (searchLocal / searchLocalPq / searchLocalBin —
-    * r11 review, factored r12): metadata columns load LAZILY, so an
-    * unfiltered client never pays the typed store's per-row resident cost
-    * (string columns are ~40-60 bytes/row each — multi-GB at 10M rows);
-    * the first FILTERED request upgrades the cached index to the typed
-    * store, which serves unfiltered probes identically from then on. A
-    * collection with NO filterable columns never upgrades — the filter
-    * refuses inside search, so doomed requests don't loop rebuilds. */
   /** One build lock per collection, shared by every cached rung of it: a
     * local-index (re)build is a multi-GB driver job, so two requests
     * upgrading the SAME collection must not both run it (one build wasted
@@ -914,7 +907,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     * A ReentrantLock (not a monitor) so [[localIndexFor]] can `tryLock`:
     * a request that finds the lock HELD serves the resident stale entry
     * instead of blocking behind the build (serve-stale-during-refresh,
-    * r13 verdict #1). */
+    * r13 verdict #1). DELETE removes the collection's lock with its rungs. */
   private val localBuildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.locks.ReentrantLock]()
 
@@ -952,19 +945,28 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       val lock = buildLockFor(name)
       lock.lock()
       try localRungs.synchronized(localRungs.get(key)).foreach { case (v, idx) =>
-        try {
-          localBuildHook()
-          val (ni, nv) = catalog.refreshLocal(name, idx, v,
-            idx.filterableColumns.toSeq.sorted, oversizeRebuilds = false)
-          localRungs.synchronized { localRungs(key) = (nv, ni) }
-        } catch {
-          case e: Exception =>
-            System.err.println(
-              s"graft: local-rung refresh of '$name' failed (${e.getMessage}); " +
-                "dropping the resident index — next probe rebuilds")
-            localRungs.synchronized { localRungs.remove(key) }
-        }
+        refreshRung(key, idx, v, oversizeRebuilds = false)
       } finally lock.unlock()
+    }
+
+  /** The fold step of both refresh paths, under the build lock: fold rung
+    * `key` from its built version `v` to the published head and cache it.
+    * A failed fold drops the entry (stderr note) and returns None. */
+  private def refreshRung[A <: graft.ann.LocalRung](key: (String, String), idx: A, v: Int,
+      oversizeRebuilds: Boolean): Option[A] =
+    try {
+      localBuildHook()
+      val (ni, nv) = catalog.refreshLocal(key._1, idx, v, idx.filterableColumns.toSeq.sorted,
+        oversizeRebuilds = oversizeRebuilds)
+      localRungs.synchronized { localRungs(key) = (nv, ni) }
+      Some(ni)
+    } catch {
+      case e: Exception =>
+        System.err.println(
+          s"graft: local-rung refresh of '${key._1}' failed (${e.getMessage}); " +
+            "dropping the resident index")
+        localRungs.synchronized { localRungs.remove(key) }
+        None
     }
 
   /** Resolve a driver-local serving rung that answers the PUBLISHED HEAD
@@ -973,12 +975,21 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
     * rung whose version lags `head` (a flushDelta from THIS server that
     * raced the eager fold, or from ANOTHER DRIVER on the same root) folds
     * the missed delta window forward in place, O(changes)
-    * (GraftCatalog.refreshLocal; internal fallback: full rebuild
-    * when the chain base moved). Before this, local rungs were the one row
-    * of the consistency table that kept answering their built version
-    * until this server's own flush routes fired — a cross-driver
-    * flushDelta was never seen. A failed fold degrades exactly like
-    * refreshLocalEntries: drop the resident entry and rebuild fresh. */
+    * ([[refreshRung]]; internal fallback: full rebuild when the chain base
+    * moved). Before this, local rungs were the one row of the consistency
+    * table that kept answering their built version until this server's own
+    * flush routes fired — a cross-driver flushDelta was never seen. A
+    * failed fold drops the resident entry and rebuilds fresh.
+    *
+    * This is also the ONE lazy-metadata / filtered-request-upgrade cache
+    * rule of the local serving rungs (searchLocal / searchLocalPq /
+    * searchLocalBin — r11 review, factored r12): metadata columns load
+    * LAZILY, so an unfiltered client never pays the typed store's per-row
+    * resident cost (string columns are ~40-60 bytes/row each — multi-GB at
+    * 10M rows); the first FILTERED request upgrades the cached index to the
+    * typed store, which serves unfiltered probes identically from then on.
+    * A collection with NO filterable columns never upgrades — the filter
+    * refuses inside search, so doomed requests don't loop rebuilds. */
   private def localIndexFor[A <: graft.ann.LocalRung](rung: String, name: String,
       eq: Seq[(String, Any)], head: Int)(build: Seq[String] => A): A = {
     val key = (name, rung)
@@ -1025,19 +1036,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
       cached match {
         case Some((v, i)) if v == head && usable(i) => i
         case Some((v, i)) if usable(i) =>
-          try {
-            localBuildHook()
-            val (ni, nv) = catalog.refreshLocal(name, i, v, i.filterableColumns.toSeq.sorted)
-            localRungs.synchronized { localRungs(key) = (nv, ni) }
-            ni
-          } catch {
-            case e: Exception =>
-              System.err.println(
-                s"graft: local-rung refresh of '$name' failed (${e.getMessage}); " +
-                  "rebuilding fresh")
-              localRungs.synchronized { localRungs.remove(key) }
-              buildAndCache()
-          }
+          refreshRung(key, i, v, oversizeRebuilds = true).getOrElse(buildAndCache())
         case _ => buildAndCache()
       }
     } finally lock.unlock()

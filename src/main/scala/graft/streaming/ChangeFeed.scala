@@ -235,7 +235,7 @@ object ChangeFeed {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val next = fold(state, batch, pk, versionCol).localCheckpoint(true)
         // release the superseded state's blocks (same discipline as the
-        // catalog's rebind) — a long-running watcher otherwise accumulates
+        // catalog's mutation commit) — a long-running watcher otherwise accumulates
         // one dead checkpoint per micro-batch until driver GC
         if (stateOwned) state.unpersist(false)
         state = next

@@ -51,16 +51,17 @@ class AuditBatchJobsSpec extends SparkSpec {
     new GraftCatalog(spark, root)
   }
 
-  /** Jobs of one route call plus its collect(), with adaptive execution
-    * off: under AQE the count of a multi-stage plan varies by ±2 between
-    * identical runs (stages finish in a timing-dependent order and the
-    * re-planned joins start different jobs), so only the static plan gives
-    * a count worth pinning. */
-  private def jobs(df: => DataFrame): Int = {
+  /** Jobs of one route call on `cat` plus its collect(), with adaptive
+    * execution off: under AQE the count of a multi-stage plan varies by ±2
+    * between identical runs (stages finish in a timing-dependent order and
+    * the re-planned joins start different jobs), so only the static plan
+    * gives a count worth pinning. `cat` is built before the count starts,
+    * so its fixture's writes are not counted. */
+  private def jobs(cat: GraftCatalog)(call: GraftCatalog => DataFrame): Int = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
-    try JobCounter.jobsOf(spark.sparkContext)(df.collect())._2
+    try JobCounter.jobsOf(spark.sparkContext)(call(cat).collect())._2
     finally spark.conf.set(key, prev)
   }
 
@@ -83,41 +84,38 @@ class AuditBatchJobsSpec extends SparkSpec {
       cat
     }
     val measured = Seq(
-      "auditRecall" -> jobs(flushed(meta(Some(4)), 60).auditRecall("c", 5, 1, 5)),
+      "auditRecall" -> jobs(flushed(meta(Some(4)), 60))(_.auditRecall("c", 5, 1, 5)),
       "auditRecall(filter)" ->
-        jobs(flushed(meta(Some(4)), 60).auditRecall("c", 5, 1, 5, Some(label))),
+        jobs(flushed(meta(Some(4)), 60))(_.auditRecall("c", 5, 1, 5, Some(label))),
       "auditRecall(delta chain)" ->
-        jobs(flushed(meta(Some(4)), 60, segments = 2).auditRecall("c", 5, 1, 5)),
-      "auditRecallBin" -> jobs(flushed(meta(bin = true), 60).auditRecallBin("c", 5, 5)),
+        jobs(flushed(meta(Some(4)), 60, segments = 2))(_.auditRecall("c", 5, 1, 5)),
+      "auditRecallBin" -> jobs(flushed(meta(bin = true), 60))(_.auditRecallBin("c", 5, 5)),
       "auditRecallBin(filter)" ->
-        jobs(flushed(meta(bin = true), 60).auditRecallBin("c", 5, 5, filter = Some(label))),
-      "auditRecallPq" -> jobs(flushed(meta(pq = true), 60).auditRecallPq("c", 5, 5)),
+        jobs(flushed(meta(bin = true), 60))(_.auditRecallBin("c", 5, 5, filter = Some(label))),
+      "auditRecallPq" -> jobs(flushed(meta(pq = true), 60))(_.auditRecallPq("c", 5, 5)),
       "auditRecallPq(filter)" ->
-        jobs(flushed(meta(pq = true), 60).auditRecallPq("c", 5, 5, filter = Some(label))),
+        jobs(flushed(meta(pq = true), 60))(_.auditRecallPq("c", 5, 5, filter = Some(label))),
       "auditRecallPq(residual, nprobe)" ->
-        jobs(flushed(meta(Some(4), pq = true), 60).auditRecallPq("c", 5, 5, nprobe = Some(2))),
+        jobs(flushed(meta(Some(4), pq = true), 60))(_.auditRecallPq("c", 5, 5, nprobe = Some(2))),
       "auditRecallMulti" ->
-        jobs(flushed(multiMeta, 60, data = multiData).auditRecallMulti("c", 5, 1, weights, 5)),
-      "searchBatch(flat)" -> jobs(flat.searchBatch("c", queries, 5, 1)),
+        jobs(flushed(multiMeta, 60, data = multiData))(_.auditRecallMulti("c", 5, 1, weights, 5)),
+      "searchBatch(flat)" -> jobs(flat)(_.searchBatch("c", queries, 5, 1)),
       "searchBatch(IVF, delta chain)" ->
-        jobs(flushed(meta(Some(4)), 60, segments = 2).searchBatch("c", queries, 5, 2)),
-      "searchBatchMulti" -> jobs(flushed(multiMeta, 60, data = multiData)
-        .searchBatchMulti("c", weights, Seq("a" -> Map("v0" -> q4, "v1" -> q4),
+        jobs(flushed(meta(Some(4)), 60, segments = 2))(_.searchBatch("c", queries, 5, 2)),
+      "searchBatchMulti" -> jobs(flushed(multiMeta, 60, data = multiData))(
+        _.searchBatchMulti("c", weights, Seq("a" -> Map("v0" -> q4, "v1" -> q4),
           "b" -> Map("v0" -> q4.reverse, "v1" -> q4)), 5, 2)),
       // an empty flush is told from a missing sidecar by parquet footers
       // read on the driver: no emptiness job
       "searchBinary(empty flush)" ->
-        jobs(flushed(meta(bin = true), 0).searchBinary("c", queries.head._2, 5)))
-    // the delta-chain rows count their fixture's writes too: its second
-    // flushDelta finds the base centroids still cached (a mutation keeps
-    // the per-version sidecars), so it runs only the segment write
+        jobs(flushed(meta(bin = true), 0))(_.searchBinary("c", queries.head._2, 5)))
     val expected = Seq(
-      "auditRecall" -> 9, "auditRecall(filter)" -> 9, "auditRecall(delta chain)" -> 14,
-      "auditRecallBin" -> 10, "auditRecallBin(filter)" -> 10,
-      "auditRecallPq" -> 12, "auditRecallPq(filter)" -> 12,
-      "auditRecallPq(residual, nprobe)" -> 16, "auditRecallMulti" -> 8,
-      "searchBatch(flat)" -> 3, "searchBatch(IVF, delta chain)" -> 12,
-      "searchBatchMulti" -> 8, "searchBinary(empty flush)" -> 3)
+      "auditRecall" -> 5, "auditRecall(filter)" -> 5, "auditRecall(delta chain)" -> 7,
+      "auditRecallBin" -> 6, "auditRecallBin(filter)" -> 6,
+      "auditRecallPq" -> 7, "auditRecallPq(filter)" -> 7,
+      "auditRecallPq(residual, nprobe)" -> 8, "auditRecallMulti" -> 4,
+      "searchBatch(flat)" -> 3, "searchBatch(IVF, delta chain)" -> 5,
+      "searchBatchMulti" -> 4, "searchBinary(empty flush)" -> 0)
     assert(measured === expected, s"measured: ${measured.mkString(", ")}")
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * collection's embedding for the same vec_id — the 100M Hamming row's
   * correctness rests on the query (encoded from the float collection) and
   * the corpus (codes-only, floats never materialized) agreeing. Also pins
-  * the stdout line builder's length cap (`Bench.stdoutLine`). */
+  * the stdout line builder's length cap (`Bench.stdoutLine`) and the big
+  * suites' split into the ratio maps (`Bench.baselineSplit`). */
 class BenchDataSpec extends SparkSpec {
 
   test("ensureBinCodeBenchData codes equal Bin.encode over ensureBenchData " +
@@ -140,5 +141,26 @@ class BenchDataSpec extends SparkSpec {
       Bench.stdoutLine(1.0, priority.take(5), ratios, ratios, Nil, Nil, "/data/sf0.1"))
     assert(clean.get("queries").size === 5 && !clean.has("queries_dropped") &&
       !clean.has("errors_dropped") && !clean.has("skipped_dropped"))
+  }
+
+  test("the big-suite split: driver-local 100M rows keep raw seconds and land in " +
+    "neither ratio map; point_lookup, _med and failed rows take no ratio") {
+    val big1m = Seq("point_lookup_1m" -> 0.01, "flat_scan_cosine_1m" -> 0.035,
+      "flat_scan_cosine_1m_med" -> 0.04, "flat_scan_f16_1m" -> -1.0)
+    val big10m = Seq("point_lookup_10m" -> 0.02, "flat_scan_cosine_10m" -> 0.3)
+    val bin100m = Seq("point_lookup_100m" -> 0.05, "hamming_scan_100m" -> 3.0,
+      "hamming_scan_100m_med" -> 3.1, "local_bin_load_100m" -> 40.0,
+      "serve_local_bin_100m" -> 0.004, "serve_local_bin_100m_p50" -> 0.005,
+      "local_bin_refresh_10k_100m" -> 1.5)
+    val (vs, scanOnly, local) = Bench.baselineSplit(big1m, big10m, bin100m)
+    assert(vs === Seq("flat_scan_cosine_1m" -> 1.4, "flat_scan_cosine_10m" -> 1.2,
+      "hamming_scan_100m" -> 1.2))
+    assert(scanOnly === Seq("flat_scan_cosine_1m" -> 1.0, "flat_scan_cosine_10m" -> 1.12,
+      "hamming_scan_100m" -> 1.18))
+    assert(local === bin100m.filter(_._1.contains("local_bin")))
+    assert(!(vs ++ scanOnly).exists(_._1.contains("local_bin")))
+    // a suite without its dispatch floor has no scan-only ratios
+    val (vsNoFloor, scanNoFloor, _) = Bench.baselineSplit(big1m.tail, Nil, Nil)
+    assert(vsNoFloor === Seq("flat_scan_cosine_1m" -> 1.4) && scanNoFloor.isEmpty)
   }
 }
