@@ -202,32 +202,24 @@ object Ann {
     if (norm == 0.0) a else a.map(x => (x / norm).toFloat)
   }
 
+  /** The `nprobe` centroid ids nearest the query (driver-side: centroid
+    * lists are tiny and the result drives partition pruning). The
+    * `(round(dist, 6), cid)` total order is THE probe contract — the same
+    * order as the `top_cells` kernel (knnJoin / the multi batch shapes) and
+    * the `arg_min_distance` assignment kernel, so every probe path
+    * (driver-side single query, kernel-side batch, driver-local serving)
+    * selects identical cells for identical queries. It IS the driver-local
+    * rungs' [[LocalIvfIndex.selectCells]]; a NaN-distance query admits no
+    * centroid. */
+  def probeCells(centroids: Seq[(Long, Array[Float])], queryVec: Array[Float],
+                 nprobe: Int, metric: String = "euclidean"): Seq[Long] =
+    LocalIvfIndex.selectCells(centroids.toArray, queryVec, nprobe,
+      graft.functions.DistKernels.metricCode(metric))
+
   /** IVF search: probe the `nprobe` centroids nearest to the query, scan
     * only rows assigned to those cells, exact top-k inside. At scale the
     * assignment is precomputed+partitioned by cell → probed cells are a
     * partition-pruned scan. */
-  /** The `nprobe` centroid ids nearest the query (driver-side: centroid
-    * lists are tiny and the result drives partition pruning). */
-  /** The `(round(dist, 6), cid)` total order is THE probe contract — the
-    * same order as the `top_cells` kernel (knnJoin / the multi batch
-    * shapes) and the `arg_min_distance` assignment kernel, so every probe
-    * path (driver-side single query, kernel-side batch, driver-local
-    * serving) selects identical cells for identical queries (r11 review:
-    * the raw-distance tie-break here could disagree with top_cells inside
-    * the 6-dp rounding window). */
-  def probeCells(centroids: Seq[(Long, Array[Float])], queryVec: Array[Float],
-                 nprobe: Int, metric: String = "euclidean"): Seq[Long] =
-    centroids
-      .map { case (cid, cvec) =>
-        (cid, LocalIvfIndex.round6(distLocal(cvec, queryVec, metric))) }
-      // a corrupt (NaN-distance) query admits NO centroid — empty result,
-      // never the nprobe id-smallest cells with meaningless NaN scores
-      // (LocalIvfIndex.selectCells' r11 contract, now ONE rule across all
-      // four probe implementations)
-      .filterNot(_._2.isNaN)
-      .sortBy { case (cid, d) => (d, cid) }
-      .take(nprobe).map(_._1)
-
   def ivfSearch(
       assigned: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[(Long, Array[Float])], queryVec: Array[Float],
@@ -305,18 +297,5 @@ object Ann {
     val w = Window.partitionBy(col(qidCol)).orderBy(col("dist").asc, col(idCol).asc)
     cand.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
       .orderBy(col(qidCol), col("rn"))
-  }
-
-  /** Driver-side distance mirror (double accumulation like the expressions). */
-  private def distLocal(a: Array[Float], b: Array[Float], metric: String): Double = metric match {
-    case "euclidean" =>
-      math.sqrt(a.zip(b).map { case (x, y) => val d = x.toDouble - y.toDouble; d * d }.sum)
-    case "manhattan" => a.zip(b).map { case (x, y) => math.abs(x.toDouble - y.toDouble) }.sum
-    case "cosine" =>
-      val dot = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
-      val na = math.sqrt(a.map(x => x.toDouble * x.toDouble).sum)
-      val nb = math.sqrt(b.map(x => x.toDouble * x.toDouble).sum)
-      math.abs(1.0 - dot / (na * nb))
-    case "dot" => -a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
   }
 }

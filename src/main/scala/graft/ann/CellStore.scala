@@ -189,11 +189,10 @@ private[ann] object CellStore {
     case other => throw new IllegalArgumentException(s"unknown quantization: $other")
   }
 
-  /** 0 = float-resident, 1 = f16 shorts, 2 = bf16 shorts, 3 = f8 bytes —
-    * the decode mode of the vector rungs' scan loops. */
-  def decodeMode(quant: String): Int = quant match {
-    case "none" => 0; case "f16" => 1; case "bf16" => 2; case "f8" => 3
-  }
+  /** 0 = float-resident, else the [[graft.functions.DistKernels]] decode
+    * format of the stored vectors — resolved once per index. */
+  def decodeFormat(quant: String): Int =
+    if (quant == "none") 0 else graft.functions.DistKernels.formatCode(quant)
 
   private def newArray(kind: Int, n: Int): AnyRef = kind match {
     case Floats => new Array[Float](n)

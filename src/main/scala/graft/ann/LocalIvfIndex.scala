@@ -3,6 +3,8 @@ package graft.ann
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.DistKernels
+
 /** Driver-local IVF serving index — the point-latency answer to the
   * reference's in-process HNSW (core/vectorindex/hnsw.go:243-278, ~0.87 ms
   * per 1M-vector search, UPDATE-LOG.md:142). The Spark-first split: the
@@ -36,6 +38,9 @@ final class LocalIvfIndex private (
     metric: String,
     quant: String) extends LocalRung with Serializable {
 
+  private val kernel = DistKernels.metricCode(metric)
+  private val format = CellStore.decodeFormat(quant)
+
   def cellCount: Int = store.cellCount
   def size: Long = store.size
   /** Columns available to [[search]]'s EQ filter (empty unless the index
@@ -63,8 +68,7 @@ final class LocalIvfIndex private (
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(q.length == dim, s"vector dimension mismatch: expected $dim, got ${q.length}")
     store.checkFilter(eqFilter)
-    val probed = LocalIvfIndex.selectCells(centroids, q, nprobe, metric)
-    val qmode = CellStore.decodeMode(quant)
+    val probed = LocalIvfIndex.selectCells(centroids, q, nprobe, kernel)
     def scanCell(cid: Long): Array[(AnyRef, Double)] = {
       val ids = store.ids(cid)
       if (ids == null) return Array.empty
@@ -74,26 +78,13 @@ final class LocalIvfIndex private (
       // kernel (loop fission — decode-to-float is exact, so the result is
       // bit-identical to the decoded-resident form)
       val raw = store.data(cid)(0)
-      val fvecs: Array[Float] = if (qmode == 0) raw.asInstanceOf[Array[Float]] else null
-      val svecs: Array[Short] =
-        if (qmode == 1 || qmode == 2) raw.asInstanceOf[Array[Short]] else null
-      val bvecs: Array[Byte] = if (qmode == 3) raw.asInstanceOf[Array[Byte]] else null
-      val scratch: Array[Float] = if (qmode == 0) null else new Array[Float](dim)
-      import graft.functions.QuantKernels
+      val fvecs: Array[Float] = if (format == 0) raw.asInstanceOf[Array[Float]] else null
+      val scratch: Array[Float] = if (format == 0) null else new Array[Float](dim)
       def rowDist(i: Int): Double =
-        if (qmode == 0) LocalIvfIndex.dist(fvecs, i * dim, q, metric)
+        if (format == 0) DistKernels.distance(kernel, fvecs, i * dim, q, 0, dim)
         else {
-          val off = i * dim
-          var j = 0
-          qmode match {
-            case 1 =>
-              while (j < dim) { scratch(j) = QuantKernels.f16ToFloat(svecs(off + j)); j += 1 }
-            case 2 =>
-              while (j < dim) { scratch(j) = QuantKernels.bf16ToFloat(svecs(off + j)); j += 1 }
-            case _ =>
-              while (j < dim) { scratch(j) = QuantKernels.f8ToFloat(bvecs(off + j)); j += 1 }
-          }
-          LocalIvfIndex.dist(scratch, 0, q, metric)
+          DistKernels.decode(format, raw, i * dim, scratch, dim)
+          DistKernels.distance(kernel, scratch, 0, q, 0, dim)
         }
       val pred = store.predicate(cid, eqFilter)
       val heap = LocalTopK.newHeap(topK)
@@ -134,24 +125,27 @@ object LocalIvfIndex {
 
   /** The `nprobe` nearest cell ids by insertion into primitive parallel
     * arrays — no tuple boxing, no full sort of k cells; the
-    * `(round(dist, 6), cid)` order, matching [[graft.ann.Ann.probeCells]]
-    * and the `top_cells` kernel (the ONE probe contract). */
+    * `(round(dist, 6), cid)` order of the `top_cells` kernel (the ONE probe
+    * contract, also behind [[graft.ann.Ann.probeCells]]). A NaN distance
+    * (a corrupt query) admits no cell; `metric` is a [[DistKernels]] code. */
   private[ann] def selectCells(centroids: Array[(Long, Array[Float])],
-                               q: Array[Float], nprobe: Int, metric: String): Seq[Long] = {
+                               q: Array[Float], nprobe: Int, metric: Int): Seq[Long] = {
     val np = math.min(nprobe, centroids.length)
     if (np <= 0) return Seq.empty
     val bestIds = new Array[Long](np)
-    val bestD = Array.fill(np)(Double.MaxValue)
-    var filled = 0 // slots holding a real admission (a NaN-distance query
-                   // admits nothing — return the empty prefix, never the
-                   // zero-initialized filler cids as duplicate "cells")
+    val bestD = new Array[Double](np)
+    var filled = 0
+    def before(d: Double, cid: Long, slot: Int): Boolean =
+      d < bestD(slot) || (d == bestD(slot) && cid < bestIds(slot))
     var ci = 0
     while (ci < centroids.length) {
       val (cid, cv) = centroids(ci)
-      val d = round6(dist(cv, 0, q, metric))
-      if (d < bestD(np - 1) || (d == bestD(np - 1) && cid < bestIds(np - 1))) {
-        var ins = np - 1
-        while (ins > 0 && (d < bestD(ins - 1) || (d == bestD(ins - 1) && cid < bestIds(ins - 1)))) {
+      if (cv.length != q.length)
+        throw new IllegalArgumentException(s"vector dimension mismatch: ${q.length} vs ${cv.length}")
+      val d = DistKernels.round6(DistKernels.distance(metric, cv, 0, q, 0, q.length))
+      if (!d.isNaN && (filled < np || before(d, cid, np - 1))) {
+        var ins = math.min(filled, np - 1)
+        while (ins > 0 && before(d, cid, ins - 1)) {
           bestD(ins) = bestD(ins - 1); bestIds(ins) = bestIds(ins - 1); ins -= 1
         }
         bestD(ins) = d; bestIds(ins) = cid
@@ -161,12 +155,6 @@ object LocalIvfIndex {
     }
     bestIds.take(filled).toSeq
   }
-
-  /** Spark's `round(d, 6)` — BigDecimal HALF_UP on the exact binary value,
-    * matching the `round(dist, 6)` the distributed probe orders by. */
-  def round6(d: Double): Double =
-    if (d.isNaN || d.isInfinite) d
-    else new java.math.BigDecimal(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   // ordering + heap + fan-out live in [[LocalTopK]], shared with
   // LocalPqIndex so the two serving rungs cannot drift apart
@@ -200,30 +188,4 @@ object LocalIvfIndex {
       Seq(CellStore.Field("vector", kind, dim, "-dim", s"index dim is $dim")), metaCols, quant)
     new LocalIvfIndex(centroids.sortBy(_._1).toArray, store, dim, metric, quant)
   }
-
-  /** Exact scalar distance over a flat array slice — double accumulation in
-    * the same order as the engine's codegen kernels. */
-  private[ann] def dist(vecs: Array[Float], off: Int, q: Array[Float], metric: String): Double =
-    metric match {
-      case "euclidean" =>
-        var acc = 0.0; var j = 0
-        while (j < q.length) { val d = vecs(off + j).toDouble - q(j).toDouble; acc += d * d; j += 1 }
-        math.sqrt(acc)
-      case "manhattan" =>
-        var acc = 0.0; var j = 0
-        while (j < q.length) { acc += math.abs(vecs(off + j).toDouble - q(j).toDouble); j += 1 }
-        acc
-      case "cosine" =>
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var j = 0
-        while (j < q.length) {
-          val x = vecs(off + j).toDouble; val y = q(j).toDouble
-          dot += x * y; na += x * x; nb += y * y; j += 1
-        }
-        math.abs(1.0 - dot / (math.sqrt(na) * math.sqrt(nb)))
-      case "dot" =>
-        var acc = 0.0; var j = 0
-        while (j < q.length) { acc += vecs(off + j).toDouble * q(j).toDouble; j += 1 }
-        -acc
-      case other => throw new IllegalArgumentException(s"unknown metric: $other")
-    }
 }

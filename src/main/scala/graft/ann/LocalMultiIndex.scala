@@ -3,6 +3,8 @@ package graft.ann
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.DistKernels
+
 /** Driver-local multi-vector (CFLAT) serving index — the point-latency rung
   * for collections with several named vector fields, completing the serving
   * ladder the single-vector layouts already have ([[LocalIvfIndex]] /
@@ -42,6 +44,9 @@ final class LocalMultiIndex private (
     store: CellStore,
     quant: String,
     metric: String) extends LocalRung with Serializable {
+
+  private val kernel = DistKernels.metricCode(metric)
+  private val format = CellStore.decodeFormat(quant)
 
   def cellCount: Int = store.cellCount
   def size: Long = store.size
@@ -84,9 +89,7 @@ final class LocalMultiIndex private (
     val slots = included.map(f => byName(f.name)).toArray
     val queries = included.map(_.query).toArray
     val weights = included.map(_.ratio / 100.0).toArray
-    val scoreMetric = if (metric == "cosine") "cosine" else "euclidean"
-    val probed = LocalIvfIndex.selectCells(centroids, routingQ, nprobe, metric)
-    val qmode = CellStore.decodeMode(quant)
+    val probed = LocalIvfIndex.selectCells(centroids, routingQ, nprobe, kernel)
     def scanCell(cid: Long): Array[(AnyRef, Double)] = {
       val ids = store.ids(cid)
       if (ids == null) return Array.empty
@@ -97,33 +100,17 @@ final class LocalMultiIndex private (
       // kernel (loop fission — the fused kernel's codegen discipline;
       // decode-to-float is exact so the result is bit-identical)
       val fvecs: Array[Array[Float]] =
-        if (qmode == 0) vecs.map(_.asInstanceOf[Array[Float]]) else null
-      val svecs: Array[Array[Short]] =
-        if (qmode == 1 || qmode == 2) vecs.map(_.asInstanceOf[Array[Short]]) else null
-      val bvecs: Array[Array[Byte]] =
-        if (qmode == 3) vecs.map(_.asInstanceOf[Array[Byte]]) else null
+        if (format == 0) vecs.map(_.asInstanceOf[Array[Float]]) else null
       val scratch: Array[Array[Float]] =
-        if (qmode == 0) null else fieldDims.map(new Array[Float](_))
-      import graft.functions.QuantKernels
+        if (format == 0) null else fieldDims.map(new Array[Float](_))
       def fieldDist(slot: Int, i: Int, q: Array[Float]): Double = {
         val dimF = fieldDims(slot)
-        if (qmode == 0)
-          LocalIvfIndex.dist(fvecs(slot), i * dimF, q, metric)
+        if (format == 0)
+          DistKernels.distance(kernel, fvecs(slot), i * dimF, q, 0, dimF)
         else {
-          val buf = scratch(slot); val off = i * dimF
-          var j = 0
-          qmode match {
-            case 1 =>
-              val ss = svecs(slot)
-              while (j < dimF) { buf(j) = QuantKernels.f16ToFloat(ss(off + j)); j += 1 }
-            case 2 =>
-              val ss = svecs(slot)
-              while (j < dimF) { buf(j) = QuantKernels.bf16ToFloat(ss(off + j)); j += 1 }
-            case _ =>
-              val bs = bvecs(slot)
-              while (j < dimF) { buf(j) = QuantKernels.f8ToFloat(bs(off + j)); j += 1 }
-          }
-          LocalIvfIndex.dist(buf, 0, q, metric)
+          val buf = scratch(slot)
+          DistKernels.decode(format, vecs(slot), i * dimF, buf, dimF)
+          DistKernels.distance(kernel, buf, 0, q, 0, dimF)
         }
       }
       val heap = LocalTopK.newHeap(topK, LocalTopK.cmp8)
@@ -136,10 +123,9 @@ final class LocalMultiIndex private (
         var fi = 0
         while (fi < slots.length) {
           val d = fieldDist(slots(fi), i, queries(fi))
-          val term = scoreMetric match {
-            case "cosine" => (2.0 - d) / 2.0 * 100.0
-            case _        => math.max(0.0, 100.0 - d)
-          }
+          val term =
+            if (kernel == DistKernels.COSINE) (2.0 - d) / 2.0 * 100.0
+            else math.max(0.0, 100.0 - d)
           s += term * weights(fi)
           fi += 1
         }

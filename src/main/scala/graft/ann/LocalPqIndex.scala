@@ -32,6 +32,8 @@ final class LocalPqIndex private (
     metric: String,
     residual: Boolean) extends LocalRung with Serializable {
 
+  private val kernel = graft.functions.DistKernels.metricCode(metric)
+
   def cellCount: Int = store.cellCount
   def size: Long = store.size
   /** Resident bytes of the code payload (the memory-scale claim). */
@@ -76,7 +78,7 @@ final class LocalPqIndex private (
     val ksub = cb.ksub
     val probed: Seq[Long] =
       if (centroids.isEmpty) Seq(CellStore.NoCell)
-      else LocalIvfIndex.selectCells(centroids, q, nprobe, metric)
+      else LocalIvfIndex.selectCells(centroids, q, nprobe, kernel)
     def scanCell(cid: Long): Array[(AnyRef, Double)] = {
       val ids = store.ids(cid)
       if (ids == null) return Array.empty

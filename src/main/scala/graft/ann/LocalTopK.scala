@@ -14,7 +14,7 @@ private[ann] object LocalTopK {
     * to differ in the same direction (rounding moves each value < 0.5e-6),
     * so BigDecimal rounding only runs on genuine near-ties. */
   def cmp(a: (AnyRef, Double), b: (AnyRef, Double)): Int =
-    cmpAt(a, b, 2e-6, LocalIvfIndex.round6)
+    cmpAt(a, b, 2e-6, graft.functions.DistKernels.round6)
 
   /** The multi-vector rung's (round8(−score), id) order — the mirror of
     * MultiVectorSearch's `orderBy round(weighted, 8) desc, id asc` with the

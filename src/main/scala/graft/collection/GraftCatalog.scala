@@ -500,13 +500,11 @@ class GraftCatalog(spark: SparkSession, root: String,
       if (meta.currentVersion == 0)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.structType)
       else foldChain(name, meta, meta.currentVersion)
-    // Release the previous record BEFORE planning and persisting the new
-    // anchor: when no mutation happened between loads the two plans are
-    // sameResult, so persist-then-unpersist would drop the single shared
-    // CacheManager entry and leave the "re-loaded" collection silently
-    // non-resident, and planning first would plan the cache scan (no file
-    // scan, so scanParallelism reads 0). A fresh record also restarts both
-    // lineage-cut cadences.
+    // Release the previous record BEFORE persisting the new anchor: when no
+    // mutation happened between loads the two plans are sameResult, so
+    // persist-then-unpersist would drop the single shared CacheManager
+    // entry and leave the "re-loaded" collection silently non-resident. A
+    // fresh record also restarts both lineage-cut cadences.
     releaseCollection(name)
     val parts = Partitions.scanParallelism(df)
     val r = Residency(df.persist(StorageLevel.MEMORY_AND_DISK), meta.currentVersion, parts,

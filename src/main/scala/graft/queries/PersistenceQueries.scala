@@ -534,7 +534,7 @@ object PersistenceQueries {
       require(v == 2, s"fold should land on v2, got v$v")
       val qv = em0(0L)
       idx.search(qv, topK = 10, nprobe = 3)
-        .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+        .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
         .toDF("id", "dist").orderBy("dist", "id")
     }),
     // The same fold contract on the Hamming rung — integer distances, flat
@@ -627,7 +627,7 @@ object PersistenceQueries {
       require(v == 2, s"fold should land on v2, got v$v")
       val qv = em0(0L)
       idx.search(qv, topK = 10, nprobe = 1)
-        .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+        .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
         .toDF("id", "dist").orderBy("dist", "id")
     }),
     // The fold contract on the CFLAT rung — the fourth serving form: put

@@ -67,21 +67,13 @@ object RetrievalQueries {
       .orderBy(col("score").desc, col("doc_id").asc).limit(10)
   }
 
-  /** Driver-side cosine similarity replicating the VecCosineDistance kernel
-    * bit-for-bit (same float→double widening, same accumulation order) —
-    * the MMR greedy picks must match the SQL oracle's argmax exactly. */
+  /** Driver-side cosine similarity: 1 − the [[DistKernels]] cosine kernel
+    * VecCosineDistance calls — the MMR greedy picks must match the SQL
+    * oracle's argmax exactly. */
   private def sim(a: Array[Float], b: Array[Float]): Double = {
     require(a.length == b.length, s"dimension mismatch: ${a.length} vs ${b.length}")
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      val x = a(i).toDouble; val y = b(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    1.0 - math.abs(1.0 - dot / (math.sqrt(na) * math.sqrt(nb)))
+    1.0 - DistKernels.cosine(a, 0, b, 0, a.length)
   }
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** MMR re-rank: distributed top-[[MmrPool]] by relevance, then the greedy
     * λ·rel − (1−λ)·max-sim-to-selected selection of [[MmrK]] rows on the
@@ -119,7 +111,7 @@ object RetrievalQueries {
     }
     import s.implicits._
     picked.zipWithIndex
-      .map { case ((id, _, score), i) => (i + 1, id, round6(score)) }
+      .map { case ((id, _, score), i) => (i + 1, id, DistKernels.round6(score)) }
       .toSeq.toDF("rank", "vec_id", "score")
       .orderBy("rank")
   }

@@ -825,7 +825,7 @@ class GraftServer(spark: SparkSession, root: String, port: Int = 0) {
         case s: String => JsonMethods.compact(JString(s))
         case other => other.toString
       }
-      s"""{"id":$idJson,"dist":${graft.ann.LocalIvfIndex.round6(d)}}"""
+      s"""{"id":$idJson,"dist":${graft.functions.DistKernels.round6(d)}}"""
     }.mkString(",") + "]}"
 
   /** The multi-vector hit wire format: a SCORE (higher-better display

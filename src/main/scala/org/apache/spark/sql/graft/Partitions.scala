@@ -7,17 +7,25 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Partition counts of the catalog's resident frames. */
 object Partitions {
 
   /** The widest file scan's partition count in `df`'s physical plan, 0 when
-    * it reads no files. Planned, never run: no job. Call it before `df` is
-    * persisted, or the plan is the cache scan. */
+    * it reads no files. Planned, never run: no job. A cache scan (the
+    * session's CacheManager holds a `sameResult` plan, perhaps another
+    * catalog's resident frame) counts the file scans of the cached plan. */
   def scanParallelism(df: DataFrame): Int =
-    df.queryExecution.sparkPlan.collectLeaves().collect {
-      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
-    }.maxOption.getOrElse(0)
+    fileScans(df.queryExecution.sparkPlan).maxOption.getOrElse(0)
+
+  private def fileScans(plan: SparkPlan): Seq[Int] = plan.collectLeaves().flatMap {
+    case s: FileSourceScanExec => Seq(s.inputRDD.getNumPartitions)
+    case c: InMemoryTableScanExec => fileScans(c.relation.cachedPlan)
+    case a: AdaptiveSparkPlanExec => fileScans(a.inputPlan)
+    case _ => Nil
+  }
 
   /** `df` in at most `n` partitions, narrowly (no shuffle, no job): output
     * partition i reads input partitions i, i + n, i + 2n, … in turn.

@@ -125,8 +125,7 @@ case class PqEncode(child: Expression, cents: Array[Array[Array[Float]]],
       var best = 0; var bestR = Double.PositiveInfinity
       var k = 0
       while (k < nc) {
-        val rd = java.math.BigDecimal.valueOf(math.sqrt(candAcc(k)))
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        val rd = graft.functions.DistKernels.round6(math.sqrt(candAcc(k)))
         if (rd < bestR) { bestR = rd; best = candIdx(k) }
         k += 1
       }
@@ -211,8 +210,7 @@ case class PqEncode(child: Expression, cents: Array[Array[Array[Float]]],
          |  int $best = 0;
          |  double $bestR = Double.POSITIVE_INFINITY;
          |  for (int $k = 0; $k < $nc; $k++) {
-         |    final double $rd = java.math.BigDecimal.valueOf(Math.sqrt($candAcc[$k]))
-         |      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
+         |    final double $rd = graft.functions.DistKernels.round6(Math.sqrt($candAcc[$k]));
          |    if ($rd < $bestR) { $bestR = $rd; $best = $candIdx[$k]; }
          |  }
          |  $outStore

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
 
-import graft.functions.QuantKernels
+import graft.functions.{DistKernels, QuantKernels}
 
 /** Vector quantization (SURVEY.md §2.8 F6-F8): encode-on-write column
   * transforms + decode expressions. Storage mapping (§1.4): f16/bf16 →
@@ -82,12 +82,13 @@ case class QuantizeVector(child: Expression, format: String)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Fused quantized distance: decodes the stored f16/bf16/f8 vector INSIDE
-  * the accumulation loop instead of materializing an intermediate float
-  * array per row (dequantize → ArrayData → copy is two allocations + two
-  * copies per row on the scan hot path). The query side is a foldable
-  * pre-decoded float[] hoisted at codegen time. Accumulation order is
-  * identical to distance(dequantize(x), q, metric), so results are
+/** Fused quantized distance: decodes the stored f16/bf16/f8 vector into a
+  * reused float buffer and runs the shared [[DistKernels]] kernel over it,
+  * instead of materializing an intermediate float array per row
+  * (dequantize → ArrayData → copy is two allocations + two copies per row
+  * on the scan hot path). The query side is a foldable pre-decoded float[]
+  * hoisted at codegen time. Decode-to-float is exact and the kernel is the
+  * one distance(dequantize(x), q, metric) calls, so results are
   * bit-identical to the unfused pipeline (QuantizationSpec pins this).
   * Metrics: cosine / euclidean / manhattan / dot (dist = −dot). */
 case class VecDistanceQuant(left: Expression, right: Expression,
@@ -101,102 +102,50 @@ case class VecDistanceQuant(left: Expression, right: Expression,
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  private def decode(s: Short): Float = format match {
-    case "f16"  => QuantKernels.f16ToFloat(s)
-    case "bf16" => QuantKernels.bf16ToFloat(s)
-  }
+  private val fmt = DistKernels.formatCode(format)
+  private val kernel = DistKernels.metricCode(metric)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val q = b.asInstanceOf[ArrayData]
-    val n = if (format == "f8") a.asInstanceOf[Array[Byte]].length
-            else a.asInstanceOf[ArrayData].numElements()
-    require(n == q.numElements(), s"vector dimension mismatch: $n vs ${q.numElements()}")
-    def x(i: Int): Double =
-      (if (format == "f8") QuantKernels.f8ToFloat(a.asInstanceOf[Array[Byte]](i))
-       else decode(a.asInstanceOf[ArrayData].getShort(i))).toDouble
-    var acc = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    metric match {
-      case "cosine" =>
-        while (i < n) { val xi = x(i); val y = q.getFloat(i).toDouble
-          acc += xi * y; na += xi * xi; nb += y * y; i += 1 }
-        math.abs(1.0 - acc / (math.sqrt(na) * math.sqrt(nb)))
-      case "euclidean" =>
-        while (i < n) { val d = x(i) - q.getFloat(i).toDouble; acc += d * d; i += 1 }
-        math.sqrt(acc)
-      case "manhattan" =>
-        while (i < n) { acc += math.abs(x(i) - q.getFloat(i).toDouble); i += 1 }
-        acc
-      case "dot" =>
-        while (i < n) { acc += x(i) * q.getFloat(i).toDouble; i += 1 }
-        -acc
-    }
+    val q = b.asInstanceOf[ArrayData].toFloatArray()
+    val src: AnyRef =
+      if (fmt == DistKernels.F8) a.asInstanceOf[Array[Byte]]
+      else a.asInstanceOf[ArrayData].toShortArray()
+    val n = java.lang.reflect.Array.getLength(src)
+    require(n == q.length, s"vector dimension mismatch: $n vs ${q.length}")
+    val x = new Array[Float](n)
+    DistKernels.decode(fmt, src, 0, x, n)
+    DistKernels.distance(kernel, x, 0, q, 0, n)
   }
 
   /** Codegen uses LOOP FISSION: decode into a REUSED per-operator float[]
-    * buffer first, then run the metric loop over pure float[] accesses.
+    * buffer first, then run the metric kernel over pure float[] accesses.
     * A single loop interleaving the branchy decode call with the multi-
     * accumulator math defeats HotSpot's unrolling/vectorization — measured
     * 0.23 s vs 0.08 s for the fissioned form on the 1M×128 cached scan
     * (PLANS.md "f16 fused kernel" entry). Same evaluation order per
     * element, so results stay bit-identical to the unfused pipeline. */
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val k = classOf[QuantKernels].getName
-    val kernel = format match {
-      case "f16" => s"$k.f16ToFloat"; case "bf16" => s"$k.bf16ToFloat"; case "f8" => s"$k.f8ToFloat"
-    }
+    val k = classOf[DistKernels].getName
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
+      val n = ctx.freshName("n")
       // per-operator scratch buffer: one allocation per task, not per row
       val buf = ctx.addMutableState("float[]", "quantDecodeBuf", v => s"$v = new float[0];")
-      val (sa, prepA, lenA) =
-        if (format == "f8") (a, "", s"$a.length")
+      val (sa, prepA) =
+        if (fmt == DistKernels.F8) (a, "")
         else {
           val v = ctx.freshName("sa")
-          (v, s"final short[] $v = $a.toShortArray();\n", s"$v.length")
+          (v, s"final short[] $v = $a.toShortArray();\n")
         }
       val (qv, prepB) = CodegenVec.floatSide(ctx, right, b, "Q")
-      val get = if (format == "f8") s"$a[$j]" else s"$sa[$j]"
-      val loop = metric match {
-        case "cosine" =>
-          s"""double $acc = 0.0; double $na = 0.0; double $nb = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  final double x = (double) $buf[$i];
-             |  final double y = (double) $qv[$i];
-             |  $acc += x * y; $na += x * x; $nb += y * y;
-             |}
-             |${ev.value} = Math.abs(1.0 - $acc / (Math.sqrt($na) * Math.sqrt($nb)));""".stripMargin
-        case "euclidean" =>
-          s"""double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  final double d = (double) $buf[$i] - (double) $qv[$i];
-             |  $acc += d * d;
-             |}
-             |${ev.value} = Math.sqrt($acc);""".stripMargin
-        case "manhattan" =>
-          s"""double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += Math.abs((double) $buf[$i] - (double) $qv[$i]);
-             |}
-             |${ev.value} = $acc;""".stripMargin
-        case "dot" =>
-          s"""double $acc = 0.0;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += (double) $buf[$i] * (double) $qv[$i];
-             |}
-             |${ev.value} = -$acc;""".stripMargin
-      }
       s"""
          |$prepA$prepB
-         |final int $n = $lenA;
+         |final int $n = $sa.length;
          |if ($n != $qv.length) {
          |  throw new IllegalArgumentException("vector dimension mismatch: " + $n + " vs " + $qv.length);
          |}
          |if ($buf.length < $n) $buf = new float[$n];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  $buf[$j] = $kernel($get);
-         |}
-         |$loop
+         |$k.decode($fmt, $sa, 0, $buf, $n);
+         |${ev.value} = ${CodegenVec.distanceCall(metric, buf, qv, n)};
        """.stripMargin
     })
   }

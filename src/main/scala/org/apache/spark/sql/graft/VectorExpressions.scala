@@ -11,6 +11,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
+import graft.functions.DistKernels
+
 /** private[sql] bridge: Column ⇄ Expression for graft's public API. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -68,11 +70,12 @@ object GraftBridge {
   *   - Accumulation is in `double` — each float is widened exactly, and the
   *     loop is sequential, so results are bit-reproducible across engines and
   *     partitionings (no shuffle-order dependence: these are row-local).
-  *   - Full whole-stage codegen (`doGenCode`): the generated Java loop is the
-  *     idiomatic Spark analog of the reference's SIMD kernels — HotSpot
-  *     auto-vectorizes it. This is the 100 TB hot path: distance is evaluated
-  *     once per row per query inside a `TakeOrderedAndProject` scan, so it
-  *     must stay inside WholeStageCodegen with zero boxing.
+  *   - Full whole-stage codegen (`doGenCode`): the generated Java makes one
+  *     static [[DistKernels]] call per row, the kernel every other distance
+  *     path calls too; the interpreted path calls the same method. This is
+  *     the 100 TB hot path: distance is evaluated once per row per query
+  *     inside a `TakeOrderedAndProject` scan, so it must stay inside
+  *     WholeStageCodegen with zero boxing.
   */
 /** ONE definition of the foldable-query hoisting every binary vector kernel
   * shares: a foldable child (the query-vector literal in every scan) is
@@ -92,6 +95,14 @@ private[graft] object CodegenVec {
         val f = ctx.freshName(s"f$tag")
         (f, s"final float[] $f = $rowVar.toFloatArray();\n")
     }
+
+  /** Java expression for the `metric` distance (lower = nearer, so dot is
+    * negated) of float[] `a` vs float[] `b` over `n` elements: one static
+    * [[DistKernels]] call, the metric resolved here at codegen time. */
+  def distanceCall(metric: String, a: String, b: String, n: String): String = {
+    val k = classOf[DistKernels].getName
+    if (metric == "dot") s"-$k.dot($a, 0, $b, 0, $n)" else s"$k.$metric($a, 0, $b, 0, $n)"
+  }
 }
 
 /** ImplicitCastInputTypes, not bare ExpectsInputTypes: ad-hoc SQL like
@@ -104,19 +115,19 @@ abstract class BinaryVectorExpression extends BinaryExpression with ImplicitCast
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
 
-  /** Scalar kernel over the two float arrays. */
-  protected def compute(a: ArrayData, b: ArrayData): Double
+  /** The [[DistKernels]] method this expression evaluates. */
+  protected def kernel: String
 
-  protected def requireSameDim(n: Int, m: Int): Unit =
-    if (n != m) throw new IllegalArgumentException(s"vector dimension mismatch: $n vs $m")
+  /** The same kernel, called directly by the interpreted path. */
+  protected def compute(a: Array[Float], b: Array[Float]): Double
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  /** Java loop body over two primitive float[] variables — pure-array
-    * accesses so HotSpot auto-vectorizes (the Spark analog of the
-    * reference's AVX kernels, pkg/distance/simd/). */
-  protected def loopCode(ctx: CodegenContext, fa: String, fb: String, n: String, result: String): String
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val fa = a.asInstanceOf[ArrayData].toFloatArray()
+    val fb = b.asInstanceOf[ArrayData].toFloatArray()
+    if (fa.length != fb.length)
+      throw new IllegalArgumentException(s"vector dimension mismatch: ${fa.length} vs ${fb.length}")
+    compute(fa, fb)
+  }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -129,7 +140,7 @@ abstract class BinaryVectorExpression extends BinaryExpression with ImplicitCast
          |if ($n != $fb.length) {
          |  throw new IllegalArgumentException("vector dimension mismatch: " + $n + " vs " + $fb.length);
          |}
-         |${loopCode(ctx, fa, fb, n, ev.value.toString)}
+         |${ev.value} = ${classOf[DistKernels].getName}.$kernel($fa, 0, $fb, 0, $n);
        """.stripMargin
     })
   }
@@ -138,22 +149,9 @@ abstract class BinaryVectorExpression extends BinaryExpression with ImplicitCast
 /** dot(a, b) = Σ aᵢbᵢ */
 case class VecDotProduct(left: Expression, right: Expression) extends BinaryVectorExpression {
   override def prettyName: String = "vec_dot"
-  override protected def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements(); requireSameDim(n, b.numElements())
-    var acc = 0.0; var i = 0
-    while (i < n) { acc += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
-    acc
-  }
-  override protected def loopCode(ctx: CodegenContext, fa: String, fb: String, n: String, result: String): String = {
-    val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-    s"""
-       |double $acc = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  $acc += (double) $fa[$i] * (double) $fb[$i];
-       |}
-       |$result = $acc;
-     """.stripMargin
-  }
+  override protected def kernel: String = "dot"
+  override protected def compute(a: Array[Float], b: Array[Float]): Double =
+    DistKernels.dot(a, 0, b, 0, a.length)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -162,28 +160,9 @@ case class VecDotProduct(left: Expression, right: Expression) extends BinaryVect
   * yields NaN (division by zero), matching a direct evaluation. */
 case class VecCosineDistance(left: Expression, right: Expression) extends BinaryVectorExpression {
   override def prettyName: String = "cosine_distance"
-  override protected def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements(); requireSameDim(n, b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    math.abs(1.0 - dot / (math.sqrt(na) * math.sqrt(nb)))
-  }
-  override protected def loopCode(ctx: CodegenContext, fa: String, fb: String, n: String, result: String): String = {
-    val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
-    val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-    s"""
-       |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  final double x = (double) $fa[$i];
-       |  final double y = (double) $fb[$i];
-       |  $dot += x * y; $na += x * x; $nb += y * y;
-       |}
-       |$result = Math.abs(1.0 - $dot / (Math.sqrt($na) * Math.sqrt($nb)));
-     """.stripMargin
-  }
+  override protected def kernel: String = "cosine"
+  override protected def compute(a: Array[Float], b: Array[Float]): Double =
+    DistKernels.cosine(a, 0, b, 0, a.length)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -191,26 +170,9 @@ case class VecCosineDistance(left: Expression, right: Expression) extends Binary
   * (/root/reference/pkg/distance/native_impl.go:24-31). */
 case class VecEuclideanDistance(left: Expression, right: Expression) extends BinaryVectorExpression {
   override def prettyName: String = "euclidean_distance"
-  override protected def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements(); requireSameDim(n, b.numElements())
-    var acc = 0.0; var i = 0
-    while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
-      acc += d * d; i += 1
-    }
-    math.sqrt(acc)
-  }
-  override protected def loopCode(ctx: CodegenContext, fa: String, fb: String, n: String, result: String): String = {
-    val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-    s"""
-       |double $acc = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  final double d = (double) $fa[$i] - (double) $fb[$i];
-       |  $acc += d * d;
-       |}
-       |$result = Math.sqrt($acc);
-     """.stripMargin
-  }
+  override protected def kernel: String = "euclidean"
+  override protected def compute(a: Array[Float], b: Array[Float]): Double =
+    DistKernels.euclidean(a, 0, b, 0, a.length)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -218,22 +180,9 @@ case class VecEuclideanDistance(left: Expression, right: Expression) extends Bin
   * (/root/reference/pkg/distance/native_impl.go:33-40). */
 case class VecManhattanDistance(left: Expression, right: Expression) extends BinaryVectorExpression {
   override def prettyName: String = "manhattan_distance"
-  override protected def compute(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements(); requireSameDim(n, b.numElements())
-    var acc = 0.0; var i = 0
-    while (i < n) { acc += math.abs(a.getFloat(i).toDouble - b.getFloat(i).toDouble); i += 1 }
-    acc
-  }
-  override protected def loopCode(ctx: CodegenContext, fa: String, fb: String, n: String, result: String): String = {
-    val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-    s"""
-       |double $acc = 0.0;
-       |for (int $i = 0; $i < $n; $i++) {
-       |  $acc += Math.abs((double) $fa[$i] - (double) $fb[$i]);
-       |}
-       |$result = $acc;
-     """.stripMargin
-  }
+  override protected def kernel: String = "manhattan"
+  override protected def compute(a: Array[Float], b: Array[Float]): Double =
+    DistKernels.manhattan(a, 0, b, 0, a.length)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
 }
 
@@ -245,8 +194,8 @@ case class VecManhattanDistance(left: Expression, right: Expression) extends Bin
   * a realistic cell count (k≈√N, 256-4096) the generated method blows past
   * JIT/codegen limits and Catalyst silently falls back to interpreted eval
   * over a k-element struct array per row. This expression is ONE loop over a
-  * `float[][]` reference — constant codegen size in k, vectorizable inner
-  * loop, no per-row allocation.
+  * `float[][]` reference — constant codegen size in k, one [[DistKernels]]
+  * call per centroid, no per-row allocation.
   *
   * Semantics are IDENTICAL to the naive form (pinned by AnnSpec): the
   * comparison is on `round(dist, 6)` (Spark's HALF_UP `BigDecimal` rounding)
@@ -257,77 +206,6 @@ case class VecManhattanDistance(left: Expression, right: Expression) extends Bin
   *
   * `cids`/`cents` must be sorted by cid ascending (enforced by the caller)
   * so "first strictly-smaller wins" == "lowest cid wins ties". */
-/** Shared per-metric centroid-distance bodies for [[VecArgMinDistance]] and
-  * [[VecTopCells]] — ONE definition per metric (interpreted + codegen) so
-  * the two kernels cannot drift apart: knnJoin's rn=1 self-match contract
-  * needs `top_cells` and `arg_min_distance` to agree on every distance to
-  * the last bit. */
-private[graft] object CentroidDist {
-  def round6(d: Double): Double =
-    java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  def dist(metric: String, a: Array[Float], c: Array[Float]): Double = metric match {
-    case "euclidean" =>
-      var acc = 0.0; var i = 0
-      while (i < a.length) { val d = a(i).toDouble - c(i).toDouble; acc += d * d; i += 1 }
-      math.sqrt(acc)
-    case "manhattan" =>
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += math.abs(a(i).toDouble - c(i).toDouble); i += 1 }
-      acc
-    case "cosine" =>
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = c(i).toDouble
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      math.abs(1.0 - dot / (math.sqrt(na) * math.sqrt(nb)))
-    case "dot" =>
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i).toDouble * c(i).toDouble; i += 1 }
-      -acc
-  }
-
-  /** Java body assigning the distance of float[] `a` vs float[] `cc` (both
-    * length `n`) to the pre-declared double `d`. Accumulators and the loop
-    * var are fresh-named — nested Java blocks cannot shadow outer locals. */
-  def distCode(ctx: CodegenContext, metric: String, a: String, cc: String,
-               n: String, d: String): String = {
-    val acc = ctx.freshName("acc")
-    val i = ctx.freshName("i")
-    metric match {
-      case "euclidean" =>
-        s"""double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  final double t = (double) $a[$i] - (double) $cc[$i];
-           |  $acc += t * t;
-           |}
-           |$d = Math.sqrt($acc);""".stripMargin
-      case "manhattan" =>
-        s"""double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += Math.abs((double) $a[$i] - (double) $cc[$i]);
-           |}
-           |$d = $acc;""".stripMargin
-      case "cosine" =>
-        val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        s"""double $acc = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  final double x = (double) $a[$i];
-           |  final double y = (double) $cc[$i];
-           |  $acc += x * y; $na += x * x; $nb += y * y;
-           |}
-           |$d = Math.abs(1.0 - $acc / (Math.sqrt($na) * Math.sqrt($nb)));""".stripMargin
-      case "dot" =>
-        s"""double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += (double) $a[$i] * (double) $cc[$i];
-           |}
-           |$d = -$acc;""".stripMargin
-    }
-  }
-}
-
 case class VecArgMinDistance(child: Expression, cids: Array[Long],
                              cents: Array[Array[Float]], metric: String)
     extends UnaryExpression with ExpectsInputTypes {
@@ -338,11 +216,7 @@ case class VecArgMinDistance(child: Expression, cids: Array[Long],
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-
-  private def round6(d: Double): Double = CentroidDist.round6(d)
-
-  private def dist(a: Array[Float], c: Array[Float]): Double =
-    CentroidDist.dist(metric, a, c)
+  private val kernel = DistKernels.metricCode(metric)
 
   override def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData].toFloatArray()
@@ -353,12 +227,12 @@ case class VecArgMinDistance(child: Expression, cids: Array[Long],
       if (cents(c).length != a.length)
         throw new IllegalArgumentException(
           s"vector dimension mismatch: ${a.length} vs ${cents(c).length}")
-      val d = dist(a, cents(c))
+      val d = DistKernels.distance(kernel, a, 0, cents(c), 0, a.length)
       // only inside this window can rounding change the ordering:
       // |round6(d) − d| ≤ 5e-7 (decimal rounding) + O(ulp(d)) (nearest-
       // double error) — the ulp term matters past d ≈ 1e9
       if (d < bestR + 1e-6 + 4.0 * Math.ulp(d)) {
-        val rd = round6(d)
+        val rd = DistKernels.round6(d)
         if (rd < bestR) { bestR = rd; best = c }
       }
       c += 1
@@ -385,13 +259,9 @@ case class VecArgMinDistance(child: Expression, cids: Array[Long],
          |  if ($cc.length != $n) {
          |    throw new IllegalArgumentException("vector dimension mismatch: " + $n + " vs " + $cc.length);
          |  }
-         |  double $d;
-         |  {
-         |    ${CentroidDist.distCode(ctx, metric, a, cc, n, d)}
-         |  }
+         |  final double $d = ${CodegenVec.distanceCall(metric, a, cc, n)};
          |  if ($d < $bestR + 1e-6 + 4.0 * Math.ulp($d)) {
-         |    final double $rd = java.math.BigDecimal.valueOf($d)
-         |      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
+         |    final double $rd = ${classOf[DistKernels].getName}.round6($d);
          |    if ($rd < $bestR) { $bestR = $rd; $best = $c; }
          |  }
          |}
@@ -425,11 +295,7 @@ case class VecTopCells(child: Expression, cids: Array[Long],
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
-
-  private def round6(d: Double): Double = CentroidDist.round6(d)
-
-  private def dist(a: Array[Float], c: Array[Float]): Double =
-    CentroidDist.dist(metric, a, c)
+  private val kernel = DistKernels.metricCode(metric)
 
   override def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData].toFloatArray()
@@ -442,13 +308,13 @@ case class VecTopCells(child: Expression, cids: Array[Long],
       if (cents(c).length != a.length)
         throw new IllegalArgumentException(
           s"vector dimension mismatch: ${a.length} vs ${cents(c).length}")
-      val d = dist(a, cents(c))
+      val d = DistKernels.distance(kernel, a, 0, cents(c), 0, a.length)
       // a NaN distance (corrupt query) admits nothing — the r11
       // selectCells contract, ONE rule across all probe implementations;
       // rounding can only matter when d lands within the rounding window of
       // the current cut (the worst kept distance) — see VecArgMinDistance
       if (!d.isNaN && (filled < np || d < bestRd(filled - 1) + 1e-6 + 4.0 * Math.ulp(d))) {
-        val rd = round6(d)
+        val rd = DistKernels.round6(d)
         var pos = filled
         while (pos > 0 && rd < bestRd(pos - 1)) pos -= 1
         if (pos < np) {
@@ -475,7 +341,6 @@ case class VecTopCells(child: Expression, cids: Array[Long],
       val bestCid = ctx.freshName("bestCid"); val bestRd = ctx.freshName("bestRd")
       val pos = ctx.freshName("pos"); val j = ctx.freshName("j")
       val last = ctx.freshName("last"); val cc = ctx.freshName("cc")
-      val distBody = CentroidDist.distCode(ctx, metric, a, cc, n, d)
       s"""
          |final float[] $a = $v.toFloatArray();
          |final int $n = $a.length;
@@ -488,15 +353,10 @@ case class VecTopCells(child: Expression, cids: Array[Long],
          |  if ($cc.length != $n) {
          |    throw new IllegalArgumentException("vector dimension mismatch: " + $n + " vs " + $cc.length);
          |  }
-         |  double $d;
-         |  {
-         |    $distBody
-         |  }
-         |  // NaN admits nothing (the ONE probe contract; NaN would also
-         |  // throw inside BigDecimal.valueOf)
+         |  final double $d = ${CodegenVec.distanceCall(metric, a, cc, n)};
+         |  // NaN admits nothing (the ONE probe contract)
          |  if (!Double.isNaN($d) && ($filled < $np || $d < $bestRd[$filled - 1] + 1e-6 + 4.0 * Math.ulp($d))) {
-         |    final double $rd = java.math.BigDecimal.valueOf($d)
-         |      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue();
+         |    final double $rd = ${classOf[DistKernels].getName}.round6($d);
          |    int $pos = $filled;
          |    while ($pos > 0 && $rd < $bestRd[$pos - 1]) $pos--;
          |    if ($pos < $np) {

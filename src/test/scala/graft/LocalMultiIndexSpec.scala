@@ -151,7 +151,7 @@ class LocalMultiIndexSpec extends SparkSpec {
   }
 
   // The euclidean fixtures above exercise the shared ranking machinery; the
-  // remaining risk is the metric kernels themselves — LocalIvfIndex.dist must
+  // remaining risk is the metric kernels themselves — the local scan must
   // match the codegen kernels at the ulp level or near-ties reorder above the
   // 2e-8 rank window. Pin cosine and dot with the same randomized discipline.
   for (metric <- Seq("cosine", "dot")) {

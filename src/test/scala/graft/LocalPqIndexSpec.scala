@@ -51,7 +51,7 @@ class LocalPqIndexSpec extends SparkSpec {
     assert(idx.codeBytes === 60L * 4) // m bytes per vector resident
     val query = q(7)
     val local = idx.search(query, topK = 10, nprobe = 1)
-      .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+      .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
     val dist = cat.searchPq("flatpq", query, topK = 10, rerank = false)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(local === dist)
@@ -63,12 +63,12 @@ class LocalPqIndexSpec extends SparkSpec {
     assert(idx.cellCount === 4)
     val query = q(3)
     val localAll = idx.search(query, topK = 10, nprobe = 4)
-      .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+      .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
     val distAll = cat.searchPq("ivfpq", query, topK = 10, rerank = false)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(localAll === distAll)
     val local1 = idx.search(query, topK = 10, nprobe = 1)
-      .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+      .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
     val dist1 = cat.searchPq("ivfpq", query, topK = 10, rerank = false, nprobe = Some(1))
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     assert(local1 === dist1)
@@ -93,7 +93,7 @@ class LocalPqIndexSpec extends SparkSpec {
       val np = ivf.getOrElse(1)
       val f = FilterExpr.Single("label", FilterExpr.Eq, 2L)
       val local = idx.search(query, topK = 8, nprobe = np, eqFilter = Seq("label" -> 2L))
-        .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+        .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
       val dist = cat.searchPq(name, query, topK = 8, rerank = false,
           nprobe = ivf.map(_ => np), filter = Some(f))
         .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
@@ -102,7 +102,7 @@ class LocalPqIndexSpec extends SparkSpec {
       // cells are probed — parity holds at nprobe=1 too
       if (ivf.isDefined) {
         val l1 = idx.search(query, topK = 8, nprobe = 1, eqFilter = Seq("label" -> 2L))
-          .map { case (id, d) => (id.toString, graft.ann.LocalIvfIndex.round6(d)) }
+          .map { case (id, d) => (id.toString, graft.functions.DistKernels.round6(d)) }
         val d1 = cat.searchPq(name, query, topK = 8, rerank = false,
             nprobe = Some(1), filter = Some(f))
           .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq

@@ -76,6 +76,35 @@ class ResidentMutationSpec extends SparkSpec {
     assert(empty.resident("c").count() === 300L)
   }
 
+  test("a second catalog on the same root and session bounds its resident frame " +
+      "at the anchor's scan partitions, not defaultParallelism") {
+    val dp = spark.sparkContext.defaultParallelism
+    val root = Files.createTempDirectory("graft-resident-shared").toString
+    val a = new GraftCatalog(spark, root)
+    a.createCollection(meta())
+    a.loadCollection("c")
+    a.insert("c", rows(2000).repartition(dp))
+    a.flush("c")
+    // 4 KB splits: the snapshot scan is wider than defaultParallelism
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "4k")
+    try {
+      a.loadCollection("c")
+      // a's frame is cached, so b's sameResult anchor plans as a cache scan
+      val b = new GraftCatalog(spark, root)
+      b.loadCollection("c")
+      Seq(a, b).foreach(_.insert("c", rows(3, 5000)))
+      val pa = parts(a.resident("c"))
+      assert(pa > dp, s"anchor scan $pa partitions, defaultParallelism $dp")
+      assert(parts(b.resident("c")) === pa)
+      Seq(a, b).foreach(_.releaseCollection("c"))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   test("an IVF flushDelta after a mutation runs only its segment write: the " +
       "base's sidecars stay cached") {
     val cat = catalog(meta(ivf = Some(4)))
